@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Session-memoized corpus row counts for DERIVED-KNOB defaults
@@ -9,77 +9,47 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * [[graft.queries.VectorOps.knnLshAt]] (derived banding) and the
   * derived-√n [[Ivf.defaultCells]] call sites each paid a full
   * `count()` job per invocation — at corpus scale on a shared session
-  * that is a full scan per operator call, for a number that cannot
-  * change while the session's inputs are immutable (the standing
-  * [[graft.queries.VectorOps]] pairCache assumption). Keyed by
-  * (session, canonicalized logical plan): [[graft.queries.Tables.t]]
-  * returns the SAME cached frame per (session, path), so every
-  * contract-query invocation hits after the first; ad-hoc frames with
-  * equal canonical plans share the entry, genuinely fresh plans
-  * (e.g. per-build `localCheckpoint` frames) miss and pay their own
-  * count — correct, since their data really is new.
+  * that is a full scan per operator call, for a number that changes
+  * only when the corpus files do. Keyed by the canonicalized logical
+  * plan ([[SessionMemo]] adds the session and the fingerprint of the
+  * plan's input files): [[graft.queries.Tables.t]] returns the SAME
+  * frame per (session, path), so every contract-query invocation hits
+  * after the first; ad-hoc frames with equal canonical plans share the
+  * entry, genuinely fresh plans (e.g. per-build `localCheckpoint`
+  * frames) miss and pay their own count — correct, since their data
+  * really is new.
   *
   * Only DEFAULT-geometry derivation routes through this memo; explicit
-  * knob callers never count at all. A stale entry can only ever skew a
-  * derived DEFAULT (band count, cell count), never a result value.
-  * Lifecycle matches the pair/graph memos: purged on access for dead
-  * sessions, flushed by the same test hooks, priced by its own
-  * warmFamilies row so bench rows stay per-query
-  * (WarmRegistrySpec-pinned).
+  * knob callers never count at all. Each family is priced by its own
+  * warmFamilies row so bench rows stay per-query (WarmRegistrySpec-
+  * pinned).
   */
 object CorpusCount {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, LogicalPlan), java.lang.Long]()
+  private val counts = SessionMemo.family[LogicalPlan, Long]("corpus_count")
 
-  /** Count jobs actually run (memo misses) — the spec's "one count job
-    * per session per corpus" is asserted against this, not a listener.
-    */
-  @volatile private[graft] var builds: Long = 0L
+  def of(df: DataFrame): Long =
+    counts(df.sparkSession, df.queryExecution.logical.canonicalized,
+      SessionMemo.inputsOf(df))(df.count())
 
-  def of(df: DataFrame): Long = {
-    purge(s => !s.sparkContext.isStopped)
-    cache.computeIfAbsent(
-      (df.sparkSession, df.queryExecution.logical.canonicalized),
-      _ => { builds += 1; Long.box(df.count()) }).longValue()
-  }
-
-  private val dupCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, LogicalPlan, String), (Long, Long)]()
-
-  /** Memo misses of [[dupStats]] — same role as [[builds]]. */
-  @volatile private[graft] var dupBuilds: Long = 0L
+  private val dupCounts =
+    SessionMemo.family[(LogicalPlan, String), (Long, Long)]("corpus_dup_stats")
 
   /** Session-memoized (rows, distinct values of `colName`) of a frame —
     * ONE map-combinable aggregate job on miss. Feeds derived
     * FORM switches (r19: [[graft.queries.VectorOps.dedupSimhashAt]]
     * collapses identical hashes only when the corpus actually carries
-    * duplicate mass — both forms are bit-equal, so like [[of]] a stale
-    * entry can only ever skew a plan choice, never a result value).
-    * Priced by its own warmFamilies row, like [[of]].
+    * duplicate mass — both forms are bit-equal, so like [[of]] the memo
+    * can only ever steer a plan choice, never a result value).
     */
-  def dupStats(df: DataFrame, colName: String): (Long, Long) = {
-    purge(s => !s.sparkContext.isStopped)
-    dupCache.computeIfAbsent(
-      (df.sparkSession, df.queryExecution.logical.canonicalized, colName),
-      _ => {
-        dupBuilds += 1
-        val r = df.agg(
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)),
-          org.apache.spark.sql.functions.count_distinct(
-            org.apache.spark.sql.functions.col(colName))).head()
-        (r.getLong(0), r.getLong(1))
-      })
-  }
-
-  // dupCache entries count too: WarmRegistrySpec's one-entry-per-warm-row
-  // accounting reads this total
-  private[graft] def size: Int = cache.size + dupCache.size
-
-  private[graft] def purge(alive: SparkSession => Boolean): Unit = {
-    val it = cache.keySet.iterator()
-    while (it.hasNext) if (!alive(it.next()._1)) it.remove()
-    val it2 = dupCache.keySet.iterator()
-    while (it2.hasNext) if (!alive(it2.next()._1)) it2.remove()
-  }
+  def dupStats(df: DataFrame, colName: String): (Long, Long) =
+    dupCounts(df.sparkSession,
+      (df.queryExecution.logical.canonicalized, colName),
+      SessionMemo.inputsOf(df)) {
+      val r = df.agg(
+        org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.lit(1)),
+        org.apache.spark.sql.functions.count_distinct(
+          org.apache.spark.sql.functions.col(colName))).head()
+      (r.getLong(0), r.getLong(1))
+    }
 }

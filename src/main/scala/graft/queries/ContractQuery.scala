@@ -18,21 +18,24 @@ final case class ContractQuery(
     oracle: Option[String])
 
 /** Fixture-table loaders. One parquet file per table under the sf dir.
-  * Loads are memoized per (session, path): re-resolving the same file for
-  * each of the 67 contract queries would re-list and re-read parquet
-  * footers dozens of times per run.
+  * Loads are memoized per (session, path) in [[graft.operators.SessionMemo]]:
+  * re-resolving the same file for each of the 67 contract queries would
+  * re-list and re-read parquet footers dozens of times per run.
   */
 object Tables {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val loaded =
+    graft.operators.SessionMemo.family[String, DataFrame]("tables")
+
+  /** The parquet path of fixture table `name` under `sfDir`. */
+  private[graft] def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    cache.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
-      _ => load(spark, sfDir, name))
+    loaded(spark, path(sfDir, name), Seq(path(sfDir, name)))(
+      load(spark, sfDir, name))
 
   private def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == "events") loadEvents(spark, s"$sfDir/events.parquet")
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    if (name == "events") loadEvents(spark, path(sfDir, name))
+    else spark.read.parquet(path(sfDir, name))
 
   /** The events fixture has shipped in two parquet flavors across driver
     * regenerations: `ts` as TIMESTAMP(NANOS) — which Spark 4 refuses to map

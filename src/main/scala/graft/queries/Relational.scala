@@ -432,6 +432,17 @@ object Relational {
 
   // ---------------------------------------------------------- SQL surface
 
+  /** Point the SQL-surface temp views at `dir`'s tables. Runs on every
+    * call: registering a view is catalog work only (no job), and
+    * re-registering keeps a session that switches dirs from reading
+    * the previous dir's views.
+    */
+  private def registerViews(spark: SparkSession, dir: String): Unit = {
+    Tables.t(spark, dir, "customer").createOrReplaceTempView("v_customer")
+    Tables.t(spark, dir, "orders").createOrReplaceTempView("v_orders")
+    Tables.t(spark, dir, "lineitem").createOrReplaceTempView("v_lineitem")
+  }
+
   /** The engine's SQL entry point: TPC-H Q3-shaped text executed by
     * `spark.sql` over temp views — same Catalyst plan as the DataFrame
     * DSL (customer/orders broadcast-or-shuffle joins, partial+final agg,
@@ -439,29 +450,8 @@ object Relational {
     * DECIMAL, rounds once, and ties break on l_orderkey, so the rounded-
     * DESC ordering cuts identically on both engines.
     */
-  // tracks which sf dir each session's v_* views currently point at; the
-  // value (not just key presence) matters: switching dirs in one session
-  // MUST re-register or the views would silently serve the other dir's
-  // data
-  private val q3Views =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-
-  /** Register the SQL-surface temp views once per (session, sf dir) —
-    * repeated same-dir invocations skip the catalog round-trips, a dir
-    * change re-registers.
-    */
-  private def ensureViews(spark: SparkSession, dir: String): Unit =
-    q3Views.compute(spark, (_, prev) => {
-      if (prev != dir) {
-        Tables.t(spark, dir, "customer").createOrReplaceTempView("v_customer")
-        Tables.t(spark, dir, "orders").createOrReplaceTempView("v_orders")
-        Tables.t(spark, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-      }
-      dir
-    })
-
   def sqlQ3(spark: SparkSession, dir: String): DataFrame = {
-    ensureViews(spark, dir)
+    registerViews(spark, dir)
     spark.sql(
       """SELECT l_orderkey,
         |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,4)) *
@@ -502,7 +492,7 @@ object Relational {
     * so no double quotient sits on the decision boundary.
     */
   def sqlSubqueries(spark: SparkSession, dir: String): DataFrame = {
-    ensureViews(spark, dir)
+    registerViews(spark, dir)
     spark.sql(
       """SELECT c_custkey,
         |  CAST(round(CAST(c_acctbal AS DECIMAL(12,4)), 4) AS DOUBLE) AS acctbal
@@ -534,7 +524,7 @@ object Relational {
     * aggregation alone can't produce.
     */
   def sqlRecursive(spark: SparkSession, dir: String): DataFrame = {
-    ensureViews(spark, dir)
+    registerViews(spark, dir)
     spark.sql(
       """WITH RECURSIVE days(d) AS (
         |  SELECT DATE '1995-01-01'

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.SessionMemo
+
 /** LLM-data-pipeline text operators (SURVEY.md §2.D): exact and near
   * deduplication, TF-IDF, corpus quality gates, language ID, token
   * counting and content fingerprinting over the `documents` table.
@@ -256,14 +258,11 @@ object TextOps {
   /** Memoized J ≥ 0.5 verified pair frame per (session, dir) — shared by
     * the contract query and the cluster-label build ([[clusterLabels]]),
     * which would otherwise each run the full shuffle-by-shingle pipeline.
-    * Same lifecycle as [[labelCache]] (deterministic result, immutable
-    * inputs per session, dead-session purge on access); the parameterized
+    * Lifecycle: [[graft.operators.SessionMemo]]; the parameterized
     * [[neardupJaccardAt]] stays pure.
     */
-  private val jaccardPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[graft] def jaccardPairsCacheSize: Int = jaccardPairsCache.size
+  private val jaccardPairsMemo =
+    SessionMemo.family[String, DataFrame]("text_jaccard_pairs")
 
   /** Estimated blowup factor of the direct by-shingle self-join:
     * joined rows per shingle row ≈ Σ_s df(s)·(df(s)−1) / Σ_s df(s),
@@ -307,10 +306,8 @@ object TextOps {
     */
   private[graft] val DirectJaccardMaxBlowup: Double = 32.0
 
-  private def jaccardPairs(spark: SparkSession, dir: String): DataFrame = {
-    // purge BEFORE computeIfAbsent (no mutation inside the mapping fn)
-    purgeLabelCache(s => !s.sparkContext.isStopped)
-    jaccardPairsCache.computeIfAbsent((spark, dir), _ => {
+  private def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
+    jaccardPairsMemo(spark, dir, Seq(Tables.path(dir, "documents"))) {
       val docs = Tables.t(spark, dir, "documents")
       val blowup = shingleBlowup(docs)
       val form = if (blowup > DirectJaccardMaxBlowup)
@@ -320,8 +317,7 @@ object TextOps {
       // two id Longs + inter Long + jaccard double + row overhead
       org.apache.spark.sql.graft.CheckpointStats
         .withMeasuredStats(p, p.count(), 40)
-    })
-  }
+    }
 
   /** [[neardupJaccard]] generalized over corpus and threshold — the
     * engine surface: exact-Jaccard ≥ `threshold` pairs of any
@@ -736,39 +732,10 @@ object TextOps {
     * over clusters ([[dedupCluster]], [[dedupKeepBest]], [[curate]])
     * would re-run the whole pair-detection + iteration pipeline; labels
     * are deterministic, so sharing the checkpointed result is sound.
-    *
-    * Same lifecycle assumptions as the [[Tables]] loader cache: inputs
-    * under `dir` are immutable for the session (rewriting them mid-
-    * session serves stale labels — rebuild the session), and entries
-    * live for the session (one corpus per session in the driver
-    * contract; a long-lived multi-corpus service would want eviction).
-    * localCheckpoint blocks are non-reliable storage: on a cluster with
-    * executor churn, swap the CC loop to durable `checkpoint()` (see
-    * [[graft.operators.ConnectedComponents]] scale posture) — a lost
-    * block otherwise fails every later cluster query in the session
-    * where an unmemoized build would have recomputed.
+    * Lifecycle: [[graft.operators.SessionMemo]].
     */
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Evict cache entries whose session fails `alive` — called with
-    * `!sparkContext.isStopped` on every [[clusterLabels]] access, so a
-    * long-lived multi-session service cannot pin stopped sessions (and
-    * their checkpointed blocks' metadata) through this map. The
-    * predicate is injectable because a spec cannot stop the suite's one
-    * shared SparkContext to exercise the real signal.
-    */
-  private[graft] def purgeLabelCache(alive: SparkSession => Boolean): Unit = {
-    val it = labelCache.keySet.iterator()
-    while (it.hasNext) if (!alive(it.next()._1)) it.remove()
-    val rt = reasonsCache.keySet.iterator()
-    while (rt.hasNext) if (!alive(rt.next()._1)) rt.remove()
-    val pt = jaccardPairsCache.keySet.iterator()
-    while (pt.hasNext) if (!alive(pt.next()._1)) pt.remove()
-  }
-
-  private[graft] def labelCacheSize: Int = labelCache.size
-  private[graft] def reasonsCacheSize: Int = reasonsCache.size
+  private val labelMemo =
+    SessionMemo.family[String, DataFrame]("text_cluster_labels")
 
   /** Force the text-family session memo builds (jaccard pairs →
     * cluster labels → curate reasons; each feeds the next), named for
@@ -801,15 +768,12 @@ object TextOps {
         .select(col("d1").as("src"), col("d2").as("dst")),
       reliable = reliable)
 
-  private def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    // resolve the (memoized) pair frame BEFORE computeIfAbsent — its own
-    // purge-on-access must not run inside this map's mapping function
-    val pairs = jaccardPairs(spark, dir)
-    labelCache.computeIfAbsent((spark, dir),
-      _ => graft.operators.ConnectedComponents.runOnPairs(
-        pairs.select(col("d1").as("src"), col("d2").as("dst")),
-        precut = true))
-  }
+  private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    labelMemo(spark, dir, Seq(Tables.path(dir, "documents"))) {
+      graft.operators.ConnectedComponents.runOnPairs(
+        jaccardPairs(spark, dir).select(col("d1").as("src"), col("d2").as("dst")),
+        precut = true)
+    }
 
   def dedupCluster(spark: SparkSession, dir: String): DataFrame =
     graft.operators.ConnectedComponents.assignClusters(
@@ -3918,7 +3882,7 @@ object TextOps {
     curateReasons(spark, dir).orderBy(col("doc_id"))
 
   /** Memoized contract-pipeline reasons per (session, dir), same
-    * lifecycle and rationale as [[labelCache]]: the full and the
+    * lifecycle and rationale as [[labelMemo]]: the full and the
     * incremental curate query share every stage (Gopher gate, exact
     * dedup, decontamination, keep-best), differing only in the final
     * filter/sort — without memoization whichever runs second re-executes
@@ -3926,23 +3890,17 @@ object TextOps {
     * measured stats (one row per doc, see
     * [[org.apache.spark.sql.graft.CheckpointStats]]).
     */
-  private val reasonsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val reasonsMemo =
+    SessionMemo.family[String, DataFrame]("text_curate_reasons")
 
-  private def curateReasons(spark: SparkSession, dir: String): DataFrame = {
-    // resolve the labels BEFORE entering computeIfAbsent: clusterLabels
-    // purges BOTH caches on access, and ConcurrentHashMap forbids the
-    // mapping function mutating the map it is computing into (recursive
-    // update — deadlock or corruption when the purged key shares a bin)
-    val labels = clusterLabels(spark, dir)
-    reasonsCache.computeIfAbsent((spark, dir), _ => {
+  private def curateReasons(spark: SparkSession, dir: String): DataFrame =
+    reasonsMemo(spark, dir, Seq(Tables.path(dir, "documents"))) {
       val r = curateReasonsOn(Tables.t(spark, dir, "documents"), CurateConfig(),
-        labels = Some(labels)).localCheckpoint(true)
+        labels = Some(clusterLabels(spark, dir))).localCheckpoint(true)
       // doc_id (8) + kept (1) + short reason string + row overhead
       org.apache.spark.sql.graft.CheckpointStats
         .withMeasuredStats(r, r.count(), 40)
-    })
-  }
+    }
 
   /** [[curate]] generalized over corpus and config — the engine surface
     * a user points at their own documents frame: identical stage order
@@ -4310,8 +4268,8 @@ object TextOps {
     *                set a resumed run anti-joins
     *                ([[resumeCurateFromState]]).
     *
-    * The session caches ([[jaccardPairsCache]]/[[labelCache]]/
-    * [[reasonsCache]]) die with the session; this is their durable twin.
+    * The session memos ([[jaccardPairsMemo]]/[[labelMemo]]/
+    * [[reasonsMemo]]) die with the session; this is their durable twin.
     * At 100 TB the shingle pass dominates the dedup pipeline — here it is
     * paid once per CORPUS, not once per session, and every later rebuild,
     * resume, or ingest delta starts from the persisted artifacts.

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.SessionMemo
+
 /** LLM-data-pipeline vector + sketch operators (SURVEY.md §2.D):
   * brute-force cosine top-k (the correctness baseline), cosine near-dup
   * pairs, per-label centroids, and the scale-path variants — MinHash-LSH
@@ -43,54 +45,40 @@ object VectorOps {
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), [CAST($a[i] AS DOUBLE) * $b[i] for i in range(1, 65)]), (p, q) -> p + q)"
 
   /** Memoized VERIFIED near-dup pair frames per (session, dir, kind) —
-    * the [[TextOps]] labelCache discipline applied to the three pair
+    * the [[TextOps]] label-memo discipline applied to the three pair
     * builds each shared by TWO contract queries: exact-cosine(0.35)
     * ([[neardupCosine]] + [[dedupClusterCosine]]), cosine-LSH(0.35,16,8)
     * ([[neardupCosineLsh]] + [[dedupSemantic]]), MinHash-verified
     * ([[dedupMinhash]] + [[dedupClusterLsh]]) — without memoization
     * whichever of each pair runs second re-executes the whole candidate
     * + verify pipeline. Pair frames are deterministic (seeded planes,
-    * xxhash64), inputs under `dir` are immutable for the session, and
-    * dead-session entries are purged on access — the same lifecycle as
-    * [[TextOps.purgeLabelCache]]. Memoization applies ONLY to the pinned
-    * contract instantiations; the parameterized engine surfaces
-    * ([[neardupCosineAt]], [[neardupCosineLshAt]], ...) stay pure.
+    * xxhash64); lifecycle: [[graft.operators.SessionMemo]]. Memoization
+    * applies ONLY to the pinned contract instantiations; the
+    * parameterized engine surfaces ([[neardupCosineAt]],
+    * [[neardupCosineLshAt]], ...) stay pure.
     */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  private[graft] def purgePairCache(alive: SparkSession => Boolean): Unit = {
-    val it = pairCache.keySet.iterator()
-    while (it.hasNext) if (!alive(it.next()._1)) it.remove()
-    val gt = graphCache.keySet.iterator()
-    while (gt.hasNext) if (!alive(gt.next()._1)) gt.remove()
-    graft.operators.CorpusCount.purge(alive)
-  }
-
-  private[graft] def pairCacheSize: Int = pairCache.size
+  private val pairMemo =
+    SessionMemo.family[(String, String), DataFrame]("vec_pairs")
 
   /** Memoized (base, NN-Descent edges) per (session, dir) for the
     * PINNED q_knn_graph instantiation (degree 10, 2 rounds, 16 cells) —
-    * the [[pairCache]] discipline applied to the round's most expensive
+    * the [[pairMemo]] discipline applied to the round's most expensive
     * build: without it the contract query re-runs the whole iterative
     * graph construction on every invocation, and the build dominates
     * the search ~4:1 (BENCH r13: 4.5 s, of which the beam search is
-    * well under 1 s). Deterministic build, immutable corpus per
-    * session, purge shared with [[purgePairCache]]. The parameterized
-    * engine surfaces ([[graft.operators.NnDescent.buildGraph]] and the
+    * well under 1 s). Deterministic build, same lifecycle as
+    * [[pairMemo]]. The parameterized engine surfaces
+    * ([[graft.operators.NnDescent.buildGraph]] and the
     * persisted-index family) stay pure — at scale a graph this
     * expensive is a PERSISTED index (NnDescent.writeIndex), and this
     * memo is the in-session analogue of reading it back.
     */
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame, Long)]()
-
-  private[graft] def graphCacheSize: Int = graphCache.size
+  private val graphMemo =
+    SessionMemo.family[String, (DataFrame, DataFrame, Long)]("vec_graph")
 
   private def contractGraph(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame, Long) = {
-    purgePairCache(s => !s.sparkContext.isStopped)
-    graphCache.computeIfAbsent((spark, dir), _ => {
+      dir: String): (DataFrame, DataFrame, Long) =
+    graphMemo(spark, dir, Seq(Tables.path(dir, "embeddings"))) {
       val base = Tables.t(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           norm2(col("embedding")).as("n2"))
@@ -104,8 +92,7 @@ object VectorOps {
          .withMeasuredStats(base, n, 300),
        org.apache.spark.sql.graft.CheckpointStats
          .withMeasuredStats(edges, edges.count(), 32), n)
-    })
-  }
+    }
 
   /** Force the vector-family session memo builds — the
     * [[graft.queries.TextOps.warmFamilies]] twin ([[graft.Bench]]'s
@@ -140,18 +127,15 @@ object VectorOps {
       ()
     }))
 
-  private def memoPairs(spark: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    // purge BEFORE computeIfAbsent: the mapping function must not mutate
-    // the map it is computing into (same hazard as TextOps.labelCache)
-    purgePairCache(s => !s.sparkContext.isStopped)
-    pairCache.computeIfAbsent((spark, dir, kind), _ => {
+  /** [[pairMemo]] entry `kind` over fixture table `table` of `dir`. */
+  private def memoPairs(spark: SparkSession, dir: String, kind: String,
+      table: String)(build: => DataFrame): DataFrame =
+    pairMemo(spark, (dir, kind), Seq(Tables.path(dir, table))) {
       val p = build.localCheckpoint(true)
       // two id Longs + one double + row overhead
       org.apache.spark.sql.graft.CheckpointStats
         .withMeasuredStats(p, p.count(), 32)
-    })
-  }
+    }
 
   // --------------------------------------------------- brute-force top-k
 
@@ -238,7 +222,7 @@ object VectorOps {
     * LSH-bucketed variant below is the 100 TB plan.
     */
   def neardupCosine(spark: SparkSession, dir: String): DataFrame =
-    memoPairs(spark, dir, "cosine_0.35")(
+    memoPairs(spark, dir, "cosine_0.35", "embeddings")(
       neardupCosineAt(Tables.t(spark, dir, "embeddings"), threshold = 0.35))
 
   /** Exact cosine near-dup pairs of an arbitrary `vecs(vec_id,
@@ -446,7 +430,8 @@ object VectorOps {
     * recall against TextOps.neardupJaccard exact truth.
     */
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    memoPairs(spark, dir, "minhash_16_8")(dedupMinhashBuild(spark, dir))
+    memoPairs(spark, dir, "minhash_16_8", "documents")(
+      dedupMinhashBuild(spark, dir))
 
   private def dedupMinhashBuild(spark: SparkSession, dir: String): DataFrame =
     minhashPairsOn(Tables.t(spark, dir, "documents"))
@@ -1796,7 +1781,7 @@ object VectorOps {
     * threshold.
     */
   def neardupCosineLsh(spark: SparkSession, dir: String): DataFrame =
-    memoPairs(spark, dir, "cosine_lsh_0.35_16_8")(
+    memoPairs(spark, dir, "cosine_lsh_0.35_16_8", "embeddings")(
       neardupCosineLshAt(
         Tables.t(spark, dir, "embeddings")
           .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2")),
@@ -1876,6 +1861,13 @@ object VectorOps {
   /** Exact-cosine verification of a candidate (v1, v2) list against the
     * two sides' (vec_id, embedding, n2) tables — candidate lists are
     * small wherever LSH pruned well, so AQE broadcasts them.
+    *
+    * Precondition: `vec_id` is unique within `baseL` and within `baseR`.
+    * Each candidate joins every row carrying its ids, so a duplicated id
+    * emits one output row per matching embedding — and the callers'
+    * verify-then-`distinct` collapses only rows that are equal in every
+    * column, so two different embeddings under one id survive as two
+    * (v1, v2) rows with different `cos`.
     */
   private[queries] def verifyCosine(cands: DataFrame, baseL: DataFrame,
       baseR: DataFrame, threshold: Double): DataFrame = {

@@ -1,6 +1,8 @@
-package graft.queries
+package graft.tools
 
 import org.apache.spark.sql.SparkSession
+
+import graft.queries.{Tables, TextOps}
 import org.apache.spark.sql.functions._
 
 /** Stage decomposition of the text_jaccard_pairs warm row — the #1
@@ -35,39 +37,16 @@ object JpProfile {
     time("documents.count (footer+scan)")(docs.count())
     time("shingleBlowup probe")(TextOps.shingleBlowup(docs))
     time("shingleBlowup probe (repeat)")(TextOps.shingleBlowup(docs))
-    // join-strategy A/B: SMJ (default) vs shuffled-hash via the
-    // session preference toggle — same rows either way, different
-    // physical plan (two sorts of the by-shingle exchange vs hashing)
-    def arms = Seq(
-      "bhj (current)" -> (() => {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-      }),
-      "smj (no bcast)" -> (() => {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-      }),
-      "shj (no bcast)" -> (() => {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-      }))
-    for (pass <- 1 to 2; (name, set) <- { if (pass % 2 == 1) arms else arms.reverse }) {
-      set()
-      val pairs = TextOps.neardupJaccardAt(docs, threshold = 0.5)
-      time(s"$name noop p$pass") {
-        pairs.write.format("noop").mode("overwrite").save()
-      }
-      if (pass == 1) {
-        val ex = pairs.queryExecution.executedPlan.toString
-        println(s"[plan $name] " + ex.linesIterator.filter(l =>
-          l.contains("Join") || l.contains("Sort ") || l.contains("Exchange"))
-          .take(8).map(_.trim.take(90)).mkString(" | "))
-      }
+    // the exploded self-join is hinted to a merge join, so the pair build
+    // has one physical plan whatever the session's join preferences
+    val pairs = TextOps.neardupJaccardAt(docs, threshold = 0.5)
+    println("[plan] " + pairs.queryExecution.executedPlan.toString
+      .linesIterator.filter(l =>
+        l.contains("Join") || l.contains("Sort ") || l.contains("Exchange"))
+      .take(8).map(_.trim.take(90)).mkString(" | "))
+    for (pass <- 1 to 2) time(s"pair build noop p$pass") {
+      pairs.write.format("noop").mode("overwrite").save()
     }
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
     time("ckpt+count (memo shape)") {
       TextOps.neardupJaccardAt(docs, 0.5).localCheckpoint(true).count()
     }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.CorpusCount
+import graft.operators.{CorpusCount, SessionMemo}
 
 /** Pins the derived-knob corpus-count memo (r17 verdict task 5): the
   * banding/cell derivations need ONE number per immutable corpus, and
@@ -10,36 +10,41 @@ import graft.operators.CorpusCount
   */
 class CorpusCountSpec extends AnyFunSuite with SparkSessionFixture {
 
+  private def builds = SessionMemo.builds("corpus_count")
+  private def dupBuilds = SessionMemo.builds("corpus_dup_stats")
+  private def size = SessionMemo.sizes(spark)("corpus_count")
+
   test("two calls over one corpus pay exactly one count job; a distinct " +
       "corpus pays its own") {
-    CorpusCount.purge(_ => false)
+    SessionMemo.purge(_ => false)
     val emb = graft.queries.Tables.t(spark, Sf0001, "embeddings")
-    val b0 = CorpusCount.builds
+    val b0 = builds
+    val h0 = SessionMemo.hits("corpus_count")
     val n1 = CorpusCount.of(emb)
     val n2 = CorpusCount.of(emb)
     assert(n1 == n2 && n1 > 0)
-    assert(CorpusCount.builds == b0 + 1,
+    assert(builds == b0 + 1 && SessionMemo.hits("corpus_count") == h0 + 1,
       "second call over the same frame must be a memo hit")
-    assert(CorpusCount.size == 1)
+    assert(size == 1)
     // a semantically different frame is a different corpus: own entry
     val half = emb.filter(org.apache.spark.sql.functions.col("vec_id") % 2 === 0)
     val nh = CorpusCount.of(half)
-    assert(nh < n1 && CorpusCount.builds == b0 + 2 && CorpusCount.size == 2)
+    assert(nh < n1 && builds == b0 + 2 && size == 2)
     // ...but an equal-plan reconstruction of it hits
     val half2 = emb.filter(org.apache.spark.sql.functions.col("vec_id") % 2 === 0)
-    assert(CorpusCount.of(half2) == nh && CorpusCount.builds == b0 + 2)
+    assert(CorpusCount.of(half2) == nh && builds == b0 + 2)
   }
 
   test("dupStats memoizes one aggregate job per (corpus, column) and the " +
       "simhash collapse switch brackets on it") {
-    CorpusCount.purge(_ => false)
+    SessionMemo.purge(_ => false)
     val docs = graft.queries.Tables.t(spark, Sf0001, "documents")
     val sigs = graft.queries.VectorOps.simhashSignatures(docs)
-    val b0 = CorpusCount.dupBuilds
+    val b0 = dupBuilds
     val (rows, distinct) = CorpusCount.dupStats(sigs, "simhash")
     assert(rows > 0 && distinct > 0 && distinct <= rows)
     assert(CorpusCount.dupStats(sigs, "simhash") == (rows, distinct))
-    assert(CorpusCount.dupBuilds == b0 + 1,
+    assert(dupBuilds == b0 + 1,
       "second call over the same (frame, column) must be a memo hit")
     // the fixture is dup-light: the contract row keeps the per-member
     // plan (ratio < CollapseMinDupRatio) — its shape is unchanged by r19
@@ -59,12 +64,12 @@ class CorpusCountSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("q_knn_lsh's derived banding rides the memo: repeated contract " +
       "construction adds no count job after the corpus is counted") {
-    CorpusCount.purge(_ => false)
+    SessionMemo.purge(_ => false)
     CorpusCount.of(graft.queries.Tables.t(spark, Sf0001, "embeddings"))
-    val b0 = CorpusCount.builds
+    val b0 = builds
     graft.queries.VectorOps.knnLsh(spark, Sf0001)
     graft.queries.VectorOps.knnLsh(spark, Sf0001)
-    assert(CorpusCount.builds == b0,
+    assert(builds == b0,
       "derived-banding construction must reuse the session corpus count")
   }
 }

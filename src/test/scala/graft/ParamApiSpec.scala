@@ -527,28 +527,32 @@ class ParamApiSpec extends AnyFunSuite with SparkSessionFixture {
 
   // ------------------------------------------------- label-cache lifecycle
 
+  private def memoSize(family: String): Int =
+    graft.operators.SessionMemo.sizes(spark)(family)
+
   test("label cache: dead-session entries are purged, live ones survive and rebuild") {
     // populate (any cluster-composed query builds + memoizes the labels)
     TextOps.dedupCluster(spark, Sf0001).count()
-    assert(TextOps.labelCacheSize >= 1)
+    assert(memoSize("text_cluster_labels") >= 1)
     // live predicate keeps the entry
-    TextOps.purgeLabelCache(s => !s.sparkContext.isStopped)
-    assert(TextOps.labelCacheSize >= 1)
+    graft.operators.SessionMemo.purge(s => !s.sparkContext.isStopped)
+    assert(memoSize("text_cluster_labels") >= 1)
     // a service whose sessions all died drops every entry …
-    TextOps.purgeLabelCache(_ => false)
-    assert(TextOps.labelCacheSize == 0)
+    graft.operators.SessionMemo.purge(_ => false)
+    assert(memoSize("text_cluster_labels") == 0)
     // … and a fresh access rebuilds from scratch, same answer
     val rebuilt = TextOps.dedupCluster(spark, Sf0001)
-    assert(rebuilt.count() > 0 && TextOps.labelCacheSize >= 1)
-    // the curate-reasons cache shares the same lifecycle: populated by
+    assert(rebuilt.count() > 0 && memoSize("text_cluster_labels") >= 1)
+    // the curate-reasons memo shares the same lifecycle: populated by
     // either curate query, dropped by the same purge
     TextOps.curate(spark, Sf0001).count()
-    assert(TextOps.reasonsCacheSize >= 1)
+    assert(memoSize("text_curate_reasons") >= 1)
     // the label build went through the memoized jaccard pair frame
-    assert(TextOps.jaccardPairsCacheSize >= 1)
-    TextOps.purgeLabelCache(_ => false)
-    assert(TextOps.reasonsCacheSize == 0 && TextOps.labelCacheSize == 0 &&
-      TextOps.jaccardPairsCacheSize == 0)
+    assert(memoSize("text_jaccard_pairs") >= 1)
+    graft.operators.SessionMemo.purge(_ => false)
+    assert(memoSize("text_curate_reasons") == 0 &&
+      memoSize("text_cluster_labels") == 0 &&
+      memoSize("text_jaccard_pairs") == 0)
   }
 
   test("domainResampleOn: contract pin, own-weight monotonicity, zero-weight drop") {
@@ -582,8 +586,8 @@ class ParamApiSpec extends AnyFunSuite with SparkSessionFixture {
   test("pair cache: memoized contract pairs == pure engine paths; same lifecycle") {
     def canon(df: DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
-    VectorOps.purgePairCache(_ => false)
-    assert(VectorOps.pairCacheSize == 0)
+    graft.operators.SessionMemo.purge(_ => false)
+    assert(memoSize("vec_pairs") == 0)
     // the memoized cluster queries must be bit-identical to the pure
     // (uncached) parameterized engine surfaces they pin
     val emb = Tables.t(spark, Sf0001, "embeddings")
@@ -592,14 +596,14 @@ class ParamApiSpec extends AnyFunSuite with SparkSessionFixture {
     assert(canon(VectorOps.dedupSemantic(spark, Sf0001)) ==
       canon(VectorOps.semanticClustersLshOn(emb, 0.35, numPlanes = 16, bands = 8)))
     // each shared pair frame was built once for its two consumers
-    assert(VectorOps.pairCacheSize == 2)
+    assert(memoSize("vec_pairs") == 2)
     VectorOps.dedupMinhash(spark, Sf0001).count()
-    assert(VectorOps.pairCacheSize == 3)
+    assert(memoSize("vec_pairs") == 3)
     // repeated access hits the cache; purge-all rebuilds the same answer
     val first = canon(VectorOps.neardupCosine(spark, Sf0001))
-    assert(VectorOps.pairCacheSize == 3)
-    VectorOps.purgePairCache(_ => false)
-    assert(VectorOps.pairCacheSize == 0)
+    assert(memoSize("vec_pairs") == 3)
+    graft.operators.SessionMemo.purge(_ => false)
+    assert(memoSize("vec_pairs") == 0)
     assert(canon(VectorOps.neardupCosine(spark, Sf0001)) == first)
   }
 
@@ -667,8 +671,8 @@ class ParamApiSpec extends AnyFunSuite with SparkSessionFixture {
   test("graph cache: memoized q_knn_graph == pure build+search; same lifecycle") {
     def canon(df: DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
-    VectorOps.purgePairCache(_ => false)
-    assert(VectorOps.graphCacheSize == 0)
+    graft.operators.SessionMemo.purge(_ => false)
+    assert(memoSize("vec_graph") == 0)
     // memoized contract query must be bit-identical to the pure
     // (uncached) build + search it pins
     val base = Tables.t(spark, Sf0001, "embeddings")
@@ -686,13 +690,13 @@ class ParamApiSpec extends AnyFunSuite with SparkSessionFixture {
       entries = 24)
     val first = canon(VectorOps.knnGraph(spark, Sf0001))
     assert(first == canon(pure))
-    assert(VectorOps.graphCacheSize == 1)
+    assert(memoSize("vec_graph") == 1)
     // repeat hits the cache (no rebuild); purge-all rebuilds the same
     // answer — memoization must be observationally pure
     assert(canon(VectorOps.knnGraph(spark, Sf0001)) == first)
-    assert(VectorOps.graphCacheSize == 1)
-    VectorOps.purgePairCache(_ => false)
-    assert(VectorOps.graphCacheSize == 0)
+    assert(memoSize("vec_graph") == 1)
+    graft.operators.SessionMemo.purge(_ => false)
+    assert(memoSize("vec_graph") == 0)
     assert(canon(VectorOps.knnGraph(spark, Sf0001)) == first)
   }
 

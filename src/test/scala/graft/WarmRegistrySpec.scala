@@ -17,29 +17,25 @@ import org.scalatest.funsuite.AnyFunSuite
   *      memo entry — i.e. the registry covers every family any contract
   *      query can build. Memo builds are eager at query-construction
   *      time ([[graft.queries.VectorOps]] memoPairs /
-  *      [[graft.queries.TextOps]] label-family caches localCheckpoint
-  *      inside computeIfAbsent), so construction alone exercises them.
+  *      [[graft.queries.TextOps]] label-family memos localCheckpoint
+  *      inside the build), so construction alone exercises them.
   *
   * A new memoized family used by a contract query fails check 2 until
   * its warmFamilies row exists; registering it then keeps check 1
-  * honest about the build actually running.
+  * honest about the build actually running. Fixture-table loads
+  * ([[graft.queries.Tables]]) are memo entries too, but not session
+  * builds any warm row prices, so the accounting leaves them out.
   */
 class WarmRegistrySpec extends AnyFunSuite with SparkSessionFixture {
 
   private def cacheEntries: Int =
-    graft.queries.TextOps.jaccardPairsCacheSize +
-      graft.queries.TextOps.labelCacheSize +
-      graft.queries.TextOps.reasonsCacheSize +
-      graft.queries.VectorOps.pairCacheSize +
-      graft.queries.VectorOps.graphCacheSize +
-      graft.operators.CorpusCount.size
+    graft.operators.SessionMemo.sizes(spark).removed("tables").values.sum
 
   test("warmFamilies prices every memo family any contract query " +
       "builds, and every registered row builds one") {
     // flush every memo so the accounting below starts from zero
-    graft.queries.TextOps.purgeLabelCache(_ => false)
-    graft.queries.VectorOps.purgePairCache(_ => false)
-    assert(cacheEntries == 0, "purge must empty every memo cache")
+    graft.operators.SessionMemo.purge(_ => false)
+    assert(cacheEntries == 0, "purge must empty every memo family")
     val warm = graft.queries.TextOps.warmFamilies(spark, Sf0001) ++
       graft.queries.VectorOps.warmFamilies(spark, Sf0001)
     warm.foreach { case (_, thunk) => thunk() }
