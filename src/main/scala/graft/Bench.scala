@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Median of the per-query host-speed stamps (ms). Pure so BenchSpec
     * can pin the adjudication math without running a bench.
@@ -64,18 +63,96 @@ object Bench {
     "q_agg_listagg", "q_events_funnel", "q_events_anomaly",
     "q_decontaminate_semantic", "q_join_inner")
 
+  /** One bench run: everything its two output lines carry. */
+  case class Run(sfDir: String, calibrationS: Double, floorMs: Double,
+      warm: Seq[(String, Double)], rows: Seq[(String, Double)],
+      calMs: Seq[(String, Double)], failed: Seq[String]) {
+    // value = warm builds + per-query times: totals stay comparable with
+    // pre-warm rounds, where the builds hid inside their first consumer
+    def total: Double = warm.map(_._2).sum + rows.map(_._2).sum
+    def stampMedianMs: Double = medianOf(calMs.map(_._2).toArray)
+  }
+
+  private def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+  private def obj(kvs: Iterable[(String, Double)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+
+  private def line(run: Run, rows: Iterable[(String, Double)],
+      full: Boolean): String = {
+    val median = run.stampMedianMs
+    // Window self-labeling (r16 verdict task 1): the committed r16 close
+    // artifact was a worst-window 566.8 s run that read as a 4.4×
+    // regression to anyone not cross-reading BASELINE.md's stamp log.
+    // Carry the adjudication IN the artifact: the median per-query stamp
+    // vs the clean floor classifies the window, so a contaminated run
+    // can never masquerade as the engine's number.
+    val windowQuality =
+      if (median <= 0.0) "unknown"
+      else if (median <= run.floorMs * 1.25) "clean"     // ≤ ~48.7 ms
+      else if (median <= run.floorMs * 2.0) "contended"  // ≤ ~77.9 ms
+      else "degraded"
+    // any failure is carried in-band, so a broken query can never
+    // masquerade as a fast success in BENCH_r*.json: the count in BOTH
+    // lines, the "failed" name array in the full line only (171 names
+    // would push the tail line's `{"metric"` prefix out of the window)
+    val failJson = s""","n_failed":${run.failed.size}""" + (if (full)
+      s""","failed":${run.failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}""" else "")
+    // the per-row probe stamps ride the full line only
+    val calJson = if (full) ""","cal_ms":""" + obj(run.calMs) else ""
+    // the per-family warm rows (tiny, fixed count) ride in BOTH lines:
+    // build-vs-query split is the adjudication signal
+    val warmJson = s""","warm_s":${f(run.warm.map(_._2).sum)},"warm":${obj(run.warm)}"""
+    // normalized = stamp-floor-equivalent total (seconds) — see
+    // [[stampNormalized]] for why the per-query stamp median, not the
+    // one-shot calibration probe, is the adjudicator (r17 verdict
+    // task 1: the calibration form let a contended run out-rank a
+    // better window). UNIT CHANGE vs pre-r18 artifacts: old
+    // normalized was total/calibration_s (dimensionless, ~35-55);
+    // new is seconds at the clean-floor host speed (~88 for r17's
+    // best window). Cross-round trend reads must not mix the two.
+    val norm = stampNormalized(run.total, median, run.floorMs)
+    s"""{"metric":"total","value":${f(run.total)},"unit":"sec","n":${run.rows.size},"calibration_s":${f(run.calibrationS)},"normalized":${f(norm)},"stamp_median_ms":${f(median)},"window_quality":"$windowQuality"$failJson$warmJson,"queries":${obj(rows)}$calJson,"sf":"${run.sfDir}"}"""
+  }
+
+  /** The full line (first stdout line and BENCH_DETAIL.json): every row,
+    * plus the failed names and the per-row probe stamps, which would blow
+    * the tail line's size and which stall adjudication reads from the
+    * artifact anyway.
+    */
+  def fullLine(run: Run): String = line(run, run.rows, full = true)
+
+  /** The final compact stdout line: every [[tailRoster]] row that ran,
+    * slowest first. The bench harness keeps only the LAST ~2000 chars of
+    * run output and parses the JSON line out of that tail (rounds 4–5: a full
+    * per-query map pushed the `{"metric"` prefix out of the window →
+    * `parsed: null`), so this line must stay inside the window after
+    * sbt's ~80-char `[success] Total time ...` trailer. The roster is
+    * fixed (see its doc), so its size is bounded without a budget cut;
+    * BenchSpec pins the worst case.
+    */
+  def tailLine(run: Run): String = {
+    val roster = tailRoster.toSet
+    line(run, run.rows.filter(kv => roster(kv._1)).sortBy(-_._2), full = false)
+  }
+
+  /** Usage: `Bench [q1,q2,...]`. With no argument every registered query
+    * runs and the full line is also written to BENCH_DETAIL.json. The
+    * optional comma-separated subset (Verify's 3rd arg) runs only those
+    * rows, with the same warm rows, calibration and stamps as a full run
+    * so each row means the same as its full-run row; it leaves
+    * BENCH_DETAIL.json alone. Fixture dir: SPARK_GRAFT_SF_DIR (default
+    * sf0.1); cores: SPARK_GRAFT_CPUS (default 32).
+    */
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // the round-3 driver contract runs local[32] with 32 shuffle
-    // partitions; SPARK_GRAFT_CPUS overrides for local iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only: Option[Set[String]] = args.headOption.map(_.split(",").toSet)
+    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[bench] unknown queries: ${unknown.toSeq.sorted.mkString(",")}" +
+        " (names are SparkEntry.queries keys)")
+      sys.exit(2)
+    }
+    val sfDir = Session.sfDir()
+    val spark = Session.getOrCreate(Some(Session.cpus))
     // Warm the session (scheduler, codegen, shuffle machinery) so the
     // first timed query doesn't absorb one-time boot cost.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -148,109 +225,39 @@ object Bench {
         }
     }
     val calMs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // a failed query must be LOUD *inside the JSON*, not a
-      // suspiciously-fast row distinguishable only on stderr (round 9:
-      // 26 fixture-broken queries looked like 0.07 s successes in
-      // BENCH_r09.json). Record the name for the "failed" field and keep
-      // the timing row so the queries map stays complete.
-      try { fn(spark, sfDir).count() } catch {
-        case t: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${t.getClass.getName}: ${t.getMessage}")
-          failed += name
+    val results = SparkEntry.queries
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .map { case (name, fn) =>
+        val t0 = System.nanoTime()
+        // a failed query must be LOUD *inside the JSON*, not a
+        // suspiciously-fast row distinguishable only on stderr (round 9:
+        // 26 fixture-broken queries looked like 0.07 s successes in
+        // BENCH_r09.json). Record the name for the "failed" field and keep
+        // the timing row so the queries map stays complete.
+        try { fn(spark, sfDir).count() } catch {
+          case t: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${t.getClass.getName}: ${t.getMessage}")
+            failed += name
+        }
+        val sec = (System.nanoTime() - t0) / 1e9
+        calMs += name -> microCal()
+        name -> sec
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      calMs += name -> microCal()
-      name -> sec
-    }
-    // The driver captures only the LAST ~2000 chars of run output and
-    // parses the JSON line out of that tail. With 100 queries a full
-    // per-query map is ~2.2k chars, so its head (the `{"metric"` prefix)
-    // fell outside the window in rounds 4–5 → `parsed: null`. Emit the
-    // full detail to a file + an early stdout line (greppable, allowed to
-    // be truncated in the tail), and keep the FINAL line — the one inside
-    // the tail window — compact: total + the slowest queries that fit.
-    def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // Window self-labeling (r16 verdict task 1): the committed r16 close
-    // artifact was a worst-window 566.8 s run that read as a 4.4×
-    // regression to anyone not cross-reading BASELINE.md's stamp log.
-    // Carry the adjudication IN the artifact: the median per-query stamp
-    // vs the 38.96 ms all-time clean floor (BASELINE.md r13) classifies
-    // the window, so a contaminated run can never masquerade as the
-    // engine's number.
-    // the clean floor is HOST-SPECIFIC (this machine's r13 best stamp);
-    // on different hardware override via GRAFT_STAMP_FLOOR_MS so clean
-    // windows can still self-identify (review catch r17)
-    val StampFloorMs = sys.env.get("GRAFT_STAMP_FLOOR_MS")
+    // the clean floor is HOST-SPECIFIC (this machine's r13 best stamp,
+    // BASELINE.md); on different hardware override via
+    // GRAFT_STAMP_FLOOR_MS so clean windows can still self-identify
+    val floorMs = sys.env.get("GRAFT_STAMP_FLOOR_MS")
       .flatMap(v => scala.util.Try(v.toDouble).toOption)
       .getOrElse(38.96)
-    val stampMedian: Double = medianOf(calMs.values.toArray)
-    val windowQuality =
-      if (stampMedian <= 0.0) "unknown"
-      else if (stampMedian <= StampFloorMs * 1.25) "clean"     // ≤ ~48.7 ms
-      else if (stampMedian <= StampFloorMs * 2.0) "contended"  // ≤ ~77.9 ms
-      else "degraded"
-    // any failure is carried in-band: a "failed" name array plus a count,
-    // present in BOTH the detail file and the compact tail line, so a
-    // broken query can never masquerade as a fast success in BENCH_r*.json
-    val failJson =
-      s""","n_failed":${failed.size},"failed":${failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-    def line(entries: Iterable[(String, Double)], total: Double,
-        cal: Iterable[(String, Double)] = Nil): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + f(v) }
-        .mkString("{", ",", "}")
-      // per-query probe stamps ride only in the FULL line (detail file):
-      // they would blow the compact tail line's budget, and stall
-      // adjudication reads the artifact, not the tail
-      val calJson =
-        if (cal.isEmpty) ""
-        else cal.map { case (k, v) => "\"" + k + "\":" + f(v) }
-          .mkString(""","cal_ms":{""", ",", "}")
-      // the per-family warm rows (tiny, fixed count) ride in BOTH lines:
-      // build-vs-query split is the adjudication signal
-      val warmJson = warm.map { case (k, v) => "\"" + k + "\":" + f(v) }
-        .mkString(""","warm_s":""" + f(warm.values.sum) + ""","warm":{""",
-          ",", "}")
-      // normalized = stamp-floor-equivalent total (seconds) — see
-      // [[stampNormalized]] for why the per-query stamp median, not the
-      // one-shot calibration probe, is the adjudicator (r17 verdict
-      // task 1: the calibration form let a contended run out-rank a
-      // better window). UNIT CHANGE vs pre-r18 artifacts: old
-      // normalized was total/calibration_s (dimensionless, ~35-55);
-      // new is seconds at the clean-floor host speed (~88 for r17's
-      // best window). Cross-round trend reads must not mix the two.
-      val norm = stampNormalized(total, stampMedian, StampFloorMs)
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","n":${results.size},"calibration_s":${f(calibration)},"normalized":${f(norm)},"stamp_median_ms":${f(stampMedian)},"window_quality":"$windowQuality"$failJson$warmJson,"queries":$qs$calJson,"sf":"$sfDir"}"""
-    }
-    // value = warm builds + per-query times: totals stay comparable with
-    // pre-warm rounds, where the builds hid inside their first consumer
-    val total = warm.values.sum +
-      (if (results.nonEmpty) results.values.sum else 0.0)
-    val full = line(results, total, calMs)
+    val run = Run(sfDir, calibration, floorMs, warm.toSeq, results.toSeq,
+      calMs.toSeq, failed.toSeq)
+    val full = fullLine(run)
     println(full)
-    try {
+    if (only.isEmpty) try {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
         (full + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () } // detail file is best-effort
-    // Final compact line: the FIXED [[tailRoster]] (see its doc — a
-    // run-dependent "slowest that fit" selection made the driver's
-    // per-query diff manufacture phantom dropped/new statuses), ordered
-    // slowest-first for readability, still budget-capped so the whole
-    // line stays well inside the driver's tail window even after sbt's
-    // `[success] Total time ...` trailer (~80 chars) is appended. The
-    // budget only binds if per-row times gain digits wholesale; roster
-    // rows are admitted slowest-first so any cut hits the cheapest rows.
-    val budget = 1700
-    val rosterSet = tailRoster.toSet
-    val slowest = results.toSeq.filter(kv => rosterSet(kv._1)).sortBy(-_._2)
-    val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    var len = line(Nil, total).length
-    slowest.foreach { case (k, v) =>
-      val add = k.length + f(v).length + 5
-      if (len + add <= budget) { kept += ((k, v)); len += add }
-    }
-    println(line(kept, total))
+    println(tailLine(run))
     spark.stop()
   }
 }

@@ -216,15 +216,7 @@ object CurateCli {
           System.err.println(usage)
           sys.exit(2)
       }
-    val builder = SparkSession.builder()
-      .appName("graft-curate")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-    val spark = (cfg.numCpus match {
-      case Some(n) => builder.master(s"local[$n]")
-      case None if sys.props.contains("spark.master") => builder
-      case None => builder.master("local[*]")
-    }).getOrCreate()
+    val spark = Session.getOrCreate(cfg.numCpus, "graft-curate", pinPartitions = false)
     try {
       val n = run(spark, cfg)
       System.err.println(s"[curate] wrote $n verdicts to ${cfg.out}")

@@ -126,16 +126,7 @@ object Main {
           System.err.println(usage)
           sys.exit(2)
       }
-    val builder = SparkSession.builder()
-      .appName("graft-extract")
-      .config("spark.sql.session.timeZone", "UTC")
-    // only force a master when the user asked for a cpu count or nothing
-    // else set one (spark-submit --master wins otherwise)
-    val spark = (cfg.numCpus match {
-      case Some(n) => builder.master(s"local[$n]")
-      case None if sys.props.contains("spark.master") => builder
-      case None => builder.master("local[*]")
-    }).getOrCreate()
+    val spark = Session.getOrCreate(cfg.numCpus, "graft-extract", pinPartitions = false)
     try run(spark, cfg)
     finally spark.stop()
   }

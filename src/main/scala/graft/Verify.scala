@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,17 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query subset for fast iteration
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // the round-3 driver contract runs local[32] with 32 shuffle
-    // partitions; SPARK_GRAFT_CPUS overrides for local iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.getOrCreate(Some(Session.cpus))
     new java.io.File(outDir).mkdirs()
     // Queries are independent single-output jobs: run a few concurrently
     // so per-query fixed overhead (planning, codegen, write commit)

@@ -4021,7 +4021,9 @@ object TextOps {
     // once: later stages re-derive from a local checkpoint instead of
     // replaying the pipeline per reference (the segment path's `rw`
     // discipline applied to the doc-level trunk). MEASURED A/B
-    // (tools/CurateCkptAb, alternated in-process, sf0.1): containment
+    // (alternated in-process, sf0.1; BASELINE.md "Round-18
+    // optimization-session addendum", tool at `git show
+    // 1378a37:src/main/scala/graft/tools/CurateCkptAb.scala`): containment
     // 4.55 → 3.58 s steady-state (−21%); but the SEMANTIC variant reads
     // the OTHER way (2.8 → 3.4 s — its stage3 fan-out is half, and the
     // eager materialization job costs more than the duplicate subtrees

@@ -1737,8 +1737,9 @@ object VectorOps {
     // NnDescent, knnCollapse): this function alone ranked by Euclidean
     // distance until r17, which agreed with the cosine baseline only
     // while every fixture vector had near-equal norm — on a mixed-norm
-    // corpus (tools/LshGrid's jittered expansion; any user's
-    // un-normalized embeddings) the two orders diverge and the
+    // corpus (the jittered expansion of BASELINE.md "LshGrid r17", tool
+    // at `git show 1378a37:src/main/scala/graft/tools/LshGrid.scala`;
+    // any user's un-normalized embeddings) the two orders diverge and the
     // "recall" gap was metric disagreement, not banding (measured:
     // recall@5 0.64-0.68 at 200k vectors with near-exhaustive
     // candidates; cosine ranking restores banding-limited behavior).

@@ -14,10 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object AnnSmallGrid {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.getOrCreate(Some(graft.Session.cpus))
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val dir = s"/root/testdata/$sf"
       val base = graft.queries.Tables.t(spark, dir, "embeddings")

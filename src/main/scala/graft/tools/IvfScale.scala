@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorExpressions
 import graft.operators.Ivf
@@ -20,13 +20,7 @@ object IvfScale {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.getOrCreate(Some(graft.Session.cpus))
 
     val noises = sys.env.get("IVF_NOISE")
       .map(_.split(",").toSeq.map(_.toDouble)).getOrElse(Seq(0.05, 0.3))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.{Tables, TextOps}
 import org.apache.spark.sql.functions._
 
@@ -15,16 +13,8 @@ import org.apache.spark.sql.functions._
   */
 object JpProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = args.headOption.getOrElse(graft.Session.sfDir())
+    val spark = graft.Session.getOrCreate(Some(graft.Session.cpus))
     spark.range(1000).selectExpr("sum(id)").collect()
 
     def time[T](name: String)(f: => T): T = {

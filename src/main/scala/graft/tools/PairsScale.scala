@@ -27,12 +27,7 @@ object PairsScale {
       case Some(s) => s.split(",").toSeq.map(_.trim.toInt)
       case None => Seq(1, 2, 4, 8)
     }
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.getOrCreate(Some(graft.Session.cpus))
     spark.range(1000).selectExpr("sum(id)").collect()
     // PAIRS_BOILER=<k>: append the SAME k-token boilerplate suffix to
     // every doc — hot shingles shared across NON-duplicate docs, the

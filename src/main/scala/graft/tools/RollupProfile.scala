@@ -9,20 +9,15 @@ import org.apache.spark.sql.functions._
   * ranged read-back, scratch delete — so the optimization targets the
   * step that actually costs, not the folklore one.
   *
-  * Usage: sbt "runMain graft.tools.RollupProfile [reps]"  (SFD env
-  * overrides the sf dir)
+  * Usage: sbt "runMain graft.tools.RollupProfile [reps]"
+  * (SPARK_GRAFT_SF_DIR overrides the sf0.1 fixture dir)
   */
 object RollupProfile {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(3)
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.getOrCreate(Some(graft.Session.cpus))
     spark.range(1000).selectExpr("sum(id)").collect()
-    val dir = sys.env.getOrElse("SFD", "/root/testdata/sf0.1")
+    val dir = graft.Session.sfDir()
     val events = graft.queries.Tables.t(spark, dir, "events")
     def t[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f

@@ -17,10 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object SimhashGrid {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.getOrCreate(Some(graft.Session.cpus))
     // SIMHASH_SCALE=1 (r18 second pass): above-fixture corpora via
     // jittered replication (each replica gets a distinct suffix token,
     // so clones are near- but not exactly-identical) to locate the

@@ -11,9 +11,11 @@ import graft.queries.{Tables, VectorOps}
   * [[VectorOps.expandEmbeddings]] (noise 0.05 ⇒ copies at cosine ≈ 0.97
   * to their parent — a near-duplicate cloud). Built once per JVM and
   * localCheckpointed; truth is the exact brute-force top-5 of the 20
-  * unjittered copy-0 queries. Measured recalls at this scale
-  * (tools/AnnScale, 100 queries): LSH 0.87, IVF np4 0.978 / np8 0.994,
-  * PQ 1.0, IVF-PQ 0.978–0.994 — the spec floors sit safely under these.
+  * unjittered copy-0 queries. Measured recalls at this scale (100
+  * queries; BASELINE.md "ANN recall/latency at 10× fixture scale", rerun
+  * with `git show 1378a37:src/main/scala/graft/tools/AnnScale.scala`):
+  * LSH 0.87, IVF np4 0.978 / np8 0.994, PQ 1.0, IVF-PQ 0.978–0.994 —
+  * the spec floors sit safely under these.
   */
 object AnnScaleFixture {
   val Factor = 10

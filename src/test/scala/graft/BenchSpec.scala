@@ -57,4 +57,41 @@ class BenchSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"roster names absent from the query registry: $missing")
   }
+
+  test("tailLine carries every roster row, slowest first, inside the " +
+      "2000-char tail window even at 8-character values and any failures") {
+    // the r19 line dropped q_agg_distinct: its budget loop over-counted
+    // each row by one char and cut a row from a line that fit. Worst
+    // case here: every value ≥ 1000 s, 161 rows, the 10 warm rows; with
+    // no failure, round 9's 26 failed queries, and every row failed
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    assert(names.size == 161)
+    val rows = names.zipWithIndex.map { case (n, i) => n -> (1000.0 + i) }
+    val warm = Seq("text_jaccard_pairs", "text_cluster_labels",
+      "text_curate_reasons", "vec_pairs_cosine", "vec_pairs_cosine_lsh",
+      "vec_pairs_minhash", "vec_graph", "vec_corpus_count",
+      "doc_corpus_count", "doc_dup_stats").map(_ -> 9999.999)
+    val everyRow = names ++ warm.map("warm:" + _._1)
+    for (failed <- Seq(Nil, names.take(26), everyRow)) {
+      val run = Bench.Run("/root/testdata/sf0.1", 1000.0, Floor, warm, rows,
+        rows.map { case (n, _) => n -> 1000.0 }, failed)
+      val tail = Bench.tailLine(run)
+      val keys = "\"(q_[a-z0-9_]+)\":".r.findAllMatchIn(tail).map(_.group(1)).toSeq
+      assert(keys.toSet == Bench.tailRoster.toSet, tail)
+      assert(keys.size == Bench.tailRoster.size, "each roster row exactly once")
+      assert(keys == Bench.tailRoster.sortBy(n => -rows.toMap.apply(n)),
+        "rows must be slowest first")
+      // the ~2000-char window minus sbt's ~80-char trailer
+      assert(tail.length <= 1900,
+        s"tail line is ${tail.length} chars with ${failed.size} failed")
+      assert(tail.contains(s"\"n_failed\":${failed.size},"))
+      assert(!tail.contains("cal_ms") && !tail.contains("\"failed\":"),
+        "per-row stamps and failed names ride the full line only")
+      val full = Bench.fullLine(run)
+      assert(names.forall(n => full.contains("\"" + n + "\":")))
+      assert(full.contains("\"cal_ms\":{"))
+      assert(full.contains(s"\"n_failed\":${failed.size},\"failed\":[" +
+        failed.sorted.map("\"" + _ + "\"").mkString(",") + "]"))
+    }
+  }
 }

@@ -1,14 +1,19 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DotProduct
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SparkSessionExtensions surface (graft.extensions.GraftExtensions,
-  * registered via spark.sql.extensions in [[SparkSessionFixture]]):
-  * the graft_dot SQL function and the DotProductRewrite optimizer rule
-  * that moves interpreted HOF dot/norm² lambdas onto the codegen'd
-  * native expression.
+  * registered via spark.sql.extensions by [[graft.Session]], the one
+  * session factory): the graft_dot SQL function and the
+  * DotProductRewrite optimizer rule that moves interpreted HOF
+  * dot/norm² lambdas onto the codegen'd native expression; and the
+  * factory's conf rule, which puts the extensions in every session.
   */
 class ExtensionsSpec extends AnyFunSuite with SparkSessionFixture {
 
@@ -136,6 +141,45 @@ class ExtensionsSpec extends AnyFunSuite with SparkSessionFixture {
     val emb = Tables0.embedding(spark, Sf0001, row0.getLong(0))
     val expected = emb.map(x => x.toDouble * x).sum
     assert(math.abs(row0.getDouble(1) - expected) < 1e-5)
+  }
+
+  test("Session.conf: a core count pins local[n] (and n partitions unless " +
+      "a CLI asks not to); else " +
+      "the launcher's master, else local[*]; launcher values win") {
+    val four = Session.conf(Some(4), Map.empty)
+    assert(four("spark.master") == "local[4]")
+    assert(four("spark.sql.shuffle.partitions") == "4")
+    assert(four("spark.sql.extensions") == "graft.extensions.GraftExtensions")
+    assert(four("spark.sql.session.timeZone") == "UTC")
+    assert(four("spark.ui.enabled") == "false")
+    // the CLIs' --num-cpus pins the master only
+    val cli = Session.conf(Some(4), Map.empty, pinPartitions = false)
+    assert(cli("spark.master") == "local[4]")
+    assert(!cli.contains("spark.sql.shuffle.partitions"))
+    assert(Session.conf(None, Map("spark.master" -> "yarn"))("spark.master") ==
+      "yarn")
+    val bare = Session.conf(None, Map.empty)
+    assert(bare("spark.master") == "local[*]")
+    assert(!bare.contains("spark.sql.shuffle.partitions"))
+    assert(Session.conf(None, Map("spark.ui.enabled" -> "true"))(
+      "spark.ui.enabled") == "true")
+    assert(spark.conf.get("spark.sql.extensions") ==
+      "graft.extensions.GraftExtensions")
+  }
+
+  test("no source but Session.scala builds a SparkSession") {
+    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
+    assert(roots.forall(_.toFile.isDirectory), s"run from the repo root: $roots")
+    val builder = "SparkSession\\s*\\.\\s*builder".r
+    val offenders = roots.flatMap(root => Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => !p.endsWith("graft/Session.scala"))
+      .filter(p => builder
+        .findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+      .map(_.toString).toList)
+    assert(offenders.isEmpty,
+      s"SparkSession built outside graft.Session: $offenders — call " +
+        "Session.getOrCreate instead")
   }
 }
 

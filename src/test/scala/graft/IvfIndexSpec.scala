@@ -213,8 +213,9 @@ class IvfIndexSpec extends AnyFunSuite with SparkSessionFixture {
   test("10x corpus (20k vectors): trained-IVF recall floors at nprobe 4/8") {
     // r8 verdict task 2: the pruning settings' recall measured at real
     // scale, not 500 fixture rows. Floors sit under the observed values
-    // (np4 0.89, np8 0.97 on this corpus/queries; tools/AnnScale re-runs
-    // the measurement with wall times for BASELINE.md).
+    // (np4 0.89, np8 0.97 on this corpus/queries; the wall-time rows are
+    // BASELINE.md "ANN recall/latency at 10× fixture scale", from
+    // `git show 1378a37:src/main/scala/graft/tools/AnnScale.scala`).
     val b = AnnScaleFixture.base
     val cents = graft.operators.Ivf.train(b, k = 64, iters = 2)
       .localCheckpoint(true)

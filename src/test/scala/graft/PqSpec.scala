@@ -140,8 +140,9 @@ class PqSpec extends AnyFunSuite with SparkSessionFixture {
     // r8 verdict task 2 at the 20k near-duplicate cloud: full-scan ADC
     // (shortlist 50) and the partition-pruned IVF-PQ index (nprobe 8,
     // shortlist 200). Floors sit under observed values (PQ 1.0,
-    // IVF-PQ 0.99 on this corpus; tools/AnnScale re-measures with wall
-    // times for BASELINE.md).
+    // IVF-PQ 0.99 on this corpus; the wall-time rows are BASELINE.md
+    // "ANN recall/latency at 10× fixture scale", from
+    // `git show 1378a37:src/main/scala/graft/tools/AnnScale.scala`).
     val b = AnnScaleFixture.base
     val books = Pq.train(b, M, Ks, iters = 2).localCheckpoint(true)
     val pq = AnnScaleFixture.recallOf(

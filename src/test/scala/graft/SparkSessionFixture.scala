@@ -33,18 +33,8 @@ trait SparkSessionFixture extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkSessionFixture {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the engine's session-extension point (graft_dot SQL function +
-      // DotProductRewrite optimizer rule), exercised by ExtensionsSpec
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The engine session at 4 cores (with the GraftExtensions that
+    * ExtensionsSpec exercises).
+    */
+  lazy val session: SparkSession = Session.getOrCreate(Some(4), "graft-tests")
 }
