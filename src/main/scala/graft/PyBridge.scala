@@ -111,15 +111,15 @@ object PyBridge {
   // ------------------------------------- index history / as-of (r13)
 
   /** One health view of a persisted index — batches with file stats,
-    * sidecars, lifecycle flags ([[graft.queries.VectorOps.indexInfo]]).
+    * sidecars, lifecycle flags ([[graft.operators.IndexStore.indexInfo]]).
     */
   def indexInfo(spark: SparkSession, path: String): DataFrame =
-    graft.queries.VectorOps.indexInfo(spark, path)
+    graft.operators.IndexStore.indexInfo(spark, path)
 
   /** A persisted index's admitted batch tags, in append order. */
   def indexHistory(spark: SparkSession, path: String): java.util.List[String] = {
     val l = new java.util.ArrayList[String]()
-    graft.queries.VectorOps.indexHistory(spark, path).foreach(l.add)
+    graft.operators.IndexStore.indexHistory(spark, path).foreach(l.add)
     l
   }
 
@@ -241,7 +241,7 @@ object PyBridge {
   /** [[noveltyDelta]] against the seen-set snapshot as of a batch tag. */
   def noveltyDeltaAsOf(spark: SparkSession, path: String, batch: DataFrame,
       width: Int, asOf: String): DataFrame =
-    TextOps.noveltyDeltaAsOf(spark, path, batch, width, asOf)
+    TextOps.noveltyDelta(spark, path, batch, width, Some(asOf))
 
   // ------------------------- containment postings index (r15 s2)
 
@@ -293,12 +293,12 @@ object PyBridge {
 
   /** The indexed semantic decon AS OF a recorded tag — "what would
     * eval release R have flagged" (read-only; the shingle family's
-    * decontaminateIndexedAsOf question, embedding-space).
+    * as-of decontaminateIndexed question, embedding-space).
     */
   def semanticDecontaminateIndexedAsOf(spark: SparkSession, path: String,
       corpus: DataFrame, threshold: Double, asOf: String): DataFrame =
-    VectorOps.semanticDecontaminateIndexedAsOf(spark, path, corpus,
-      threshold, asOf)
+    VectorOps.semanticDecontaminateIndexed(spark, path, corpus, threshold,
+      asOf = Some(asOf))
 
   /** Persist an eval set as the cosine index the indexed decon probes. */
   def writeCosineIndex(vecs: DataFrame, path: String): Unit =
@@ -369,8 +369,8 @@ object PyBridge {
   def graphSearchRoutedAsOf(spark: SparkSession, path: String,
       queries: DataFrame, k: Int, beam: Int, hops: Int,
       asOf: String): DataFrame =
-    graft.operators.NnDescent.searchIndexRoutedAsOf(spark, path,
-      withN2(queries), k, beam, hops, asOf)
+    graft.operators.NnDescent.searchIndexRouted(spark, path,
+      withN2(queries), k, beam, hops, asOf = Some(asOf))
 
   /** The generic index health view with the graph drift verdict
     * appended as section = "drift" rows.
@@ -411,8 +411,8 @@ object PyBridge {
 
   def ivfSearchAsOf(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, nprobe: Int, asOf: String): DataFrame =
-    graft.operators.Ivf.searchIndexAsOf(spark, path, withN2(queries), k,
-      nprobe, asOf)
+    graft.operators.Ivf.searchIndex(spark, path, withN2(queries), k,
+      nprobe, asOf = Some(asOf))
 
   /** Zero-downtime aside-rebuilds for the IVF and MinHash families
     * (the graph form is [[graphMaybeRebuildAside]]'s unconditional
@@ -449,8 +449,8 @@ object PyBridge {
 
   def minhashPairsIndexedAsOf(spark: SparkSession, path: String,
       threshold: Double, asOf: String): DataFrame =
-    graft.queries.VectorOps.minhashPairsIndexedAsOf(spark, path, threshold,
-      asOf)
+    graft.queries.VectorOps.minhashPairsIndexed(spark, path, threshold,
+      asOf = Some(asOf))
 
   /** Persisted media-signature dedup from Python: ingest a batch of
     * (idCol, contentCol) media rows against the aHash index at `path`

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.util.control.NonFatal
+import graft.operators.IndexStore
 
 /** Multimodal columns (north-star §2.D): images/audio/video ride beside
   * text as opaque `binary` columns with typed metadata structs; per-row
@@ -825,60 +826,14 @@ object Multimodal {
       .withColumn("bandval", expr(
         s"shiftright(ahash, band * $MediaBandBits) & ${(1L << MediaBandBits) - 1}"))
 
-  /** Record-on-first-admit / refuse-on-mismatch for the index's media
-    * kind — [[graft.queries.TextOps]]' `requireIndexParams` semantics
-    * over THIS index's `hashes` component, incl. the admit gate: a
-    * read-only as-of probe validates but never writes the sidecar.
+  /** Record-on-first-admit / refuse-on-mismatch pin for the index's
+    * media kind over THIS index's `hashes` component (a read-only as-of
+    * probe validates but never writes the sidecar).
     */
-  private def requireMediaParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, params: String, admit: Boolean): Unit =
-    graft.queries.VectorOps.requireIndexParamsAt(spark, path, "hashes",
-      params, admit,
+  private def mediaPin(kind: String): IndexStore.Pin =
+    IndexStore.Pin("hashes", s"kind=$kind",
       "would compare fingerprints of a different media kind",
-      siblingSubdirs = Seq("frames"))
-
-
-  /** The component's closed replay windows — tags folded into
-    * batch=init by a past compaction (shared by the hash and frame-set
-    * indexes; one reader so the discipline can't diverge).
-    */
-  private[graft] def compactedTagsAt(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      component: String): Set[String] =
-    graft.queries.VectorOps
-      .readSidecar(spark, s"$path/$component/_compacted_tags")
-      .map(_.split("\n").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-
-  private[graft] def compactedMediaTags(
-      spark: org.apache.spark.sql.SparkSession, path: String): Set[String] =
-    compactedTagsAt(spark, path, "hashes")
-
-  /** Compact one single-component index in place —
-    * [[graft.queries.TextOps]]' `compactSegmentIndex` discipline,
-    * shared by the media-hash (`hashes`) and video frame-set
-    * (`frames`) families: folded tags' replay windows close (recorded
-    * in-index), as-of reach resets to `init`, reset-before-fold under
-    * the `_folding` sentinel.
-    */
-  private def compactSingleComponent(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      component: String, numFiles: Int): Unit = {
-    import graft.queries.VectorOps
-    VectorOps.finishCrashedSwap(spark, s"$path/$component")
-    val dataDir = new org.apache.hadoop.fs.Path(s"$path/$component")
-    val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live =
-      if (!fs.exists(dataDir)) Set.empty[String]
-      else fs.listStatus(dataDir).iterator.map(_.getPath.getName)
-        .filter(n => n.startsWith("batch=") && n != "batch=init")
-        .map(_.stripPrefix("batch=")).toSet
-    val folded = (compactedTagsAt(spark, path, component) ++ live).toSeq.sorted
-    VectorOps.beginFold(spark, path)
-    VectorOps.resetHistory(spark, path, Seq("init"))
-    VectorOps.compactComponent(spark, s"$path/$component", numFiles, Nil,
-      sidecarFiles = Map("_compacted_tags" -> folded.mkString("\n")))
-    VectorOps.endFold(spark, path)
-  }
+      siblings = Seq("frames"))
 
   /** One ingest batch of already-hashed media against the persisted
     * index: near-dup pairs (id1, id2, hamming, cross) where every pair
@@ -912,32 +867,27 @@ object Multimodal {
   def mediaHashProbe(spark: org.apache.spark.sql.SparkSession, path: String,
       hashed: DataFrame, tag: String, kind: String, maxHamming: Int = 6,
       maxBucket: Int = graft.operators.BandedHamming.DefaultMaxBucket,
-      admitParams: Boolean = false): DataFrame = {
-    import graft.queries.VectorOps
-    VectorOps.requireTag(tag)
+      admitParams: Boolean = false): DataFrame =
     // admitParams = true when the caller is an ADMIT path that will
     // append right after (mediaHashDelta, the CurateIngest stage): the
-    // crashed-first-contact window then re-records instead of wedging
-    // (the shared requireIndexParamsAt window semantics). Standalone /
-    // as-of probes stay read-only.
-    requireMediaParams(spark, path, s"kind=$kind", admit = admitParams)
-    VectorOps.finishCrashedSwap(spark, s"$path/hashes")
-    require(!compactedMediaTags(spark, path).contains(tag),
-      s"tag '$tag' was folded into batch=init by index compaction — " +
-        "its replay window is closed; re-ingest under a fresh tag")
-    val batch = hashed.select(col("med_id"), col("ahash"))
-      .filter(col("ahash").isNotNull)
-    val dataDir = new org.apache.hadoop.fs.Path(s"$path/hashes")
-    val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val corpus =
-      if (fs.exists(dataDir))
-        spark.read.schema("med_id STRING, ahash LONG, batch STRING")
-          .parquet(s"$path/hashes")
-          .filter(col("batch") =!= lit(tag))
-          .select(col("med_id"), col("ahash"))
-      else spark.emptyDataFrame
-        .select(lit("").as("med_id"), lit(0L).as("ahash")).limit(0)
-    mediaPairsAgainst(batch, corpus, maxHamming, maxBucket)
+    // crashed-first-contact window then re-records instead of wedging.
+    // Standalone / as-of probes stay read-only.
+    mediaHashAt(spark, path, hashed, kind, maxHamming, maxBucket,
+      IndexStore.View.Excluding(tag), admitParams)
+
+  /** The probe body shared by [[mediaHashProbe]] and
+    * [[mediaHashDeltaAsOf]]: the batch's decodable rows against the
+    * stored hashes under `view`. */
+  private def mediaHashAt(spark: org.apache.spark.sql.SparkSession,
+      path: String, hashed: DataFrame, kind: String, maxHamming: Int,
+      maxBucket: Int, view: IndexStore.View,
+      admitParams: Boolean): DataFrame = {
+    val corpus = IndexStore.open(spark, path, Seq("hashes"), view,
+        Some(mediaPin(kind)), admitParams)("hashes", "med_id STRING, ahash LONG")
+      .select(col("med_id"), col("ahash"))
+    mediaPairsAgainst(
+      hashed.select(col("med_id"), col("ahash")).filter(col("ahash").isNotNull),
+      corpus, maxHamming, maxBucket)
   }
 
   /** Append half of [[mediaHashDelta]]: admit `hashed`'s decodable rows
@@ -945,31 +895,13 @@ object Multimodal {
     * index history. Records `kind` on first contact.
     */
   def appendMediaIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, hashed: DataFrame, tag: String, kind: String): Unit = {
-    import graft.queries.VectorOps
-    VectorOps.requireTag(tag)
-    requireMediaParams(spark, path, s"kind=$kind", admit = true)
-    VectorOps.finishCrashedSwap(spark, s"$path/hashes")
-    VectorOps.ensureBatchLayout(spark, s"$path/hashes")
-    require(!compactedMediaTags(spark, path).contains(tag),
-      s"tag '$tag' was folded into batch=init by index compaction — " +
-        "its replay window is closed; re-ingest under a fresh tag")
-    VectorOps.seedHistoryIfEmpty(spark, path, Seq("hashes"))
-    hashed.select(col("med_id"), col("ahash"))
-      .filter(col("ahash").isNotNull)
-      .write.mode("overwrite").parquet(s"$path/hashes/batch=$tag")
-    VectorOps.recordHistory(spark, path, tag)
-  }
-
-  /** Does the media index already hold an increment under `batch=tag`?
-    * The streaming loop's compaction-cadence probe
-    * ([[graft.queries.TextOps]]' `seenTagExists` for this layout).
-    */
-  private[graft] def mediaTagExists(spark: org.apache.spark.sql.SparkSession,
-      path: String, tag: String, component: String = "hashes"): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$component/batch=$tag")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+      path: String, hashed: DataFrame, tag: String, kind: String): Unit =
+    IndexStore.append(spark, path, tag, Seq("hashes"), Some(mediaPin(kind))) {
+      inc =>
+        hashed.select(col("med_id"), col("ahash"))
+          .filter(col("ahash").isNotNull)
+          .write.mode("overwrite").parquet(inc.dir("hashes"))
+    }
 
   /** The one kind → (index root leaf, component) mapping the curation
     * pipelines share, with the kind validation: a typo'd kind must not
@@ -1046,15 +978,9 @@ object Multimodal {
       path: String, hashed: DataFrame, asOf: String, kind: String,
       maxHamming: Int = 6,
       maxBucket: Int = graft.operators.BandedHamming.DefaultMaxBucket)
-      : DataFrame = {
-    requireMediaParams(spark, path, s"kind=$kind", admit = false)
-    val batch = hashed.select(col("med_id"), col("ahash"))
-      .filter(col("ahash").isNotNull)
-    val corpus = graft.queries.VectorOps
-      .componentAsOf(spark, path, "hashes", asOf)
-      .select(col("med_id"), col("ahash"))
-    mediaPairsAgainst(batch, corpus, maxHamming, maxBucket)
-  }
+      : DataFrame =
+    mediaHashAt(spark, path, hashed, kind, maxHamming, maxBucket,
+      IndexStore.View.AsOf(asOf), admitParams = false)
 
   /** Image ingest against the persisted index: decode + aHash the batch
     * (undecodable rows excluded — they can never pair), then
@@ -1164,13 +1090,13 @@ object Multimodal {
 
   /** Compact the media index in place — the
     * [[graft.queries.TextOps.compactSegmentIndex]] discipline on the
-    * `hashes` component: folded tags' replay windows close (recorded
-    * in-index), as-of reach resets to `init`, reset-before-fold under
-    * the `_folding` sentinel.
+    * `hashes` component ([[IndexStore.compact]]): folded tags' replay
+    * windows close, as-of reach resets to `init`.
     */
   def compactMediaIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, numFiles: Int = 0): Unit =
-    compactSingleComponent(spark, path, "hashes", numFiles)
+    IndexStore.compact(spark, path, Seq("hashes"), numFiles,
+      closeWindows = true)
 
   // ---------------------------- persisted video frame-signature index
 
@@ -1197,19 +1123,11 @@ object Multimodal {
     * the one-shot [[videoDedup]]'s batch-local count, a title card that
     * went universal across PAST batches is defused here too.
     */
-  private def requireVideoParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, params: String, admit: Boolean): Unit =
-    graft.queries.VectorOps.requireIndexParamsAt(spark, path, "frames",
-      params, admit,
+  private def videoPin(everyNthMs: Long, durationMs: Long): IndexStore.Pin =
+    IndexStore.Pin("frames",
+      s"kind=video,everyNthMs=$everyNthMs,durationMs=$durationMs",
       "would overlap frame sets sampled on a different cadence",
-      siblingSubdirs = Seq("hashes"))
-
-  private def videoParams(everyNthMs: Long, durationMs: Long): String =
-    s"kind=video,everyNthMs=$everyNthMs,durationMs=$durationMs"
-
-  private[graft] def compactedVideoTags(
-      spark: org.apache.spark.sql.SparkSession, path: String): Set[String] =
-    compactedTagsAt(spark, path, "frames")
+      siblings = Seq("hashes"))
 
   /** One decode pass over an ingest batch → its distinct frame-set rows
     * `(video_id, frame_sig, n_frames)` — the exact shape the index
@@ -1308,27 +1226,21 @@ object Multimodal {
   def videoFrameProbe(spark: org.apache.spark.sql.SparkSession,
       path: String, frames: DataFrame, tag: String, everyNthMs: Long,
       durationMs: Long, minJaccard: Double = 0.5, maxPerSig: Int = 64,
-      admitParams: Boolean = false): DataFrame = {
-    import graft.queries.VectorOps
-    VectorOps.requireTag(tag)
-    requireVideoParams(spark, path, videoParams(everyNthMs, durationMs),
-      admit = admitParams)
-    VectorOps.finishCrashedSwap(spark, s"$path/frames")
-    require(!compactedVideoTags(spark, path).contains(tag),
-      s"tag '$tag' was folded into batch=init by index compaction — " +
-        "its replay window is closed; re-ingest under a fresh tag")
-    val dataDir = new org.apache.hadoop.fs.Path(s"$path/frames")
-    val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val corpus =
-      if (fs.exists(dataDir))
-        spark.read
-          .schema("video_id STRING, frame_sig LONG, n_frames LONG, batch STRING")
-          .parquet(s"$path/frames")
-          .filter(col("batch") =!= lit(tag))
-          .select(col("video_id"), col("frame_sig"), col("n_frames"))
-      else spark.emptyDataFrame
-        .select(lit("").as("video_id"), lit(0L).as("frame_sig"),
-          lit(0L).as("n_frames")).limit(0)
+      admitParams: Boolean = false): DataFrame =
+    videoFramesAt(spark, path, frames, everyNthMs, durationMs, minJaccard,
+      maxPerSig, IndexStore.View.Excluding(tag), admitParams)
+
+  /** The probe body shared by [[videoFrameProbe]] and
+    * [[videoDedupDeltaAsOf]]: batch frame sets against the stored frame
+    * sets under `view`. */
+  private def videoFramesAt(spark: org.apache.spark.sql.SparkSession,
+      path: String, frames: DataFrame, everyNthMs: Long, durationMs: Long,
+      minJaccard: Double, maxPerSig: Int, view: IndexStore.View,
+      admitParams: Boolean): DataFrame = {
+    val corpus = IndexStore.open(spark, path, Seq("frames"), view,
+        Some(videoPin(everyNthMs, durationMs)), admitParams)(
+        "frames", "video_id STRING, frame_sig LONG, n_frames LONG")
+      .select(col("video_id"), col("frame_sig"), col("n_frames"))
     videoPairsAgainst(frames, corpus, minJaccard, maxPerSig)
   }
 
@@ -1338,21 +1250,12 @@ object Multimodal {
     */
   def appendVideoIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, frames: DataFrame, tag: String, everyNthMs: Long,
-      durationMs: Long): Unit = {
-    import graft.queries.VectorOps
-    VectorOps.requireTag(tag)
-    requireVideoParams(spark, path, videoParams(everyNthMs, durationMs),
-      admit = true)
-    VectorOps.finishCrashedSwap(spark, s"$path/frames")
-    VectorOps.ensureBatchLayout(spark, s"$path/frames")
-    require(!compactedVideoTags(spark, path).contains(tag),
-      s"tag '$tag' was folded into batch=init by index compaction — " +
-        "its replay window is closed; re-ingest under a fresh tag")
-    VectorOps.seedHistoryIfEmpty(spark, path, Seq("frames"))
-    frames.select(col("video_id"), col("frame_sig"), col("n_frames"))
-      .write.mode("overwrite").parquet(s"$path/frames/batch=$tag")
-    VectorOps.recordHistory(spark, path, tag)
-  }
+      durationMs: Long): Unit =
+    IndexStore.append(spark, path, tag, Seq("frames"),
+        Some(videoPin(everyNthMs, durationMs))) { inc =>
+      frames.select(col("video_id"), col("frame_sig"), col("n_frames"))
+        .write.mode("overwrite").parquet(inc.dir("frames"))
+    }
 
   /** One ingest batch of already-decoded frame sets against the
     * persisted video index: probe (own tag excluded), then admit —
@@ -1392,21 +1295,17 @@ object Multimodal {
       contentCol: String = "content",
       decoder: VideoDecoder = StubVideoDecoder, everyNthMs: Long = 1000,
       durationMs: Long = 5000, minJaccard: Double = 0.5,
-      maxPerSig: Int = 64): DataFrame = {
-    requireVideoParams(spark, path, videoParams(everyNthMs, durationMs),
-      admit = false)
-    val corpus = graft.queries.VectorOps
-      .componentAsOf(spark, path, "frames", asOf)
-      .select(col("video_id"), col("frame_sig"), col("n_frames"))
-    videoPairsAgainst(
+      maxPerSig: Int = 64): DataFrame =
+    videoFramesAt(spark, path,
       batchFrameSet(df, idCol, contentCol, decoder, everyNthMs, durationMs),
-      corpus, minJaccard, maxPerSig)
-  }
+      everyNthMs, durationMs, minJaccard, maxPerSig,
+      IndexStore.View.AsOf(asOf), admitParams = false)
 
   /** Compact the video index in place — [[compactMediaIndex]]'s
     * discipline on the `frames` component.
     */
   def compactVideoIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, numFiles: Int = 0): Unit =
-    compactSingleComponent(spark, path, "frames", numFiles)
+    IndexStore.compact(spark, path, Seq("frames"), numFiles,
+      closeWindows = true)
 }

@@ -243,58 +243,41 @@ object Ivf {
     * each query batch reads only its probed cells' files instead of
     * re-scanning (and re-shuffling) the corpus per search.
     */
-  def writeIndex(base: DataFrame, cents: DataFrame, path: String): Unit = {
-    // rebuild replaces the whole index: drop stale batch= increments
-    // (appendIndex) so they cannot duplicate vec_ids beside the fresh
-    // batch=init — see [[graft.queries.VectorOps.resetComponent]]. The
-    // `_building` sentinel brackets the delete→write window so a crash
-    // between them fails closed instead of leaving a probe-able index
-    // missing its corpus ([[graft.queries.VectorOps.beginIndexBuild]]).
-    graft.queries.VectorOps.beginIndexBuild(base.sparkSession, path)
-    graft.queries.VectorOps.resetComponent(base.sparkSession, s"$path/cells")
-    // a rebuild-in-place over a former PQ index must not leave its
-    // sidecars (or books): stale _pq_perm/_pq_residual/_pq_m would make
-    // requireIvfReadable refuse the freshly built VALID plain index
-    // forever, and a stale books dir would brick appendIndex — the same
-    // rebuild-clears-markers discipline Pq.writeIndex applies
-    locally {
+  def writeIndex(base: DataFrame, cents: DataFrame, path: String): Unit =
+    // rebuild replaces the whole index inside the fail-closed build
+    // bracket ([[IndexStore.build]]), which also clears a stale PQ build
+    // sentinel — this rebuild is the repair of a crashed PQ build
+    IndexStore.build(base.sparkSession, path, Seq("cells")) { init =>
+      // a rebuild-in-place over a former PQ index must not leave its
+      // sidecars (or books): stale _pq_perm/_pq_residual/_pq_m would make
+      // requireIvfReadable refuse the freshly built VALID plain index
+      // forever, and a stale books dir would brick appendIndex — the same
+      // rebuild-clears-markers discipline Pq.writeIndex applies
       val conf = base.sparkSession.sparkContext.hadoopConfiguration
-      // …including a stale _pq_building from a CRASHED PQ build: this
-      // rebuild is itself the repair, and crash-safety inside this
-      // window is carried by the _building sentinel — leaving the PQ
-      // sentinel behind would make requireIvfReadable refuse the
-      // freshly built, valid plain index forever
-      Seq(s"$path/_pq_perm", s"$path/_pq_residual", s"$path/_pq_m",
-          s"$path/_pq_building")
+      Seq(s"$path/_pq_perm", s"$path/_pq_residual", s"$path/_pq_m")
         .foreach { f =>
           val p = new org.apache.hadoop.fs.Path(f)
           p.getFileSystem(conf).delete(p, false)
         }
       val books = new org.apache.hadoop.fs.Path(s"$path/books")
       books.getFileSystem(conf).delete(books, true)
+      cents.write.mode("overwrite").parquet(s"$path/centroids")
+      // batch=… above the cell dirs, like the dedup indexes: increments
+      // ([[appendIndex]]) land in their own discoverable partition level,
+      // replays overwrite themselves, and the cell partition column — the
+      // one pruning keys on — is preserved at every level
+      assign(base, cents)
+        .select(col("vec_id"), col("embedding"), col("n2"), col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(init("cells"))
     }
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    // batch=… above the cell dirs, like the dedup indexes: increments
-    // ([[appendIndex]]) land in their own discoverable partition level,
-    // replays overwrite themselves, and the cell partition column — the
-    // one pruning keys on — is preserved at every level
-    assign(base, cents)
-      .select(col("vec_id"), col("embedding"), col("n2"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells/batch=init")
-    // rebuild = new as-of history (inside the sentinel window)
-    graft.queries.VectorOps.resetHistory(base.sparkSession, path, Seq("init"))
-    graft.queries.VectorOps.endIndexBuild(base.sparkSession, path)
-  }
 
-  /** [[graft.queries.VectorOps.rebuildAside]] for the IVF index: the
-    * replacement (typically with RETRAINED centroids — the drift cure)
-    * builds beside the live index, which keeps serving; promotion is
-    * two renames. */
+  /** [[IndexStore.buildAside]] for the IVF index: the replacement
+    * (typically with RETRAINED centroids — the drift cure) builds beside
+    * the live index, which keeps serving; promotion is two renames. */
   def rebuildIndexAside(base: DataFrame, cents: DataFrame,
       path: String): Unit =
-    graft.queries.VectorOps.rebuildAside(base.sparkSession, path)(
-      writeIndex(base, cents, _))
+    IndexStore.buildAside(base.sparkSession, path)(writeIndex(base, cents, _))
 
   /** [[driftSummary]]'s verdict wired to its cure — the IVF twin of
     * [[NnDescent.maybeRebuildAside]] (the r14 verdict's asymmetry: the
@@ -316,21 +299,17 @@ object Ivf {
   def maybeRebuildAside(spark: org.apache.spark.sql.SparkSession,
       path: String, cells: Int = 0, iters: Int = 0,
       growthMax: Double = 3.0, residRatioMax: Double = 1.2): Boolean = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
+    val idx = IndexStore.open(spark, path, Seq("cells"))
     requireIvfReadable(spark, path)
     val flagged = driftSummary(spark, path, growthMax, residRatioMax)
       .head.getAs[Boolean]("rebuild_recommended")
     if (flagged) {
       val c = if (cells > 0) cells
         else spark.read.parquet(s"$path/centroids").count().toInt.max(1)
-      graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/cells")
       // corpus from the live index itself; checkpoint because the
       // rebuild writes beside the dirs it read (the NnDescent posture)
-      val base = spark.read
-        .schema("vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE, " +
-          "cell LONG, batch STRING")
-        .parquet(s"$path/cells")
+      val base = idx("cells", "vec_id LONG, embedding ARRAY<FLOAT>, " +
+          "n2 DOUBLE, cell LONG")
         .select(col("vec_id"), col("embedding"), col("n2"))
         .localCheckpoint(true)
       val cents = if (iters > 0) train(base, c, iters)
@@ -351,9 +330,9 @@ object Ivf {
     * IVF cells layout"), but its sidecars change the semantics: a
     * `_pq_perm` index stores PERMUTED vectors (original-space queries
     * against them silently mis-rank — only the Pq entry points apply the
-    * stored permutation), a `_pq_building` index is mid-build, and an
-    * Ivf APPEND to any PQ index (books present) would insert codes-less
-    * rows the ADC scan can never shortlist — invisible vectors. Each
+    * stored permutation), and an Ivf APPEND to any PQ index (books
+    * present) would insert codes-less rows the ADC scan can never
+    * shortlist — invisible vectors. Each
     * case is refused here rather than answered wrongly.
     */
   private def requireIvfReadable(
@@ -363,8 +342,6 @@ object Ivf {
       val p = new org.apache.hadoop.fs.Path(f)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
-    require(!exists(s"$path/_pq_building"),
-      s"$path has an unfinished PQ build — re-run it before reading")
     require(!exists(s"$path/_pq_perm"),
       s"$path is a permutation-built PQ index: its stored vectors are " +
         "permuted, and only the Pq entry points apply the stored " +
@@ -378,44 +355,28 @@ object Ivf {
   }
 
   def appendIndex(spark: org.apache.spark.sql.SparkSession, vecs: DataFrame,
-      path: String, tag: String): Unit = {
-    graft.queries.VectorOps.requireTag(tag)
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
-    requireIvfReadable(spark, path, forAppend = true)
-    graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/cells")
-    graft.queries.VectorOps.ensureBatchLayout(spark, s"$path/cells")
-    graft.queries.VectorOps.seedHistoryIfEmpty(spark, path, Seq("cells"))
-    val cents = spark.read.parquet(s"$path/centroids")
-    // growth-only: a re-sent vec_id is ignored, not written into a
-    // (possibly different) cell twice — see
-    // [[graft.queries.VectorOps.dropExistingVecIds]]
-    val fresh = graft.queries.VectorOps
-      .dropExistingVecIds(spark, vecs, s"$path/cells", tag)
-    assign(fresh, cents)
-      .select(col("vec_id"), col("embedding"), col("n2"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells/batch=$tag")
-    graft.queries.VectorOps.recordHistory(spark, path, tag)
-  }
+      path: String, tag: String): Unit =
+    IndexStore.append(spark, path, tag, Seq("cells")) { inc =>
+      requireIvfReadable(spark, path, forAppend = true)
+      val cents = spark.read.parquet(s"$path/centroids")
+      // growth-only: a re-sent vec_id is ignored, not written into a
+      // (possibly different) cell twice — see
+      // [[graft.queries.VectorOps.dropExistingVecIds]]
+      val fresh = graft.queries.VectorOps
+        .dropExistingVecIds(vecs, inc.others("cells", "vec_id LONG"))
+      assign(fresh, cents)
+        .select(col("vec_id"), col("embedding"), col("n2"), col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(inc.dir("cells"))
+    }
 
   /** Fold the cells table's accumulated `batch=` increments into one
     * fresh `batch=init` level, keeping the `cell=` directory layout
-    * pruning depends on — same small-files/self-healing rationale and
-    * swap discipline as [[graft.queries.VectorOps.compactNeardupIndex]].
+    * pruning depends on ([[IndexStore.compact]]).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      numFiles: Int = 0): Unit = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
-    // reset-before-fold + fold sentinel — see
-    // [[graft.queries.VectorOps.compactNeardupIndex]]
-    graft.queries.VectorOps.beginFold(spark, path)
-    graft.queries.VectorOps.resetHistory(spark, path, Seq("init"))
-    graft.queries.VectorOps.compactComponent(spark, s"$path/cells",
-      numFiles, Seq("cell"))
-    graft.queries.VectorOps.endFold(spark, path)
-  }
+      numFiles: Int = 0): Unit =
+    IndexStore.compact(spark, path, Seq("cells"), numFiles, Seq("cell"))
 
   /** Centroid-drift observability (r13): [[appendIndex]] grows cells
     * against FROZEN centroids forever, so after heavy ingest the cell
@@ -449,12 +410,9 @@ object Ivf {
     */
   def driftStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
+    val idx = IndexStore.open(spark, path, Seq("cells"))
     requireIvfReadable(spark, path)
-    graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/cells")
-    driftStatsOn(spark.read.parquet(s"$path/cells"),
-      spark.read.parquet(s"$path/centroids"))
+    driftStatsOn(idx("cells"), spark.read.parquet(s"$path/centroids"))
   }
 
   /** The drift aggregation over an explicit (cell, vec_id, embedding,
@@ -528,39 +486,24 @@ object Ivf {
     * cell ids (bounded and tiny for the ANN case) into an IN-list
     * partition filter — when the guarantee must not depend on planner
     * heuristics. Both read only nprobe cells' files per query batch.
+    *
+    * With `asOf`, the search runs against the index AS OF a recorded
+    * batch tag ([[IndexStore.indexHistory]]): top-k against exactly the
+    * corpus some earlier [[appendIndex]] left behind. Centroids are
+    * frozen at build, so the snapshot search IS the historical search —
+    * same probes, the prefix's cells. The batch filter composes with the
+    * cell IN-list: the scan partition-prunes on BOTH levels (prefix dirs
+    * × probed cells).
     */
   def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nprobe: Int,
-      staticPrune: Boolean = false): DataFrame =
-    searchCellsOf(spark, path, queries, k, nprobe, staticPrune, None)
-
-  /** [[searchIndex]] against the index AS OF a recorded batch tag — the
-    * ANN half of the as-of family ([[graft.queries.VectorOps
-    * .indexHistory]]): answer top-k against exactly the corpus some
-    * earlier [[appendIndex]] left behind. Centroids are frozen at build,
-    * so the snapshot search IS the historical search — same probes, the
-    * prefix's cells. The batch filter composes with the cell IN-list:
-    * the scan partition-prunes on BOTH levels (prefix dirs × probed
-    * cells). Read-only; `asOf` must be in the index history.
-    */
-  def searchIndexAsOf(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int, nprobe: Int, asOf: String,
-      staticPrune: Boolean = false): DataFrame =
-    searchCellsOf(spark, path, queries, k, nprobe, staticPrune, Some(asOf))
-
-  private def searchCellsOf(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int, nprobe: Int,
-      staticPrune: Boolean, asOf: Option[String]): DataFrame = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
+      staticPrune: Boolean = false,
+      asOf: Option[String] = None): DataFrame = {
+    val idx = IndexStore.open(spark, path, Seq("cells"),
+      IndexStore.View.of(asOf))
     requireIvfReadable(spark, path)
-    graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/cells")
     val cents = spark.read.parquet(s"$path/centroids")
-    val cells = asOf match {
-      case None => spark.read.parquet(s"$path/cells")
-      case Some(tag) =>
-        graft.queries.VectorOps.componentAsOf(spark, path, "cells", tag)
-    }
+    val cells = idx("cells")
     val cellType = cells.schema("cell").dataType
     val probes0 = probesOf(queries, cents, nprobe)
       .withColumn("cell", col("cell").cast(cellType))

@@ -328,8 +328,8 @@ object NnDescent {
   /** Materialize the graph index: `vectors` + `edges` + `cells`
     * components under the standard `batch=` layout plus the small
     * `centroids` table, build bracketed by the shared `_building`
-    * fail-closed sentinel ([[graft.queries.VectorOps.beginIndexBuild]]
-    * — a crash mid-build refuses, never serves half a graph). The
+    * fail-closed sentinel ([[IndexStore.build]] — a crash mid-build
+    * refuses, never serves half a graph). The
     * centroids/cells pair is the persisted ROUTING state: the same
     * coarse quantizer the build's ring init used, stored so
     * [[searchIndexRouted]] places per-query entries without re-deriving
@@ -345,25 +345,29 @@ object NnDescent {
     */
   def writeIndex(base: DataFrame, path: String, k: Int, iters: Int,
       cells: Int = 0, reliable: Boolean = false): Unit = {
-    val spark = base.sparkSession
-    graft.queries.VectorOps.beginIndexBuild(spark, path)
-    graft.queries.VectorOps.resetComponent(spark, s"$path/vectors")
-    graft.queries.VectorOps.resetComponent(spark, s"$path/edges")
-    graft.queries.VectorOps.resetComponent(spark, s"$path/cells")
-    val b = base.select(col("vec_id"), col("embedding"), col("n2"))
-      .localCheckpoint(true)
+    IndexStore.build(base.sparkSession, path,
+        Seq("vectors", "edges", "cells")) { init =>
+      val b = base.select(col("vec_id"), col("embedding"), col("n2"))
+        .localCheckpoint(true)
+      b.write.mode("overwrite").parquet(init("vectors"))
+      writeDerived(b, path, init, k, iters, cells, reliable)
+    }
+  }
+
+  /** The components derived from the vector corpus `b` — centroids,
+    * routing cells and the refined graph — shared by [[writeIndex]] and
+    * [[rebuildIndex]]. */
+  private def writeDerived(b: DataFrame, path: String,
+      init: String => String, k: Int, iters: Int, cells: Int,
+      reliable: Boolean): Unit = {
     val c = if (cells > 0) cells else Ivf.defaultCells(b.count())
     val cents = hashSeeds(b, c)
-    b.write.mode("overwrite").parquet(s"$path/vectors/batch=init")
     cents.write.mode("overwrite").parquet(s"$path/centroids")
     Ivf.assign(b, cents).select(col("vec_id"), col("sim"), col("cell"))
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells/batch=init")
+      .parquet(init("cells"))
     buildGraph(b, k, iters, c, reliable = reliable)
-      .write.mode("overwrite").parquet(s"$path/edges/batch=init")
-    // rebuild = new as-of history (inside the sentinel window)
-    graft.queries.VectorOps.resetHistory(spark, path, Seq("init"))
-    graft.queries.VectorOps.endIndexBuild(spark, path)
+      .write.mode("overwrite").parquet(init("edges"))
   }
 
   /** Rebuild the index in place from every vector it holds (init +
@@ -383,41 +387,29 @@ object NnDescent {
     * process memory); then the DERIVED components rebuild under the
     * `_building` bracket, whose crash window refuses reads but loses
     * nothing — and re-running rebuildIndex IS the repair (the bracket
-    * overwrites a stale sentinel), so deliberately no
-    * requireNotBuilding here.
+    * overwrites a stale sentinel), so the fold runs with
+    * `refuseBuilding = false`. The fold sentinel covers the gap between
+    * the vectors fold and the build bracket — without it an as-of read
+    * there would see full-corpus vectors against baseline-only edges.
     */
   def rebuildIndex(spark: SparkSession, path: String, k: Int, iters: Int,
-      cells: Int = 0, reliable: Boolean = false): Unit = {
-    Seq("vectors", "edges", "cells").foreach(c =>
-      graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/$c"))
-    // history reset BEFORE the vectors fold (reset-before-fold law —
-    // [[graft.queries.VectorOps.compactNeardupIndex]]): old tags must
-    // never resolve against folded data. The fold sentinel covers the
-    // gap between the vectors fold and the _building bracket below —
-    // without it an as-of read there would see full-corpus vectors
-    // against baseline-only edges
-    graft.queries.VectorOps.beginFold(spark, path)
-    graft.queries.VectorOps.resetHistory(spark, path, Seq("init"))
-    graft.queries.VectorOps.compactComponent(spark, s"$path/vectors", 0)
-    val b = spark.read
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE, batch STRING")
-      .parquet(s"$path/vectors").drop("batch")
-    graft.queries.VectorOps.beginIndexBuild(spark, path)
-    graft.queries.VectorOps.resetComponent(spark, s"$path/edges")
-    graft.queries.VectorOps.resetComponent(spark, s"$path/cells")
-    val cGeom = if (cells > 0) cells else Ivf.defaultCells(b.count())
-    val cents = hashSeeds(b, cGeom)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    Ivf.assign(b, cents).select(col("vec_id"), col("sim"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells/batch=init")
-    buildGraph(b, k, iters, cGeom, reliable = reliable)
-      .write.mode("overwrite").parquet(s"$path/edges/batch=init")
-    graft.queries.VectorOps.endFold(spark, path)
-    graft.queries.VectorOps.endIndexBuild(spark, path)
-  }
+      cells: Int = 0, reliable: Boolean = false): Unit =
+    IndexStore.compact(spark, path, Seq("vectors"), 0,
+      refuseBuilding = false, inFold = folded => {
+        val b = readVectors(folded)
+        IndexStore.build(spark, path, Seq("edges", "cells")) { init =>
+          writeDerived(b, path, init, k, iters, cells, reliable)
+        }
+      })
 
-  /** [[graft.queries.VectorOps.rebuildAside]] for the graph index —
+  private val VectorsSchema = "vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE"
+  private val EdgesSchema = "src LONG, dst LONG, sim DOUBLE"
+  private val CellsSchema = "vec_id LONG, sim DOUBLE, cell LONG"
+
+  private def readVectors(idx: IndexStore.Snapshot): DataFrame =
+    idx("vectors", VectorsSchema).drop("batch")
+
+  /** [[IndexStore.buildAside]] for the graph index —
     * and the natural form for THIS index's self-referential rebuild:
     * the corpus is read from the LIVE index (which keeps serving, no
     * vectors fold needed) and the fresh fully-refined graph builds
@@ -427,17 +419,13 @@ object NnDescent {
     */
   def rebuildIndexAside(spark: SparkSession, path: String, k: Int,
       iters: Int, cells: Int = 0, reliable: Boolean = false): Unit = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    // fail closed on a crashed IN-PLACE rebuild: its vectors may be
-    // partial, and re-running THAT rebuild is its documented repair
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
-    Seq("vectors", "edges", "cells").foreach(c =>
-      graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/$c"))
-    val b = spark.read
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE, batch STRING")
-      .parquet(s"$path/vectors").drop("batch")
+    // the read prelude fails closed on a crashed IN-PLACE rebuild: its
+    // vectors may be partial, and re-running THAT rebuild is its
+    // documented repair
+    val b = readVectors(IndexStore.open(spark, path,
+        Seq("vectors", "edges", "cells")))
       .localCheckpoint(true) // the build writes beside the dirs it read
-    graft.queries.VectorOps.rebuildAside(spark, path)(
+    IndexStore.buildAside(spark, path)(
       writeIndex(b, _, k, iters, cells, reliable))
   }
 
@@ -453,28 +441,23 @@ object NnDescent {
     * ([[Ivf.driftStats]] discussion).
     */
   def appendIndex(spark: SparkSession, vecs: DataFrame, path: String,
-      tag: String, k: Int, beam: Int = 0, hops: Int = 3): Unit = {
-    graft.queries.VectorOps.requireTag(tag)
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
-    Seq("vectors", "edges", "cells").foreach { c =>
-      graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/$c")
-      graft.queries.VectorOps.ensureBatchLayout(spark, s"$path/$c")
+      tag: String, k: Int, beam: Int = 0, hops: Int = 3): Unit =
+    IndexStore.append(spark, path, tag, Seq("vectors", "edges", "cells")) {
+      inc => appendIncrement(spark, inc, vecs, path, k, beam, hops)
     }
-    graft.queries.VectorOps.seedHistoryIfEmpty(spark, path,
-      Seq("vectors", "edges", "cells"))
+
+  private def appendIncrement(spark: SparkSession, inc: IndexStore.Increment,
+      vecs: DataFrame, path: String, k: Int, beam: Int, hops: Int): Unit = {
     val fresh = graft.queries.VectorOps
-      .dropExistingVecIds(spark, vecs, s"$path/vectors", tag)
+      .dropExistingVecIds(vecs, inc.others("vectors", "vec_id LONG"))
       .select(col("vec_id"), col("embedding"), col("n2"))
       .localCheckpoint(true)
-    val base = spark.read.schema("vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE, batch STRING")
-      .parquet(s"$path/vectors").drop("batch")
-    val edges = spark.read.schema("src LONG, dst LONG, sim DOUBLE, batch STRING")
-      .parquet(s"$path/edges").drop("batch")
+    // the graph the increment searches is every OTHER batch: a replay
+    // of the tag searches exactly the graph its first run saw
+    val base = readVectors(inc.others)
+    val edges = inc.others("edges", EdgesSchema).drop("batch")
     val cents = spark.read.parquet(s"$path/centroids")
-    val assigned = spark.read
-      .schema("vec_id LONG, sim DOUBLE, cell LONG, batch STRING")
-      .parquet(s"$path/cells").drop("batch")
+    val assigned = inc.others("cells", CellsSchema).drop("batch")
     val b = if (beam > 0) beam else 4 * k
     // the insert-time search uses ROUTED entries from the index's own
     // routing state: these edges are the new nodes' PERMANENT out-edges
@@ -485,65 +468,30 @@ object NnDescent {
         entriesOf(assigned, cents, fresh, nprobe = 3, hubsPerCell = 8))
       .select(col("q_id").as("src"), col("vec_id").as("dst"),
         col("cos").as("sim"))
-    fresh.write.mode("overwrite").parquet(s"$path/vectors/batch=$tag")
-    newEdges.write.mode("overwrite").parquet(s"$path/edges/batch=$tag")
+    fresh.write.mode("overwrite").parquet(inc.dir("vectors"))
+    newEdges.write.mode("overwrite").parquet(inc.dir("edges"))
     // routing state grows with the corpus: assign the increment against
     // the index's FROZEN centroids (the Ivf.appendIndex posture — the
     // decay story is the same and shares the same rebuild cure)
     Ivf.assign(fresh, cents).select(col("vec_id"), col("sim"), col("cell"))
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells/batch=$tag")
-    graft.queries.VectorOps.recordHistory(spark, path, tag)
+      .parquet(inc.dir("cells"))
   }
 
-  /** One index component, optionally restricted to the batches admitted
-    * up to `asOf` (partition-pruned prefix read — the as-of family law,
-    * [[graft.queries.VectorOps.componentAsOf]]; explicit schema keeps
-    * the batch partition column a STRING).
-    */
-  private def readComp(spark: SparkSession, path: String, name: String,
-      schema: String, asOf: Option[String]): DataFrame = {
-    val df = spark.read.schema(schema + ", batch STRING")
-      .parquet(s"$path/$name")
-    asOf match {
-      case None => df.drop("batch")
-      case Some(tag) =>
-        val tags = graft.queries.VectorOps.historyPrefix(spark, path, tag)
-        graft.queries.VectorOps
-          .requireBatchesPresent(spark, s"$path/$name", tags)
-        df.filter(col("batch").isin(tags: _*)).drop("batch")
-    }
-  }
-
-  /** Search the persisted index (fail-closed on a mid-build sentinel). */
-  def searchIndex(spark: SparkSession, path: String, queries: DataFrame,
-      k: Int, beam: Int, hops: Int, entries: Int = 8): DataFrame =
-    searchIndexAt(spark, path, queries, k, beam, hops, entries, None)
-
-  /** [[searchIndex]] against the graph AS OF a recorded batch tag: the
+  /** Search the persisted index (fail-closed on a mid-build sentinel).
+    * With `asOf`, against the graph AS OF a recorded batch tag: the
     * prefix's vectors are the nodes and the prefix's edge increments
     * are exactly the adjacency those appends froze, so the snapshot
     * search IS the historical search (appended nodes' out-edges live in
     * their own tag's increment and later tags never rewrite them).
-    * Read-only; `asOf` must be in the index history.
     */
-  def searchIndexAsOf(spark: SparkSession, path: String,
-      queries: DataFrame, k: Int, beam: Int, hops: Int, asOf: String,
-      entries: Int = 8): DataFrame =
-    searchIndexAt(spark, path, queries, k, beam, hops, entries, Some(asOf))
-
-  private def searchIndexAt(spark: SparkSession, path: String,
-      queries: DataFrame, k: Int, beam: Int, hops: Int, entries: Int,
-      asOf: Option[String]): DataFrame = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
-    Seq("vectors", "edges").foreach(c =>
-      graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/$c"))
-    val base = readComp(spark, path, "vectors",
-      "vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE", asOf)
-    val edges = readComp(spark, path, "edges",
-      "src LONG, dst LONG, sim DOUBLE", asOf)
-    searchGraph(base, edges, queries, k, beam, hops, entries)
+  def searchIndex(spark: SparkSession, path: String, queries: DataFrame,
+      k: Int, beam: Int, hops: Int, entries: Int = 8,
+      asOf: Option[String] = None): DataFrame = {
+    val idx = IndexStore.open(spark, path, Seq("vectors", "edges"),
+      IndexStore.View.of(asOf))
+    searchGraph(readVectors(idx), idx("edges", EdgesSchema).drop("batch"),
+      queries, k, beam, hops, entries)
   }
 
   /** Drift observability for the graph index — the [[Ivf.driftStats]]
@@ -557,16 +505,9 @@ object NnDescent {
     * [[rebuildIndex]] here instead of Ivf's writeIndex.
     */
   def driftStats(spark: SparkSession, path: String): DataFrame = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
-    Seq("vectors", "cells").foreach(c =>
-      graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/$c"))
-    val vecs = spark.read
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE, batch STRING")
-      .parquet(s"$path/vectors").drop("batch")
-    val cells = spark.read
-      .schema("vec_id LONG, sim DOUBLE, cell LONG, batch STRING")
-      .parquet(s"$path/cells")
+    val idx = IndexStore.open(spark, path, Seq("vectors", "cells"))
+    val vecs = readVectors(idx)
+    val cells = idx("cells", CellsSchema)
       .select(col("vec_id"), col("cell"), col("batch"))
     Ivf.driftStatsOn(cells.join(vecs, "vec_id"),
       spark.read.parquet(s"$path/centroids"))
@@ -599,22 +540,14 @@ object NnDescent {
     */
   def edgeStaleness(spark: SparkSession, path: String,
       sample: Int = 256): DataFrame = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
-    Seq("vectors", "edges").foreach(c =>
-      graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/$c"))
-    val vecs = spark.read
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE, batch STRING")
-      .parquet(s"$path/vectors")
+    val idx = IndexStore.open(spark, path, Seq("vectors", "edges"))
+    val vecs = idx("vectors", VectorsSchema)
     val sampled = vecs.filter(col("batch") =!= "init")
       .orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
       .limit(sample)
       .select(col("vec_id"), col("embedding"), col("n2"))
       .localCheckpoint(true)
-    val edges = spark.read
-      .schema("src LONG, dst LONG, sim DOUBLE, batch STRING")
-      .parquet(s"$path/edges")
-    val stored = edges
+    val stored = idx("edges", EdgesSchema)
       .join(broadcast(sampled.select(col("vec_id").as("src"))), "src")
       .groupBy(col("src")).agg(max(col("sim")).as("stored_top1"))
     // exact top-1 as a map-side-combinable MAX aggregation over the
@@ -663,12 +596,10 @@ object NnDescent {
       stalenessMax: Double = 0.1, stalenessSample: Int = 256): DataFrame = {
     val quant =
       Ivf.driftSummaryOf(driftStats(spark, path), growthMax, residRatioMax)
-    val edges = spark.read
-      .schema("src LONG, dst LONG, sim DOUBLE, batch STRING")
-      .parquet(s"$path/edges")
-    val appendedNodes = spark.read
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE, batch STRING")
-      .parquet(s"$path/vectors").filter(col("batch") =!= "init")
+    val idx = IndexStore.open(spark, path, Seq("vectors", "edges"))
+    val edges = idx("edges", EdgesSchema)
+    val appendedNodes = idx("vectors", VectorsSchema)
+      .filter(col("batch") =!= "init")
       .select(col("vec_id").as("dst"))
     val inDeg = edges.select(col("dst")).join(appendedNodes, "dst")
       .agg(count(lit(1)).as("in_edges_appended"))
@@ -712,7 +643,7 @@ object NnDescent {
     flagged
   }
 
-  /** [[graft.queries.VectorOps.indexInfo]] plus the graph index's drift
+  /** [[IndexStore.indexInfo]] plus the graph index's drift
     * verdict as `section = "drift"` rows — the one health view an
     * operator reads before paging anyone. Unlike the metadata-only
     * generic view, the drift rows cost a (bounded) Spark job — the
@@ -720,7 +651,7 @@ object NnDescent {
     */
   def indexInfoWithDrift(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val info = graft.queries.VectorOps.indexInfo(spark, path)
+    val info = IndexStore.indexInfo(spark, path)
     val d = driftSummary(spark, path).head
     val rows = d.schema.fieldNames.toSeq.map(f =>
       ("drift", "", f, String.valueOf(d.getAs[Any](f))))
@@ -735,39 +666,20 @@ object NnDescent {
     * appends this is bit-identical to the in-memory routed search over
     * the same base (seed centroids are deterministic); after appends it
     * is the MORE faithful form — the hubs reflect the frozen quantizer
-    * the increments were actually filed under.
+    * the increments were actually filed under. With `asOf`, routing
+    * state (cells) snapshots with the graph: entry hubs come from
+    * exactly the routing rows the prefix's admits filed, under the same
+    * frozen centroids.
     */
   def searchIndexRouted(spark: SparkSession, path: String,
       queries: DataFrame, k: Int, beam: Int, hops: Int, nprobe: Int = 3,
-      hubsPerCell: Int = 8): DataFrame =
-    searchIndexRoutedAt(spark, path, queries, k, beam, hops, nprobe,
-      hubsPerCell, None)
-
-  /** [[searchIndexRouted]] against the graph AS OF a recorded batch tag
-    * — routing state (cells) snapshots with the graph: entry hubs come
-    * from exactly the routing rows the prefix's admits filed, under the
-    * same frozen centroids. Read-only.
-    */
-  def searchIndexRoutedAsOf(spark: SparkSession, path: String,
-      queries: DataFrame, k: Int, beam: Int, hops: Int, asOf: String,
-      nprobe: Int = 3, hubsPerCell: Int = 8): DataFrame =
-    searchIndexRoutedAt(spark, path, queries, k, beam, hops, nprobe,
-      hubsPerCell, Some(asOf))
-
-  private def searchIndexRoutedAt(spark: SparkSession, path: String,
-      queries: DataFrame, k: Int, beam: Int, hops: Int, nprobe: Int,
-      hubsPerCell: Int, asOf: Option[String]): DataFrame = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    graft.queries.VectorOps.requireNotBuilding(spark, path)
-    Seq("vectors", "edges", "cells").foreach(c =>
-      graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/$c"))
-    val base = readComp(spark, path, "vectors",
-      "vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE", asOf)
-    val edges = readComp(spark, path, "edges",
-      "src LONG, dst LONG, sim DOUBLE", asOf)
+      hubsPerCell: Int = 8, asOf: Option[String] = None): DataFrame = {
+    val idx = IndexStore.open(spark, path, Seq("vectors", "edges", "cells"),
+      IndexStore.View.of(asOf))
+    val base = readVectors(idx)
+    val edges = idx("edges", EdgesSchema).drop("batch")
     val cents = spark.read.parquet(s"$path/centroids")
-    val assigned = readComp(spark, path, "cells",
-      "vec_id LONG, sim DOUBLE, cell LONG", asOf)
+    val assigned = idx("cells", CellsSchema).drop("batch")
     searchGraphFrom(base, edges, queries, k, beam, hops,
       entriesOf(assigned, cents, queries, nprobe, hubsPerCell))
   }

@@ -243,30 +243,28 @@ object Pq {
       books: DataFrame, path: String, m: Int,
       perm: Option[Array[Int]]): Unit = {
     val spark = base.sparkSession
-    beginBuild(spark, path)
-    // a rebuild-in-place over a former residual index clears the marker
-    // (else searchIndex would refuse the new plain index and
-    // searchIndexResidual would accept it with a spurious q·c term);
-    // the build sentinel covers the crash window this reordering opens.
-    // The perm marker is cleared for the same reason: a plain rebuild
-    // over a former permuted index must not leave searches permuting.
-    clearResidualMarker(spark, path)
-    clearPermMarker(spark, path)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    books.write.mode("overwrite").parquet(s"$path/books")
-    Ivf.assign(base, cents)
-      .join(encode(base, books, m), "vec_id")
-      .select(col("vec_id"), col("codes"), col("embedding"), col("n2"),
-        col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells/batch=init")
-    // inside the sentinel window, so no reader can see a permuted-built
-    // index without its marker
-    perm.foreach(p => writePermMarker(spark, path, p))
-    writeMMarker(spark, path, m)
-    // rebuild = new as-of history (inside the sentinel window)
-    graft.queries.VectorOps.resetHistory(spark, path, Seq("init"))
-    endBuild(spark, path)
+    IndexStore.build(spark, path, Seq("cells"), BuildSentinel) { init =>
+      // a rebuild-in-place over a former residual index clears the marker
+      // (else searchIndex would refuse the new plain index and
+      // searchIndexResidual would accept it with a spurious q·c term);
+      // the build sentinel covers the crash window this reordering opens.
+      // The perm marker is cleared for the same reason: a plain rebuild
+      // over a former permuted index must not leave searches permuting.
+      clearResidualMarker(spark, path)
+      clearPermMarker(spark, path)
+      cents.write.mode("overwrite").parquet(s"$path/centroids")
+      books.write.mode("overwrite").parquet(s"$path/books")
+      Ivf.assign(base, cents)
+        .join(encode(base, books, m), "vec_id")
+        .select(col("vec_id"), col("codes"), col("embedding"), col("n2"),
+          col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(init("cells"))
+      // inside the sentinel window, so no reader can see a permuted-built
+      // index without its marker
+      perm.foreach(p => writePermMarker(spark, path, p))
+      writeMMarker(spark, path, m)
+    }
   }
 
   /** Grow a materialized IVF-PQ index: assign and encode `vecs`
@@ -277,49 +275,43 @@ object Pq {
     * corpus size; replays of a tag overwrite themselves).
     */
   def appendIndex(spark: SparkSession, vecs: DataFrame, path: String,
-      tag: String, m: Int): Unit = {
-    graft.queries.VectorOps.requireTag(tag)
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    requireM(spark, path, m)
-    graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/cells")
-    graft.queries.VectorOps.ensureBatchLayout(spark, s"$path/cells")
-    graft.queries.VectorOps.seedHistoryIfEmpty(spark, path, Seq("cells"))
-    val cents = spark.read.parquet(s"$path/centroids")
-    val books = spark.read.parquet(s"$path/books")
-    // growth-only: re-sent vec_ids are dropped, not re-coded — after
-    // centroid drift a duplicate could land in a DIFFERENT cell, and the
-    // residual fold's max(qc) (one-cell-per-vector premise,
-    // [[adcShortlist]]) would then mix cells into a garbage score
-    val vecsFresh0 = graft.queries.VectorOps
-      .dropExistingVecIds(spark, vecs, s"$path/cells", tag)
-    // a permuted-built index stores permuted vectors — the increment's
-    // original-space vectors must be permuted before assign/encode, or
-    // their codes would be cut against codebooks of a different layout
-    val vecsFresh = applyStoredPerm(spark, path, vecsFresh0)
-    // a residual index ([[writeIndexResidual]]) quantizes x − c(cell):
-    // the increment must encode residuals too, or its codes would be
-    // raw vectors scored against residual codebooks — silent corruption
-    // the _pq_residual marker exists to prevent. The residual frame is
-    // checkpointed so cell lookup and encode share ONE assign pass.
-    val rows =
-      if (isResidualIndex(spark, path)) {
-        val res = residuals(vecsFresh, cents).localCheckpoint(true)
-        vecsFresh.select(col("vec_id"), col("embedding"), col("n2"))
-          .join(res.select(col("vec_id"), col("cell")), "vec_id")
-          .join(encode(res, books, m), "vec_id")
-      } else {
-        Ivf.assign(vecsFresh, cents).join(encode(vecsFresh, books, m), "vec_id")
-      }
-    rows
-      .select(col("vec_id"), col("codes"), col("embedding"), col("n2"),
-        col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells/batch=$tag")
-    graft.queries.VectorOps.recordHistory(spark, path, tag)
-  }
+      tag: String, m: Int): Unit =
+    IndexStore.append(spark, path, tag, Seq("cells")) { inc =>
+      requireM(spark, path, m)
+      val cents = spark.read.parquet(s"$path/centroids")
+      val books = spark.read.parquet(s"$path/books")
+      // growth-only: re-sent vec_ids are dropped, not re-coded — after
+      // centroid drift a duplicate could land in a DIFFERENT cell, and the
+      // residual fold's max(qc) (one-cell-per-vector premise,
+      // [[adcShortlist]]) would then mix cells into a garbage score
+      val vecsFresh0 = graft.queries.VectorOps
+        .dropExistingVecIds(vecs, inc.others("cells", "vec_id LONG"))
+      // a permuted-built index stores permuted vectors — the increment's
+      // original-space vectors must be permuted before assign/encode, or
+      // their codes would be cut against codebooks of a different layout
+      val vecsFresh = applyStoredPerm(spark, path, vecsFresh0)
+      // a residual index ([[writeIndexResidual]]) quantizes x − c(cell):
+      // the increment must encode residuals too, or its codes would be
+      // raw vectors scored against residual codebooks — silent corruption
+      // the _pq_residual marker exists to prevent. The residual frame is
+      // checkpointed so cell lookup and encode share ONE assign pass.
+      val rows =
+        if (isResidualIndex(spark, path)) {
+          val res = residuals(vecsFresh, cents).localCheckpoint(true)
+          vecsFresh.select(col("vec_id"), col("embedding"), col("n2"))
+            .join(res.select(col("vec_id"), col("cell")), "vec_id")
+            .join(encode(res, books, m), "vec_id")
+        } else {
+          Ivf.assign(vecsFresh, cents).join(encode(vecsFresh, books, m), "vec_id")
+        }
+      rows
+        .select(col("vec_id"), col("codes"), col("embedding"), col("n2"),
+          col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(inc.dir("cells"))
+    }
 
-  /** [[graft.queries.VectorOps.rebuildAside]] for the PQ index — the
+  /** [[IndexStore.buildAside]] for the PQ index — the
     * replacement (fresh centroids/codebooks, plain or residual or
     * permuted via `build`) trains and encodes beside the live index,
     * which keeps serving ADC searches; promotion is two renames. Pass
@@ -328,68 +320,42 @@ object Pq {
     */
   def rebuildIndexAside(spark: SparkSession, path: String)(
       build: String => Unit): Unit =
-    graft.queries.VectorOps.rebuildAside(spark, path)(build)
+    IndexStore.buildAside(spark, path)(build)
 
   /** Fold accumulated `batch=` increments into one fresh `batch=init`
     * level, preserving the `cell=` layout pruning depends on — the
     * shared small-files/self-healing discipline of
-    * [[graft.queries.VectorOps.compactNeardupIndex]].
+    * [[IndexStore.compact]] (which fails closed on a crashed build: a
+    * cadence job must not fold half-written cells).
     */
   def compactIndex(spark: SparkSession, path: String,
-      numFiles: Int = 0): Unit = {
-    // fail closed on a crashed build like every sibling compactor: a
-    // cadence job must not fold (and history-reset) half-written cells
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    // reset-before-fold + fold sentinel — see
-    // [[graft.queries.VectorOps.compactNeardupIndex]]
-    graft.queries.VectorOps.beginFold(spark, path)
-    graft.queries.VectorOps.resetHistory(spark, path, Seq("init"))
-    graft.queries.VectorOps.compactComponent(spark, s"$path/cells",
-      numFiles, Seq("cell"))
-    graft.queries.VectorOps.endFold(spark, path)
-  }
+      numFiles: Int = 0): Unit =
+    IndexStore.compact(spark, path, Seq("cells"), numFiles, Seq("cell"))
 
   /** IVF-PQ search over a materialized index: each query probes its
     * `nprobe` nearest cells (partition-pruned scan — the [[Ivf]]
     * machinery), ADC-scores ONLY the probed cells' codes, and re-ranks
     * its shortlist exactly. The candidate join keys on the raw `cell`
     * partition column (probe side casts to its type), preserving
-    * partition pruning exactly as [[Ivf.searchIndex]].
+    * partition pruning exactly as [[Ivf.searchIndex]]. With `asOf`,
+    * against the index AS OF a recorded batch tag — centroids/codebooks/
+    * permutation are frozen at build, so the snapshot search over the
+    * prefix's cells IS the historical search (the [[Ivf.searchIndex]]
+    * as-of law, with codes riding along).
     */
   def searchIndex(spark: SparkSession, path: String, queries0: DataFrame,
-      k: Int, nprobe: Int, shortlist: Int, m: Int): DataFrame = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
+      k: Int, nprobe: Int, shortlist: Int, m: Int,
+      asOf: Option[String] = None): DataFrame = {
+    val idx = IndexStore.open(spark, path, Seq("cells"),
+      IndexStore.View.of(asOf))
     require(!isResidualIndex(spark, path),
       s"$path is residual-encoded (writeIndexResidual) — plain ADC over " +
         "residual codes would rank garbage; use searchIndexResidual")
     requireM(spark, path, m)
-    graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/cells")
     // a permuted-built index permutes incoming queries itself — the
     // caller always passes ORIGINAL-space vectors ([[writeIndexPermuted]])
-    searchIndexBody(spark, path, applyStoredPerm(spark, path, queries0),
-      k, nprobe, shortlist, m)
-  }
-
-  /** [[searchIndex]] against the index AS OF a recorded batch tag —
-    * centroids/codebooks/permutation are frozen at build, so the
-    * snapshot search over the prefix's cells IS the historical search
-    * (the [[Ivf.searchIndexAsOf]] law, with codes riding along).
-    * Read-only; `asOf` must be in the index history.
-    */
-  def searchIndexAsOf(spark: SparkSession, path: String,
-      queries0: DataFrame, k: Int, nprobe: Int, shortlist: Int, m: Int,
-      asOf: String): DataFrame = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    require(!isResidualIndex(spark, path),
-      s"$path is residual-encoded (writeIndexResidual) — plain ADC over " +
-        "residual codes would rank garbage; use searchIndexResidualAsOf")
-    requireM(spark, path, m)
-    graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/cells")
-    searchIndexBody(spark, path, applyStoredPerm(spark, path, queries0),
-      k, nprobe, shortlist, m, Some(asOf))
+    searchIndexBody(spark, path, idx("cells"),
+      applyStoredPerm(spark, path, queries0), k, nprobe, shortlist, m)
   }
 
   /** [[searchIndex]] after entry validation and perm application — the
@@ -397,15 +363,10 @@ object Pq {
     * sidecars.
     */
   private def searchIndexBody(spark: SparkSession, path: String,
-      queries: DataFrame, k: Int, nprobe: Int, shortlist: Int,
-      m: Int, asOf: Option[String] = None): DataFrame = {
+      cells: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
+      shortlist: Int, m: Int): DataFrame = {
     val cents = spark.read.parquet(s"$path/centroids")
     val books = spark.read.parquet(s"$path/books")
-    val cells = asOf match {
-      case None => spark.read.parquet(s"$path/cells")
-      case Some(tag) =>
-        graft.queries.VectorOps.componentAsOf(spark, path, "cells", tag)
-    }
     val cellType = cells.schema("cell").dataType
     val probes = Ivf.probesOf(queries, cents, nprobe)
       .withColumn("cell", col("cell").cast(cellType))
@@ -523,8 +484,7 @@ object Pq {
 
   private def writePermMarker(spark: SparkSession, path: String,
       perm: Array[Int]): Unit =
-    graft.queries.VectorOps.writeSidecar(spark, s"$path/_pq_perm",
-      perm.mkString(","))
+    IndexStore.setMarker(spark, path, "_pq_perm", perm.mkString(","))
 
   /** `_pq_m` sidecar: the subspace count the index's codes were cut at.
     * Search/append take `m` as a parameter (it shapes the query-side
@@ -534,11 +494,11 @@ object Pq {
     * recorded m and fail loudly instead.
     */
   private def writeMMarker(spark: SparkSession, path: String, m: Int): Unit =
-    graft.queries.VectorOps.writeSidecar(spark, s"$path/_pq_m", m.toString)
+    IndexStore.setMarker(spark, path, "_pq_m", m.toString)
 
   private def requireM(spark: SparkSession, path: String, m: Int): Unit =
     // pre-sidecar indexes (no file) skip the check
-    graft.queries.VectorOps.readSidecar(spark, s"$path/_pq_m").foreach {
+    IndexStore.marker(spark, path, "_pq_m").foreach {
       stored =>
         require(stored == m.toString,
           s"$path was built with m = $stored subspaces; calling with m = $m " +
@@ -548,7 +508,7 @@ object Pq {
 
   /** The permutation stored with the index, if it was built permuted. */
   def storedPerm(spark: SparkSession, path: String): Option[Array[Int]] =
-    graft.queries.VectorOps.readSidecar(spark, s"$path/_pq_perm")
+    IndexStore.marker(spark, path, "_pq_perm")
       .map(_.split(",").map(_.toInt))
 
   /** Apply the index's stored permutation (if any) to an original-space
@@ -564,49 +524,18 @@ object Pq {
       case None => df
     }
 
-  /** `_pq_building` sentinel: created before a writeIndex/
-    * writeIndexResidual touches ANY index component, removed only after
-    * the last write lands. Every read/append entry point refuses an
-    * index with the sentinel present, so a crash anywhere mid-build —
-    * including an in-place CONVERSION between plain and residual
-    * encodings, where partially-old partially-new components would
-    * otherwise read as a valid index of either kind — fails closed with
-    * a "rebuild" message instead of silently mis-ranking.
+  /** `_pq_building`: PQ's own build sentinel ([[IndexStore.build]]),
+    * raised before a writeIndex/writeIndexResidual touches ANY index
+    * component and removed only after the last write lands. Every
+    * entry point refuses an index carrying it, so a crash anywhere
+    * mid-build — including an in-place CONVERSION between plain and
+    * residual encodings, where partially-old partially-new components
+    * would otherwise read as a valid index of either kind — fails
+    * closed with a "rebuild" message instead of silently mis-ranking.
+    * Its own name (not the root `_building`) keeps a PQ build
+    * distinguishable in [[IndexStore.indexInfo]].
     */
-  private def buildingSentinel(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_pq_building")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration) ->
-      new org.apache.hadoop.fs.Path(s"$path/_pq_building")
-
-  private def beginBuild(spark: SparkSession, path: String): Unit = {
-    val (fs, sentinel) = buildingSentinel(spark, path)
-    fs.mkdirs(sentinel.getParent)
-    fs.create(sentinel, true).close()
-    // a rebuild replaces the WHOLE index: stale batch= increments under
-    // cells/ carry codes of the OLD codebooks — left in place they would
-    // ADC-score against the new books (and duplicate vec_ids in the
-    // re-rank), so the overwrite of batch=init alone is not enough
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/cells"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/cells.compacting"), true)
-    // the mirror of Ivf.writeIndex clearing _pq_building: a crashed
-    // PLAIN-IVF build leaves VectorOps' root `_building` sentinel, and
-    // this rebuild-as-PQ is the repair — crash-safety from here on is
-    // carried by _pq_building (already up), so the stale root sentinel
-    // must not outlive the build and brick the valid new index
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_building"), false)
-  }
-
-  private def endBuild(spark: SparkSession, path: String): Unit = {
-    val (fs, sentinel) = buildingSentinel(spark, path)
-    fs.delete(sentinel, false)
-  }
-
-  private def requireNotBuilding(spark: SparkSession, path: String): Unit = {
-    val (fs, sentinel) = buildingSentinel(spark, path)
-    require(!fs.exists(sentinel),
-      s"$path has an unfinished writeIndex/writeIndexResidual build " +
-        "(crashed mid-write) — re-run the index build before using it")
-  }
+  private val BuildSentinel = "_pq_building"
 
   /** [[writeIndex]] with RESIDUAL encoding: codebooks are trained on and
     * codes quantize x − c(cell), not x. Layout is identical (cells carry
@@ -624,28 +553,27 @@ object Pq {
       path: String, m: Int, ks: Int, iters: Int,
       perm: Option[Array[Int]]): Unit = {
     val spark = base.sparkSession
-    beginBuild(spark, path)
-    // the marker lands with the sentinel up, so no reader can observe a
-    // marked-but-plain (or unmarked-but-residual) intermediate state;
-    // a stale perm marker from a previous permuted build is cleared
-    // first for the same reason
-    clearPermMarker(spark, path)
-    val (fs, marker) = residualMarker(spark, path)
-    fs.create(marker, true).close()
-    val res = residuals(base, cents).localCheckpoint(true)
-    val books = train(res, m, ks, iters)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    books.write.mode("overwrite").parquet(s"$path/books")
-    base.join(res.select(col("vec_id"), col("cell")), "vec_id")
-      .join(encode(res, books, m), "vec_id")
-      .select(col("vec_id"), col("codes"), col("embedding"), col("n2"),
-        col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells/batch=init")
-    perm.foreach(p => writePermMarker(spark, path, p))
-    writeMMarker(spark, path, m)
-    graft.queries.VectorOps.resetHistory(spark, path, Seq("init"))
-    endBuild(spark, path)
+    IndexStore.build(spark, path, Seq("cells"), BuildSentinel) { init =>
+      // the marker lands with the sentinel up, so no reader can observe a
+      // marked-but-plain (or unmarked-but-residual) intermediate state;
+      // a stale perm marker from a previous permuted build is cleared
+      // first for the same reason
+      clearPermMarker(spark, path)
+      val (fs, marker) = residualMarker(spark, path)
+      fs.create(marker, true).close()
+      val res = residuals(base, cents).localCheckpoint(true)
+      val books = train(res, m, ks, iters)
+      cents.write.mode("overwrite").parquet(s"$path/centroids")
+      books.write.mode("overwrite").parquet(s"$path/books")
+      base.join(res.select(col("vec_id"), col("cell")), "vec_id")
+        .join(encode(res, books, m), "vec_id")
+        .select(col("vec_id"), col("codes"), col("embedding"), col("n2"),
+          col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(init("cells"))
+      perm.foreach(p => writePermMarker(spark, path, p))
+      writeMMarker(spark, path, m)
+    }
   }
 
   /** Build an IVF-PQ index with the OPQ-lite permutation BAKED IN: the
@@ -689,45 +617,23 @@ object Pq {
     */
   def searchIndexResidual(spark: SparkSession, path: String,
       queries0: DataFrame, k: Int, nprobe: Int, shortlist: Int,
-      m: Int): DataFrame = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
+      m: Int, asOf: Option[String] = None): DataFrame = {
+    val idx = IndexStore.open(spark, path, Seq("cells"),
+      IndexStore.View.of(asOf))
     require(isResidualIndex(spark, path),
       s"$path is not a residual-encoded index — use searchIndex, or " +
         "rebuild with writeIndexResidual")
     requireM(spark, path, m)
-    graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/cells")
     // permuted-built index ⇒ permute the original-space queries here
-    searchIndexResidualBody(spark, path,
+    searchIndexResidualBody(spark, path, idx("cells"),
       applyStoredPerm(spark, path, queries0), k, nprobe, shortlist, m)
   }
 
-  /** [[searchIndexResidual]]'s as-of twin — see [[searchIndexAsOf]]. */
-  def searchIndexResidualAsOf(spark: SparkSession, path: String,
-      queries0: DataFrame, k: Int, nprobe: Int, shortlist: Int, m: Int,
-      asOf: String): DataFrame = {
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    require(isResidualIndex(spark, path),
-      s"$path is not a residual-encoded index — use searchIndexAsOf, or " +
-        "rebuild with writeIndexResidual")
-    requireM(spark, path, m)
-    graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/cells")
-    searchIndexResidualBody(spark, path,
-      applyStoredPerm(spark, path, queries0), k, nprobe, shortlist, m,
-      Some(asOf))
-  }
-
   private def searchIndexResidualBody(spark: SparkSession, path: String,
-      queries: DataFrame, k: Int, nprobe: Int, shortlist: Int,
-      m: Int, asOf: Option[String] = None): DataFrame = {
+      cells: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
+      shortlist: Int, m: Int): DataFrame = {
     val cents = spark.read.parquet(s"$path/centroids")
     val books = spark.read.parquet(s"$path/books")
-    val cells = asOf match {
-      case None => spark.read.parquet(s"$path/cells")
-      case Some(tag) =>
-        graft.queries.VectorOps.componentAsOf(spark, path, "cells", tag)
-    }
     val cellType = cells.schema("cell").dataType
     val probes = Ivf.probesOf(queries, cents, nprobe)
       .join(broadcast(cents.select(col("c_id").as("cell"), col("c_emb"))),
@@ -767,10 +673,8 @@ object Pq {
     // on an object store each is a metadata round trip, and per-chunk
     // re-reads would multiply it by `chunks` for values that cannot
     // change mid-call (single-writer discipline)
-    graft.queries.VectorOps.recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
+    val cells = IndexStore.open(spark, path, Seq("cells"))("cells")
     requireM(spark, path, m)
-    graft.queries.VectorOps.finishCrashedSwap(spark, s"$path/cells")
     val residual = isResidualIndex(spark, path)
     val q = applyStoredPerm(spark, path, queries).localCheckpoint(true)
     (0 until chunks).map { i =>
@@ -780,8 +684,9 @@ object Pq {
       val qi = q.filter(pmod(xxhash64(col("vec_id")), lit(chunks)) === i)
       val r =
         if (residual)
-          searchIndexResidualBody(spark, path, qi, k, nprobe, shortlist, m)
-        else searchIndexBody(spark, path, qi, k, nprobe, shortlist, m)
+          searchIndexResidualBody(spark, path, cells, qi, k, nprobe,
+            shortlist, m)
+        else searchIndexBody(spark, path, cells, qi, k, nprobe, shortlist, m)
       r.localCheckpoint(true)
     }.reduce(_.unionByName(_))
       .orderBy(col("q_id"), col("rn"))

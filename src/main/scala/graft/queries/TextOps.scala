@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.SessionMemo
+import graft.operators.{IndexStore, SessionMemo}
 
 /** LLM-data-pipeline text operators (SURVEY.md §2.D): exact and near
   * deduplication, TF-IDF, corpus quality gates, language ID, token
@@ -507,14 +507,12 @@ object TextOps {
       .orderBy(col("d1"), col("d2"))
   }
 
-  /** The shared prefix-candidate machinery of BOTH prefix-filtered
-    * forms ([[neardupJaccardPrefixAt]], [[neardupContainmentPrefixOn]]):
+  /** The prefix-candidate machinery of [[neardupJaccardPrefixAt]]:
     * each doc's shingle rows ranked rarest-first under the global
     * (df, shingle) order, kept to the first n − ⌈t·n⌉ + 2 (the
     * threshold `t` arrives ALREADY 5·10⁻⁷-slackened; +1 is the
     * pigeonhole prefix, +1 more absorbs ceil double-rounding — extra
-    * rows only ADD candidates). One copy so the subtle boundary
-    * arithmetic can never drift between the two forms.
+    * rows only ADD candidates).
     */
   private def prefixRows(docs: DataFrame, t: Double): DataFrame = {
     val withN = shingleArrs(docs)
@@ -529,7 +527,7 @@ object TextOps {
   }
 
   /** (doc_id, sorted shingle array, n) for exact per-candidate
-    * verification — shared by the two prefix forms.
+    * verification in [[neardupJaccardPrefixAt]].
     */
   private def sortedShingleSets(docs: DataFrame): DataFrame =
     shingleArrs(docs).filter(size(col("shingles")) > 0)
@@ -570,8 +568,8 @@ object TextOps {
     * here — banding recall tracks JACCARD, and a contained excerpt
     * sits at J ≈ n_A/n_B (0.1 for a 10× container), where 8-band
     * recall is ~0.08: banding structurally misses exactly the pairs
-    * this operator exists for. The hot-corpus path is the EXACT
-    * asymmetric prefix filter, [[neardupContainmentPrefixOn]].
+    * this operator exists for. The hot-shingle path is the streaming
+    * probe's rarest-first prefix ([[crossContainmentPairsPrefixRarest]]).
     */
   def neardupContainment(spark: SparkSession, dir: String): DataFrame =
     neardupContainmentOn(Tables.t(spark, dir, "documents"))
@@ -644,55 +642,6 @@ object TextOps {
       .filter(struct(col("nc_b"), -col("container")) >
         struct(col("nc_a"), -col("contained")))
       .select(col("contained"), col("container"))
-
-  /** [[neardupContainmentOn]] through an EXACT asymmetric prefix filter
-    * (the containment analog of [[neardupJaccardPrefixAt]]) — the
-    * same result frame, bit-identical, through a candidate join immune
-    * to the direct form's occurrence-quadratic blowup on hot shingles.
-    *
-    * Asymmetry is the point: only the CONTAINED side probes with a
-    * prefix. If |A∩B| ≥ ⌈t·n_A⌉ then at most n_A − ⌈t·n_A⌉ of A's
-    * shingles miss B, so A's first n_A − ⌈t·n_A⌉ + 1 shingles under
-    * ANY fixed order must contain one hit (pure pigeonhole — no
-    * condition on B, which posts its FULL set; the Jaccard form's
-    * two-sided prefix lemma needs |∩| bounds on BOTH sides, which
-    * containment does not give for the container). The shared order is
-    * rarest-first (global df, shingle tiebreak), so boilerplate
-    * shingles fall out of every probe prefix; at t = 0.8 the probe side
-    * carries ~0.2·n_A + 2 rows per doc. t is the 5·10⁻⁷-slackened
-    * threshold (the rounded-boundary convention) and the +2 absorbs
-    * ceil double-rounding — extra prefix rows only ADD candidates.
-    * Verification is exact per candidate (array_intersect of the two
-    * sorted shingle sets), then the identical rounded predicate.
-    */
-  def neardupContainmentPrefixOn(docs: DataFrame,
-      threshold: Double = 0.8): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"containment threshold must be in (0, 1], got $threshold")
-    val t = threshold - 5e-7
-    val prefix = prefixRows(docs, t)
-      .select(col("doc_id").as("contained"), col("s"))
-    val full = shingleArrs(docs)
-      .select(col("doc_id").as("container"), explode(col("shingles")).as("s"))
-    val cand = prefix.join(full, Seq("s"))
-      .filter(col("contained") =!= col("container"))
-      .select(col("contained"), col("container"))
-      .distinct()
-    val sets = sortedShingleSets(docs)
-    cand
-      .join(sets.select(col("doc_id").as("contained"), col("arr").as("arr_a"),
-        col("n").as("n_contained")), Seq("contained"))
-      .join(sets.select(col("doc_id").as("container"),
-        col("arr").as("arr_b")), Seq("container"))
-      .select(col("contained"), col("container"),
-        size(array_intersect(col("arr_a"), col("arr_b"))).cast(LongType)
-          .as("inter"),
-        col("n_contained"),
-        round(size(array_intersect(col("arr_a"), col("arr_b")))
-          .cast(LongType) / col("n_contained"), 6).as("containment"))
-      .filter(col("containment") >= threshold)
-      .orderBy(col("contained"), col("container"))
-  }
 
   val neardupContainmentSql: String =
     s"""WITH sh AS ($shingledSql),
@@ -1800,20 +1749,16 @@ object TextOps {
     * micro-batch, so ADDING eval examples mid-stream
     * ([[appendEvalIndex]]) changes verdicts from the very next batch —
     * no restart, the lifecycle every other index here already has.
-    * Build brackets with the `_building` sentinel
-    * ([[VectorOps.beginIndexBuild]]): a crash mid-rebuild fails closed
-    * instead of silently decontaminating against a partial eval set.
+    * The build runs in the fail-closed bracket ([[IndexStore.build]]):
+    * a crash mid-rebuild fails closed instead of silently
+    * decontaminating against a partial eval set.
     */
-  def writeEvalIndex(evalDocs: DataFrame, path: String): Unit = {
-    val spark = evalDocs.sparkSession
-    VectorOps.beginIndexBuild(spark, path)
-    VectorOps.resetComponent(spark, s"$path/shingles")
-    shingleRows(evalDocs.select(col("doc_id"), col("text")))
-      .select(col("s")).distinct()
-      .write.mode("overwrite").parquet(s"$path/shingles/batch=init")
-    VectorOps.resetHistory(spark, path, Seq("init"))
-    VectorOps.endIndexBuild(spark, path)
-  }
+  def writeEvalIndex(evalDocs: DataFrame, path: String): Unit =
+    IndexStore.build(evalDocs.sparkSession, path, Seq("shingles")) { init =>
+      shingleRows(evalDocs.select(col("doc_id"), col("text")))
+        .select(col("s")).distinct()
+        .write.mode("overwrite").parquet(init("shingles"))
+    }
 
   /** Grow the eval index: only shingles NOT already stored land in the
     * increment's `batch=tag` dir, so the stored rows stay a SET —
@@ -1824,54 +1769,41 @@ object TextOps {
     * folded the tag writes an empty increment (its shingles already
     * live in `batch=init`) — the union is unchanged either way.
     */
-  def appendEvalIndex(evalDocs: DataFrame, path: String, tag: String): Unit = {
-    VectorOps.requireTag(tag)
-    val spark = evalDocs.sparkSession
-    VectorOps.requireNotBuilding(spark, path)
-    VectorOps.finishCrashedSwap(spark, s"$path/shingles")
-    VectorOps.ensureBatchLayout(spark, s"$path/shingles")
-    VectorOps.seedHistoryIfEmpty(spark, path, Seq("shingles"))
-    val fresh = shingleRows(evalDocs.select(col("doc_id"), col("text")))
-      .select(col("s")).distinct()
-    val stored = spark.read.parquet(s"$path/shingles")
-    val others =
-      if (stored.columns.contains("batch")) stored.filter(col("batch") =!= tag)
-      else stored
-    // same own-tag-exempt growth-only law as VectorOps.dropExistingVecIds,
-    // but the direct anti-join shape, not its broadcast-intersection
-    // inversion: eval corpora are small on BOTH sides (AQE broadcasts
-    // whichever is smaller), whereas the cells guard anti-joins a small
-    // batch against a corpus-sized store and must never shuffle it
-    fresh.join(others.select(col("s")), Seq("s"), "left_anti")
-      .write.mode("overwrite").parquet(s"$path/shingles/batch=$tag")
-    VectorOps.recordHistory(spark, path, tag)
-  }
+  def appendEvalIndex(evalDocs: DataFrame, path: String, tag: String): Unit =
+    IndexStore.append(evalDocs.sparkSession, path, tag, Seq("shingles")) {
+      inc =>
+        val fresh = shingleRows(evalDocs.select(col("doc_id"), col("text")))
+          .select(col("s")).distinct()
+        // same own-tag-exempt growth-only law as
+        // VectorOps.dropExistingVecIds, but the direct anti-join shape,
+        // not its broadcast-intersection inversion: eval corpora are
+        // small on BOTH sides (AQE broadcasts whichever is smaller),
+        // whereas the cells guard anti-joins a small batch against a
+        // corpus-sized store and must never shuffle it
+        fresh.join(inc.others("shingles").select(col("s")), Seq("s"),
+            "left_anti")
+          .write.mode("overwrite").parquet(inc.dir("shingles"))
+    }
 
   /** The stored distinct eval shingles — one `s` column, a set by the
-    * append-time anti-join. Self-heals a crashed compaction swap first,
-    * refuses a crashed rebuild.
+    * append-time anti-join — live, or AS OF a recorded tag: the
+    * append-time anti-join makes each increment exactly the tag's NOVEL
+    * shingles, so a history prefix is the eval set's state at that
+    * admit, partition-pruned.
     */
-  def readEvalShingles(spark: SparkSession, path: String): DataFrame = {
-    VectorOps.requireNotBuilding(spark, path)
-    VectorOps.finishCrashedSwap(spark, s"$path/shingles")
-    spark.read.parquet(s"$path/shingles").select(col("s"))
-  }
+  def readEvalShingles(spark: SparkSession, path: String,
+      asOf: Option[String] = None): DataFrame =
+    IndexStore.open(spark, path, Seq("shingles"), IndexStore.View.of(asOf))(
+      "shingles").select(col("s"))
 
-  /** Fold the eval index's increments into one `batch=init` level —
-    * [[VectorOps.compactComponent]]'s swap discipline. No compacted-tags
-    * sidecar needed: a replayed append after its tag was folded writes
-    * an empty increment (see [[appendEvalIndex]]), never a duplicate.
+  /** Fold the eval index's increments into one `batch=init` level
+    * ([[IndexStore.compact]]). No closed replay windows needed: a
+    * replayed append after its tag was folded writes an empty increment
+    * (see [[appendEvalIndex]]), never a duplicate.
     */
   def compactEvalIndex(spark: SparkSession, path: String,
-      numFiles: Int = 0): Unit = {
-    VectorOps.requireNotBuilding(spark, path)
-    // the fold sentinel also closes the reset->fold window (as-of init
-    // before the baseline dir exists would read an EMPTY eval set)
-    VectorOps.beginFold(spark, path)
-    VectorOps.resetHistory(spark, path, Seq("init"))
-    VectorOps.compactComponent(spark, s"$path/shingles", numFiles)
-    VectorOps.endFold(spark, path)
-  }
+      numFiles: Int = 0): Unit =
+    IndexStore.compact(spark, path, Seq("shingles"), numFiles)
 
   /** [[decontaminateOn]] with bloom-filter semi-join pruning — the
     * explicit 100 TB form. The exact pass shuffles EVERY train and test
@@ -1956,33 +1888,14 @@ object TextOps {
     * candidate training data); the verdict columns and the exact
     * rational gate are [[decontaminateOn]]'s, bit-identical by shared
     * code, so batch one-shot runs and the streaming loop's per-batch
-    * stage ([[graft.streaming.CurateIngest]]) agree on every doc.
+    * stage ([[graft.streaming.CurateIngest]]) agree on every doc. With
+    * `asOf`: "which training docs would we have flagged against the
+    * eval set as of release R" ([[readEvalShingles]]). Read-only.
     */
   def decontaminateIndexed(docs: DataFrame, path: String,
-      cfg: CurateConfig = CurateConfig()): DataFrame = {
-    val spark = docs.sparkSession
-    val evalSh = readEvalShingles(spark, path)
-    decontaminateAgainst(docs, evalSh, cfg)
-  }
-
-  /** [[decontaminateIndexed]] against the eval index AS OF a recorded
-    * batch tag — "which training docs would we have flagged against the
-    * eval set as of release R": the append-time anti-join makes each
-    * increment exactly the tag's NOVEL shingles, so a history prefix is
-    * the eval set's state at that admit, partition-pruned. Read-only.
-    */
-  def decontaminateIndexedAsOf(docs: DataFrame, path: String, asOf: String,
-      cfg: CurateConfig = CurateConfig()): DataFrame = {
-    val spark = docs.sparkSession
-    VectorOps.recoverPromote(spark, path) // the entry prelude owns this
-    VectorOps.requireNotBuilding(spark, path)
-    val evalSh = VectorOps.componentAsOf(spark, path, "shingles", asOf)
-      .select(col("s"))
-    decontaminateAgainst(docs, evalSh, cfg)
-  }
-
-  private def decontaminateAgainst(docs: DataFrame, evalSh: DataFrame,
-      cfg: CurateConfig): DataFrame = {
+      cfg: CurateConfig = CurateConfig(),
+      asOf: Option[String] = None): DataFrame = {
+    val evalSh = readEvalShingles(docs.sparkSession, path, asOf)
     val sh = shingleRows(docs.select(col("doc_id"), col("text")))
     contamScores(docs.select(col("doc_id")), cfg,
       sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh")),
@@ -2282,120 +2195,88 @@ object TextOps {
     * documents are never re-segmented.
     */
   def segmentDedupDelta(spark: SparkSession, path: String, batch: DataFrame,
-      width: Int, tag: String): DataFrame = {
+      width: Int, tag: String): DataFrame =
+    segmentDedupAt(spark, path, batch, width, IndexStore.View.Excluding(tag))
+
+  /** [[segmentDedupDelta]]'s read-only as-of probe: the batch's
+    * segment-level rewrite against the seen-set snapshot at `asOf`. */
+  def segmentDedupDeltaAsOf(spark: SparkSession, path: String,
+      batch: DataFrame, width: Int, asOf: String): DataFrame =
+    segmentDedupAt(spark, path, batch, width, IndexStore.View.AsOf(asOf))
+
+  private def segmentDedupAt(spark: SparkSession, path: String,
+      batch: DataFrame, width: Int, view: IndexStore.View): DataFrame = {
     // the width is part of the index's identity: hashes of width-8
     // segments share nothing with width-12 segmentation of the same
     // text, so a config drift between runs silently stops finding dups —
     // record it on first contact, refuse a mismatch after
-    requireIndexParams(spark, path, s"width=$width", admit = true)
     val segs = segmentRows(batch, width)
     val within = firstSegmentOccurrences(segs)
       .withColumn("h", sha2(col("seg"), 256))
-    val kept = deltaAgainstSeen(spark, path, within, tag)
+    val kept = seenDelta(spark, path, within, s"width=$width", view)
     assembleKept(segs, kept.select(col("doc_id"), col("idx"), col("seg")),
       joiner = " ")
   }
 
-  /** Record-on-first-contact / refuse-on-mismatch guard for the knobs a
-    * seen-set index's every probe must repeat (segment width,
-    * normalization flag): the first call writes `path/_params`, later
-    * calls require equality — so a config drift across restarts errors
-    * loudly instead of silently probing an incompatible hash set. Lives
-    * at the index ROOT, outside `seen/`, so compaction swaps never touch
-    * it. The VectorOps cosine index has the same discipline
-    * ([[VectorOps.writeCosineIndex]] `_lsh_params`); shapes differ only
-    * in that seen-set indexes are created lazily by their first delta,
-    * so the record happens here rather than in a build function.
+  /** Record-on-first-contact / refuse-on-mismatch knobs a seen-set
+    * index's every probe must repeat (segment width, normalization
+    * flag), pinned in `path/_params` at the index ROOT, outside `seen/`,
+    * so compaction swaps never touch it. The VectorOps cosine index has
+    * the same discipline ([[VectorOps.writeCosineIndex]] `_lsh_params`);
+    * seen-set indexes are created lazily by their first delta, so the
+    * record happens at the first admit rather than in a build function.
     */
-  private def requireIndexParams(spark: SparkSession, path: String,
-      params: String, admit: Boolean): Unit =
-    VectorOps.requireIndexParamsAt(spark, path, "seen", params, admit,
+  private def seenPin(params: String): IndexStore.Pin =
+    IndexStore.Pin("seen", params,
       "would hash under a different scheme and silently stop finding " +
         "duplicates")
 
-
   /** The seen-set delta core shared by [[segmentDedupDelta]] (segment
-    * hashes) and [[exactDedupDelta]] (whole-doc digests): `within` rows
-    * carry an `h` hash column and any payload; rows whose hash any
-    * PRIOR batch admitted are anti-joined away, the survivors' hashes
-    * are appended under `batch=tag`, and the survivors are returned
-    * MATERIALIZED (the caller's frame must not lazily re-read an index
-    * that now contains its own hashes).
+    * hashes) and [[exactDedupDelta]] (whole-doc digests) and their
+    * as-of probes: `within` rows carry an `h` hash column and any
+    * payload; rows whose hash the seen-set holds under `view` are
+    * anti-joined away.
     *
-    * Replay discipline: the tag's own partition is excluded from the
-    * seen-set — an at-least-once replay must see exactly the state its
-    * first run saw, not its own first run's output. The explicit schema
-    * keeps the batch partition column a STRING (inference would type an
-    * all-numeric tag population as int, collapsing '1'/'01'). Compaction
-    * ([[compactSegmentIndex]]) ENDS the replay window for the tags it
-    * folds — replaying a folded tag fails fast here, because its
-    * contribution can no longer be excluded.
+    * At `Excluding(tag)` (an ADMIT) the tag's own partition is excluded
+    * — an at-least-once replay must see exactly the state its first run
+    * saw — the survivors' hashes are appended under `batch=tag`, and the
+    * survivors are returned MATERIALIZED (the caller's frame must not
+    * lazily re-read an index that now contains its own hashes).
+    * Compaction ([[compactSegmentIndex]]) ENDS the replay window for the
+    * tags it folds. At `AsOf(t)` the probe is read-only (params
+    * validated, nothing admitted): re-running batch N's docs as of tag
+    * N-1 reproduces batch N's original output bit-for-bit after the
+    * live index has moved arbitrarily far — the release-pinning
+    * property q_dedup_asof hash-verifies end-to-end.
     */
-  private def deltaAgainstSeen(spark: SparkSession, path: String,
-      within: DataFrame, tag: String): DataFrame = {
-    VectorOps.requireTag(tag)
-    VectorOps.finishCrashedSwap(spark, s"$path/seen")
-    VectorOps.ensureBatchLayout(spark, s"$path/seen")
-    require(!compactedSegmentTags(spark, path).contains(tag),
-      s"tag '$tag' was folded into batch=init by index compaction — " +
-        "its replay window is closed; re-ingest under a fresh tag " +
-        "(output would differ from the original run, not repeat it)")
-    // legacy seen-sets predating the sidecar: seed from the layout
-    // BEFORE this tag's dir exists ([[VectorOps.seedHistoryIfEmpty]])
-    VectorOps.seedHistoryIfEmpty(spark, path, Seq("seen"))
-    val seenDir = new org.apache.hadoop.fs.Path(s"$path/seen")
-    val fs = seenDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val kept =
-      (if (fs.exists(seenDir))
-        within.join(spark.read.schema("h STRING, batch STRING")
-            .parquet(s"$path/seen")
-            .filter(col("batch") =!= lit(tag)).select(col("h")),
-          Seq("h"), "left_anti")
-      else within)
-        .localCheckpoint(true)
-    kept.select(col("h"))
-      .write.mode("overwrite").parquet(s"$path/seen/batch=$tag")
-    // as-of reproducibility: the admit order lands in the `_history`
-    // sidecar (idempotent under the same replay discipline as the data
-    // write above — see [[VectorOps.recordHistory]])
-    VectorOps.recordHistory(spark, path, tag)
-    kept
+  private def seenDelta(spark: SparkSession, path: String,
+      within: DataFrame, params: String, view: IndexStore.View)
+      : DataFrame = {
+    def against(seen: DataFrame) =
+      within.join(seen.select(col("h")), Seq("h"), "left_anti")
+    view match {
+      case IndexStore.View.Excluding(tag) =>
+        IndexStore.append(spark, path, tag, Seq("seen"),
+            Some(seenPin(params))) { inc =>
+          val kept = against(inc.others("seen", "h STRING"))
+            .localCheckpoint(true)
+          kept.select(col("h"))
+            .write.mode("overwrite").parquet(inc.dir("seen"))
+          kept
+        }
+      case _ =>
+        against(IndexStore.open(spark, path, Seq("seen"), view,
+          Some(seenPin(params)))("seen", "h STRING"))
+    }
   }
 
-  /** The seen-set AS OF a recorded batch tag: hashes admitted up to and
-    * including `asOf`, partition-pruned to the history prefix's
-    * `batch=` dirs — the snapshot read behind the two as-of probes.
-    */
-  private def seenAsOf(spark: SparkSession, path: String,
-      asOf: String): DataFrame = {
-    // self-heal a crashed compaction swap like the live probe path
-    VectorOps.finishCrashedSwap(spark, s"$path/seen")
-    val tags = VectorOps.historyPrefix(spark, path, asOf)
-    VectorOps.requireBatchesPresent(spark, s"$path/seen", tags)
-    spark.read.schema("h STRING, batch STRING").parquet(s"$path/seen")
-      .filter(col("batch").isin(tags: _*)).select(col("h"))
-  }
-
-  /** [[exactDedupDelta]] against the index AS OF a recorded batch tag —
-    * read-only (nothing is admitted, no history entry): re-ask a
-    * batch's dedup question against exactly the state some earlier
-    * admit left behind. Re-running batch N's docs as of tag N-1
-    * reproduces batch N's original output bit-for-bit after the live
-    * index has moved arbitrarily far — the release-pinning property
-    * q_dedup_asof hash-verifies end-to-end.
-    */
+  /** [[exactDedupDelta]]'s read-only as-of probe: the batch's dedup
+    * question against exactly the state some earlier admit left behind
+    * (nothing admitted, no history entry). */
   def exactDedupDeltaAsOf(spark: SparkSession, path: String,
       batch: DataFrame, asOf: String,
-      normalize: Boolean = false): DataFrame = {
-    requireIndexParams(spark, path, s"normalize=$normalize", admit = false)
-    val base = if (normalize) normCol(col("text")) else col("text")
-    val hashed = batch.withColumn("h",
-      coalesce(sha2(base, 256), lit("NULL_TEXT")))
-    val within = hashed.join(
-      hashed.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id")),
-      Seq("h", "doc_id"))
-    within.join(seenAsOf(spark, path, asOf), Seq("h"), "left_anti").drop("h")
-  }
+      normalize: Boolean = false): DataFrame =
+    exactDedupAt(spark, path, batch, normalize, IndexStore.View.AsOf(asOf))
 
   /** Per-batch novelty against the persisted seen-segment index — the
     * incremental twin of [[noveltyCurve]], riding state
@@ -2406,40 +2287,25 @@ object TextOps {
     * posture), no seen write, no history entry — an operator loop polls
     * it per ingest batch the way it reads the drift side output, and a
     * sagging novelty series is the same stop-crawling signal as the
-    * batch curve.
+    * batch curve. With `asOf`: what the batch's novelty WAS at that
+    * point of the admit order.
     *
     * Scale: the batch's own segment explode + distinct, then one
     * hash-keyed join against the index — the shape
     * [[segmentDedupDelta]] already pays, minus the write.
     */
   def noveltyDelta(spark: SparkSession, path: String, batch: DataFrame,
-      width: Int): DataFrame = {
-    requireIndexParams(spark, path, s"width=$width", admit = false)
-    VectorOps.finishCrashedSwap(spark, s"$path/seen")
-    noveltyAgainst(batch, width,
-      spark.read.schema("h STRING, batch STRING").parquet(s"$path/seen")
-        .select(col("h")))
-  }
-
-  /** [[noveltyDelta]] against the seen-set snapshot AS OF a recorded
-    * batch tag — what the batch's novelty WAS at that point of the
-    * admit order. Read-only.
-    */
-  def noveltyDeltaAsOf(spark: SparkSession, path: String, batch: DataFrame,
-      width: Int, asOf: String): DataFrame = {
-    requireIndexParams(spark, path, s"width=$width", admit = false)
-    noveltyAgainst(batch, width, seenAsOf(spark, path, asOf))
-  }
-
-  /** The seen side joins WITHOUT a distinct: index hashes are unique by
-    * the admit discipline (within-batch first occurrences, anti-joined
-    * against every prior batch, replays overwriting their own dir, and
-    * compaction folding disjoint sets) — a defensive distinct here would
-    * shuffle the corpus-sized index on every poll. `n_new` coalesces to
-    * 0 on an empty/short batch (a zero-row global sum is NULL).
-    */
-  private def noveltyAgainst(batch: DataFrame, width: Int,
-      seen: DataFrame): DataFrame =
+      width: Int, asOf: Option[String] = None): DataFrame = {
+    // the seen side joins WITHOUT a distinct: index hashes are unique by
+    // the admit discipline (within-batch first occurrences, anti-joined
+    // against every prior batch, replays overwriting their own dir, and
+    // compaction folding disjoint sets) — a defensive distinct here
+    // would shuffle the corpus-sized index on every poll. `n_new`
+    // coalesces to 0 on an empty/short batch (a zero-row global sum is
+    // NULL).
+    val seen = IndexStore.open(spark, path, Seq("seen"),
+      IndexStore.View.of(asOf), Some(seenPin(s"width=$width")))(
+      "seen", "h STRING").select(col("h"))
     segmentRows(batch, width)
       .select(sha2(col("seg"), 256).as("h")).distinct()
       .join(seen.withColumn("is_seen", lit(1L)), Seq("h"), "left")
@@ -2449,19 +2315,6 @@ object TextOps {
       .select(col("n_distinct"), col("n_new"),
         when(col("n_distinct") === 0, lit(0.0))
           .otherwise(div6(col("n_new"), col("n_distinct"))).as("novelty"))
-
-  /** [[segmentDedupDelta]]'s as-of twin: the batch's segment-level
-    * rewrite against the seen-set snapshot at `asOf`. Read-only.
-    */
-  def segmentDedupDeltaAsOf(spark: SparkSession, path: String,
-      batch: DataFrame, width: Int, asOf: String): DataFrame = {
-    requireIndexParams(spark, path, s"width=$width", admit = false)
-    val segs = segmentRows(batch, width)
-    val kept = firstSegmentOccurrences(segs)
-      .withColumn("h", sha2(col("seg"), 256))
-      .join(seenAsOf(spark, path, asOf), Seq("h"), "left_anti")
-    assembleKept(segs, kept.select(col("doc_id"), col("idx"), col("seg")),
-      joiner = " ")
   }
 
   // ------------------------- containment postings index (incremental)
@@ -2478,16 +2331,13 @@ object TextOps {
     * Scale note: the probe joins the batch's shingle hashes against the
     * postings keyed by h — a boilerplate shingle posted by many kept
     * docs is a hot bucket (the direct containment join's hazard). The
-    * documented upgrade is the asymmetric prefix probe
-    * ([[neardupContainmentPrefixOn]]'s pigeonhole, order-free): probe
-    * only each batch doc's first n − ⌈t·n⌉ + 2 hashes for candidates,
-    * then count exactly against the candidates' postings.
+    * probe caps each shingle's postings and re-asks the docs carrying
+    * an over-cap shingle through the asymmetric rarest-first prefix
+    * probe ([[crossContainmentPairsPrefixRarest]]) — exact either way.
     */
-  private def containmentParams(spark: SparkSession, path: String,
-      admit: Boolean): Unit =
-    VectorOps.requireIndexParamsAt(spark, path, "postings", "shingles=3",
-      admit, "would post under a different shingle scheme and silently " +
-        "stop finding containment")
+  private val ContainmentPin = IndexStore.Pin("postings", "shingles=3",
+    "would post under a different shingle scheme and silently stop " +
+      "finding containment")
 
   /** Containment pairs of a batch vs the index + within the batch, in
     * [[graft.streaming.IngestDedup]]'s admit convention: `cross` rows
@@ -2498,48 +2348,18 @@ object TextOps {
     * the batch stage's directional rule, so stream and batch verdicts
     * agree wherever keep-first == keep-best). Requires (doc_id, text,
     * n_chars). Part of an ADMITTING batch (records `_params` on first
-    * contact); the as-of twin is the read-only probe.
+    * contact; the stored side excludes the tag's own increment); the
+    * as-of probe is the read-only form of its cross half.
     */
   def containmentDeltaIndexed(spark: SparkSession, path: String,
       batch: DataFrame, threshold: Double, tag: String,
       maxPostings: Int = MaxPostingsPerShingle): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"containment threshold must be in (0, 1], got $threshold")
-    VectorOps.requireTag(tag)
-    // recover a crashed compaction swap BEFORE reading the closed-window
-    // sidecar (the [[deltaAgainstSeen]] ordering): after a crash between
-    // delete and rename, _compacted_tags lives only in the .compacting
-    // twin — reading first would see an empty tag set, pass the guard,
-    // and replay a folded tag against init-absorbed postings (verdict
-    // flips + a permanent double-posting of the tag's shingles)
-    VectorOps.finishCrashedSwap(spark, s"$path/postings")
-    require(!compactedTagsOf(spark, path, "postings").contains(tag),
-      s"tag '$tag' was folded into batch=init by index compaction — " +
-        "its replay window is closed; re-ingest under a fresh tag")
-    containmentParams(spark, path, admit = true)
-    VectorOps.ensureBatchLayout(spark, s"$path/postings")
-    VectorOps.seedHistoryIfEmpty(spark, path, Seq("postings"))
     // ONE shingle pass feeds both halves (materialized per the session
     // [[graft.operators.Materialize]] policy — the 3-shingle explode is
     // the batch's dominant per-stage cost)
     val e = graft.operators.Materialize(hashedShingles(batch))
-    // DIRECT probe by measurement: at sf0.1 and ×4 replication the
-    // prefix probe ran 1.5× SLOWER (ContainScale probe rows,
-    // BASELINE.md) — its per-doc rank window plus the second full-batch
-    // verify join outweigh the candidate reduction unless postings are
-    // far hotter than these corpora; crossContainmentPairsPrefix stays
-    // available (spec-pinned bit-identical) for that regime
-    // operability of the hot-shingle cap (r16 advice): callers plumb
-    // maxPostings through [[CurateConfig.containmentMaxPostings]] /
-    // CurateCli; <= 0 means uncapped (the pure direct join)
-    val cap = if (maxPostings <= 0) Int.MaxValue else maxPostings
-    val cross = storedPostings(spark, path)
-      .map(stored => crossContainmentPairs(e,
-        stored.filter(col("batch") =!= lit(tag)).select(col("h"), col("doc")),
-        threshold, maxPostings = cap,
-        knownHot = containmentHotFromStats(spark, path,
-          col("batch") =!= lit(tag), cap)))
-      .getOrElse(emptyPairs(batch))
+    val cross = containmentCross(spark, path, e, threshold, maxPostings,
+      IndexStore.View.Excluding(tag))
     val within = betterContainerPairs(
         containmentPairsOf(e, threshold)
           .select(col("contained"), col("container")),
@@ -2555,25 +2375,33 @@ object TextOps {
     */
   def containmentDeltaIndexedAsOf(spark: SparkSession, path: String,
       batch: DataFrame, threshold: Double, asOf: String,
-      maxPostings: Int = MaxPostingsPerShingle): DataFrame = {
+      maxPostings: Int = MaxPostingsPerShingle): DataFrame =
+    // materialized like the admit path: the probe references the hashed
+    // frame twice (broadcast key set + probe side) and Catalyst shares
+    // no subplans
+    containmentCross(spark, path,
+      graft.operators.Materialize(hashedShingles(batch)), threshold,
+      maxPostings, IndexStore.View.AsOf(asOf))
+
+  /** The one cross-probe body of the live and as-of entry points: the
+    * hashed batch `e` against the stored postings under `view`. DIRECT
+    * probe by measurement (the prefix probe ran 1.5× SLOWER at sf0.1 and
+    * ×4 replication, BASELINE.md); `maxPostings` is the hot-shingle cap
+    * callers plumb through [[CurateConfig.containmentMaxPostings]] /
+    * CurateCli, <= 0 meaning uncapped (the pure direct join).
+    */
+  private def containmentCross(spark: SparkSession, path: String,
+      e: DataFrame, threshold: Double, maxPostings: Int,
+      view: IndexStore.View): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containment threshold must be in (0, 1], got $threshold")
-    containmentParams(spark, path, admit = false)
-    VectorOps.finishCrashedSwap(spark, s"$path/postings")
-    val tags = VectorOps.historyPrefix(spark, path, asOf)
-    VectorOps.requireBatchesPresent(spark, s"$path/postings", tags)
-    // materialize like the admit path: the probe references the hashed
-    // frame twice (broadcast key set + probe side) and Catalyst shares
-    // no subplans — un-materialized, every as-of probe would pay its
-    // dominant shingle+sha2 stage twice (review catch)
+    val idx = IndexStore.open(spark, path, Seq("postings"), view,
+      Some(ContainmentPin), admitPin = view.isInstanceOf[IndexStore.View.Excluding])
     val cap = if (maxPostings <= 0) Int.MaxValue else maxPostings
-    crossContainmentPairs(graft.operators.Materialize(hashedShingles(batch)),
-      spark.read.schema("h STRING, doc LONG, batch STRING")
-        .parquet(s"$path/postings")
-        .filter(col("batch").isin(tags: _*)).select(col("h"), col("doc")),
+    crossContainmentPairs(e,
+      idx("postings", "h STRING, doc LONG").select(col("h"), col("doc")),
       threshold, maxPostings = cap,
-      knownHot = containmentHotFromStats(spark, path,
-        col("batch").isin(tags: _*), cap))
+      knownHot = containmentHotFromStats(spark, path, idx.visible, cap))
   }
 
   /** (doc_id, n, key = sha256(shingle)) rows of a (doc_id, text) frame
@@ -2590,37 +2418,32 @@ object TextOps {
     * invariant); replay overwrites its own dir with identical content.
     */
   def appendContainmentIndex(spark: SparkSession, path: String,
-      keepers: DataFrame, tag: String): Unit = {
-    VectorOps.requireTag(tag)
-    containmentParams(spark, path, admit = true)
-    VectorOps.finishCrashedSwap(spark, s"$path/postings")
-    VectorOps.finishCrashedSwap(spark, s"$path/dfstats")
-    VectorOps.ensureBatchLayout(spark, s"$path/postings")
-    // one shingle pass feeds the postings AND their df sidecar
-    val rows = shingleRows(keepers.select(col("doc_id"), col("text")))
-      .select(sha2(col("s"), 256).as("h"), col("doc_id").as("doc"))
-      .localCheckpoint(true)
-    rows.write.mode("overwrite").parquet(s"$path/postings/batch=$tag")
-    // df sidecar (r17): per-shingle posting counts of THIS batch, so
-    // the probe's hot-shingle check reads a table ~avg-df× smaller
-    // than the postings instead of re-aggregating them every
-    // micro-batch. `src` keeps rows distinct across batches. The probe
-    // trusts the sidecar ONLY when its batch-dir set equals the
-    // postings' ([[containmentHotFromStats]]) — a crash between the
-    // two writes, a pre-sidecar index, or a half-finished compaction
-    // all read as incomplete and fall back to the in-plan check.
-    rows.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .withColumn("src", lit(tag))
-      .write.mode("overwrite").parquet(s"$path/dfstats/batch=$tag")
-    VectorOps.recordHistory(spark, path, tag)
-  }
+      keepers: DataFrame, tag: String): Unit =
+    IndexStore.append(spark, path, tag, Seq("postings", "dfstats"),
+        Some(ContainmentPin)) { inc =>
+      // one shingle pass feeds the postings AND their df sidecar
+      val rows = shingleRows(keepers.select(col("doc_id"), col("text")))
+        .select(sha2(col("s"), 256).as("h"), col("doc_id").as("doc"))
+        .localCheckpoint(true)
+      rows.write.mode("overwrite").parquet(inc.dir("postings"))
+      // df sidecar (r17): per-shingle posting counts of THIS batch, so
+      // the probe's hot-shingle check reads a table ~avg-df× smaller
+      // than the postings instead of re-aggregating them every
+      // micro-batch. `src` keeps rows distinct across batches. The probe
+      // trusts the sidecar ONLY when its batch-dir set equals the
+      // postings' ([[containmentHotFromStats]]) — a crash between the
+      // two writes, a pre-sidecar index, or a half-finished compaction
+      // all read as incomplete and fall back to the in-plan check.
+      rows.groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .withColumn("src", lit(tag))
+        .write.mode("overwrite").parquet(inc.dir("dfstats"))
+    }
 
   /** Fold every postings batch into `batch=init` (the seen-set
     * compaction discipline: fold sentinel, history reset, closed
-    * replay windows recorded in `_compacted_tags`), then REBUILD the df
-    * sidecar from the folded postings — rebuilt rather than folded
-    * because [[VectorOps.compactComponent]] folds by DISTINCT (two
-    * batches posting the same (h, df) pair would collapse and
+    * replay windows), then REBUILD the df sidecar from the folded
+    * postings — rebuilt rather than folded because the fold is DISTINCT
+    * (two batches posting the same (h, df) pair would collapse and
     * undercount), and because deriving from the fold migrates
     * pre-sidecar indexes exactly at their next compaction. A crash
     * between the postings fold and the sidecar rebuild leaves the two
@@ -2629,44 +2452,15 @@ object TextOps {
     */
   def compactContainmentIndex(spark: SparkSession, path: String,
       numFiles: Int = 0): Unit = {
-    compactSeenLike(spark, path, "postings", numFiles)
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statsDir = new Path(s"$path/dfstats")
-    val tmp = new Path(s"$path/dfstats.compacting")
-    fs.delete(tmp, true)
-    spark.read.schema("h STRING, doc LONG, batch STRING")
-      .parquet(s"$path/postings")
-      .groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .withColumn("src", lit("init"))
-      .write.parquet(new Path(tmp, "batch=init").toString)
-    // the delete MUST be checked (r17 advice, mirroring
-    // VectorOps.compactComponent): on a failed delete the rename
-    // below would move dfstats.compacting INSIDE the stale dfstats
-    // dir and still return true — a permanently-untrusted sidecar
-    // (perpetual in-plan fallback) plus stranded stale df rows. The
-    // exists() guard keeps first-compaction of pre-sidecar indexes
-    // working (nothing to delete yet).
-    require(!fs.exists(statsDir) || fs.delete(statsDir, true),
-      s"could not delete $statsDir ahead of the sidecar swap; the " +
-        "probe keeps falling back to the in-plan check until a " +
-        "later compaction succeeds")
-    require(fs.rename(tmp, statsDir),
-      s"could not swap $tmp into place; finishCrashedSwap recovers on " +
-        "the next probe")
-  }
-
-  /** Batch-dir names (`batch=` stripped) of a component, empty when the
-    * directory does not exist.
-    */
-  private def batchTagsOf(spark: SparkSession, path: String,
-      component: String): Set[String] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$component")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=")).toSet
+    IndexStore.compact(spark, path, Seq("postings"), numFiles,
+      closeWindows = true)
+    val postings = IndexStore.open(spark, path, Seq("postings"))(
+      "postings", "h STRING, doc LONG")
+    IndexStore.replace(spark, path, "dfstats") { dir =>
+      postings.groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .withColumn("src", lit("init"))
+        .write.parquet(dir)
+    }
   }
 
   /** Hot-shingle keys from the df SIDECAR instead of a postings
@@ -2695,24 +2489,20 @@ object TextOps {
   private[graft] def containmentHotFromStats(spark: SparkSession,
       path: String, pred: Column, cap: Int): Option[Array[(String, Long)]] = {
     if (cap == Int.MaxValue) return Some(Array.empty)
-    VectorOps.finishCrashedSwap(spark, s"$path/dfstats")
-    val pTags = batchTagsOf(spark, path, "postings")
-    val sTags = batchTagsOf(spark, path, "dfstats")
+    val pTags = IndexStore.batchTags(spark, path, "postings")
+    val sTags = IndexStore.batchTags(spark, path, "dfstats")
     // name-set equality alone would trust a crash-PARTIAL sidecar dir:
     // Spark creates the batch= dir at job setup, so a crash mid-write
     // leaves an existing-but-empty (or _temporary-only) dir whose lost
     // df rows would silently shrink the hot set — the exact missed-pair
     // hole the hot route closes. Each dfstats dir must carry the
     // committer's _SUCCESS marker to be trusted (review catch r17).
-    val statsCommitted = sTags.forall { t =>
-      val m = new org.apache.hadoop.fs.Path(
-        s"$path/dfstats/batch=$t/_SUCCESS")
-      m.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(m)
-    }
+    val statsCommitted =
+      IndexStore.batchTags(spark, path, "dfstats", committed = true) == sTags
     if (pTags.isEmpty || pTags != sTags || !statsCommitted) None
     else {
-      val hot = spark.read.schema("h STRING, df LONG, src STRING, batch STRING")
-        .parquet(s"$path/dfstats").filter(pred)
+      val hot = IndexStore.open(spark, path, Seq("dfstats"))(
+          "dfstats", "h STRING, df LONG, src STRING").filter(pred)
         .groupBy(col("h")).agg(sum(col("df")).as("df"))
         .filter(col("df") > lit(cap.toLong))
         .limit((1 << 20) + 1).collect()
@@ -2721,16 +2511,6 @@ object TextOps {
       // in-plan than to ship through a literal
       if (hot.length > (1 << 20)) None else Some(hot)
     }
-  }
-
-  private def storedPostings(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir) || fs.listStatus(dir)
-        .forall(!_.getPath.getName.startsWith("batch="))) None
-    else Some(spark.read.schema("h STRING, doc LONG, batch STRING")
-      .parquet(s"$path/postings"))
   }
 
   /** Cross pairs of a hashed batch frame (doc_id, n, key) vs stored
@@ -2759,16 +2539,13 @@ object TextOps {
     * (dropped shingles it carries)/n of measured containment, so a
     * verdict within that slack of the threshold can flip to "kept".
     * The cap is far above any honest shingle's df at sane batch sizes
-    * (it bounds postings PER SHINGLE, not corpus size). As of r17 the
-    * DEFAULT path no longer pays that trade at all: `hotRoute` re-asks
-    * ONLY the batch docs that carry an over-cap shingle through the
-    * rarest-first prefix machinery ([[crossContainmentPairsPrefixRarest]])
-    * against the FULL postings and unions — the common path keeps the
-    * window-guard plan, the boilerplate regime gets its exact verdict,
-    * and the result is bit-identical to the ungated direct join. The
-    * pure-guard forms stay (`hotRoute = false`) as the measured
-    * alternatives and to keep the under-report trade stated and
-    * spec-pinned (StreamingCurateSpec).
+    * (it bounds postings PER SHINGLE, not corpus size). The probe does
+    * not pay that trade: the hot route re-asks ONLY the batch docs that
+    * carry an over-cap shingle through the rarest-first prefix
+    * machinery ([[crossContainmentPairsPrefixRarest]]) against the FULL
+    * postings and unions — the common path keeps the window-guard plan,
+    * the boilerplate regime gets its exact verdict, and the result is
+    * bit-identical to the ungated direct join.
     */
   private[graft] val MaxPostingsPerShingle: Int =
     graft.operators.BandedHamming.DefaultMaxBucket
@@ -2776,8 +2553,6 @@ object TextOps {
   private[graft] def crossContainmentPairs(e: DataFrame, stored: DataFrame,
       threshold: Double,
       maxPostings: Int = MaxPostingsPerShingle,
-      windowGuard: Boolean = true,
-      hotRoute: Boolean = true,
       knownHot: Option[Array[(String, Long)]] = None): DataFrame = {
     // restrict the stored postings to the BATCH's key set first (the
     // probe discipline every delta family follows — the cosine index's
@@ -2817,7 +2592,7 @@ object TextOps {
     val keys = e.select(col("key").as("h")).distinct()
     val sess = e.sparkSession
     import sess.implicits._
-    val hotRouted = hotRoute && maxPostings != Int.MaxValue
+    val hotRouted = maxPostings != Int.MaxValue
     val restrictedByKeys =
       keys.limit(MaxBroadcastKeys.toInt + 1).count() <= MaxBroadcastKeys
     val needKeyArr = hotRouted && knownHot.isEmpty && restrictedByKeys
@@ -2864,57 +2639,40 @@ object TextOps {
        }).filter(_.length <= maxHotKeysCollected)
     val provenClean = hotRouted && hotCollected.exists(_.isEmpty)
     val hotAsLiteral = hotRouted && hotCollected.exists(_.nonEmpty)
-    // hot-shingle guard (see [[MaxPostingsPerShingle]]), two spec-
-    // pinned-identical forms measured in ONE process (ContainScale r16,
-    // BASELINE.md): the DEFAULT window form (BandedHamming.keepSmall
-    // over a window by h — the one copy of the warn/marker discipline)
-    // pre-shuffles the postings by the pair join's own key, and that
-    // exchange is REUSED by the sort-merge join; the aggregation
-    // alternative (`windowGuard = false`: map-side-combined per-h
-    // count → anti-join) looked cheaper on paper but measured 2.2×
-    // SLOWER on the ×4 backfill probe and a wash at sf0.1 — the
-    // anti-join re-evaluates the un-materialized broadcast-restricted
-    // postings a second time (Catalyst shares no subplans), which
-    // costs more than the window's exchange saves. Another
-    // plausible-asymptotics-vs-numbers lesson (the prefix-probe
-    // revert's sibling); both forms stay, the measurement decides.
+    // hot-shingle guard (see [[MaxPostingsPerShingle]]): the window
+    // form (BandedHamming.keepSmall over a window by h — the one copy of
+    // the warn/marker discipline) pre-shuffles the postings by the pair
+    // join's own key, and that exchange is REUSED by the sort-merge
+    // join (an aggregation + anti-join guard measured 2.2× SLOWER on
+    // the ×4 backfill probe, ContainScale r16, BASELINE.md: the
+    // anti-join re-evaluates the restricted postings a second time).
     // Warn once per hot shingle, at-least-once on retries: the window
-    // form fires WarnHotBucket on its min-doc marker row, the
-    // aggregation form on the per-h count row (returns false, so `!…`
-    // KEEPS the hot key for the anti-join); the collected-literal hot
-    // route warns driver-side through the same WarnHotBucket channel.
+    // fires WarnHotBucket on its min-doc marker row and on the subplan
+    // hot-key count row (returns false, so `!…` KEEPS the key); the
+    // collected-literal hot route warns driver-side through the same
+    // WarnHotBucket channel.
     // The hot-set join carries NO forced broadcast hint: in the
     // big-batch fallback regime a boilerplate-heavy corpus can have a
     // multi-GB hot set, and the same unguarded-hint failure the
     // broadcast(keys) note above records would turn the guard into a
     // hard 8 GB-limit death — AQE broadcasts the (normally ~empty)
     // side on its own when small.
-    lazy val (guarded, hotKeys, postsForHot) =
-      if (windowGuard) {
-        // make the h-keyed exchange EXPLICIT (repartition is byte-for-
-        // byte the exchange the window would insert — the pair join
-        // already reuses it) so the hot branch's postings consumers in
-        // this plan hang off the SAME shuffle (subplan-form hot route
-        // only; the literal form never re-derives hot keys in-plan).
-        val parted = restricted.repartition(col("h"))
-        val marked = graft.operators.BandedHamming.markBuckets(
-          parted, "doc", Seq("h"), Nil)
-        (graft.operators.BandedHamming.keepSmall(
-          marked, "doc", Seq("h"), maxPostings),
-          parted.groupBy(col("h")).agg(count(lit(1)).as("__n"))
-            .filter(col("__n") > lit(maxPostings.toLong))
-            .filter(!org.apache.spark.sql.graft.WarnHotBucket.column(
-              col("h"), col("__n")))
-            .select(col("h")),
-          parted)
-      } else {
-        val hot = restricted.groupBy(col("h")).agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > lit(maxPostings.toLong))
-          .filter(!org.apache.spark.sql.graft.WarnHotBucket.column(
-            col("h"), col("__n")))
-          .select(col("h"))
-        (restricted.join(hot, Seq("h"), "left_anti"), hot, restricted)
-      }
+    // make the h-keyed exchange EXPLICIT (repartition is byte-for-byte
+    // the exchange the window would insert — the pair join already
+    // reuses it) so the hot branch's postings consumers in this plan
+    // hang off the SAME shuffle (subplan-form hot route only; the
+    // literal form never re-derives hot keys in-plan).
+    lazy val postsForHot = restricted.repartition(col("h"))
+    lazy val guarded = graft.operators.BandedHamming.keepSmall(
+      graft.operators.BandedHamming.markBuckets(
+        postsForHot, "doc", Seq("h"), Nil),
+      "doc", Seq("h"), maxPostings)
+    lazy val hotKeys = postsForHot.groupBy(col("h"))
+      .agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > lit(maxPostings.toLong))
+      .filter(!org.apache.spark.sql.graft.WarnHotBucket.column(
+        col("h"), col("__n")))
+      .select(col("h"))
     def pairsOf(probe: DataFrame, posts: DataFrame): DataFrame =
       probe.join(posts, col("key") === col("h"))
         .filter(col("doc_id") =!= col("doc"))
@@ -2953,7 +2711,6 @@ object TextOps {
       // every probe (review catch r17); same repartition rationale as
       // the proven-clean branch below
       pairsOf(e, restricted.repartition(col("h")))
-    else if (!hotRouted) pairsOf(e, guarded)
     else if (provenClean)
       // proven cap-clean → the guard would be an identity filter; run
       // the UNGATED join. The repartition is load-bearing, not a
@@ -2992,45 +2749,11 @@ object TextOps {
     }
   }
 
-  /** [[crossContainmentPairs]] through the EXACT asymmetric prefix
-    * probe: candidates from each batch doc's first n − ⌈t·n⌉ + 2 keys
-    * in plain hash order (the pigeonhole is order-free —
-    * [[neardupContainmentPrefixOn]]; no df table needed because the
-    * stored side posts FULL sets and any fixed order works), then an
-    * exact per-pair count restricted to the CANDIDATE containers'
-    * postings and candidate pairs. NOT the default: measured 1.5×
-    * SLOWER than the direct probe at sf0.1 and ×4 replication
-    * (ContainScale probe rows, BASELINE.md) — the per-doc rank window
-    * plus the second full-batch verify join cost more than the
-    * candidate reduction saves unless the stored postings are far
-    * hotter than those corpora. Kept (spec-pinned bit-identical) as
-    * the escape hatch for that extreme-boilerplate regime.
-    */
-  private[graft] def crossContainmentPairsPrefix(e: DataFrame,
-      stored: DataFrame, threshold: Double): DataFrame = {
-    val t = threshold - 5e-7
-    val wo = Window.partitionBy(col("doc_id")).orderBy(col("key"))
-    val cand = e
-      .withColumn("r", row_number().over(wo))
-      .filter(col("r") <= col("n") - ceil(lit(t) * col("n")) + lit(2L))
-      .select(col("doc_id"), col("key"))
-      .join(stored, col("key") === col("h"))
-      .filter(col("doc_id") =!= col("doc"))
-      .select(col("doc_id"), col("doc")).distinct()
-    e.join(stored.join(cand.select(col("doc")).distinct(), Seq("doc")),
-        col("key") === col("h"))
-      .select(col("doc_id"), col("n"), col("doc"))
-      .join(cand, Seq("doc_id", "doc"))
-      .groupBy(col("doc_id"), col("n"), col("doc"))
-      .agg(count(lit(1)).as("inter"))
-      .filter(round(col("inter") / col("n"), 6) >= threshold)
-      .select(col("doc_id").as("c1"), col("doc").as("c2"),
-        lit(true).as("cross"))
-  }
-
-  /** [[crossContainmentPairsPrefix]] with the prefix ordered RAREST
-    * FIRST (ascending stored df, ties on key) instead of plain hash
-    * order — the hot-route branch's probe. The pigeonhole argument is
+  /** [[crossContainmentPairs]]' hot-route probe: the EXACT asymmetric
+    * prefix probe with the prefix ordered RAREST FIRST (ascending stored
+    * df, ties on key) — candidates from each batch doc's first
+    * n − ⌈t·n⌉ + 2 keys, then an exact per-pair count restricted to the
+    * CANDIDATE containers' postings and candidate pairs. The pigeonhole argument is
     * order-free (any n − ⌈t·n⌉ + 2 of the doc's shingles must hit a
     * shared one), so ANY fixed ordering is exact; rarest-first is the
     * one that keeps over-cap boilerplate lists out of candidate
@@ -3072,10 +2795,6 @@ object TextOps {
       .select(col("doc_id").as("c1"), col("doc").as("c2"),
         lit(true).as("cross"))
   }
-
-  private def emptyPairs(batch: DataFrame): DataFrame =
-    batch.limit(0).select(col("doc_id").as("c1"), col("doc_id").as("c2"),
-      lit(true).as("cross"))
 
   /** Store-then-answer contract pin of the as-of machinery, end-to-end:
     * two doc_id-parity batches of the corpus are admitted in order
@@ -3129,11 +2848,15 @@ object TextOps {
     * works on any seen-set index — the layout is identical).
     */
   def exactDedupDelta(spark: SparkSession, path: String, batch: DataFrame,
-      tag: String, normalize: Boolean = false): DataFrame = {
+      tag: String, normalize: Boolean = false): DataFrame =
+    exactDedupAt(spark, path, batch, normalize, IndexStore.View.Excluding(tag))
+
+  private def exactDedupAt(spark: SparkSession, path: String,
+      batch: DataFrame, normalize: Boolean, view: IndexStore.View)
+      : DataFrame = {
     // flipping `normalize` between runs would probe hashes computed
     // under a different canonicalization — a silent stop-finding-dups
-    // drift, guarded like [[segmentDedupDelta]]'s width
-    requireIndexParams(spark, path, s"normalize=$normalize", admit = true)
+    // drift, pinned like [[segmentDedupDelta]]'s width.
     // `normalize` mirrors CurateConfig.normalizeForHash: hash the
     // canonicalized text so case/punct/spacing variants collapse — the
     // streaming loop passes the config flag through so stream and batch
@@ -3147,90 +2870,20 @@ object TextOps {
     val within = hashed.join(
       hashed.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id")),
       Seq("h", "doc_id"))
-    deltaAgainstSeen(spark, path, within, tag).drop("h")
+    seenDelta(spark, path, within, s"normalize=$normalize", view).drop("h")
   }
 
-  /** Fold a segment index's accumulated increments into one fresh
-    * `batch=init` level — [[VectorOps.compactComponent]]'s discipline —
-    * and record the folded tags in the `_compacted_tags` sidecar (written
-    * inside the compaction swap, so tag record and fold are atomic
-    * together): [[segmentDedupDelta]] consults it to reject a replay of a
-    * compacted tag, whose exclusion filter could no longer see the tag's
-    * own first-run contribution.
+  /** Fold a seen-set index's accumulated increments into one fresh
+    * `batch=init` level ([[IndexStore.compact]]) and close the folded
+    * tags' replay windows: [[segmentDedupDelta]] / [[exactDedupDelta]]
+    * reject a replay of a compacted tag, whose exclusion filter could
+    * no longer see the tag's own first-run contribution. Works on any
+    * seen-set index (segment or digest — the layout is identical).
     */
   def compactSegmentIndex(spark: SparkSession, path: String,
       numFiles: Int = 0): Unit =
-    compactSeenLike(spark, path, "seen", numFiles)
-
-  /** The seen-set compaction discipline over any single-component
-    * hash-store index — `seen` (segment/digest sets) and `postings`
-    * (containment) share it verbatim.
-    */
-  private def compactSeenLike(spark: SparkSession, path: String,
-      component: String, numFiles: Int): Unit = {
-    // finish any crashed swap BEFORE reading tags: after a crash between
-    // delete and rename, both the live batch= dirs and the existing
-    // sidecar live only in the .compacting twin — listing the missing
-    // component dir would fold an EMPTY tag list and erase every closed
-    // replay window the sidecar records
-    VectorOps.finishCrashedSwap(spark, s"$path/$component")
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$component")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live =
-      if (!fs.exists(dir)) Set.empty[String]
-      else fs.listStatus(dir).iterator.map(_.getPath.getName)
-        .filter(n => n.startsWith("batch=") && n != "batch=init")
-        .map(_.stripPrefix("batch=")).toSet
-    val folded = (compactedTagsOf(spark, path, component) ++ live).toSeq.sorted
-    // as-of reach ends at the fold, like the replay windows above; reset
-    // BEFORE folding — see [[VectorOps.compactNeardupIndex]] — and the
-    // fold sentinel closes the window where history says init but the
-    // component's init dir does not exist yet
-    VectorOps.beginFold(spark, path)
-    VectorOps.resetHistory(spark, path, Seq("init"))
-    VectorOps.compactComponent(spark, s"$path/$component", numFiles, Nil,
-      sidecarFiles = Map("_compacted_tags" -> folded.mkString("\n")))
-    VectorOps.endFold(spark, path)
-  }
-
-  /** Does `path`'s seen-set already hold an increment under `batch=tag`?
-    * The streaming loops' cadence probe ([[graft.streaming.SegmentIngest]]
-    * / [[graft.streaming.CurateIngest]]): one shared owner of the layout
-    * convention.
-    */
-  private[graft] def seenTagExists(spark: SparkSession, path: String,
-      tag: String): Boolean = componentTagExists(spark, path, "seen", tag)
-
-  private[graft] def componentTagExists(spark: SparkSession, path: String,
-      component: String, tag: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$component/batch=$tag")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Tags whose increments a past [[compactSegmentIndex]] folded into
-    * `batch=init` — the `_compacted_tags` sidecar, empty set if never
-    * compacted.
-    */
-  private[graft] def compactedSegmentTags(spark: SparkSession,
-      path: String): Set[String] = compactedTagsOf(spark, path, "seen")
-
-  private[graft] def compactedTagsOf(spark: SparkSession,
-      path: String, component: String): Set[String] = {
-    val f = new org.apache.hadoop.fs.Path(s"$path/$component/_compacted_tags")
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(f)) Set.empty
-    else {
-      val in = fs.open(f)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        new String(bytes.toByteArray, "UTF-8")
-          .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSet
-      } finally in.close()
-    }
-  }
+    IndexStore.compact(spark, path, Seq("seen"), numFiles,
+      closeWindows = true)
 
   /** Pinned contract instantiation: width-8 segments over `documents`. */
   def dedupSegments(spark: SparkSession, dir: String): DataFrame =

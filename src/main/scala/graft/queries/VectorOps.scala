@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.SessionMemo
+import graft.operators.{IndexStore, SessionMemo}
 
 /** LLM-data-pipeline vector + sketch operators (SURVEY.md §2.D):
   * brute-force cosine top-k (the correctness baseline), cosine near-dup
@@ -516,50 +516,27 @@ object VectorOps {
     * computed exactly once, and each ingest batch probes them instead of
     * re-shingling the corpus ([[neardupDeltaIndexed]]).
     */
-  def writeNeardupIndex(docs: DataFrame, path: String): Unit = {
-    val spark = docs.sparkSession
-    // a REBUILD replaces the whole index: stale batch= increments from
-    // pre-rebuild appends must not survive beside the new batch=init.
-    // The `_building` sentinel brackets the delete→write window so a
-    // crash between them fails closed ([[beginIndexBuild]]) instead of
-    // leaving a probe-able index missing the prior corpus.
-    beginIndexBuild(spark, path)
-    resetComponent(spark, s"$path/bands")
-    resetComponent(spark, s"$path/sets")
-    // batch=… subdirectories from day one: appends land in their own
-    // partition dir, so the initial build and every increment share one
+  def writeNeardupIndex(docs: DataFrame, path: String): Unit =
+    // a REBUILD replaces the whole index under the fail-closed build
+    // bracket ([[IndexStore.build]]); batch=… subdirectories from day
+    // one, so the initial build and every increment share one
     // discoverable layout (readers see an extra `batch` partition column
     // and select past it)
-    minhashBands(docs).write.mode("overwrite").parquet(s"$path/bands/batch=init")
-    shingleSets(docs).write.mode("overwrite").parquet(s"$path/sets/batch=init")
-    // a rebuild starts a NEW history: prior appends' tags are gone from
-    // the data, so they must leave the as-of reach too (still inside
-    // the sentinel window — a crash here fails closed, never a
-    // data/history mismatch)
-    resetHistory(spark, path, Seq("init"))
-    endIndexBuild(spark, path)
-  }
+    IndexStore.build(docs.sparkSession, path, Seq("bands", "sets")) { init =>
+      minhashBands(docs).write.mode("overwrite").parquet(init("bands"))
+      shingleSets(docs).write.mode("overwrite").parquet(init("sets"))
+    }
 
   /** First-contact EMPTY bootstrap of a MinHash index — the
-    * schema-bearing empty components WITHOUT the `_building` sentinel.
-    * The sentinel protects a populated corpus's delete→write window; an
-    * empty bootstrap has nothing to lose, and a crash between its two
-    * writes leaves a partial layout whose existence probe simply re-runs
-    * the bootstrap (overwrite, idempotent). A sentinel here would
-    * instead WEDGE a streaming loop permanently: its recovery step
-    * (`recoverNeardupIndex`, which must run before any existence probe)
-    * fires `requireNotBuilding` on every restart, before any code that
-    * could redo the bootstrap.
+    * schema-bearing empty components, no build sentinel
+    * ([[IndexStore.bootstrap]] says why).
     */
   def bootstrapNeardupIndex(docs: DataFrame, path: String): Unit = {
     val empty = docs.limit(0)
-    // history FIRST: every data-bearing layout then has init in reach,
-    // and a crash anywhere in here re-runs the whole bootstrap anyway
-    resetHistory(spark = docs.sparkSession, path, Seq("init"))
-    minhashBands(empty).write.mode("overwrite")
-      .parquet(s"$path/bands/batch=init")
-    shingleSets(empty).write.mode("overwrite")
-      .parquet(s"$path/sets/batch=init")
+    IndexStore.bootstrap(docs.sparkSession, path) { init =>
+      minhashBands(empty).write.mode("overwrite").parquet(init("bands"))
+      shingleSets(empty).write.mode("overwrite").parquet(init("sets"))
+    }
   }
 
   /** [[bootstrapNeardupIndex]] for the cosine index — also records the
@@ -577,10 +554,11 @@ object VectorOps {
     val base = vecs.limit(0)
       .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2"))
     writeLshParams(spark, path, numPlanes, bands, seed)
-    resetHistory(spark, path, Seq("init")) // before data: crash re-runs all
-    bandedSignatures(base, numPlanes, bands, seed)
-      .write.mode("overwrite").parquet(s"$path/bands/batch=init")
-    base.write.mode("overwrite").parquet(s"$path/vectors/batch=init")
+    IndexStore.bootstrap(spark, path) { init =>
+      bandedSignatures(base, numPlanes, bands, seed)
+        .write.mode("overwrite").parquet(init("bands"))
+      base.write.mode("overwrite").parquet(init("vectors"))
+    }
   }
 
   /** Near-dup pairs of an ingest batch against an existing corpus PLUS
@@ -619,152 +597,26 @@ object VectorOps {
     * drop-ids are DISTINCT — but inflate bucket populations toward the
     * hot-bucket cap and double verify cost forever).
     */
-  def appendNeardupIndex(docs: DataFrame, path: String, tag: String): Unit = {
-    requireTag(tag)
-    val spark = docs.sparkSession
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    Seq(s"$path/bands", s"$path/sets").foreach { c =>
-      finishCrashedSwap(spark, c); ensureBatchLayout(spark, c)
+  def appendNeardupIndex(docs: DataFrame, path: String, tag: String): Unit =
+    IndexStore.append(docs.sparkSession, path, tag, Seq("bands", "sets")) {
+      inc =>
+        minhashBands(docs).write.mode("overwrite").parquet(inc.dir("bands"))
+        shingleSets(docs).write.mode("overwrite").parquet(inc.dir("sets"))
     }
-    // pre-history indexes seed from the on-disk layout BEFORE this
-    // tag's dirs exist, so every legacy increment stays in as-of reach
-    // (and the new tag cannot sort itself ahead of them)
-    seedHistoryIfEmpty(spark, path, Seq("bands", "sets"))
-    minhashBands(docs).write.mode("overwrite").parquet(s"$path/bands/batch=$tag")
-    shingleSets(docs).write.mode("overwrite").parquet(s"$path/sets/batch=$tag")
-    recordHistory(spark, path, tag)
-  }
 
-  /** [[neardupDelta]] against a persisted index ([[writeNeardupIndex]]). */
+  /** [[neardupDelta]] against a persisted index ([[writeNeardupIndex]]).
+    * With `asOf`, against the index AS OF a recorded batch tag — the
+    * reproducibility read: re-ask any batch's near-dup question against
+    * exactly the corpus state some earlier admit left behind, after the
+    * live index has moved on (`asOf` must be in
+    * [[IndexStore.indexHistory]]). Read-only either way.
+    */
   def neardupDeltaIndexed(spark: SparkSession, path: String,
-      newDocs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    neardupDeltaFrames(newDocs,
-      spark.read.parquet(s"$path/bands"),
-      spark.read.parquet(s"$path/sets"), threshold)
-  }
-
-  /** An index component restricted to the batches admitted up to and
-    * including `asOf` — the snapshot read behind the as-of probes. The
-    * tag set is a history prefix ([[historyPrefix]]) and the filter
-    * lands on the `batch` PARTITION column, so the scan lists only the
-    * prefix's directories (partition pruning, the q_topk_range law) —
-    * a snapshot read of a 10%-grown index costs the 10-batch prefix,
-    * not the full corpus plus a discard filter.
-    */
-  private[graft] def componentAsOf(spark: SparkSession, root: String,
-      component: String, asOf: String): DataFrame = {
-    // (recoverPromote is the ENTRY preludes' job — running it again per
-    // component would triple the metadata round trips on object stores)
-    // self-heal a crashed compaction swap first, like the live twins —
-    // the data is intact in the .compacting twin and one rename fixes
-    // it; without this the presence check below would fail with a
-    // misleading re-run-the-compaction remedy
-    finishCrashedSwap(spark, s"$root/$component")
-    val tags = historyPrefix(spark, root, asOf)
-    requireBatchesPresent(spark, s"$root/$component", tags)
-    // the batch PARTITION column must stay a STRING (load-bearing, the
-    // NnDescent.readComp / seenAsOf discipline): on an index whose tags
-    // are all numeric — e.g. append-only, no batch=init dir — inference
-    // types it INT, '007' becomes 7, and isin('007') string-compares
-    // against "7" → the snapshot silently LOSES that batch while
-    // requireBatchesPresent (which lists raw dir names) passes. Pin it
-    // by rewriting the inferred schema; the extra footer read is one
-    // file's metadata, and the partition-pruning shape is unchanged.
-    val inferred = spark.read.parquet(s"$root/$component").schema
-    val pinned = StructType(inferred.map(f =>
-      if (f.name == "batch") f.copy(dataType = StringType) else f))
-    spark.read.schema(pinned).parquet(s"$root/$component")
-      .filter(col("batch").isin(tags: _*))
-  }
-
-  // ---------------------------------------------- multi-component folds
-
-  /** `_folding` sentinel: compaction folds an index's components ONE AT
-    * A TIME, and between two folds an as-of read of `init` would see one
-    * folded (full-corpus) and one unfolded (baseline) component — a
-    * state that never existed (live reads are unaffected: they take the
-    * UNION of batches, which every fold preserves). The sentinel
-    * brackets the whole multi-fold window; [[historyPrefix]] — the
-    * chokepoint every as-of read resolves through — refuses while it is
-    * up, and re-running the compaction clears it.
-    */
-  private[graft] def beginFold(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_folding")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
-  private[graft] def endFold(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_folding")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
-  }
-
-  private def requireNotFolding(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_folding")
-    require(!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"$path has an unfinished compaction (crashed mid-fold) — its " +
-        "components may mix folded and unfolded state, so as-of reads " +
-        "are refused; re-run the compaction, then retry")
-  }
-
-  /** An as-of read must refuse a snapshot whose data is not fully on
-    * disk: compaction resets history BEFORE folding (so a crash between
-    * them can never resolve old tags against folded data), which opens
-    * the reverse window — history says `init` while the baseline dir is
-    * still being folded. Reading through it would silently answer from
-    * a state that never existed (e.g. an EMPTY seen-set); refusing is
-    * loud and the retrying compaction clears it.
-    */
-  private[graft] def requireBatchesPresent(spark: SparkSession,
-      componentDir: String, tags: Seq[String]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(componentDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val missing = tags.filterNot(t =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$componentDir/batch=$t")))
-    require(missing.isEmpty,
-      s"$componentDir is missing batch dirs for recorded history tags " +
-        s"${missing.mkString(", ")} — an interrupted compaction has not " +
-        "re-folded the baseline yet; re-run the compaction, then retry " +
-        "the as-of read")
-  }
-
-  /** [[neardupDeltaIndexed]] against the index AS OF a recorded batch
-    * tag — the reproducibility read: re-ask any batch's near-dup
-    * question against exactly the corpus state some earlier admit left
-    * behind, after the live index has moved on. Read-only (nothing is
-    * admitted); `asOf` must be in [[indexHistory]].
-    */
-  def neardupDeltaIndexedAsOf(spark: SparkSession, path: String,
       newDocs: DataFrame, threshold: Double = 0.5,
-      asOf: String): DataFrame = {
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    neardupDeltaFrames(newDocs,
-      componentAsOf(spark, path, "bands", asOf),
-      componentAsOf(spark, path, "sets", asOf), threshold)
-  }
-
-  /** [[minhashPairsIndexed]] as of a recorded batch tag: the verified
-    * pair graph of the snapshot corpus — what a historical curation
-    * label build saw ([[graft.queries.TextOps.writeCurateState]] family).
-    */
-  def minhashPairsIndexedAsOf(spark: SparkSession, path: String,
-      threshold: Double = 0.5, asOf: String,
-      maxBucket: Int = graft.operators.BandedHamming.DefaultMaxBucket)
-      : DataFrame = {
-    recoverNeardupIndex(spark, path)
-    val cands = graft.operators.BandedHamming
-      .bucketedPairs(componentAsOf(spark, path, "bands", asOf), "doc_id",
-        Seq("band", "sig"), maxBucket)
-      .select(col("id1").as("d1"), col("id2").as("d2"))
-    val sets = componentAsOf(spark, path, "sets", asOf)
-    verifyJaccard(cands, sets, sets, threshold)
-      .distinct()
-      .orderBy(col("d1"), col("d2"))
+      asOf: Option[String] = None): DataFrame = {
+    val idx = IndexStore.open(spark, path, Seq("bands", "sets"),
+      IndexStore.View.of(asOf))
+    neardupDeltaFrames(newDocs, idx("bands"), idx("sets"), threshold)
   }
 
   /** Symmetric verified near-dup pairs of the ENTIRE indexed corpus, from
@@ -776,18 +628,19 @@ object VectorOps {
     * ([[graft.queries.TextOps.writeCurateState]]): at 100 TB the shingle
     * pass is the dominant cost of the dedup pipeline, and it is paid
     * exactly once, at index build, per corpus — every later label
-    * (re)build starts here.
+    * (re)build starts here. With `asOf`: the verified pair graph of the
+    * snapshot corpus — what a historical curation label build saw.
     */
   def minhashPairsIndexed(spark: SparkSession, path: String,
       threshold: Double = 0.5,
-      maxBucket: Int = graft.operators.BandedHamming.DefaultMaxBucket)
-      : DataFrame = {
-    recoverNeardupIndex(spark, path)
+      maxBucket: Int = graft.operators.BandedHamming.DefaultMaxBucket,
+      asOf: Option[String] = None): DataFrame = {
+    val idx = IndexStore.open(spark, path, Seq("bands", "sets"),
+      IndexStore.View.of(asOf))
     val cands = graft.operators.BandedHamming
-      .bucketedPairs(spark.read.parquet(s"$path/bands"), "doc_id",
-        Seq("band", "sig"), maxBucket)
+      .bucketedPairs(idx("bands"), "doc_id", Seq("band", "sig"), maxBucket)
       .select(col("id1").as("d1"), col("id2").as("d2"))
-    val sets = spark.read.parquet(s"$path/sets")
+    val sets = idx("sets")
     verifyJaccard(cands, sets, sets, threshold)
       // a doc_id present in TWO batch partitions of sets/ (the documented
       // at-least-once window: a replayed increment re-created after a
@@ -798,164 +651,24 @@ object VectorOps {
       .orderBy(col("d1"), col("d2"))
   }
 
-  /** Fold an index component's accumulated `batch=` increments into a
-    * single fresh `batch=init` partition of `numFiles` files (0 → the
-    * session's default parallelism) — the small-files compaction a
-    * continuously-ingesting index needs: one parquet dir per micro-batch
-    * is exactly how an object store accumulates millions of kilobyte
-    * files whose LISTing eventually dwarfs the probe itself. DISTINCT
-    * during the fold restores nominal bucket populations if a replayed
-    * increment was ever re-created after a compaction folded it away
-    * (the one at-least-once window the per-batch overwrite can't cover) —
-    * duplicates are correct but inflate verify cost, so compaction is
-    * also the self-healing pass.
-    *
-    * Swap discipline: write everything to `<dir>.compacting`, then
-    * delete + rename, CHECKING both results (Hadoop FileSystems report
-    * most failures by returning false — an unchecked failed delete would
-    * rename the new data INSIDE the old dir; an unchecked failed rename
-    * would strand the corpus in `.compacting`). NOT atomic for
-    * concurrent readers — run it from the index's single writer between
-    * batches (the foreachBatch loop serializes, so
-    * [[graft.streaming.IngestDedup]]'s `compactEvery` slot is safe by
-    * construction). A crash between delete and rename leaves the
-    * finished `.compacting` dir; [[finishCrashedSwap]] completes it —
-    * called here, by every append, and by the ingest loop's probe path
-    * ([[recoverNeardupIndex]]/[[recoverCosineIndex]] at the top of each
-    * batch), so a restart after such a crash self-repairs before the
-    * first read instead of dying on a missing directory. On
-    * rename-as-copy stores (S3 proper) prefer a versioned-prefix layout
-    * outside this helper.
-    */
-  private[graft] def compactComponent(spark: SparkSession, dir: String,
-      numFiles: Int, partitionCols: Seq[String] = Nil,
-      sidecarFiles: Map[String, String] = Map.empty): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir + ".compacting")
-    finishCrashedSwap(spark, dir)
-    fs.delete(tmp, true) // stale partial write from a crash mid-compaction
-    ensureBatchLayout(spark, dir)
-    val n = if (numFiles > 0) numFiles else spark.sparkContext.defaultParallelism
-    val folded = spark.read.parquet(dir).drop("batch").distinct()
-    // a partitioned component (IVF cells) must keep its directory layout,
-    // and hashing the write by the partition cols lands each partition's
-    // rows in few tasks → few files per dir instead of tasks × dirs
-    val arranged =
-      if (partitionCols.isEmpty) folded.repartition(n)
-      else folded.repartition(n, partitionCols.map(col): _*)
-    arranged.write.partitionBy(partitionCols: _*)
-      .parquet(new Path(tmp, "batch=init").toString)
-    // component metadata rides INSIDE the swap: written to the tmp twin
-    // before delete+rename, so it is exactly as durable as the fold it
-    // describes (a crash can lose both or neither, never just one).
-    // Names must be _-prefixed — parquet readers and ensureBatchLayout
-    // both skip those.
-    sidecarFiles.foreach { case (name, content) =>
-      require(name.startsWith("_"), s"sidecar file must be _-prefixed: $name")
-      val out = fs.create(new Path(tmp, name), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-    require(fs.delete(p, true), s"compaction could not delete $dir; " +
-      s"new data is intact at $tmp — resolve the FS issue and re-run")
-    require(fs.rename(tmp, p), s"compaction could not swap $tmp into $dir; " +
-      "the corpus is intact there — re-running any compact/append/ingest " +
-      "call finishes the swap")
-  }
-
-  /** Delete a component and its `.compacting` twin — the first step of
-    * every index REBUILD: the writers overwrite `batch=init`, but stale
-    * `batch=` increments from appends before the rebuild would survive
-    * beside it and re-enter reads as duplicate (old-model) rows.
-    */
-  private[graft] def resetComponent(spark: SparkSession, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    fs.delete(new Path(dir + ".compacting"), true)
-  }
-
-  /** Complete a compaction swap interrupted between delete and rename:
-    * the component dir is missing but its finished `.compacting` twin
-    * exists. Safe (and cheap — two exists calls) to run before any read
-    * or write of the component.
-    */
-  private[graft] def finishCrashedSwap(spark: SparkSession, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir + ".compacting")
-    if (!fs.exists(p) && fs.exists(tmp))
-      require(fs.rename(tmp, p),
-        s"could not finish the crashed compaction swap $tmp -> $dir")
-  }
-
-  /** `_building` sentinel at an index ROOT — the multi-component twin of
-    * [[graft.operators.Pq]]'s `_pq_building` discipline. A rebuild
-    * ([[writeNeardupIndex]] / [[writeCosineIndex]] /
-    * [[graft.operators.Ivf.writeIndex]]) first deletes every component
-    * (stale `batch=` increments must not survive beside the fresh
-    * `batch=init`), then writes them one by one: a crash in that window
-    * leaves a structurally-valid-looking index MISSING whole components
-    * (or the entire prior corpus), which appenders would silently
-    * recreate as an empty layout — every later probe then dedups/searches
-    * against a corpus that lost all pre-crash documents. The sentinel
-    * lands before the first delete and is removed only after the last
-    * write, and every read/append/compact entry point refuses an index
-    * that carries it, so the crash fails CLOSED with a "rebuild" message
-    * instead of an empty-corpus wrong answer.
-    */
-  private[graft] def beginIndexBuild(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val sentinel = new Path(s"$path/_building")
-    val fs = sentinel.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(sentinel.getParent)
-    fs.create(sentinel, true).close()
-  }
-
-  private[graft] def endIndexBuild(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val sentinel = new Path(s"$path/_building")
-    sentinel.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(sentinel, false)
-  }
-
-  private[graft] def requireNotBuilding(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val sentinel = new Path(s"$path/_building")
-    val fs = sentinel.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(sentinel),
-      s"$path has an unfinished index build (crashed mid-rebuild) — " +
-        "re-run the index build before using it")
-  }
-
   /** Drop batch rows whose `vec_id` already lives in a persisted cells
-    * component — appends are growth-only, so a re-sent id (at-least-once
-    * ingest under a NEW tag, or an upstream replay) is ignored rather
-    * than written twice. The danger of the duplicate is not just a
-    * repeated re-rank row: after centroid drift the copy may assign to a
-    * DIFFERENT cell, and the residual ADC fold (Pq.adcShortlist) would
-    * then mix one cell's q·c term with a 2m-part code fold — a garbage
-    * approximate score. Shape is corpus-shuffle-free: broadcast the
-    * batch ids against a column-pruned corpus id scan to find the
-    * (≤ batch-sized) intersection, then anti-join the batch against that
-    * broadcast intersection. `excludeBatch` exempts the increment's OWN
-    * `batch=` dir from the scan — an at-least-once replay of a tag must
-    * rewrite itself, not see its prior write as "existing" and overwrite
-    * the dir with an empty batch (deleting the increment).
+    * component (`existing`, read at the increment's
+    * [[IndexStore.View.Excluding]] view) — appends are growth-only, so a
+    * re-sent id (at-least-once ingest under a NEW tag, or an upstream
+    * replay) is ignored rather than written twice. The danger of the
+    * duplicate is not just a repeated re-rank row: after centroid drift
+    * the copy may assign to a DIFFERENT cell, and the residual ADC fold
+    * (Pq.adcShortlist) would then mix one cell's q·c term with a 2m-part
+    * code fold — a garbage approximate score. Shape is
+    * corpus-shuffle-free: broadcast the batch ids against a
+    * column-pruned corpus id scan to find the (≤ batch-sized)
+    * intersection, then anti-join the batch against that broadcast
+    * intersection. The excluded own tag means an at-least-once replay
+    * rewrites itself instead of seeing its prior write as "existing"
+    * and overwriting the dir with an empty batch.
     */
-  private[graft] def dropExistingVecIds(spark: SparkSession, vecs: DataFrame,
-      cellsDir: String, excludeBatch: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(cellsDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return vecs
-    val all = spark.read.parquet(cellsDir)
-    val existing =
-      if (all.columns.contains("batch")) all.filter(col("batch") =!= excludeBatch)
-      else all
+  private[graft] def dropExistingVecIds(vecs: DataFrame,
+      existing: DataFrame): DataFrame = {
     val dup = existing.select(col("vec_id"))
       .join(broadcast(vecs.select(col("vec_id")).distinct()), "vec_id")
       .distinct()
@@ -968,469 +681,44 @@ object VectorOps {
       .join(broadcast(dup), Seq("vec_id"), "left_anti")
   }
 
-  /** One owner of small-sidecar-file IO for every index marker
-    * (`_pq_m`, `_pq_perm`, `_lsh_params`, seen-set `_params`, …): the
-    * read loop treats a 0-byte read as retryable (spec-legal on any
-    * InputStream) and only EOF (−1) as done — a `while (n > 0)` copy
-    * would truncate and make a guard spuriously refuse a valid sidecar.
-    */
-  /** Record-on-first-admit / refuse-on-mismatch guard for the knobs an
-    * index's every probe must repeat — ONE implementation for every
-    * params-pinned family (seen-set width/normalize, media kind):
-    * first ADMIT records `path/_params`, later calls require equality,
-    * and the crashed-first-contact window (sidecar present, data dir
-    * absent) re-records ONLY on an admit call — a read-only probe
-    * validates, never writes (r13 advice; the media copy diverging from
-    * the TextOps copy on exactly this rule is why the helper is shared
-    * now, r14 review). Pre-sidecar indexes (data present, no `_params`)
-    * skip the check like the other legacy sidecars.
-    */
-  private[graft] def requireIndexParamsAt(spark: SparkSession, path: String,
-      dataSubdir: String, params: String, admit: Boolean,
-      mismatchHint: String, siblingSubdirs: Seq[String] = Nil): Unit = {
-    val data = new org.apache.hadoop.fs.Path(s"$path/$dataSubdir")
-    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the crashed-first-contact window (sidecar present, data absent →
-    // an ADMIT may re-record) must consider every component that can
-    // live under this root: with the media families' shared `_params`,
-    // "frames/ absent" does NOT mean first contact when hashes/ holds a
-    // live image index — re-recording there would silently unpin the
-    // other kind (r14 review catch)
-    val hasData = fs.exists(data) || siblingSubdirs.exists(s =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$s")))
-    readSidecar(spark, s"$path/_params") match {
-      case Some(stored) if hasData =>
-        require(stored == params,
-          s"$path was built with ($stored); probing with ($params) " +
-            s"$mismatchHint — pass the original parameters or rebuild " +
-            "the index")
-      case Some(stored) =>
-        if (admit) writeSidecar(spark, s"$path/_params", params)
-        else require(stored == params,
-          s"$path recorded ($stored) at first contact; a read-only " +
-            s"probe with ($params) cannot re-record — replay the " +
-            "crashed first admit, or probe with the recorded parameters")
-      case None =>
-        if (!hasData && admit)
-          writeSidecar(spark, s"$path/_params", params)
-    }
-  }
-
-  private[graft] def writeSidecar(spark: SparkSession, file: String,
-      content: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(file)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The sidecar's trimmed content, or None if the file is absent. */
-  private[graft] def readSidecar(spark: SparkSession, file: String)
-      : Option[String] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(file)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](4096)
-        var n = in.read(tmp)
-        while (n >= 0) {
-          if (n > 0) buf.write(tmp, 0, n)
-          n = in.read(tmp)
-        }
-        Some(buf.toString("UTF-8").trim)
-      } finally in.close()
-    }
-  }
-
-  // -------------------------------------------------- append history
-
-  /** Ordered append history of a persisted index — the reproducibility
-    * sidecar behind the as-of reads: `_history` at the index ROOT
-    * (outside the data components, so compaction swaps never touch it)
-    * lists every admitted batch tag, one per line, in append order.
-    * Recorded AFTER a tag's data commits; the crash window in between
-    * self-heals under the documented at-least-once replay discipline
-    * (replaying the tag rewrites its own increment idempotently and
-    * then records it — and recording is itself idempotent, so a replay
-    * of an already-recorded tag never duplicates a line). Appends are
-    * serialized per index by the ingest-loop contract (foreachBatch),
-    * so the read-modify-write is single-writer by construction.
-    */
-  private[graft] def recordHistory(spark: SparkSession, path: String,
-      tag: String): Unit = {
-    val cur = indexHistory(spark, path)
-    if (!cur.contains(tag))
-      writeHistoryFile(spark, path, cur :+ tag)
-  }
-
-  /** `_history` writes go through write-temp-then-rename: the file is an
-    * ordered LOG rewritten in full each time, and — unlike the
-    * single-value sidecars, where a replay simply re-records the same
-    * value — a create() truncated mid-write would leave a prefix line
-    * (`t` of `t1`) that parses as a phantom tag no replay can heal:
-    * every later prefix through it would then demand a batch dir that
-    * never existed. Rename is atomic on HDFS and local FS; the
-    * delete-before-rename gap only ever exposes an ABSENT file, which
-    * reads as empty history — a loud as-of refusal, never corruption.
-    */
-  private def writeHistoryFile(spark: SparkSession, path: String,
-      tags: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(s"$path/_history")
-    val tmp = new Path(s"$path/_history.tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dst.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(tags.mkString("\n").getBytes("UTF-8")) finally out.close()
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst),
-      s"could not move $tmp into place — history not updated")
-  }
-
-  /** The index's admitted batch tags in append order (empty for an
-    * index predating the sidecar or freshly compacted to its baseline).
-    */
-  def indexHistory(spark: SparkSession, path: String): Seq[String] =
-    readSidecar(spark, s"$path/_history")
-      .map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Nil)
-
-  /** First-append migration of a PRE-HISTORY index: seed the sidecar
-    * with every batch tag already on disk (listed across the index's
-    * component dirs), so the data admitted before the sidecar existed
-    * stays inside every later prefix — without this, the first
-    * post-upgrade append would seed only `init` and as-of reads would
-    * silently exclude the legacy increments (reporting their dups as
-    * novel). True admit ORDER of the legacy tags is unknowable from the
-    * layout, so they are seeded init-first then lexicographically:
-    * prefixes AT a seeded tag are approximate (documented), while any
-    * tag recorded live after the upgrade has exact semantics — its
-    * prefix contains all seeded batches, which is the property
-    * correctness rests on.
-    */
-  private[graft] def seedHistoryIfEmpty(spark: SparkSession, path: String,
-      components: Seq[String]): Unit = {
-    if (indexHistory(spark, path).nonEmpty) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tags = components.flatMap { c =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$c")
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).iterator.map(_.getPath.getName)
-        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=")).toSeq
-    }.distinct
-    val ordered = (if (tags.contains("init")) Seq("init") else Nil) ++
-      tags.filter(_ != "init").sorted
-    if (ordered.nonEmpty) writeHistoryFile(spark, path, ordered)
-  }
-
-  /** Reset history to exactly `baseline` — the compaction hook:
-    * folding increments into `batch=init` erases per-tag state, so
-    * as-of reach ends at the last compaction (the same closure
-    * [[graft.queries.TextOps.compactSegmentIndex]] applies to replay
-    * windows). Snapshots older than the fold are unrecoverable by
-    * design; pin a copy of the index BEFORE compacting if a release
-    * must stay reproducible past it.
-    */
-  private[graft] def resetHistory(spark: SparkSession, path: String,
-      baseline: Seq[String]): Unit =
-    writeHistoryFile(spark, path, baseline)
-
-  /** History prefix up to and including `asOf` — the batch set an as-of
-    * read scans. Unknown tags fail loudly, naming the two ways a tag
-    * can be absent (never admitted, or folded away by compaction).
-    */
-  private[graft] def historyPrefix(spark: SparkSession, path: String,
-      asOf: String): Seq[String] = {
-    requireNotFolding(spark, path)
-    val h = indexHistory(spark, path)
-    val i = h.indexOf(asOf)
-    require(i >= 0,
-      s"'$asOf' is not in $path's append history (${h.mkString(", ")}): " +
-        "either the tag was never admitted, or a compaction folded it " +
-        "into the baseline — as-of reach ends at the last compaction")
-    h.take(i + 1)
-  }
-
   /** Finish any crashed compaction swap on a MinHash index — the ingest
     * loop runs this before probing so a restart after a mid-swap crash
     * self-repairs ([[graft.streaming.IngestDedup]]). A crashed REBUILD is
-    * different — components are missing, not mid-swap — so the
-    * `_building` sentinel stays fatal here: only a full rebuild repairs it.
+    * different — components are missing, not mid-swap — so the build
+    * sentinel stays fatal here: only a full rebuild repairs it.
     */
-  def recoverNeardupIndex(spark: SparkSession, path: String): Unit = {
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    finishCrashedSwap(spark, s"$path/bands")
-    finishCrashedSwap(spark, s"$path/sets")
-  }
+  def recoverNeardupIndex(spark: SparkSession, path: String): Unit =
+    IndexStore.open(spark, path, Seq("bands", "sets"))
 
   /** [[recoverNeardupIndex]] for the cosine index. */
-  def recoverCosineIndex(spark: SparkSession, path: String): Unit = {
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    finishCrashedSwap(spark, s"$path/bands")
-    finishCrashedSwap(spark, s"$path/vectors")
-  }
+  def recoverCosineIndex(spark: SparkSession, path: String): Unit =
+    IndexStore.open(spark, path, Seq("bands", "vectors"))
 
-  // ------------------------------------------------ index observability
-
-  /** One health view of a persisted index — the what-state-is-this-in
-    * call an operator runs before paging anyone: every data component's
-    * `batch=` increments with file counts and bytes (FS metadata only,
-    * no Spark job over the data), every sidecar's content, and every
-    * lifecycle flag (`_building`/`_pq_building` fail-closed sentinels,
-    * `_folding` compaction window, a `.rebuilding` aside in flight, a
-    * `.retired` copy awaiting cleanup). Works on any of the index
-    * families — the layout conventions are shared, and unknown entries
-    * are simply absent. Columns: (section: data|sidecar|flag,
-    * component, key, value).
-    */
-  def indexInfo(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val rows = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, String, String)]
-    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory) {
-        val kids = fs.listStatus(st.getPath)
-        val batches = kids.filter(_.getPath.getName.startsWith("batch="))
-        if (batches.nonEmpty) batches.foreach { b =>
-          val sum = fs.getContentSummary(b.getPath)
-          rows += (("data", name, b.getPath.getName,
-            s"files=${sum.getFileCount} bytes=${sum.getLength}"))
-        } else {
-          val sum = fs.getContentSummary(st.getPath)
-          rows += (("data", name, "(flat)",
-            s"files=${sum.getFileCount} bytes=${sum.getLength}"))
-        }
-      } else if (name.startsWith("_")) {
-        val v =
-          if (Seq("_building", "_pq_building", "_folding").contains(name))
-            "PRESENT"
-          else readSidecar(spark, st.getPath.toString).getOrElse("")
-        val section =
-          if (v == "PRESENT") "flag"
-          else "sidecar"
-        rows += ((section, "", name, v.replace("\n", ",")))
-      }
-    }
-    Seq(s"$path.rebuilding" -> "aside_rebuild_in_progress_or_orphaned",
-        s"$path.retired" -> "retired_copy_awaiting_cleanup").foreach {
-      case (p, label) =>
-        if (fs.exists(new Path(p))) rows += (("flag", "", label, p))
-    }
-    rows.toSeq.toDF("section", "component", "key", "value")
-      .orderBy(col("section"), col("component"), col("key"))
-  }
-
-  // --------------------------------------------- zero-downtime rebuild
-
-  /** Rebuild an index WITHOUT refusing reads for the build's duration —
-    * the blue/green twin of the in-place rebuilds. In-place rebuilds
-    * fail closed behind the `_building` sentinel, which is correct but
-    * means a 100 TB corpus re-shingle refuses probes for HOURS; here
-    * the replacement is built at `$path.rebuilding` (its own build
-    * sentinel lives INSIDE that dir, invisible to live readers), then
-    * promoted with two metadata renames — live → `$path.retired`,
-    * rebuilt → live — and the retired copy deleted. Readers race only
-    * the renames (milliseconds at any scale), never the build.
-    *
-    * Promotion happens ONLY here, in the builder's own call — never
-    * from a reader's recovery ([[recoverPromote]]'s cardinal rule), so
-    * probes of the live index can never mutate an aside build they
-    * happen to observe. If this call dies after the build completes,
-    * the finished aside is simply discarded and redone by the next
-    * rebuild (a wasted build, never a wrong index: the redo reads the
-    * live corpus, which holds any admits made since the crash).
-    */
-  private[graft] def rebuildAside(spark: SparkSession, path: String)(
-      build: String => Unit): Unit = {
-    // repair any crashed promote FIRST: starting a build while live is
-    // missing would race concurrent readers' live-missing recovery
-    // into deleting the in-flight aside (review catch #3) — with live
-    // restored before the aside is touched, readers never enter their
-    // destructive branch during this build
-    recoverPromote(spark, path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val aside = new org.apache.hadoop.fs.Path(s"$path.rebuilding")
-    // a stale partial/orphan from an earlier crashed rebuild:
-    // re-running IS the repair
-    aside.getFileSystem(conf).delete(aside, true)
-    build(aside.toString)
-    promote(spark, path)
-  }
-
-  /** [[rebuildAside]] for the MinHash index. */
+  /** [[IndexStore.buildAside]] for the MinHash index. */
   def rebuildNeardupIndexAside(docs: DataFrame, path: String): Unit =
-    rebuildAside(docs.sparkSession, path)(writeNeardupIndex(docs, _))
+    IndexStore.buildAside(docs.sparkSession, path)(writeNeardupIndex(docs, _))
 
-  /** [[rebuildAside]] for the cosine index. */
+  /** [[IndexStore.buildAside]] for the cosine index. */
   def rebuildCosineIndexAside(vecs: DataFrame, path: String,
       numPlanes: Int = 16, bands: Int = 8, seed: Long = 42L): Unit =
-    rebuildAside(vecs.sparkSession, path)(
+    IndexStore.buildAside(vecs.sparkSession, path)(
       writeCosineIndex(vecs, _, numPlanes, bands, seed))
-
-  private def promote(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live = new Path(path)
-    val fs = live.getFileSystem(conf)
-    val aside = new Path(s"$path.rebuilding")
-    val retired = new Path(s"$path.retired")
-    // idempotent: a live-missing recovery racing this call may have
-    // promoted the finished aside first — nothing left but the cleanup
-    if (!fs.exists(aside)) { fs.delete(retired, true); return }
-    fs.delete(retired, true) // leftovers of an even earlier promote
-    if (fs.exists(live))
-      require(fs.rename(live, retired), s"could not retire $live")
-    // between the two renames live is briefly missing — a concurrent
-    // reader's recovery may legitimately promote the aside first; a
-    // failed rename with live present is that lost race, not an error
-    if (!fs.rename(aside, live))
-      require(fs.exists(live) && !fs.exists(aside),
-        s"could not promote $aside")
-    fs.delete(retired, true)
-  }
-
-  /** Crash recovery for [[rebuildAside]] — run by every recover*Index
-    * entry and the index read/append/compact preludes BEFORE any
-    * sentinel check. The cardinal rule: **while a live index exists,
-    * recovery never touches `.rebuilding`** — a sentinel-bearing aside
-    * is indistinguishable from a build IN FLIGHT in another process
-    * (the zero-downtime feature's headline state), and even a COMPLETE
-    * aside is only promoted by its own [[rebuildAside]] call; if that
-    * call died, the next rebuild discards and redoes it (wasted build,
-    * never a wrong index — the redo reads the live corpus, which holds
-    * any admits made since). What recovery DOES resolve:
-    *  - live present + stale `.retired` debris (and no aside — the
-    *    promote that created it completed) → delete the debris;
-    *  - live MISSING (a promote crashed between its renames — the only
-    *    states that stop reads): finish forward when the aside is
-    *    complete; otherwise drop a partial aside and restore the
-    *    `.retired` copy. One pass, any combination. Concurrent readers
-    *    racing these renames tolerate losing (mutations are wrapped;
-    *    the survivor check is live's existence).
-    */
-  private[graft] def recoverPromote(spark: SparkSession,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live = new Path(path)
-    val fs = live.getFileSystem(conf)
-    val aside = new Path(s"$path.rebuilding")
-    val retired = new Path(s"$path.retired")
-    if (fs.exists(live)) {
-      if (fs.exists(retired) && !fs.exists(aside)) fs.delete(retired, true)
-      return
-    }
-    // live is missing: best-effort forward repair, race-tolerant
-    try {
-      val asidePartial = Seq("_building", "_pq_building")
-        .exists(s => fs.exists(new Path(s"$path.rebuilding/$s")))
-      if (fs.exists(aside) && !asidePartial) promote(spark, path)
-      else {
-        if (fs.exists(aside)) fs.delete(aside, true)
-        if (fs.exists(retired)) {
-          fs.rename(retired, live)
-          // Hadoop FS reports most failures as `false`, not an
-          // exception — a silent non-restore would surface later as a
-          // misleading missing-path error while the only copy of the
-          // index sits unmentioned in .retired
-          require(fs.exists(live),
-            s"could not restore $retired to $path — the only copy of " +
-              "the index is there; fix the filesystem and retry")
-        }
-      }
-    } catch {
-      case e: Exception if fs.exists(live) => () // lost a benign race
-    }
-  }
-
-  /** Migrate a flat (pre-`batch=`-layout) component in place: root-level
-    * entries that are not already a `batch=` dir — parquet part files,
-    * or an old IVF component's `cell=` dirs — move into `dir/batch=init`,
-    * so an increment's `batch=` dir never lands beside them (Spark
-    * partition discovery rejects that mix as conflicting structures).
-    * Metadata-only renames; a no-op on the current layout. Every append
-    * and compaction runs this first, so an index written by an older
-    * build is upgraded the moment it is grown.
-    */
-  private[graft] def ensureBatchLayout(spark: SparkSession, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val flat = fs.listStatus(p).filter { e =>
-      val n = e.getPath.getName
-      !n.startsWith("batch=") && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (flat.nonEmpty) {
-      val init = new Path(p, "batch=init")
-      fs.mkdirs(init)
-      flat.foreach { e =>
-        require(fs.rename(e.getPath, new Path(init, e.getPath.getName)),
-          s"could not migrate ${e.getPath} into the batch=init layout")
-      }
-    }
-  }
-
-  /** Increment tags name `batch=` partition dirs: path-safe charset, and
-    * `init` is reserved for the corpus component ([[writeNeardupIndex]] /
-    * compaction) — appending under it would OVERWRITE the whole corpus.
-    */
-  private[graft] def requireTag(tag: String): Unit =
-    require(tag.nonEmpty && tag != "init" &&
-        tag.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
-      s"index increment tag must be [A-Za-z0-9_-]+ and not the reserved " +
-        s"'init', got '$tag'")
 
   /** Compact a persisted MinHash dedup index ([[writeNeardupIndex]] +
     * [[appendNeardupIndex]] increments) in place — see
-    * [[compactComponent]] for the when-and-why.
+    * [[IndexStore.compact]] for the when-and-why.
     */
   def compactNeardupIndex(spark: SparkSession, path: String,
-      numFiles: Int = 0): Unit = {
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    // history reset BEFORE the fold: a crash after the fold but before
-    // the reset would leave old tags resolvable against data that no
-    // longer has their batch dirs — an as-of probe would silently read
-    // the folded superset. Reset-first keeps every crash-window
-    // observation a true historical state (init = the pre-fold baseline
-    // until the retry completes the fold, the folded corpus after).
-    beginFold(spark, path)
-    resetHistory(spark, path, Seq("init"))
-    compactComponent(spark, s"$path/bands", numFiles)
-    compactComponent(spark, s"$path/sets", numFiles)
-    endFold(spark, path)
-  }
+      numFiles: Int = 0): Unit =
+    IndexStore.compact(spark, path, Seq("bands", "sets"), numFiles)
 
   /** Compact a persisted cosine index ([[writeCosineIndex]] +
     * [[appendCosineIndex]] increments) in place — see
-    * [[compactComponent]].
+    * [[IndexStore.compact]].
     */
   def compactCosineIndex(spark: SparkSession, path: String,
-      numFiles: Int = 0): Unit = {
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    // reset-before-fold — see [[compactNeardupIndex]]
-    beginFold(spark, path)
-    resetHistory(spark, path, Seq("init"))
-    compactComponent(spark, s"$path/bands", numFiles)
-    compactComponent(spark, s"$path/vectors", numFiles)
-    endFold(spark, path)
-  }
+      numFiles: Int = 0): Unit =
+    IndexStore.compact(spark, path, Seq("bands", "vectors"), numFiles)
 
   private def neardupDeltaFrames(newDocs: DataFrame, corpusBands: DataFrame,
       corpusSets: DataFrame, threshold: Double): DataFrame = {
@@ -1892,29 +1180,25 @@ object VectorOps {
   def writeCosineIndex(vecs: DataFrame, path: String, numPlanes: Int = 16,
       bands: Int = 8, seed: Long = 42L): Unit = {
     val spark = vecs.sparkSession
-    // sentinel brackets the delete→write window — see [[beginIndexBuild]]
-    beginIndexBuild(spark, path)
-    resetComponent(spark, s"$path/bands")
-    resetComponent(spark, s"$path/vectors")
     val base = vecs
       .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2"))
     // batch=… layout from day one — see [[writeNeardupIndex]]
-    bandedSignatures(base, numPlanes, bands, seed)
-      .write.mode("overwrite").parquet(s"$path/bands/batch=init")
-    base.write.mode("overwrite").parquet(s"$path/vectors/batch=init")
-    // the signature knobs ride WITH the index (inside the sentinel
-    // window): probing or appending with different planes/bands/seed
-    // yields signatures that never collide with the stored ones —
-    // recall silently collapses to zero, the worst failure mode a
-    // dedup index has. Readers validate against this record.
-    writeLshParams(spark, path, numPlanes, bands, seed)
-    resetHistory(spark, path, Seq("init")) // rebuild = new as-of history
-    endIndexBuild(spark, path)
+    IndexStore.build(spark, path, Seq("bands", "vectors")) { init =>
+      bandedSignatures(base, numPlanes, bands, seed)
+        .write.mode("overwrite").parquet(init("bands"))
+      base.write.mode("overwrite").parquet(init("vectors"))
+      // the signature knobs ride WITH the index (inside the sentinel
+      // window): probing or appending with different planes/bands/seed
+      // yields signatures that never collide with the stored ones —
+      // recall silently collapses to zero, the worst failure mode a
+      // dedup index has. Readers validate against this record.
+      writeLshParams(spark, path, numPlanes, bands, seed)
+    }
   }
 
   private def writeLshParams(spark: SparkSession, path: String,
       numPlanes: Int, bands: Int, seed: Long): Unit =
-    writeSidecar(spark, s"$path/_lsh_params", s"$numPlanes,$bands,$seed")
+    IndexStore.setMarker(spark, path, "_lsh_params", s"$numPlanes,$bands,$seed")
 
   /** Refuse knobs that disagree with the index's stored `_lsh_params` —
     * turning the silent recall-0 of mismatched signatures into a loud
@@ -1922,7 +1206,7 @@ object VectorOps {
     */
   private def requireLshParams(spark: SparkSession, path: String,
       numPlanes: Int, bands: Int, seed: Long): Unit =
-    readSidecar(spark, s"$path/_lsh_params").foreach { stored =>
+    IndexStore.marker(spark, path, "_lsh_params").foreach { stored =>
       require(stored == s"$numPlanes,$bands,$seed",
         s"$path was built with (numPlanes,bands,seed) = ($stored); probing " +
           s"or appending with ($numPlanes,$bands,$seed) would produce " +
@@ -1962,51 +1246,30 @@ object VectorOps {
     */
   def appendCosineIndex(vecs: DataFrame, path: String, tag: String,
       numPlanes: Int = 16, bands: Int = 8, seed: Long = 42L): Unit = {
-    requireTag(tag)
     val spark = vecs.sparkSession
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    requireLshParams(spark, path, numPlanes, bands, seed)
-    Seq(s"$path/bands", s"$path/vectors").foreach { c =>
-      finishCrashedSwap(spark, c); ensureBatchLayout(spark, c)
+    IndexStore.append(spark, path, tag, Seq("bands", "vectors")) { inc =>
+      requireLshParams(spark, path, numPlanes, bands, seed)
+      val base = vecs
+        .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2"))
+      bandedSignatures(base, numPlanes, bands, seed)
+        .write.mode("overwrite").parquet(inc.dir("bands"))
+      base.write.mode("overwrite").parquet(inc.dir("vectors"))
     }
-    seedHistoryIfEmpty(spark, path, Seq("bands", "vectors"))
-    val base = vecs
-      .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2"))
-    bandedSignatures(base, numPlanes, bands, seed)
-      .write.mode("overwrite").parquet(s"$path/bands/batch=$tag")
-    base.write.mode("overwrite").parquet(s"$path/vectors/batch=$tag")
-    recordHistory(spark, path, tag)
   }
 
   /** [[cosineDelta]] against a persisted index ([[writeCosineIndex]]) —
-    * `numPlanes`/`bands`/`seed` must match the index build.
+    * `numPlanes`/`bands`/`seed` must match the index build. With `asOf`,
+    * against the index AS OF a recorded batch tag (the embedding-space
+    * twin of [[neardupDeltaIndexed]]'s as-of read). Read-only.
     */
   def cosineDeltaIndexed(spark: SparkSession, path: String,
       newVecs: DataFrame, threshold: Double, numPlanes: Int = 16,
-      bands: Int = 8, seed: Long = 42L): DataFrame = {
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
+      bands: Int = 8, seed: Long = 42L,
+      asOf: Option[String] = None): DataFrame = {
+    val idx = IndexStore.open(spark, path, Seq("bands", "vectors"),
+      IndexStore.View.of(asOf))
     requireLshParams(spark, path, numPlanes, bands, seed)
-    cosineDeltaFrames(newVecs,
-      spark.read.parquet(s"$path/bands"),
-      spark.read.parquet(s"$path/vectors"),
-      threshold, numPlanes, bands, seed)
-  }
-
-  /** [[cosineDeltaIndexed]] against the index AS OF a recorded batch
-    * tag — the embedding-space twin of [[neardupDeltaIndexedAsOf]]:
-    * read-only, partition-pruned to the history prefix's `batch=` dirs.
-    */
-  def cosineDeltaIndexedAsOf(spark: SparkSession, path: String,
-      newVecs: DataFrame, threshold: Double, numPlanes: Int = 16,
-      bands: Int = 8, seed: Long = 42L, asOf: String): DataFrame = {
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
-    requireLshParams(spark, path, numPlanes, bands, seed)
-    cosineDeltaFrames(newVecs,
-      componentAsOf(spark, path, "bands", asOf),
-      componentAsOf(spark, path, "vectors", asOf),
+    cosineDeltaFrames(newVecs, idx("bands"), idx("vectors"),
       threshold, numPlanes, bands, seed)
   }
 
@@ -2580,47 +1843,24 @@ object VectorOps {
     * `n_hits`/`max_cos` cover CANDIDATES only (`max_cos` NULL on a row
     * with none), verdicts are a subset of the exact op's
     * (VectorOpsSpec measures containment + recall on the fixture).
+    *
+    * With `asOf`, "what would eval-set release R have flagged": the
+    * probe sees only the eval batches admitted up to `asOf` in the index
+    * history, so a verdict is reproducible bit-identically after later
+    * eval appends (the question
+    * [[graft.queries.TextOps.decontaminateIndexed]] answers for the
+    * shingle family). The corpus projection is checkpointed: it feeds
+    * THREE consumers (signatures, the cosine verify, the left-join
+    * spine) and Catalyst shares no subplans — un-materialized, every
+    * probe would re-scan and re-norm the corpus up to 3×.
     */
   def semanticDecontaminateIndexed(spark: SparkSession, path: String,
       corpus: DataFrame, threshold: Double, numPlanes: Int = 16,
-      bands: Int = 8, seed: Long = 42L): DataFrame =
-    semanticDecontaminateIndexedAt(spark, path, corpus, threshold,
-      numPlanes, bands, seed, asOf = None)
-
-  /** [[semanticDecontaminateIndexed]] AS OF a recorded tag — "what
-    * would eval-set release R have flagged": the probe sees only the
-    * eval batches admitted up to `asOf` in the index history, so a
-    * verdict is reproducible bit-identically after later eval appends
-    * (the question [[graft.queries.TextOps.decontaminateIndexedAsOf]]
-    * answers for the shingle family, closed for the semantic one —
-    * r15 verdict task 7). Read-only like every as-of twin: no
-    * `_params` admit, no history write, partition-pruned batch
-    * listing via [[componentAsOf]].
-    */
-  def semanticDecontaminateIndexedAsOf(spark: SparkSession, path: String,
-      corpus: DataFrame, threshold: Double, asOf: String,
-      numPlanes: Int = 16, bands: Int = 8, seed: Long = 42L): DataFrame =
-    semanticDecontaminateIndexedAt(spark, path, corpus, threshold,
-      numPlanes, bands, seed, asOf = Some(asOf))
-
-  /** The one probe body behind the live and as-of entry points (the
-    * NnDescent searchIndexAt pattern — a fork here would silently split
-    * live vs historical semantics). The corpus projection is
-    * checkpointed: it feeds THREE consumers (signatures, the cosine
-    * verify, the left-join spine) and Catalyst shares no subplans —
-    * un-materialized, every probe would re-scan and re-norm the corpus
-    * up to 3× (the containmentDeltaIndexedAsOf review catch).
-    */
-  private def semanticDecontaminateIndexedAt(spark: SparkSession,
-      path: String, corpus: DataFrame, threshold: Double, numPlanes: Int,
-      bands: Int, seed: Long, asOf: Option[String]): DataFrame = {
-    recoverPromote(spark, path)
-    requireNotBuilding(spark, path)
+      bands: Int = 8, seed: Long = 42L,
+      asOf: Option[String] = None): DataFrame = {
+    val comp = IndexStore.open(spark, path, Seq("bands", "vectors"),
+      IndexStore.View.of(asOf))
     requireLshParams(spark, path, numPlanes, bands, seed)
-    def comp(c: String): DataFrame = asOf match {
-      case Some(tag) => componentAsOf(spark, path, c, tag)
-      case None => spark.read.parquet(s"$path/$c")
-    }
     val cbase = corpus.select(col("vec_id"), col("embedding"),
       norm2(col("embedding")).as("n2")).localCheckpoint(true)
     // dedup after the verify (r19 commuted form): n_hits counts

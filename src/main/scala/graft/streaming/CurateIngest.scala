@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.LongType
+import graft.operators.IndexStore
 import graft.queries.{CurateConfig, TextOps, VectorOps}
 
 /** The CONTINUOUSLY-RUNNING curation pipeline — [[IngestDedup]]'s
@@ -229,13 +230,13 @@ object CurateIngest {
     VectorOps.recoverNeardupIndex(spark, s"$statePath/minhash")
 
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      if (!TextOps.seenTagExists(spark, s"$statePath/digests", tag))
+      if (!IndexStore.tagExists(spark, s"$statePath/digests", "seen", tag))
         TextOps.compactSegmentIndex(spark, s"$statePath/digests")
       if (cfg.segmentDedupWidth.isDefined &&
-          !TextOps.seenTagExists(spark, s"$statePath/segments", tag))
+          !IndexStore.tagExists(spark, s"$statePath/segments", "seen", tag))
         TextOps.compactSegmentIndex(spark, s"$statePath/segments")
       if (cfg.containmentThreshold.isDefined &&
-          !TextOps.componentTagExists(spark, s"$statePath/containment",
+          !IndexStore.tagExists(spark, s"$statePath/containment",
             "postings", tag))
         TextOps.compactContainmentIndex(spark, s"$statePath/containment")
       if (minhashExists(spark, statePath))
@@ -249,8 +250,8 @@ object CurateIngest {
       mediaEntries.foreach { case (_, kind, rootLeaf) =>
         val comp = if (kind == "video") "frames" else "hashes"
         if (mediaExists(spark, statePath, rootLeaf, comp) &&
-            !graft.extract.Multimodal.mediaTagExists(spark,
-              s"$statePath/$rootLeaf", tag, comp)) {
+            !IndexStore.tagExists(spark, s"$statePath/$rootLeaf", comp,
+              tag)) {
           if (kind == "video")
             graft.extract.Multimodal.compactVideoIndex(spark,
               s"$statePath/$rootLeaf")

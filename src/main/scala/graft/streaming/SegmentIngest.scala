@@ -53,7 +53,7 @@ object SegmentIngest {
     val spark = batch.sparkSession
     val tag = s"b$batchId"
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-        !TextOps.seenTagExists(spark, indexPath, tag))
+        !graft.operators.IndexStore.tagExists(spark, indexPath, "seen", tag))
       TextOps.compactSegmentIndex(spark, indexPath)
     TextOps.segmentDedupDelta(spark, indexPath, batch, width, tag)
       .write.mode("overwrite").parquet(s"$outPath/batch=$tag")

@@ -388,7 +388,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSessionFixture {
     assert(!Ivf.maybeRebuildAside(spark, dir),
       "benign fresh index must not rebuild")
     assert(spark.read.parquet(s"$dir/centroids").count() == 8)
-    assert(graft.queries.VectorOps.indexHistory(spark, dir) == Seq("init"),
+    assert(graft.operators.IndexStore.indexHistory(spark, dir) == Seq("init"),
       "a declined maybe must leave the index byte-untouched")
 
     // drift it: a 200-member cluster hugging one centroid — that cell

@@ -799,26 +799,6 @@ class LawsSpec extends AnyFunSuite with SparkSessionFixture {
     }
   }
 
-  test("neardupContainmentPrefix: the asymmetric prefix-filtered form is " +
-      "bit-identical to the direct join") {
-    import spark.implicits._
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).toSeq
-    // fixture corpus at the contract threshold AND a lower one (more
-    // pairs, longer prefixes)
-    val fx = Tables.t(spark, Sf0001, "documents")
-    for (t <- Seq(0.8, 0.5)) {
-      assert(rows(TextOps.neardupContainmentPrefixOn(fx, t)) ==
-        rows(TextOps.neardupContainmentOn(fx, t)), s"diverged at t=$t")
-    }
-    // the motivating excerpt fixture (strict one-direction subset)
-    val full = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val excerpt = (1 to 6).map(i => s"tok$i").mkString(" ")
-    val docs = Seq((1L, full), (2L, excerpt)).toDF("doc_id", "text")
-    assert(rows(TextOps.neardupContainmentPrefixOn(docs, 0.8)) ==
-      rows(TextOps.neardupContainmentOn(docs, 0.8)))
-  }
-
   test("noveltyCurve: new-window counts conserve the distinct-window " +
       "total; a replayed tranche has zero novelty") {
     import spark.implicits._
@@ -1013,44 +993,16 @@ class LawsSpec extends AnyFunSuite with SparkSessionFixture {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got(TextOps.crossContainmentPairs(e, stored, 0.5)) == want,
         s"trial $trial window-guard form diverged from brute force")
-      assert(got(TextOps.crossContainmentPairs(e, stored, 0.5,
-        windowGuard = false)) == want,
-        s"trial $trial aggregation-guard form diverged from brute force")
-      assert(got(TextOps.crossContainmentPairsPrefix(e, stored, 0.5)) == want,
-        s"trial $trial prefix form diverged from brute force")
       assert(got(TextOps.crossContainmentPairsPrefixRarest(e, stored, 0.5))
           == want,
         s"trial $trial rarest-prefix form diverged from brute force")
       // hot-route hybrid at a TINY cap: most shingles go over-cap, so
       // nearly every batch doc routes through the rarest-prefix branch —
       // the r17 exactness claim (hybrid ≡ ungated direct join) under
-      // randomized corpora, for BOTH guard forms
+      // randomized corpora
       assert(got(TextOps.crossContainmentPairs(e, stored, 0.5,
         maxPostings = 2)) == want,
         s"trial $trial window-guard HYBRID diverged from brute force")
-      assert(got(TextOps.crossContainmentPairs(e, stored, 0.5,
-        maxPostings = 2, windowGuard = false)) == want,
-        s"trial $trial aggregation-guard HYBRID diverged from brute force")
-    }
-  }
-
-  test("postings prefix probe ≡ direct probe (bit-identical cross pairs, " +
-      "hot-shingle corpus, two thresholds)") {
-    val docs = Tables.t(spark, Sf0001, "documents")
-      .select(col("doc_id"), col("text"))
-    // stored = even ids' postings; batch = odd ids (the fixture's dup
-    // structure spans the split, and its boilerplate shingles are the
-    // hot-bucket case the prefix probe exists for)
-    val stored = TextOps.hashedShingles(docs.filter(col("doc_id") % 2 === 0))
-      .select(col("key").as("h"), col("doc_id").as("doc"))
-    val e = TextOps.hashedShingles(docs.filter(col("doc_id") % 2 === 1))
-    for (th <- Seq(0.8, 0.5)) {
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      val direct = rows(TextOps.crossContainmentPairs(e, stored, th))
-      val prefix = rows(TextOps.crossContainmentPairsPrefix(e, stored, th))
-      assert(prefix == direct, s"probe forms diverged at t=$th")
-      if (th == 0.5) assert(direct.nonEmpty, "fixture must exercise the probe")
     }
   }
 
@@ -1080,7 +1032,7 @@ class LawsSpec extends AnyFunSuite with SparkSessionFixture {
       assert(f.getLong(0) == f.getLong(1) && f.getDouble(2) == 1.0, s"$f")
       // as-of t0 reproduces the pre-admit answer after the live index
       // moved, and writes nothing (read-only probe)
-      val asOf = TextOps.noveltyDeltaAsOf(spark, idx, half(1), 8, "t0")
+      val asOf = TextOps.noveltyDelta(spark, idx, half(1), 8, asOf = Some("t0"))
         .collect()(0)
       assert(asOf == before, s"as-of $asOf != pre-admit $before")
       // width mismatch refuses (the _params pin), read-only

@@ -608,7 +608,7 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
         Seq(("c", "c_tweak")), s"within pairs: $out2")
       // replay window: re-running a live tag reproduces bit-identically
       assert(rows(Multimodal.imageDedupDelta(spark, idx, b2, "m2")) == out2)
-      assert(graft.queries.VectorOps.indexHistory(spark, idx) ==
+      assert(graft.operators.IndexStore.indexHistory(spark, idx) ==
         Seq("m1", "m2"))
 
       // index moves on; the as-of probe answers the m1 snapshot (a_jpeg
@@ -629,7 +629,7 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
       intercept[IllegalArgumentException] {
         Multimodal.audioDedupDelta(spark, idx, b1, "x1")
       }
-      assert(graft.queries.VectorOps.readSidecar(spark, s"$idx/_params")
+      assert(graft.operators.IndexStore.readSidecar(spark, s"$idx/_params")
         .contains("kind=image"))
 
       // compaction: folded tags' replay windows close; fresh ingest
@@ -638,14 +638,14 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
       intercept[IllegalArgumentException] {
         Multimodal.imageDedupDelta(spark, idx, b2, "m2")
       }
-      assert(graft.queries.VectorOps.indexHistory(spark, idx) == Seq("init"))
+      assert(graft.operators.IndexStore.indexHistory(spark, idx) == Seq("init"))
       val b4 = Seq(("a_again", gradient(64, 64, horizontal = true)))
         .toDF("path", "content")
       val out4 = rows(Multimodal.imageDedupDelta(spark, idx, b4, "m4"))
       assert(out4.map(_._2).toSet == Set("a", "a_jpeg", "a_tweak"),
         s"folded corpus must still answer: $out4")
       // the generic health view reads this index like any other family
-      val info = graft.queries.VectorOps.indexInfo(spark, idx)
+      val info = graft.operators.IndexStore.indexInfo(spark, idx)
       assert(info.filter(col("section") === "data" &&
         col("component") === "hashes").count() >= 1)
     } finally org.apache.commons.io.FileUtils
@@ -730,7 +730,7 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
     try {
       // a first audio admit crashed after recording its kind and before
       // any data landed: sidecar present, hashes/ absent
-      graft.queries.VectorOps.writeSidecar(spark, s"$idx/_params",
+      graft.operators.IndexStore.writeSidecar(spark, s"$idx/_params",
         "kind=audio")
       val b = Seq(("a", gradient(64, 64, horizontal = true)))
         .toDF("path", "content")
@@ -738,13 +738,13 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
       intercept[IllegalArgumentException] {
         Multimodal.imageDedupDeltaAsOf(spark, idx, b, "t0")
       }
-      assert(graft.queries.VectorOps.readSidecar(spark, s"$idx/_params")
+      assert(graft.operators.IndexStore.readSidecar(spark, s"$idx/_params")
         .contains("kind=audio"))
       // but a legitimate first ADMIT with a different kind re-records
       // and proceeds — the path is not wedged (r14 review catch: the
       // probe-before-append ordering inside the delta must not refuse)
       assert(Multimodal.imageDedupDelta(spark, idx, b, "t0").isEmpty)
-      assert(graft.queries.VectorOps.readSidecar(spark, s"$idx/_params")
+      assert(graft.operators.IndexStore.readSidecar(spark, s"$idx/_params")
         .contains("kind=image"))
     } finally org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(idx))
@@ -786,7 +786,7 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
       // replay window: re-running a live tag reproduces bit-identically
       assert(rows(Multimodal.videoDedupDelta(spark, idx, b2, "t2",
         everyNthMs = 500, durationMs = 5000)) == out2)
-      assert(graft.queries.VectorOps.indexHistory(spark, idx) ==
+      assert(graft.operators.IndexStore.indexHistory(spark, idx) ==
         Seq("t1", "t2"))
 
       // index moves on; the as-of probe answers the t1 snapshot (v2
@@ -807,7 +807,7 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
         Multimodal.videoDedupDeltaAsOf(spark, idx, b3, "t1",
           everyNthMs = 250, durationMs = 5000)
       }
-      assert(graft.queries.VectorOps.readSidecar(spark, s"$idx/_params")
+      assert(graft.operators.IndexStore.readSidecar(spark, s"$idx/_params")
         .contains("kind=video,everyNthMs=500,durationMs=5000"))
 
       // compaction: folded tags' replay windows close; fresh ingest
@@ -817,14 +817,14 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
         Multimodal.videoDedupDelta(spark, idx, b2, "t2",
           everyNthMs = 500, durationMs = 5000)
       }
-      assert(graft.queries.VectorOps.indexHistory(spark, idx) == Seq("init"))
+      assert(graft.operators.IndexStore.indexHistory(spark, idx) == Seq("init"))
       val b4 = Seq(("v_again", v(blob(200)))).toDF("path", "content")
       val out4 = rows(Multimodal.videoDedupDelta(spark, idx, b4, "t4",
         everyNthMs = 500, durationMs = 5000))
       assert(out4.map(_._2).toSet == Set("v1", "v2", "v3"),
         s"folded corpus must still answer: $out4")
       // the generic health view reads this index like any other family
-      val info = graft.queries.VectorOps.indexInfo(spark, idx)
+      val info = graft.operators.IndexStore.indexInfo(spark, idx)
       assert(info.filter(col("section") === "data" &&
         col("component") === "frames").count() >= 1)
     } finally org.apache.commons.io.FileUtils
@@ -900,7 +900,7 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
       intercept[IllegalArgumentException] {
         Multimodal.videoDedupDelta(spark, idx, b, "v1")
       }
-      assert(graft.queries.VectorOps.readSidecar(spark, s"$idx/_params")
+      assert(graft.operators.IndexStore.readSidecar(spark, s"$idx/_params")
         .contains("kind=image"), "the image pin must survive")
     } finally org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(idx))

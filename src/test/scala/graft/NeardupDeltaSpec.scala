@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.IndexStore
 import graft.queries.{Tables, VectorOps}
 
 /** Incremental near-dup (ingest batch vs corpus) and its persisted-index
@@ -430,7 +431,7 @@ class NeardupDeltaSpec extends AnyFunSuite with SparkSessionFixture {
     assert(rows(replay3) == rows(out3))
     // and a second compaction carries b2's closure forward alongside b3's
     TextOps.compactSegmentIndex(spark, path)
-    assert(TextOps.compactedSegmentTags(spark, path) == Set("b2", "b3", "b1"))
+    assert(IndexStore.compactedTags(spark, path, "seen") == Set("b2", "b3", "b1"))
 
     // crashed-swap recovery must PRESERVE the closed-window record: after
     // a crash between delete and rename only the finished .compacting
@@ -441,7 +442,7 @@ class NeardupDeltaSpec extends AnyFunSuite with SparkSessionFixture {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new Path(s"$path/seen"), new Path(s"$path/seen.compacting")))
     TextOps.compactSegmentIndex(spark, path)
-    assert(TextOps.compactedSegmentTags(spark, path) == Set("b1", "b2", "b3"),
+    assert(IndexStore.compactedTags(spark, path, "seen") == Set("b1", "b2", "b3"),
       "recovery erased the compacted-tag record")
     intercept[IllegalArgumentException] {
       TextOps.segmentDedupDelta(spark, path, batch2, width = 8, tag = "b2")
@@ -535,7 +536,7 @@ class NeardupDeltaSpec extends AnyFunSuite with SparkSessionFixture {
 
     // compaction cadence at batch 2 start folds b0/b1, then processes
     SegmentIngest.processBatch(b(2), 2L, idx, out, width = 8, compactEvery = 2)
-    assert(TextOps.compactedSegmentTags(spark, idx) == Set("b0", "b1"))
+    assert(IndexStore.compactedTags(spark, idx, "seen") == Set("b0", "b1"))
     val out2 = rows(s"$out/batch=b2")
 
     // at-least-once replay of batch 2 (crash after append, before the
@@ -544,13 +545,13 @@ class NeardupDeltaSpec extends AnyFunSuite with SparkSessionFixture {
     // of dying on its own closed window
     SegmentIngest.processBatch(b(2), 2L, idx, out, width = 8, compactEvery = 2)
     assert(rows(s"$out/batch=b2") == out2, "replay must be byte-equivalent")
-    assert(TextOps.compactedSegmentTags(spark, idx) == Set("b0", "b1"),
+    assert(IndexStore.compactedTags(spark, idx, "seen") == Set("b0", "b1"),
       "the skipped cadence must not fold the in-flight tag")
 
     // the deferred fold lands at the next cadence hit
     SegmentIngest.processBatch(b(3), 3L, idx, out, width = 8, compactEvery = 2)
     SegmentIngest.processBatch(b(4), 4L, idx, out, width = 8, compactEvery = 2)
-    assert(TextOps.compactedSegmentTags(spark, idx) == Set("b0", "b1", "b2", "b3"))
+    assert(IndexStore.compactedTags(spark, idx, "seen") == Set("b0", "b1", "b2", "b3"))
   }
 
   test("streaming segment ingest via run(): foreachBatch wiring end-to-end") {
@@ -716,7 +717,7 @@ class NeardupDeltaSpec extends AnyFunSuite with SparkSessionFixture {
     // Nothing is hashed under width=8, so there is nothing the guard
     // can protect — refusing width=12 forever would be pure damage
     val p = java.nio.file.Files.createTempDirectory("segcrash").toString
-    VectorOps.writeSidecar(spark, s"$p/_params", "width=8")
+    IndexStore.writeSidecar(spark, s"$p/_params", "width=8")
     val out = TextOps.segmentDedupDelta(spark, p,
       Seq((1L, a)).toDF("doc_id", "text"), 12, "t0")
     assert(out.count() == 1)

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.IndexStore
 import graft.queries.{Tables, VectorOps}
 
-/** Zero-downtime rebuilds ([[VectorOps.rebuildAside]]): the replacement
+/** Zero-downtime rebuilds ([[IndexStore.buildAside]]): the replacement
   * index builds at `path.rebuilding` while the live index keeps
   * serving; promotion is two metadata renames. Laws: the promoted index
   * equals a direct build, the live index answers MID-build, and every
@@ -35,7 +36,7 @@ class RebuildAsideSpec extends AnyFunSuite with SparkSessionFixture {
       VectorOps.writeNeardupIndex(b0, live)
       val before = rows(VectorOps.minhashPairsIndexed(spark, live))
       var servedMidBuild = false
-      VectorOps.rebuildAside(spark, live) { aside =>
+      IndexStore.buildAside(spark, live) { aside =>
         // the rebuild is IN FLIGHT — the live index must still answer,
         // with its OLD corpus (the in-place rebuild would refuse here)
         servedMidBuild =
@@ -46,7 +47,7 @@ class RebuildAsideSpec extends AnyFunSuite with SparkSessionFixture {
       VectorOps.writeNeardupIndex(grown, direct)
       assert(rows(VectorOps.minhashPairsIndexed(spark, live)) ==
         rows(VectorOps.minhashPairsIndexed(spark, direct)))
-      assert(VectorOps.indexHistory(spark, live) == Seq("init"),
+      assert(IndexStore.indexHistory(spark, live) == Seq("init"),
         "a rebuild starts a new history, aside or not")
       // no debris
       assert(!new java.io.File(s"$live.rebuilding").exists())

@@ -508,54 +508,23 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     val e = (1 to 5).map(i => (100L, 5L, s"k$i")).toDF("doc_id", "n", "key")
     val stored = ((1L to 40L).map(dd => ("k1", dd)) ++
       (1 to 5).map(i => (s"k$i", 50L))).toDF("h", "doc")
-    def pairs(th: Double, cap: Int, windowGuard: Boolean = true,
-        hotRoute: Boolean = true) =
-      TextOps.crossContainmentPairs(e, stored, th, maxPostings = cap,
-          windowGuard = windowGuard, hotRoute = hotRoute)
+    def pairs(th: Double, cap: Int) =
+      TextOps.crossContainmentPairs(e, stored, th, maxPostings = cap)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // ungated: the true pair at containment 1.0, at both thresholds
     assert(pairs(0.8, Int.MaxValue) == Set((100L, 50L)))
     assert(pairs(0.9, Int.MaxValue) == Set((100L, 50L)))
-    // PURE guard (hotRoute off — the measured alternative, kept so the
-    // under-report trade stays stated): cap 10 drops k1's 41-posting
-    // bucket; the pair survives at measured 4/5 = 0.8 (within the
-    // dropped/n slack the guard's docstring prices) …
-    val before = graft.operators.BandedHamming.droppedHotBucketRows.get()
-    assert(pairs(0.8, 10, hotRoute = false) == Set((100L, 50L)))
-    assert(graft.operators.BandedHamming.droppedHotBucketRows.get() > before,
-      "the over-cap bucket must be warned and counted")
-    // …and at 0.9 the same drop under-reports PAST the slack: the pure
-    // guard MISSES the true pair (containment 1.0) — the planted
-    // verdict flip the r17 hot-route exists to close
-    assert(pairs(0.9, 10, hotRoute = false) == Set.empty,
-      "the pure guard's under-report past the slack must stay stated")
-    assert(pairs(0.9, 10, windowGuard = false, hotRoute = false)
-      == Set.empty)
-    // HYBRID (the default): doc 100 carries the hot shingle, so its
-    // probe re-routes through the rarest-prefix branch against the FULL
-    // postings — the verdict the pure guard flipped is EXACT again, at
-    // both guard forms, and the hot shingle is still warned
+    // HYBRID: doc 100 carries the hot shingle, so its probe re-routes
+    // through the rarest-prefix branch against the FULL postings — the
+    // verdict a pure cap-10 guard would flip at 0.9 (it drops k1's
+    // 41-posting bucket and measures 4/5) is EXACT, and the hot shingle
+    // is still warned
     val beforeH = graft.operators.BandedHamming.droppedHotBucketRows.get()
     assert(pairs(0.9, 10) == Set((100L, 50L)),
       "the hot-route hybrid must recover the verdict the guard flipped")
     assert(graft.operators.BandedHamming.droppedHotBucketRows.get() > beforeH,
       "the hybrid must still warn the over-cap shingle")
     assert(pairs(0.8, 10) == Set((100L, 50L)))
-    // the aggregation-guard form is pinned identical at every
-    // (th, cap, hotRoute) combination exercised here — it is the
-    // measured alternative ContainScale prices, never a semantic fork —
-    // and its OWN warn wiring is bracketed too
-    val beforeAgg = graft.operators.BandedHamming.droppedHotBucketRows.get()
-    assert(pairs(0.8, 10, windowGuard = false, hotRoute = false)
-      == Set((100L, 50L)))
-    assert(graft.operators.BandedHamming.droppedHotBucketRows.get() > beforeAgg,
-      "the aggregation guard must warn and count its hot shingle too")
-    assert(pairs(0.9, 10, windowGuard = false) == Set((100L, 50L)))
-    assert(pairs(0.8, 10, windowGuard = false) == Set((100L, 50L)))
-    assert(pairs(0.8, Int.MaxValue, windowGuard = false)
-      == Set((100L, 50L)))
-    assert(pairs(0.9, Int.MaxValue, windowGuard = false)
-      == Set((100L, 50L)))
   }
 
   test("a crash mid-bootstrap self-heals: partial empty components are " +
