@@ -490,33 +490,6 @@ check("mixed-media curate with media_dup:<kind> from Python",
               3: (True, None), 4: (False, "media_dup:audio")},
       f"(verdicts {got})")
 
-# 16. containment hot-shingle cap from Python (r16 advice + task 6):
-#     three stored containers share the same token run, so at cap 2
-#     every probe shingle is over-cap — the hot route must return the
-#     SAME pairs as the uncapped probe (exactness at any cap).
-cn_idx = tempfile.mkdtemp(prefix="pysmoke_cncap")
-try:
-    toks = lambda a, b: " ".join(f"pyc{i:04d}" for i in range(a, b))
-    mk = lambda i, t: (i, t, len(t))
-    b0 = spark.createDataFrame(
-        [mk(1, toks(1, 71)), mk(2, toks(1, 75)), mk(3, toks(1, 80))],
-        "doc_id long, text string, n_chars long")
-    bridge.appendContainmentIndex(spark._jsparkSession, cn_idx, b0._jdf, "t0")
-    b1 = spark.createDataFrame([mk(11, toks(1, 33))],
-                               "doc_id long, text string, n_chars long")
-    def cpairs(cap):
-        df = DataFrame(bridge.containmentDelta(
-            spark._jsparkSession, cn_idx, b1._jdf, 0.8, f"cap{cap}", cap),
-            spark)
-        return {(r["c1"], r["c2"]) for r in df.collect() if r["cross"]}
-    uncapped = cpairs(0)
-    hot = cpairs(2)
-    check("containment cap hot-route exact from Python",
-          uncapped == hot == {(11, 1), (11, 2), (11, 3)},
-          f"(uncapped {uncapped}, cap2 {hot})")
-finally:
-    shutil.rmtree(cn_idx, ignore_errors=True)
-
 spark.stop()
 if failures:
     sys.exit(f"FAILED: {failures}")

@@ -28,11 +28,6 @@ import graft.queries.{CurateConfig, TextOps}
   *                   survivor drops as contained_dup BEFORE the
   *                   symmetric near-dup stage — the excerpt/truncation
   *                   pass ([[graft.queries.CurateConfig]] doc)
-  *   [--containment-max-postings N] per-shingle postings cap of the
-  *                   STREAMING containment stage's hot-shingle guard
-  *                   (batch runs are within-corpus and unaffected);
-  *                   N <= 0 disables the cap ([[graft.queries
-  *                   .CurateConfig.containmentMaxPostings]])
   *   [--normalize-hash] exact-dup stage hashes normalized text (case/
   *                   punctuation/spacing variants collapse to one keeper)
   *   [--media COL:KIND] media dedup stage over binary column COL of KIND
@@ -57,8 +52,6 @@ object CurateCli {
       jaccard: Double = 0.5,
       segmentWidth: Option[Int] = None,
       containment: Option[Double] = None,
-      containmentMaxPostings: Int =
-        graft.queries.TextOps.MaxPostingsPerShingle,
       normalizeHash: Boolean = false,
       resume: Boolean = true,
       numCpus: Option[Int] = None,
@@ -68,7 +61,6 @@ object CurateCli {
   val usage: String =
     """usage: graft.Main curate <documents.parquet> <outDir>
       |  [--state DIR] [--jaccard T] [--segment-width N] [--containment T]
-      |  [--containment-max-postings N]
       |  [--normalize-hash] [--media COL:KIND ...] [--media-dup-by-kind]
       |  [--no-resume] [--num-cpus N]""".stripMargin
 
@@ -110,12 +102,6 @@ object CurateCli {
             throw new IllegalArgumentException(
               s"--containment must be in (0, 1], got $t")
           cfg = cfg.copy(containment = Some(t))
-        case "--containment-max-postings" =>
-          val v = take("--containment-max-postings")
-          val n = try v.toInt catch { case _: Exception =>
-            throw new IllegalArgumentException(
-              s"--containment-max-postings needs an integer, got '$v'") }
-          cfg = cfg.copy(containmentMaxPostings = n)
         case "--normalize-hash" => cfg = cfg.copy(normalizeHash = true)
         case "--media" =>
           // repeatable COL:KIND — the multi-media stage from the shell
@@ -164,7 +150,6 @@ object CurateCli {
       normalizeForHash = cfg.normalizeHash,
       segmentDedupWidth = cfg.segmentWidth,
       containmentThreshold = cfg.containment,
-      containmentMaxPostings = cfg.containmentMaxPostings,
       media = cfg.media,
       mediaDupByKind = cfg.mediaDupByKind)
     val docs = spark.read.parquet(cfg.in)

@@ -253,17 +253,6 @@ object PyBridge {
       threshold: Double, tag: String): DataFrame =
     TextOps.containmentDeltaIndexed(spark, path, batch, threshold, tag)
 
-  /** Operable hot-shingle cap (r16 advice): maxPostings <= 0 means
-    * uncapped; over-cap probes hot-route through the rarest-prefix
-    * branch, so the verdicts stay exact at any cap — the cap is the
-    * COST knob for boilerplate-heavy corpora. Py4J-visible overload
-    * (Scala defaults don't cross the bridge).
-    */
-  def containmentDelta(spark: SparkSession, path: String, batch: DataFrame,
-      threshold: Double, tag: String, maxPostings: Int): DataFrame =
-    TextOps.containmentDeltaIndexed(spark, path, batch, threshold, tag,
-      maxPostings)
-
   /** The cross half as of a recorded tag — read-only. */
   def containmentDeltaAsOf(spark: SparkSession, path: String,
       batch: DataFrame, threshold: Double, asOf: String): DataFrame =

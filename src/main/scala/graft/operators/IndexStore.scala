@@ -275,17 +275,6 @@ object IndexStore {
     endFold(spark, root)
   }
 
-  /** Replace a DERIVED component wholesale: `write` fills the
-    * `batch=init` dir of the `.compacting` twin, which is then swapped in
-    * with [[compactComponent]]'s checked delete + rename (a crash between
-    * them is finished by the next [[open]]).
-    */
-  def replace(spark: SparkSession, root: String, component: String)(
-      write: String => Unit): Unit =
-    swapIn(spark, s"$root/$component") { tmp =>
-      write(new Path(tmp, "batch=init").toString)
-    }
-
   /** Tags whose increments a past [[compact]] folded into `batch=init`
     * (`_compacted_tags`), empty if never compacted. */
   private[graft] def compactedTags(spark: SparkSession, root: String,
@@ -302,16 +291,14 @@ object IndexStore {
     fsOf(spark, root).exists(p)
   }
 
-  /** Tags of a component's `batch=` dirs (empty when it is absent);
-    * `committed` keeps only dirs carrying the committer's `_SUCCESS`. */
-  private[graft] def batchTags(spark: SparkSession, root: String,
-      component: String, committed: Boolean = false): Set[String] = {
+  /** Tags of a component's `batch=` dirs (empty when it is absent). */
+  private def batchTags(spark: SparkSession, root: String,
+      component: String): Set[String] = {
     val dir = new Path(s"$root/$component")
     val fs = fsOf(spark, root)
     if (!fs.exists(dir)) Set.empty
     else fs.listStatus(dir).iterator.map(_.getPath)
       .filter(_.getName.startsWith("batch="))
-      .filter(p => !committed || fs.exists(new Path(p, "_SUCCESS")))
       .map(_.getName.stripPrefix("batch=")).toSet
   }
 

@@ -504,8 +504,13 @@ object NnDescent {
     * same [[driftSummary]] verdict, same rebuild cure —
     * [[rebuildIndex]] here instead of Ivf's writeIndex.
     */
-  def driftStats(spark: SparkSession, path: String): DataFrame = {
-    val idx = IndexStore.open(spark, path, Seq("vectors", "cells"))
+  def driftStats(spark: SparkSession, path: String): DataFrame =
+    driftStatsOf(spark, path,
+      IndexStore.open(spark, path, Seq("vectors", "cells")))
+
+  /** [[driftStats]] over an already-opened snapshot (vectors + cells). */
+  private def driftStatsOf(spark: SparkSession, path: String,
+      idx: IndexStore.Snapshot): DataFrame = {
     val vecs = readVectors(idx)
     val cells = idx("cells", CellsSchema)
       .select(col("vec_id"), col("cell"), col("batch"))
@@ -539,8 +544,14 @@ object NnDescent {
     * exact_top1_mean, staleness (all null/0 when nothing is appended).
     */
   def edgeStaleness(spark: SparkSession, path: String,
-      sample: Int = 256): DataFrame = {
-    val idx = IndexStore.open(spark, path, Seq("vectors", "edges"))
+      sample: Int = 256): DataFrame =
+    edgeStalenessOf(IndexStore.open(spark, path, Seq("vectors", "edges")),
+      sample)
+
+  /** [[edgeStaleness]] over an already-opened snapshot (vectors +
+    * edges). */
+  private def edgeStalenessOf(idx: IndexStore.Snapshot,
+      sample: Int): DataFrame = {
     val vecs = idx("vectors", VectorsSchema)
     val sampled = vecs.filter(col("batch") =!= "init")
       .orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
@@ -594,16 +605,17 @@ object NnDescent {
   def driftSummary(spark: SparkSession, path: String,
       growthMax: Double = 3.0, residRatioMax: Double = 1.2,
       stalenessMax: Double = 0.1, stalenessSample: Int = 256): DataFrame = {
-    val quant =
-      Ivf.driftSummaryOf(driftStats(spark, path), growthMax, residRatioMax)
-    val idx = IndexStore.open(spark, path, Seq("vectors", "edges"))
+    // ONE open (one recovery prelude) feeds all three reads
+    val idx = IndexStore.open(spark, path, Seq("vectors", "edges", "cells"))
+    val quant = Ivf.driftSummaryOf(driftStatsOf(spark, path, idx),
+      growthMax, residRatioMax)
     val edges = idx("edges", EdgesSchema)
     val appendedNodes = idx("vectors", VectorsSchema)
       .filter(col("batch") =!= "init")
       .select(col("vec_id").as("dst"))
     val inDeg = edges.select(col("dst")).join(appendedNodes, "dst")
       .agg(count(lit(1)).as("in_edges_appended"))
-    val stale = edgeStaleness(spark, path, stalenessSample)
+    val stale = edgeStalenessOf(idx, stalenessSample)
       .select(col("n_appended_sampled"), col("stored_top1_mean"),
         col("exact_top1_mean"), col("staleness"))
     quant.crossJoin(inDeg).join(stale, lit(true), "left")

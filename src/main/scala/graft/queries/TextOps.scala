@@ -103,19 +103,10 @@ case class CurateConfig(
     // index ([[TextOps.containmentDeltaIndexed]]): cross-batch
     // keep-first (a doc contained in a STORED keeper drops),
     // within-batch the directional rule above — verdict parity with
-    // the batch pipeline wherever keep-first == keep-best.
+    // the batch pipeline wherever keep-first == keep-best; the probe's
+    // per-shingle postings cap is the constant
+    // [[TextOps.MaxPostingsPerShingle]].
     containmentThreshold: Option[Double] = None,
-    // per-shingle postings cap for the STREAMING containment stage's
-    // index probe ([[TextOps.containmentDeltaIndexed]]) — the hot-
-    // shingle guard's knob, operable in deployment rather than
-    // compile-time only (r16 advice): <= 0 means uncapped (the pure
-    // direct join); the default is the shared
-    // [[TextOps.MaxPostingsPerShingle]] discipline. With the r17
-    // hot-route default the cap is a COST knob, not a correctness one
-    // (over-cap probes re-route through the rarest-prefix branch and
-    // verdicts stay exact) — lower it if a boilerplate-heavy corpus
-    // makes the window guard's shuffle itself the bottleneck.
-    containmentMaxPostings: Int = TextOps.MaxPostingsPerShingle,
     semanticThreshold: Option[Double] = None,
     mediaColumn: Option[String] = None,
     mediaKind: String = "image",
@@ -2352,13 +2343,12 @@ object TextOps {
     * as-of probe is the read-only form of its cross half.
     */
   def containmentDeltaIndexed(spark: SparkSession, path: String,
-      batch: DataFrame, threshold: Double, tag: String,
-      maxPostings: Int = MaxPostingsPerShingle): DataFrame = {
+      batch: DataFrame, threshold: Double, tag: String): DataFrame = {
     // ONE shingle pass feeds both halves (materialized per the session
     // [[graft.operators.Materialize]] policy — the 3-shingle explode is
     // the batch's dominant per-stage cost)
     val e = graft.operators.Materialize(hashedShingles(batch))
-    val cross = containmentCross(spark, path, e, threshold, maxPostings,
+    val cross = containmentCross(spark, path, e, threshold,
       IndexStore.View.Excluding(tag))
     val within = betterContainerPairs(
         containmentPairsOf(e, threshold)
@@ -2374,34 +2364,29 @@ object TextOps {
     * batch doc at that point of the admit order.
     */
   def containmentDeltaIndexedAsOf(spark: SparkSession, path: String,
-      batch: DataFrame, threshold: Double, asOf: String,
-      maxPostings: Int = MaxPostingsPerShingle): DataFrame =
+      batch: DataFrame, threshold: Double, asOf: String): DataFrame =
     // materialized like the admit path: the probe references the hashed
     // frame twice (broadcast key set + probe side) and Catalyst shares
     // no subplans
     containmentCross(spark, path,
       graft.operators.Materialize(hashedShingles(batch)), threshold,
-      maxPostings, IndexStore.View.AsOf(asOf))
+      IndexStore.View.AsOf(asOf))
 
   /** The one cross-probe body of the live and as-of entry points: the
     * hashed batch `e` against the stored postings under `view`. DIRECT
     * probe by measurement (the prefix probe ran 1.5× SLOWER at sf0.1 and
-    * ×4 replication, BASELINE.md); `maxPostings` is the hot-shingle cap
-    * callers plumb through [[CurateConfig.containmentMaxPostings]] /
-    * CurateCli, <= 0 meaning uncapped (the pure direct join).
+    * ×4 replication, BASELINE.md), hot shingles capped at
+    * [[MaxPostingsPerShingle]].
     */
   private def containmentCross(spark: SparkSession, path: String,
-      e: DataFrame, threshold: Double, maxPostings: Int,
-      view: IndexStore.View): DataFrame = {
+      e: DataFrame, threshold: Double, view: IndexStore.View): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containment threshold must be in (0, 1], got $threshold")
     val idx = IndexStore.open(spark, path, Seq("postings"), view,
       Some(ContainmentPin), admitPin = view.isInstanceOf[IndexStore.View.Excluding])
-    val cap = if (maxPostings <= 0) Int.MaxValue else maxPostings
     crossContainmentPairs(e,
       idx("postings", "h STRING, doc LONG").select(col("h"), col("doc")),
-      threshold, maxPostings = cap,
-      knownHot = containmentHotFromStats(spark, path, idx.visible, cap))
+      threshold)
   }
 
   /** (doc_id, n, key = sha256(shingle)) rows of a (doc_id, text) frame
@@ -2419,105 +2404,22 @@ object TextOps {
     */
   def appendContainmentIndex(spark: SparkSession, path: String,
       keepers: DataFrame, tag: String): Unit =
-    IndexStore.append(spark, path, tag, Seq("postings", "dfstats"),
+    IndexStore.append(spark, path, tag, Seq("postings"),
         Some(ContainmentPin)) { inc =>
-      // one shingle pass feeds the postings AND their df sidecar
-      val rows = shingleRows(keepers.select(col("doc_id"), col("text")))
+      shingleRows(keepers.select(col("doc_id"), col("text")))
         .select(sha2(col("s"), 256).as("h"), col("doc_id").as("doc"))
-        .localCheckpoint(true)
-      rows.write.mode("overwrite").parquet(inc.dir("postings"))
-      // df sidecar (r17): per-shingle posting counts of THIS batch, so
-      // the probe's hot-shingle check reads a table ~avg-df× smaller
-      // than the postings instead of re-aggregating them every
-      // micro-batch. `src` keeps rows distinct across batches. The probe
-      // trusts the sidecar ONLY when its batch-dir set equals the
-      // postings' ([[containmentHotFromStats]]) — a crash between the
-      // two writes, a pre-sidecar index, or a half-finished compaction
-      // all read as incomplete and fall back to the in-plan check.
-      rows.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .withColumn("src", lit(tag))
-        .write.mode("overwrite").parquet(inc.dir("dfstats"))
+        .write.mode("overwrite").parquet(inc.dir("postings"))
     }
 
   /** Fold every postings batch into `batch=init` (the seen-set
     * compaction discipline: fold sentinel, history reset, closed
-    * replay windows), then REBUILD the df sidecar from the folded
-    * postings — rebuilt rather than folded because the fold is DISTINCT
-    * (two batches posting the same (h, df) pair would collapse and
-    * undercount), and because deriving from the fold migrates
-    * pre-sidecar indexes exactly at their next compaction. A crash
-    * between the postings fold and the sidecar rebuild leaves the two
-    * batch-dir sets different → the probe falls back until the next
-    * compaction completes the pair.
+    * replay windows).
     */
   def compactContainmentIndex(spark: SparkSession, path: String,
-      numFiles: Int = 0): Unit = {
+      numFiles: Int = 0): Unit =
     IndexStore.compact(spark, path, Seq("postings"), numFiles,
       closeWindows = true)
-    val postings = IndexStore.open(spark, path, Seq("postings"))(
-      "postings", "h STRING, doc LONG")
-    IndexStore.replace(spark, path, "dfstats") { dir =>
-      postings.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .withColumn("src", lit("init"))
-        .write.parquet(dir)
-    }
-  }
 
-  /** Hot-shingle keys from the df SIDECAR instead of a postings
-    * re-aggregation — `Some(keys with Σ df > cap under `pred`)` when the
-    * sidecar provably covers the same batches as the postings, `None`
-    * otherwise (pre-sidecar index, crash between the paired writes,
-    * half-finished compaction — the caller then runs the in-plan
-    * check). WHY the sidecar exists (r18 posture — the original
-    * "~avg-df× smaller read" speed story measured a WASH at ×4 clean,
-    * ×24 clean AND ×24 boiler, BASELINE.md ContainScale r18: the
-    * in-plan check aggregates a frame the pair join scans anyway, and
-    * when hot shingles exist the hot-route machinery dominates the
-    * probe regardless): (1) CAPABILITY — in the big-batch fallback
-    * regime (batch keys past the broadcast bound) the in-plan check
-    * cannot run at all, and the sidecar is the only source of
-    * driver-side hot keys, without which that regime degrades to the
-    * subplan window-guard plan and its under-report trade; (2) the hot
-    * knowledge is compaction-amortized (computed at index write, not
-    * per probe) — the right asymptotic shape even though the per-probe
-    * saving measures ~0 single-node. The key set is NOT batch-restricted:
-    * extra hot keys the arriving batch never carries flag no probe rows
-    * and cost nothing ([[crossContainmentPairs]] splits on flagged
-    * rows), so df over the full predicate population is both exact and
-    * sufficient.
-    */
-  private[graft] def containmentHotFromStats(spark: SparkSession,
-      path: String, pred: Column, cap: Int): Option[Array[(String, Long)]] = {
-    if (cap == Int.MaxValue) return Some(Array.empty)
-    val pTags = IndexStore.batchTags(spark, path, "postings")
-    val sTags = IndexStore.batchTags(spark, path, "dfstats")
-    // name-set equality alone would trust a crash-PARTIAL sidecar dir:
-    // Spark creates the batch= dir at job setup, so a crash mid-write
-    // leaves an existing-but-empty (or _temporary-only) dir whose lost
-    // df rows would silently shrink the hot set — the exact missed-pair
-    // hole the hot route closes. Each dfstats dir must carry the
-    // committer's _SUCCESS marker to be trusted (review catch r17).
-    val statsCommitted =
-      IndexStore.batchTags(spark, path, "dfstats", committed = true) == sTags
-    if (pTags.isEmpty || pTags != sTags || !statsCommitted) None
-    else {
-      val hot = IndexStore.open(spark, path, Seq("dfstats"))(
-          "dfstats", "h STRING, df LONG, src STRING").filter(pred)
-        .groupBy(col("h")).agg(sum(col("df")).as("df"))
-        .filter(col("df") > lit(cap.toLong))
-        .limit((1 << 20) + 1).collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      // a degenerate >1M-hot-key population is cheaper to re-derive
-      // in-plan than to ship through a literal
-      if (hot.length > (1 << 20)) None else Some(hot)
-    }
-  }
-
-  /** Cross pairs of a hashed batch frame (doc_id, n, key) vs stored
-    * (h, doc) postings — the DIRECT join (every batch key meets every
-    * stored posting of that key). The reference semantics the prefix
-    * probe below is spec-pinned bit-identical to.
-    */
   /** Forced-broadcast cap for the probe's key-set restriction:
     * ~2M 64-char hex keys ≈ 200 MB in-memory — far under Spark's 8 GB
     * broadcast hard limit and the driver heap, while covering any
@@ -2528,32 +2430,36 @@ object TextOps {
 
   /** Per-shingle postings cap for the probe join — the
     * [[graft.operators.BandedHamming]] hot-bucket discipline applied to
-    * the ONE join family that lacked it (r15 verdict): the probe is
-    * h-keyed, so a universal boilerplate shingle posted by millions of
-    * kept docs makes its bucket |batch docs carrying it| × |postings|
-    * quadratic at 100 TB. Over-cap shingles leave the join with one
-    * WARN (codegen'd [[org.apache.spark.sql.graft.WarnHotBucket]], min-
-    * doc marker row). THE TRADE, stated like SimHash's exact-band one:
-    * containment against a container reachable ONLY through dropped
-    * shingles under-reports — a batch doc loses at most
-    * (dropped shingles it carries)/n of measured containment, so a
-    * verdict within that slack of the threshold can flip to "kept".
-    * The cap is far above any honest shingle's df at sane batch sizes
-    * (it bounds postings PER SHINGLE, not corpus size). The probe does
-    * not pay that trade: the hot route re-asks ONLY the batch docs that
-    * carry an over-cap shingle through the rarest-first prefix
-    * machinery ([[crossContainmentPairsPrefixRarest]]) against the FULL
-    * postings and unions — the common path keeps the window-guard plan,
-    * the boilerplate regime gets its exact verdict, and the result is
-    * bit-identical to the ungated direct join.
+    * the containment probe: the probe is h-keyed, so a universal
+    * boilerplate shingle posted by millions of kept docs makes its
+    * bucket |batch docs carrying it| × |postings| quadratic at 100 TB.
+    * Over-cap shingles leave the guarded join with one WARN (codegen'd
+    * [[org.apache.spark.sql.graft.WarnHotBucket]], min-doc marker row).
+    * The cap is a COST bound, not a correctness one: the batch docs that
+    * carry an over-cap shingle are re-asked through the rarest-first
+    * prefix machinery ([[crossContainmentPairsPrefixRarest]]) against
+    * the FULL postings and unioned, so the probe is bit-identical to the
+    * ungated direct join. It is far above any honest shingle's df at
+    * sane batch sizes (it bounds postings PER SHINGLE, not corpus size).
     */
   private[graft] val MaxPostingsPerShingle: Int =
     graft.operators.BandedHamming.DefaultMaxBucket
 
+  /** Cross pairs of a hashed batch frame (doc_id, n, key) vs stored
+    * (h, doc) postings — exactly the DIRECT join's pairs (every batch
+    * key meets every stored posting of that key), which the prefix
+    * probe below is spec-pinned bit-identical to. The route is chosen
+    * only by what the batch shows: a batch whose keys fit the broadcast
+    * bound runs an in-plan hot-key check, then the plain join (no key
+    * over `maxPostings`) or the literal hot split; an oversized batch
+    * runs the subplan hot split. `maxPostings` is the
+    * [[MaxPostingsPerShingle]] constant in production; specs pass a
+    * tiny cap to force the hot route, or `Int.MaxValue` for the ungated
+    * reference.
+    */
   private[graft] def crossContainmentPairs(e: DataFrame, stored: DataFrame,
       threshold: Double,
-      maxPostings: Int = MaxPostingsPerShingle,
-      knownHot: Option[Array[(String, Long)]] = None): DataFrame = {
+      maxPostings: Int = MaxPostingsPerShingle): DataFrame = {
     // restrict the stored postings to the BATCH's key set first (the
     // probe discipline every delta family follows — the cosine index's
     // broadcast intersection is the precedent): without it, once the
@@ -2568,20 +2474,11 @@ object TextOps {
     // The guard's count is BOUNDED, not exact: limit(cap + 1) lets the
     // job stop as soon as cap + 1 distinct keys exist instead of
     // running a full distinct+count over the batch's shingle hashes on
-    // every probe call — the common micro-batch pays a short-circuited
-    // scan, and the answer ("≤ cap or not") is identical (r15 advice).
-    // COLLECT ONLY ON THE PATH THAT USES THE ARRAY (r17 advice): the
-    // key array exists for exactly one consumer — the in-plan hot
-    // check's restricted-literal frame, which runs only when no
-    // sidecar hot set was supplied AND the batch fits the broadcast
-    // cap. Every other regime (sidecar `knownHot`, hot-route off,
-    // big-batch fallback) decides `restrictedByKeys` with the old
-    // bounded limit-count and never materializes the 2M+1-string
-    // array — the fallback regime in particular used to collect
-    // ~250-350 MB per micro-batch only to discard it, an OOM class
-    // the r16 code never had. The count-then-collect pair on the
-    // detection path costs one extra short-circuited distinct scan;
-    // the collect is then PROVABLY ≤ cap rows.
+    // every probe call — the answer ("≤ cap or not") is identical.
+    // The key array is collected only on the path that uses it (the
+    // in-plan hot check's restricted-literal frame), after the bounded
+    // count proved it ≤ cap rows: the big-batch fallback regime never
+    // materializes the 2M+1-string array.
     // The MAIN plan keeps the SUBPLAN broadcast form on purpose: a
     // LocalRelation literal would make `restricted` look tiny to the
     // size estimator and flip the pair join to a statically-planned
@@ -2595,15 +2492,10 @@ object TextOps {
     val hotRouted = maxPostings != Int.MaxValue
     val restrictedByKeys =
       keys.limit(MaxBroadcastKeys.toInt + 1).count() <= MaxBroadcastKeys
-    val needKeyArr = hotRouted && knownHot.isEmpty && restrictedByKeys
-    val keyArr: Array[String] =
-      if (needKeyArr) keys.as[String].collect() else null
     val restricted =
       if (restrictedByKeys) stored.join(broadcast(keys), Seq("h"))
       else stored
-    lazy val restrictedLit =
-      stored.join(broadcast(keyArr.toSeq.toDF("h")), Seq("h"))
-    // DRIVER-SIDE hot-key detection (r17, the hot-route's plan-shape
+    // DRIVER-SIDE hot-key detection (the hot route's plan-shape
     // switch): one aggregate job over the restricted postings answers
     // "does ANY shingle exceed the cap" BEFORE the probe plan is built.
     // The overwhelmingly common answer is no — and then the guard
@@ -2622,23 +2514,15 @@ object TextOps {
     // the big-batch fallback regime (corpus-wide postings, no key
     // restriction) never collects — it keeps the subplan form.
     val maxHotKeysCollected = 1 << 20
-    // `knownHot` (r17 df sidecar): when the INDEX already knows its
-    // over-cap keys ([[containmentHotFromStats]]), the check job is
-    // skipped entirely — including in the big-batch fallback regime,
-    // where the in-plan check can't run (no key restriction to
-    // aggregate cheaply). None = detect here (restricted regime) or
-    // keep subplan hot keys (fallback regime).
     val hotCollected: Option[Array[(String, Long)]] =
-      (if (!hotRouted) None
-       else knownHot.orElse {
-         if (!restrictedByKeys) None
-         else Some(restrictedLit.groupBy(col("h")).agg(count(lit(1)).as("__n"))
-           .filter(col("__n") > lit(maxPostings.toLong))
-           .limit(maxHotKeysCollected + 1)
-           .collect().map(r => (r.getString(0), r.getLong(1))))
-       }).filter(_.length <= maxHotKeysCollected)
-    val provenClean = hotRouted && hotCollected.exists(_.isEmpty)
-    val hotAsLiteral = hotRouted && hotCollected.exists(_.nonEmpty)
+      (if (!hotRouted || !restrictedByKeys) None
+       else Some(stored.join(
+           broadcast(keys.as[String].collect().toSeq.toDF("h")), Seq("h"))
+         .groupBy(col("h")).agg(count(lit(1)).as("__n"))
+         .filter(col("__n") > lit(maxPostings.toLong))
+         .limit(maxHotKeysCollected + 1)
+         .collect().map(r => (r.getString(0), r.getLong(1)))))
+        .filter(_.length <= maxHotKeysCollected)
     // hot-shingle guard (see [[MaxPostingsPerShingle]]): the window
     // form (BandedHamming.keepSmall over a window by h — the one copy of
     // the warn/marker discipline) pre-shuffles the postings by the pair
@@ -2681,11 +2565,11 @@ object TextOps {
         .filter(round(col("inter") / col("n"), 6) >= threshold)
         .select(col("doc_id").as("c1"), col("doc").as("c2"),
           lit(true).as("cross"))
-    // Hot-route (r16 verdict task 2): a batch doc carrying NO over-cap
-    // shingle gets an EXACT verdict from the guarded join (dropping a
-    // shingle it never carries cannot change its inter counts), so the
-    // guard's under-report slack only ever touches docs that carry a
-    // hot shingle. Split the batch on that line: cold docs keep the
+    // Hot-route: a batch doc carrying NO over-cap shingle gets an EXACT
+    // verdict from the guarded join (dropping a shingle it never
+    // carries cannot change its inter counts), so the guard's
+    // under-report slack only ever touches docs that carry a hot
+    // shingle. Split the batch on that line: cold docs keep the
     // guarded plan; hot docs are re-asked EXACTLY through the
     // rarest-first prefix probe against the FULL restricted postings —
     // the rarest ordering keeps the hot lists out of candidate
@@ -2705,47 +2589,29 @@ object TextOps {
         .unionByName(crossContainmentPairsPrefixRarest(eHot, postsForHot,
           threshold))
     }
-    if (maxPostings == Int.MaxValue)
-      // uncapped IS the documented "pure direct join" — an identity
-      // keepSmall window would still pay the per-bucket count+rep sort
-      // every probe (review catch r17); same repartition rationale as
-      // the proven-clean branch below
-      pairsOf(e, restricted.repartition(col("h")))
-    else if (provenClean)
-      // proven cap-clean → the guard would be an identity filter; run
-      // the UNGATED join. The repartition is load-bearing, not a
-      // pessimization: without it Catalyst's join-cardinality estimate
-      // through the keys intersection reads `restricted` as tiny and
-      // statically BROADCASTS the postings side of the pair join
-      // (measured 3× slower at the ×4 probe: collect + broadcast of
-      // the whole restricted frame, no AQE revisit of a static BHJ);
-      // forcing the h exchange pins the shuffled hash/merge join —
-      // the window form was only ever fast for the same reason.
-      pairsOf(e, restricted.repartition(col("h")))
-    else if (hotAsLiteral) {
-      val hotArr = hotCollected.get
-      // warn only the hot keys the ARRIVING batch actually carries:
-      // sidecar-sourced hot sets cover the whole index population, and
-      // warning a boilerplate key on every micro-batch that never
-      // probes it would drown the signal. In-plan-detected hot keys
-      // came from the batch-restricted postings, so they are all
-      // batch-carried by construction; the sidecar path (keyArr is no
-      // longer collected there — r17 advice) intersects the bounded
-      // hot set against the batch keys with one broadcast semi-join
-      // (result ≤ |hotArr| ≤ 2²⁰ rows). Without a key restriction at
-      // all (fallback regime) warn them all — at-least-once holds.
-      val toWarn: Array[(String, Long)] =
-        if (knownHot.isEmpty || !restrictedByKeys) hotArr
-        else keys.join(broadcast(hotArr.toSeq.toDF("h", "__n")), Seq("h"))
-          .as[(String, Long)].collect()
-      toWarn.foreach { case (h, n) =>
-        org.apache.spark.sql.graft.WarnHotBucket.hit(h, n) }
-      hotSplit(broadcast(
-        hotArr.map(_._1).toSeq.toDF("h")))
-    } else {
-      // big-batch fallback regime (or a degenerate over-cap collect):
-      // subplan-form hot keys, AQE owns the (normally large) hot set
-      hotSplit(hotKeys)
+    hotCollected match {
+      case _ if !hotRouted || hotCollected.exists(_.isEmpty) =>
+        // uncapped, or proven cap-clean: the guard would be an identity
+        // filter, so run the UNGATED join. The repartition is
+        // load-bearing, not a pessimization: without it Catalyst's
+        // join-cardinality estimate through the keys intersection reads
+        // `restricted` as tiny and statically BROADCASTS the postings
+        // side of the pair join (measured 3× slower at the ×4 probe:
+        // collect + broadcast of the whole restricted frame, no AQE
+        // revisit of a static BHJ); forcing the h exchange pins the
+        // shuffled hash/merge join — the window form was only ever fast
+        // for the same reason.
+        pairsOf(e, restricted.repartition(col("h")))
+      case Some(hotArr) =>
+        // in-plan hot keys came from the batch-restricted postings, so
+        // every one is batch-carried: warn them all
+        hotArr.foreach { case (h, n) =>
+          org.apache.spark.sql.graft.WarnHotBucket.hit(h, n) }
+        hotSplit(broadcast(hotArr.map(_._1).toSeq.toDF("h")))
+      case None =>
+        // big-batch fallback regime (or a degenerate over-cap collect):
+        // subplan-form hot keys, AQE owns the (normally large) hot set
+        hotSplit(hotKeys)
     }
   }
 
@@ -3907,6 +3773,17 @@ object TextOps {
 
   // --------------------------------------------- durable curation state
 
+  /** The durable-state family stores RAW-text artifacts (shingle index,
+    * labels); the segment stage curates REWRITTEN text — mixing them
+    * would silently apply raw-text cluster labels to a different corpus.
+    * Rejected here at the shared layer (the CLI mirrors the message).
+    */
+  private def requireNoSegmentStage(cfg: CurateConfig, what: String): Unit =
+    require(cfg.segmentDedupWidth.isEmpty,
+      s"$what stores raw-text labels and cannot run the segment-dedup " +
+        "stage (it curates rewritten text) — run curateOn without state, " +
+        "or drop segmentDedupWidth")
+
   /** Persist the durable state of a curation run under `path` — what a
     * RESTARTED pipeline (new session, new cluster) needs so no stage is
     * recomputed from raw text:
@@ -3937,17 +3814,6 @@ object TextOps {
     * (CurateStateSpec) and measured per-round by the containment
     * differentials (Verify).
     */
-  /** The durable-state family stores RAW-text artifacts (shingle index,
-    * labels); the segment stage curates REWRITTEN text — mixing them
-    * would silently apply raw-text cluster labels to a different corpus.
-    * Rejected here at the shared layer (the CLI mirrors the message).
-    */
-  private def requireNoSegmentStage(cfg: CurateConfig, what: String): Unit =
-    require(cfg.segmentDedupWidth.isEmpty,
-      s"$what stores raw-text labels and cannot run the segment-dedup " +
-        "stage (it curates rewritten text) — run curateOn without state, " +
-        "or drop segmentDedupWidth")
-
   def writeCurateState(docs: DataFrame, path: String,
       cfg: CurateConfig = CurateConfig()): Unit = {
     requireNoSegmentStage(cfg, "writeCurateState")

@@ -39,14 +39,19 @@ import graft.queries.{CurateConfig, TextOps, VectorOps}
   *      ([[graft.extract.Multimodal.videoFrameProbe]]) — clips sharing
   *      ≥ minJaccard of their sampled frames drop even when a suffix
   *      differs, where a whole-file hash sees unrelated blobs. Same
-  *      admit policy and lifecycle. A multimodal corpus passes
-  *      `media = Seq(col -> kind, …)` — one entry per modality, each
-  *      against its OWN per-kind index root, sub-stages chained in
-  *      declaration order with one shared `media_dup` reason — or
-  *      `media_dup:<kind>` naming the first kind that fired, under the
-  *      opt-in [[graft.queries.CurateConfig.mediaDupByKind]] flag
+  *      admit policy and lifecycle. A multimodal corpus sets
+  *      `CurateConfig.media = Seq(col -> kind, …)` — one entry per
+  *      modality, each against its OWN per-kind index root, sub-stages
+  *      chained in declaration order with one shared `media_dup` reason
+  *      — or `media_dup:<kind>` naming the first kind that fired, under
+  *      the opt-in [[graft.queries.CurateConfig.mediaDupByKind]] flag
   *      (`mediaColumn`/`mediaKind` is the one-entry sugar on the
   *      legacy root).
+  *
+  * Every stage is switched and tuned by the one [[CurateConfig]] the
+  * batch pipeline reads (`semanticThreshold`, the media fields and
+  * `videoConfig` included) — stream and batch cannot be handed
+  * different stage lists.
   *
   * Output per batch: the full batch rows (text REWRITTEN when the
   * segment stage is on, n_chars recomputed) plus (kept, drop_reason) —
@@ -97,17 +102,10 @@ object CurateIngest {
       evalPath: Option[String] = None,
       compactEvery: Int = 0,
       evalIndexPath: Option[String] = None,
-      semanticThreshold: Option[Double] = None,
-      mediaColumn: Option[String] = None,
-      mediaKind: String = "image",
-      videoConfig: graft.extract.Multimodal.VideoDedupConfig =
-        graft.extract.Multimodal.VideoDedupConfig(),
-      driftBaseline: Option[String] = None,
-      media: Seq[(String, String)] = Nil): StreamingQuery = {
-    // fail at start with the same resolution processBatch applies
-    if (mediaColumn.isDefined || media.nonEmpty)
-      mediaStageEntries(mediaColumn, mediaKind, media)
-    else mediaStageEntries(cfg.mediaColumn, cfg.mediaKind, cfg.media)
+      driftBaseline: Option[String] = None): StreamingQuery = {
+    // fail at start (media kind validation) with the same resolution
+    // processBatch applies
+    mediaStageEntries(cfg)
     require(evalPath.isEmpty || evalIndexPath.isEmpty,
       "pass evalPath (fixed corpus) or evalIndexPath (growable index), not both")
     // drift monitoring (r14 verdict gap #2): the baseline corpus is
@@ -139,34 +137,28 @@ object CurateIngest {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         processBatch(batch.toDF(), batchId, statePath, outPath, cfg,
-          evalShingles, compactEvery, evalIndexPath, semanticThreshold,
-          mediaColumn, mediaKind, videoConfig, driftBase, media)
+          evalShingles, compactEvery, evalIndexPath, driftBase)
       }
       .start()
   }
 
-  /** The resolved media stage list: (column, kind, index-root-leaf).
-    * The single-column sugar keeps the PRE-r15 roots (`media` for the
-    * hash kinds, `media_video` for video) so existing streams resume
-    * against their existing state; the multi-column form gets one root
-    * PER KIND (`media_image`/`media_audio`/`media_video` — the r14
-    * media_video split generalized): two hash kinds can never share a
-    * root, whose `_params` pins exactly one kind. Kinds must be
-    * distinct — two columns of one kind would share a fingerprint
-    * family and a root.
+  /** The resolved media stage list of `cfg`: (column, kind,
+    * index-root-leaf). The single-column sugar (`mediaColumn`/
+    * `mediaKind`) keeps the PRE-r15 roots (`media` for the hash kinds,
+    * `media_video` for video) — on-disk layout existing streams resume
+    * against; the multi-column `media` form gets one root PER KIND
+    * (`media_image`/`media_audio`/`media_video` — the r14 media_video
+    * split generalized): two hash kinds can never share a root, whose
+    * `_params` pins exactly one kind. Form exclusivity and kind
+    * distinctness are [[CurateConfig]]'s requires.
     */
-  private[graft] def mediaStageEntries(mediaColumn: Option[String],
-      mediaKind: String, media: Seq[(String, String)])
+  private[graft] def mediaStageEntries(cfg: CurateConfig)
       : Seq[(String, String, String)] = {
-    require(media.isEmpty || mediaColumn.isEmpty,
-      "pass media (multi-column) or mediaColumn (single-column sugar), not both")
-    require(media.map(_._2).distinct.size == media.size,
-      s"media kinds must be distinct, got ${media.map(_._2)}")
-    val legacy = mediaColumn.map { c =>
-      (c, mediaKind,
-        graft.extract.Multimodal.mediaKindLayout(mediaKind)._1)
+    val legacy = cfg.mediaColumn.map { c =>
+      (c, cfg.mediaKind,
+        graft.extract.Multimodal.mediaKindLayout(cfg.mediaKind)._1)
     }.toSeq
-    val multi = media.map { case (c, k) =>
+    val multi = cfg.media.map { case (c, k) =>
       graft.extract.Multimodal.mediaKindLayout(k) // kind validation
       (c, k, if (k == "video") "media_video" else s"media_$k")
     }
@@ -198,29 +190,11 @@ object CurateIngest {
       evalShingles: Option[DataFrame] = None,
       compactEvery: Int = 0,
       evalIndexPath: Option[String] = None,
-      semanticThreshold: Option[Double] = None,
-      mediaColumn: Option[String] = None,
-      mediaKind: String = "image",
-      videoConfig: graft.extract.Multimodal.VideoDedupConfig =
-        graft.extract.Multimodal.VideoDedupConfig(),
-      driftBase: Option[(DataFrame, Option[DataFrame])] = None,
-      media: Seq[(String, String)] = Nil): Unit = {
+      driftBase: Option[(DataFrame, Option[DataFrame])] = None): Unit = {
     val spark = batch.sparkSession
     val tag = s"b$batchId"
-    // CurateConfig carries semanticThreshold/mediaColumn/media fields the
-    // BATCH pipeline honors; a cfg-only caller must get the same stages
-    // here instead of a silent stream/batch divergence (r15 review
-    // catch). Explicit stream params win when given (they carry
-    // stream-specific history — PyBridge, existing specs); otherwise the
-    // cfg fields drive, videoConfig included (it travels with whichever
-    // side supplied the media entries).
-    val semanticTh = semanticThreshold.orElse(cfg.semanticThreshold)
-    val (mediaEntries, vc) =
-      if (mediaColumn.isDefined || media.nonEmpty)
-        (mediaStageEntries(mediaColumn, mediaKind, media), videoConfig)
-      else
-        (mediaStageEntries(cfg.mediaColumn, cfg.mediaKind, cfg.media),
-          cfg.videoConfig)
+    val mediaEntries = mediaStageEntries(cfg)
+    val vc = cfg.videoConfig
 
     // crash recovery FIRST — before any existence probe: after a crash
     // mid-compaction-swap the minhash corpus lives ONLY in the
@@ -342,8 +316,7 @@ object CurateIngest {
       case Some(th) =>
         val cnPairs = TextOps.containmentDeltaIndexed(spark,
           s"$statePath/containment",
-          decon.select(col("doc_id"), col("text"), col("n_chars")), th, tag,
-          maxPostings = cfg.containmentMaxPostings)
+          decon.select(col("doc_id"), col("text"), col("n_chars")), th, tag)
         IngestDedup.admit(decon, cnPairs, "doc_id", "c1", "c2")
     }
 
@@ -367,7 +340,7 @@ object CurateIngest {
     // keep-first admit policy and index lifecycle as stage 5, over
     // [[VectorOps.cosineDeltaIndexed]]; only docs the text stages kept
     // probe (first-drop-reason order preserved).
-    val sem = semanticTh match {
+    val sem = cfg.semanticThreshold match {
       case None => admitted
       case Some(th) =>
         require(b.columns.contains("embedding"),
@@ -503,7 +476,7 @@ object CurateIngest {
     if (cfg.containmentThreshold.isDefined)
       TextOps.appendContainmentIndex(spark, s"$statePath/containment",
         med.select(col("doc_id"), col("text")), tag)
-    if (semanticTh.isDefined)
+    if (cfg.semanticThreshold.isDefined)
       VectorOps.appendCosineIndex(
         med.select(col("doc_id").as("vec_id"), col("embedding")),
         s"$statePath/cosine", tag)
@@ -544,7 +517,7 @@ object CurateIngest {
       .join(keepId(admitted, "nd_ok"), Seq("doc_id"), "left")
       // with the semantic stage off, sem eq admitted — alias the marker
       // instead of paying a join whose result is nd_ok by construction
-      .transform(v => semanticTh match {
+      .transform(v => cfg.semanticThreshold match {
         case Some(_) => v.join(keepId(sem, "sm_ok"), Seq("doc_id"), "left")
         case None => v.withColumn("sm_ok", col("nd_ok"))
       })

@@ -37,6 +37,7 @@ class CliCurateSpec extends AnyFunSuite with SparkSessionFixture {
         Seq("a", "b", "--state"),
         Seq("a", "b", "--segment-width", "0"),
         Seq("a", "b", "--segment-width", "8", "--state", "s"),
+        Seq("a", "b", "--containment-max-postings", "5"),
         Seq("a", "b", "--frobnicate")))
       intercept[IllegalArgumentException](CurateCli.parse(bad))
   }

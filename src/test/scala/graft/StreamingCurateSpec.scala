@@ -244,8 +244,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     val b0 = vdocs(Seq(
       (alpha._1, alpha._2, alpha._3, axis(0)),
       (bravo._1, bravo._2, bravo._3, axis(1))))
-    CurateIngest.processBatch(b0, 0L, state, out, CurateConfig(),
-      semanticThreshold = Some(0.9))
+    CurateIngest.processBatch(b0, 0L, state, out, CurateConfig(
+      semanticThreshold = Some(0.9)))
     assert(verdicts(s"$out/batch=b0") == Map(
       1L -> ((true, None)), 2L -> ((true, None))))
 
@@ -261,8 +261,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
       (para._1, para._2, para._3, axis(0, 3f)),
       (nd._1, nd._2, nd._3, axis(2)),
       (clean._1, clean._2, clean._3, axis(3))))
-    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(),
-      semanticThreshold = Some(0.9))
+    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(
+      semanticThreshold = Some(0.9)))
     val want1 = Map(
       11L -> ((false, Some("semantic_dup"))),
       12L -> ((false, Some("near_dup"))),
@@ -272,8 +272,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     // at-least-once replay: same verdicts, cosine index unchanged
     // (only ADMITTED vectors were appended — dropped ones never join)
     val vecsBefore = spark.read.parquet(s"$state/cosine/vectors").count()
-    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(),
-      semanticThreshold = Some(0.9))
+    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(
+      semanticThreshold = Some(0.9)))
     assert(verdicts(s"$out/batch=b1") == want1, "replay must reproduce")
     assert(spark.read.parquet(s"$state/cosine/vectors").count() == vecsBefore)
     // BOTH indexes hold exactly the kept docs: the semantically-dropped
@@ -318,8 +318,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
 
     val state = java.nio.file.Files.createTempDirectory("ci_par_state").toString
     val out = java.nio.file.Files.createTempDirectory("ci_par_out").toString
-    CurateIngest.processBatch(corpus, 0L, state, out, CurateConfig(),
-      semanticThreshold = Some(0.9))
+    CurateIngest.processBatch(corpus, 0L, state, out, CurateConfig(
+      semanticThreshold = Some(0.9)))
     assert(verdicts(s"$out/batch=b0") == batchV,
       "stream and batch must verdict every doc identically")
     // and the case is non-trivial: a semantic drop, a text near-dup
@@ -385,8 +385,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
 
     val state = java.nio.file.Files.createTempDirectory("ci_mpar_state").toString
     val out = java.nio.file.Files.createTempDirectory("ci_mpar_out").toString
-    CurateIngest.processBatch(corpus, 0L, state, out, CurateConfig(),
-      mediaColumn = Some("image"))
+    CurateIngest.processBatch(corpus, 0L, state, out, CurateConfig(
+      mediaColumn = Some("image")))
     assert(verdicts(s"$out/batch=b0") == batchV,
       "stream and batch must verdict every doc identically")
     // and the case is non-trivial: a media drop through a re-encode, a
@@ -445,56 +445,6 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
         b1.select(col("doc_id"), col("text"), col("n_chars")), 0.8, "b0")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(asOf == Set((11L, 1L)))
-  }
-
-  test("containment df sidecar: appended per-batch, trusted only when " +
-      "complete, rebuilt at compaction; hot probe exact through it") {
-    import graft.queries.TextOps
-    val idx = java.nio.file.Files.createTempDirectory("cn_df").toString
-    def toks(r: Range) = r.map(i => f"dfw$i%04d").mkString(" ")
-    def mk(id: Long, r: Range) = { val t = toks(r); (id, t, t.length.toLong) }
-    import spark.implicits._
-    // three containers sharing the same token run: every shared shingle
-    // has df 3 — over-cap at 2, under-cap at the default
-    val b0 = Seq(mk(1L, 1 to 70), mk(2L, 1 to 75), mk(3L, 1 to 80))
-      .toDF("doc_id", "text", "n_chars")
-    TextOps.appendContainmentIndex(spark, idx, b0, "t0")
-    // sidecar written beside the postings, per-batch counts exact
-    val stats = spark.read.parquet(s"$idx/dfstats")
-    val post = spark.read.parquet(s"$idx/postings")
-    assert(stats.agg(sum(col("df"))).collect()(0).getLong(0) == post.count(),
-      "Σ df must equal the posting rows")
-    // complete sidecar → Some; hot at cap 2 (shared shingles, df 3),
-    // clean at the default cap
-    val hot2 = TextOps.containmentHotFromStats(spark, idx, lit(true), 2)
-    assert(hot2.exists(_.nonEmpty) && hot2.get.forall(_._2 == 3L))
-    assert(TextOps.containmentHotFromStats(spark, idx, lit(true), 100000)
-      .exists(_.isEmpty))
-    // probe through the sidecar path: cap 2 (hot-routed, knownHot from
-    // stats) must equal the uncapped answer
-    val probe = Seq(mk(11L, 1 to 33)).toDF("doc_id", "text", "n_chars")
-    def pairsAt(cap: Int) = TextOps.containmentDeltaIndexed(spark, idx,
-        probe, 0.8, s"p$cap", maxPostings = cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = Set((11L, 1L), (11L, 2L), (11L, 3L))
-    assert(pairsAt(0) == want && pairsAt(2) == want)
-    // an incomplete sidecar (missing batch dir) is not trusted…
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/dfstats/batch=t0"), true)
-    assert(TextOps.containmentHotFromStats(spark, idx, lit(true), 2).isEmpty)
-    // …and the probe stays exact through the in-plan fallback
-    assert(pairsAt(2) == want, "fallback check must keep the probe exact")
-    // compaction rebuilds the sidecar from the folded postings — the
-    // pre-sidecar-index migration path
-    TextOps.compactContainmentIndex(spark, idx)
-    assert(spark.read.parquet(s"$idx/dfstats").select(col("batch"))
-      .distinct().collect().map(_.getString(0)).toSet == Set("init"))
-    val hotAfter = TextOps.containmentHotFromStats(spark, idx, lit(true), 2)
-    assert(hotAfter.exists(_.nonEmpty) && hotAfter.get.toSet == hot2.get.toSet,
-      "rebuilt sidecar must carry the same exact dfs")
-    // replay-tag window is closed post-fold, so probe under a FRESH tag
-    assert(pairsAt(7) == want, "post-fold probe exact via rebuilt sidecar")
   }
 
   test("hot-shingle guard: an over-cap postings bucket leaves the probe " +
@@ -576,8 +526,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     val b0 = mdocs(Seq(
       (alpha._1, alpha._2, alpha._3, img(horizontal = true)),
       (bravo._1, bravo._2, bravo._3, img(horizontal = false))))
-    CurateIngest.processBatch(b0, 0L, state, out, CurateConfig(),
-      mediaColumn = Some("image"))
+    CurateIngest.processBatch(b0, 0L, state, out, CurateConfig(
+      mediaColumn = Some("image")))
     assert(verdicts(s"$out/batch=b0") == Map(
       1L -> ((true, None)), 2L -> ((true, None))))
 
@@ -600,8 +550,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
       (clean._1, clean._2, clean._3, img(horizontal = true, diag = true)),
       (junk._1, junk._2, junk._3, Array[Byte](1, 2, 3)),
       (win._1, win._2, win._3, img(horizontal = true, diag = true))))
-    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(),
-      mediaColumn = Some("image"))
+    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(
+      mediaColumn = Some("image")))
     val want1 = Map(
       11L -> ((false, Some("media_dup"))),
       12L -> ((false, Some("near_dup"))),
@@ -618,8 +568,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
       Set("1", "2", "13"))
     // at-least-once replay: same verdicts, index unchanged
     val hashesBefore = spark.read.parquet(s"$state/media/hashes").count()
-    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(),
-      mediaColumn = Some("image"))
+    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(
+      mediaColumn = Some("image")))
     assert(verdicts(s"$out/batch=b1") == want1, "replay must reproduce")
     assert(spark.read.parquet(s"$state/media/hashes").count() == hashesBefore)
   }
@@ -644,8 +594,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     val b0 = vdocs(Seq(
       (alpha._1, alpha._2, alpha._3, aClip),
       (bravo._1, bravo._2, bravo._3, blob(1000))))
-    CurateIngest.processBatch(b0, 0L, state, out, CurateConfig(),
-      mediaColumn = Some("video"), mediaKind = "video", videoConfig = vcfg)
+    CurateIngest.processBatch(b0, 0L, state, out, CurateConfig(
+      mediaColumn = Some("video"), mediaKind = "video", videoConfig = vcfg))
     assert(verdicts(s"$out/batch=b0") == Map(
       1L -> ((true, None)), 2L -> ((true, None))))
 
@@ -665,8 +615,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
       (nd._1, nd._2, nd._3, blob(1000)),
       (clean._1, clean._2, clean._3, cleanClip),
       (win._1, win._2, win._3, cleanClip)))
-    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(),
-      mediaColumn = Some("video"), mediaKind = "video", videoConfig = vcfg)
+    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(
+      mediaColumn = Some("video"), mediaKind = "video", videoConfig = vcfg))
     val want1 = Map(
       11L -> ((false, Some("media_dup"))),
       12L -> ((false, Some("near_dup"))),
@@ -682,8 +632,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
       Set("1", "2", "13"))
     // at-least-once replay: same verdicts, index unchanged
     val framesBefore = spark.read.parquet(s"$state/media_video/frames").count()
-    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(),
-      mediaColumn = Some("video"), mediaKind = "video", videoConfig = vcfg)
+    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(
+      mediaColumn = Some("video"), mediaKind = "video", videoConfig = vcfg))
     assert(verdicts(s"$out/batch=b1") == want1, "replay must reproduce")
     assert(spark.read.parquet(s"$state/media_video/frames").count() == framesBefore)
   }
@@ -719,8 +669,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     val b0 = mdocs(Seq(
       (2L, d2._2, d2._3, axis(0), img(1)),
       (10L, d10._2, d10._3, axis(1), img(1))))
-    CurateIngest.processBatch(b0, 0L, state, out, CurateConfig(),
-      semanticThreshold = Some(0.9), mediaColumn = Some("image"))
+    CurateIngest.processBatch(b0, 0L, state, out, CurateConfig(
+      semanticThreshold = Some(0.9), mediaColumn = Some("image")))
     assert(verdicts(s"$out/batch=b0") == Map(
       2L -> ((true, None)), 10L -> ((false, Some("media_dup")))))
 
@@ -729,8 +679,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     // index (it is not in the kept corpus; r14 review catch)
     val d24 = doc(24L, "charlie", 40)
     val b1 = mdocs(Seq((24L, d24._2, d24._3, axis(4), img(1))))
-    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(),
-      semanticThreshold = Some(0.9), mediaColumn = Some("image"))
+    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(
+      semanticThreshold = Some(0.9), mediaColumn = Some("image")))
     assert(verdicts(s"$out/batch=b1") == Map(
       24L -> ((false, Some("media_dup")))))
     assert(spark.read.parquet(s"$state/cosine/vectors")
@@ -743,17 +693,17 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     // 24 is not in the kept corpus, so nothing may drop against it
     val d31 = doc(31L, "delta", 40)
     val b2 = mdocs(Seq((31L, d31._2, d31._3, axis(4, 3f), img(7))))
-    CurateIngest.processBatch(b2, 2L, state, out, CurateConfig(),
-      semanticThreshold = Some(0.9), mediaColumn = Some("image"))
+    CurateIngest.processBatch(b2, 2L, state, out, CurateConfig(
+      semanticThreshold = Some(0.9), mediaColumn = Some("image")))
     assert(verdicts(s"$out/batch=b2") == Map(31L -> ((true, None))),
       "a paraphrase of a media-dropped doc must not semantic_dup " +
         "against a doc outside the kept corpus")
 
     // a typo'd kind fails loudly instead of silently no-op'ing the stage
     val err = intercept[IllegalArgumentException] {
-      CurateIngest.processBatch(b2, 3L, state, out, CurateConfig(),
+      CurateIngest.processBatch(b2, 3L, state, out, CurateConfig(
         semanticThreshold = Some(0.9), mediaColumn = Some("image"),
-        mediaKind = "wav")
+        mediaKind = "wav"))
     }
     assert(err.getMessage.contains("mediaKind"))
   }
@@ -817,8 +767,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     // keeper first AND best (41 chars, smallest id) so keep-first
     // (stream) and keep-best (batch) coincide — the parity precondition
     val b0 = rows(Seq(((doc(3L, "alpha", 41)), img(0), wav(1L, 300))))
-    CurateIngest.processBatch(b0, 0L, state, out, CurateConfig(),
-      media = mediaCfg)
+    CurateIngest.processBatch(b0, 0L, state, out, CurateConfig(
+      media = mediaCfg))
     assert(verdicts(s"$out/batch=b0") == Map(3L -> ((true, None))))
 
     val b1 = rows(Seq(
@@ -826,8 +776,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
       (doc(12L, "delta", 40), img(1), wav(1L, 300)),          // audio copy of 3's
       (doc(13L, "echo", 40), img(2), wav(3L, 520))            // clean
     ))
-    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(),
-      media = mediaCfg)
+    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(
+      media = mediaCfg))
     val want1 = Map(
       11L -> ((false, Some("media_dup"))), // via the IMAGE index
       12L -> ((false, Some("media_dup"))), // via the AUDIO index
@@ -844,8 +794,8 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
       s"audio index must hold the keepers: ${ids("media_audio")}")
 
     // at-least-once replay reproduces verdicts and state
-    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(),
-      media = mediaCfg)
+    CurateIngest.processBatch(b1, 1L, state, out, CurateConfig(
+      media = mediaCfg))
     assert(verdicts(s"$out/batch=b1") == want1, "replay must reproduce")
     assert(ids("media_image") == Set("3", "13"))
 
@@ -862,11 +812,11 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     // pre-split state — refused loudly, never silently re-bootstrapped
     val state2 = java.nio.file.Files.createTempDirectory("ci_mm_leg").toString
     val out2 = java.nio.file.Files.createTempDirectory("ci_mm_leg_out").toString
-    CurateIngest.processBatch(b0, 0L, state2, out2, CurateConfig(),
-      mediaColumn = Some("image"))
+    CurateIngest.processBatch(b0, 0L, state2, out2, CurateConfig(
+      mediaColumn = Some("image")))
     val err = intercept[IllegalArgumentException] {
-      CurateIngest.processBatch(b1, 1L, state2, out2, CurateConfig(),
-        media = mediaCfg)
+      CurateIngest.processBatch(b1, 1L, state2, out2, CurateConfig(
+        media = mediaCfg))
     }
     assert(err.getMessage.contains("legacy hash index"))
   }
@@ -985,19 +935,6 @@ class StreamingCurateSpec extends AnyFunSuite with SparkSessionFixture {
     // the cfg-driven run above used the PER-KIND root (cfg.media form)
     assert(new java.io.File(s"$state/media_image/hashes").exists(),
       "cfg.media must drive the per-kind root")
-
-    // precedence: explicit stream params win over cfg — cfg carries the
-    // legacy sugar, the explicit param the multi form; the stage must
-    // land under the explicit form's per-kind root, legacy untouched
-    val state2 = java.nio.file.Files.createTempDirectory("ci_cfg2_state").toString
-    val out2 = java.nio.file.Files.createTempDirectory("ci_cfg2_out").toString
-    CurateIngest.processBatch(b0, 0L, state2, out2,
-      CurateConfig(mediaColumn = Some("image")),
-      media = Seq("image" -> "image"))
-    assert(new java.io.File(s"$state2/media_image/hashes").exists(),
-      "explicit media param must win over cfg sugar")
-    assert(!new java.io.File(s"$state2/media/hashes").exists(),
-      "cfg sugar must be ignored when the explicit param is given")
   }
 
   test("drift side output: a distribution-true batch reads stable, a " +
