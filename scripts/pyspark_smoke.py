@@ -10,10 +10,14 @@ spark.driver.extraClassPath — no jar build needed, the sbt class
 directory is enough for local mode. On a cluster, package the classes
 (`sbt package`) and ship the jar via --jars instead.
 """
+import os
 import sys
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-CLASSES = "/root/repo/target/scala-2.13/classes"
+# the classes of the checkout this script sits in (scripts/ → repo root)
+CLASSES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "target", "scala-2.13", "classes")
 
 from pyspark.sql import SparkSession, DataFrame
 

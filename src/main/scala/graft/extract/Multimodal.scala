@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.util.control.NonFatal
-import graft.operators.IndexStore
+import graft.operators.{IndexStore, Materialize}
 
 /** Multimodal columns (north-star §2.D): images/audio/video ride beside
   * text as opaque `binary` columns with typed metadata structs; per-row
@@ -307,7 +307,7 @@ object Multimodal {
     * the minimum id hash — arbitrary but stable; resolve a
     * domain-preferred keeper downstream (the [[graft.queries.TextOps
     * .dedupKeepBest]] pattern) if representative choice matters.
-    * The hash pass is materialized once (eager localCheckpoint): decode
+    * The hash pass is materialized once (an eager cut): decode
     * is the expensive step on a media corpus, and it feeds the pair
     * join, the id map and the iterative CC rounds.
     */
@@ -315,10 +315,9 @@ object Multimodal {
       contentCol: String = "content", maxHamming: Int = 6,
       maxBucket: Int = graft.operators.BandedHamming.DefaultMaxBucket)
       : DataFrame = {
-    val hashed = df
+    val hashed = Materialize.cut(df
       .select(col(idCol).as("img_id"), imageAHash(col(contentCol)).as("ahash"))
-      .filter(col("ahash").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("ahash").isNotNull))
     val ids = hashed.select(col("img_id"), xxhash64(col("img_id")).as("nid"))
     val collided = ids.groupBy(col("nid"))
       .agg(countDistinct(col("img_id")).as("c"))
@@ -755,10 +754,9 @@ object Multimodal {
       maxPerSig: Int = 64): DataFrame = {
     // decode is the expensive step: pay it once for the sizes scan,
     // the hot-sig scan and the pair join
-    val sigs = videoFrameSigs(df, idCol, contentCol, decoder, everyNthMs,
-        durationMs)
-      .select(col("video_id"), col("frame_sig")).distinct()
-      .localCheckpoint(true)
+    val sigs = Materialize.cut(videoFrameSigs(df, idCol, contentCol, decoder,
+        everyNthMs, durationMs)
+      .select(col("video_id"), col("frame_sig")).distinct())
     val hot = sigs.groupBy(col("frame_sig"))
       .agg(countDistinct(col("video_id")).as("nv"))
       .filter(col("nv") > maxPerSig)
@@ -853,9 +851,9 @@ object Multimodal {
       hashed: DataFrame, tag: String, kind: String, maxHamming: Int = 6,
       maxBucket: Int = graft.operators.BandedHamming.DefaultMaxBucket)
       : DataFrame = {
-    val result = mediaHashProbe(spark, path, hashed, tag, kind, maxHamming,
-      maxBucket, admitParams = true)
-      .localCheckpoint(true) // materialize BEFORE the append below
+    // materialize BEFORE the append below
+    val result = Materialize.cut(mediaHashProbe(spark, path, hashed, tag,
+      kind, maxHamming, maxBucket, admitParams = true))
     appendMediaIndex(spark, path, hashed, tag, kind)
     result
   }
@@ -1054,8 +1052,8 @@ object Multimodal {
       .union(p.select(col("id1").as("name")))
       .union(p.select(col("id2").as("name")))
       .distinct()
-    val map = ids.select(col("name"), xxhash64(col("name")).as("nid"))
-      .localCheckpoint(true)
+    val map = Materialize.cut(
+      ids.select(col("name"), xxhash64(col("name")).as("nid")))
     val collided = map.groupBy(col("nid"))
       .agg(countDistinct(col("name")).as("c"))
       .filter(col("c") > 1).limit(1).count()
@@ -1148,10 +1146,9 @@ object Multimodal {
     // decode is the expensive step: checkpoint BEFORE the self-join
     // below, so one pass feeds both branches (the one-shot videoDedup
     // discipline — exchange reuse is not guaranteed to dedupe it)
-    val sigs = videoFrameSigs(df, idCol, contentCol, decoder, everyNthMs,
-        durationMs)
-      .select(col("video_id"), col("frame_sig")).distinct()
-      .localCheckpoint(true)
+    val sigs = Materialize.cut(videoFrameSigs(df, idCol, contentCol, decoder,
+        everyNthMs, durationMs)
+      .select(col("video_id"), col("frame_sig")).distinct())
     sigs.join(sigs.groupBy(col("video_id"))
         .agg(count(lit(1)).as("n_frames")), "video_id")
   }
@@ -1265,9 +1262,9 @@ object Multimodal {
       path: String, frames: DataFrame, tag: String, everyNthMs: Long,
       durationMs: Long, minJaccard: Double = 0.5, maxPerSig: Int = 64)
       : DataFrame = {
-    val result = videoFrameProbe(spark, path, frames, tag, everyNthMs,
-      durationMs, minJaccard, maxPerSig, admitParams = true)
-      .localCheckpoint(true) // materialize BEFORE the append below
+    // materialize BEFORE the append below
+    val result = Materialize.cut(videoFrameProbe(spark, path, frames, tag,
+      everyNthMs, durationMs, minJaccard, maxPerSig, admitParams = true))
     appendVideoIndex(spark, path, frames, tag, everyNthMs, durationMs)
     result
   }

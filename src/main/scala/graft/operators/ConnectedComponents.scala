@@ -40,15 +40,11 @@ import org.apache.spark.sql.types.DecimalType
   * ([[org.apache.spark.sql.graft.CheckpointStats]]), without which the
   * size estimate compounds multiplicatively across rounds until planning
   * itself (BigInteger arithmetic on the estimate) dwarfs execution.
-  * Two checkpoint modes:
-  * `reliable = false` (default) uses `localCheckpoint` — executor-local
-  * blocks, right for local mode and short-lived jobs, but a lost executor
-  * loses its blocks and fails every downstream consumer; `reliable = true`
-  * uses durable `checkpoint()` to the session's configured checkpoint dir
-  * (HDFS/object storage on a cluster) — the 100 TB mode, where executor
-  * churn over a multi-round iteration is a certainty, not a tail risk.
-  * Requires `SparkContext.setCheckpointDir` and fails loudly up front if
-  * it is unset (Spark's own error would otherwise surface mid-round 1).
+  * Every cut goes through [[Materialize.cut]], so the session's
+  * `spark.graft.materialize` posture picks the blocks: executor-local
+  * by default, durable `checkpoint()` files under `reliable` (which
+  * needs `SparkContext.setCheckpointDir` and fails loudly up front
+  * without it).
   * Non-convergence within `maxRounds` throws — never silently emits
   * partial labels (each counted round batches TWO propagation rounds
   * between blocking actions, so a component needs diameter
@@ -60,13 +56,10 @@ object ConnectedComponents {
     *
     * @param nodes (id: long) — one row per vertex; isolated vertices allowed
     * @param edges (src: long, dst: long) — undirected, symmetrized internally
-    * @param reliable cut lineage with durable `checkpoint()` instead of
-    *   `localCheckpoint()` — survives executor loss; needs a checkpoint dir
     * @return (id, rep) with rep = min id of the component
     */
-  def run(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50,
-      reliable: Boolean = false): DataFrame =
-    runCounted(nodes, edges, maxRounds, reliable)._1
+  def run(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50): DataFrame =
+    runCounted(nodes, edges, maxRounds)._1
 
   /** Pair-count gate under which [[runOnPairs]] finishes the components
     * on the driver ([[localFinish]]) instead of iterating. 2·10⁶ pairs ≈
@@ -101,10 +94,10 @@ object ConnectedComponents {
     * and upstream exact-dedup collapses identical content first), but it
     * is a runtime property, not a promise: over the gate — the 100 TB
     * regime, or any corpus whose duplicate graph is itself huge — the
-    * unchanged distributed loop of [[run]] executes, with `reliable`
-    * durable checkpoints available as documented there. The local finish
-    * needs neither checkpoint mode (there is no multi-round lineage to
-    * cut). Labels are identical in both regimes: union-by-min with path
+    * unchanged distributed loop of [[run]] executes, with durable
+    * checkpoints available as documented there. The local finish has
+    * no multi-round lineage to cut.
+    * Labels are identical in both regimes: union-by-min with path
     * halving keeps every tree root the component minimum, which is
     * [[run]]'s fixpoint. Set `localFinishMaxPairs = 0` to force the
     * distributed loop at any size.
@@ -125,7 +118,7 @@ object ConnectedComponents {
     * @return (id, rep) for every id appearing in ≥ 1 pair
     */
   def runOnPairs(pairs: DataFrame, maxRounds: Int = 50,
-      reliable: Boolean = false, precut: Boolean = false,
+      precut: Boolean = false,
       localFinishMaxPairs: Long = DefaultLocalFinishMaxPairs): DataFrame = {
     val raw = pairs.select(col("src"), col("dst"))
     val (p, nPairs) =
@@ -142,14 +135,14 @@ object ConnectedComponents {
         (raw, known.getOrElse(raw.count()))
       }
       else {
-        val p0 = if (reliable) raw.checkpoint(true) else raw.localCheckpoint(true)
+        val p0 = Materialize.cut(raw)
         val n = p0.count()
         (CheckpointStats.withMeasuredStats(p0, n, 24), n)
       }
     if (nPairs <= localFinishMaxPairs) localFinish(p)
     else {
       val nodes = p.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
-      run(nodes, p, maxRounds, reliable)
+      run(nodes, p, maxRounds)
     }
   }
 
@@ -209,13 +202,13 @@ object ConnectedComponents {
     * @return (id, rep) for every id in ≥ 1 old or new pair
     */
   def mergeLabels(labels: DataFrame, newPairs: DataFrame,
-      maxRounds: Int = 50, reliable: Boolean = false,
+      maxRounds: Int = 50,
       localFinishMaxPairs: Long = DefaultLocalFinishMaxPairs): DataFrame =
     runOnPairs(
       labels.filter(col("id") =!= col("rep"))
         .select(col("id").as("src"), col("rep").as("dst"))
         .union(newPairs.select(col("src"), col("dst"))),
-      maxRounds, reliable, precut = false, localFinishMaxPairs)
+      maxRounds, precut = false, localFinishMaxPairs)
 
   /** The shared back half: label the full `universe` from a subgraph-only
     * label table — members absent from `labels` keep rep = self via the
@@ -229,14 +222,10 @@ object ConnectedComponents {
         (coalesce(col("rep"), universe(idCol)) =!= universe(idCol)).as("is_dup"))
 
   /** [[run]] plus the number of rounds executed (for tests/telemetry). */
-  def runCounted(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50,
-      reliable: Boolean = false): (DataFrame, Int) = {
-    if (reliable)
-      require(nodes.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "ConnectedComponents(reliable = true) needs a durable checkpoint dir: " +
-          "call SparkContext.setCheckpointDir(<HDFS/object-store path>) first")
-    // identical loop in both modes — only the block durability differs.
-    // Every cut REPLACES the checkpoint's inherited origin stats with
+  def runCounted(nodes: DataFrame, edges: DataFrame,
+      maxRounds: Int = 50): (DataFrame, Int) = {
+    // identical loop in every posture — only the block durability
+    // differs. Every cut REPLACES the checkpoint's inherited origin stats with
     // measured truth (row count × 24-byte rows of two Longs): Spark's
     // checkpoint carries the origin plan's ESTIMATED Statistics forward,
     // and in an iterative loop that estimate compounds multiplicatively
@@ -246,18 +235,18 @@ object ConnectedComponents {
     // row-preserving, so the label count is measured once and reused
     // every round; truthful constant stats also keep the optimizer's
     // broadcast-vs-SMJ choice correct at any graph size.
-    def cutRaw(df: DataFrame, eager: Boolean): DataFrame =
-      if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
-    val e0 = cutRaw(edges.select(col("src"), col("dst"))
+    val e0 = Materialize.cut(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst"))), eager = false)
     val e = CheckpointStats.withMeasuredStats(e0, e0.count(), 24)
-    val l0 = cutRaw(nodes.select(col("id"), col("id").as("rep")), eager = false)
+    val l0 = Materialize.cut(nodes.select(col("id"), col("id").as("rep")),
+      eager = false)
     val nNodes = l0.count()
     // per-round cuts are LAZY: the convergence-sum action right after is
     // what materializes the blocks (and truncates lineage) — one job per
     // round instead of a checkpoint job plus a sum job
     def cut(df: DataFrame): DataFrame =
-      CheckpointStats.withMeasuredStats(cutRaw(df, eager = false), nNodes, 24)
+      CheckpointStats.withMeasuredStats(
+        Materialize.cut(df, eager = false), nNodes, 24)
     var labels = CheckpointStats.withMeasuredStats(l0, nNodes, 24)
     var prevSum: Option[java.math.BigDecimal] = None
     var converged = false
@@ -309,7 +298,7 @@ object ConnectedComponents {
           lit(java.math.BigDecimal.ZERO)))
         .head.getDecimal(0)
       if (debug) println(f"[cc] round $round: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      // reliable mode: the outgoing round's durable checkpoint is now
+      // durable posture: the outgoing round's checkpoint file is now
       // superseded — `next` is fully materialized to its OWN checkpoint
       // (lineage cut, nothing re-reads the old files) — so delete it.
       // Spark never cleans reliable checkpoints itself (the reference-
@@ -317,13 +306,13 @@ object ConnectedComponents {
       // one full label-table copy per round is exactly the storage blowup
       // the 100 TB mode cannot afford; this keeps live copies at O(1)
       // (edges + current labels). The FINAL round's files are never
-      // deleted here — they back the returned DataFrame.
-      if (reliable)
-        CheckpointStats.checkpointFile(labels).foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(
-            nodes.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
-        }
+      // deleted here — they back the returned DataFrame. Local blocks
+      // have no file, so this is a no-op outside the durable posture.
+      CheckpointStats.checkpointFile(labels).foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(
+          nodes.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+      }
       labels = next
       converged = prevSum.exists(_.compareTo(s) == 0)
       prevSum = Some(s)

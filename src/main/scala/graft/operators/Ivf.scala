@@ -308,10 +308,9 @@ object Ivf {
         else spark.read.parquet(s"$path/centroids").count().toInt.max(1)
       // corpus from the live index itself; checkpoint because the
       // rebuild writes beside the dirs it read (the NnDescent posture)
-      val base = idx("cells", "vec_id LONG, embedding ARRAY<FLOAT>, " +
-          "n2 DOUBLE, cell LONG")
-        .select(col("vec_id"), col("embedding"), col("n2"))
-        .localCheckpoint(true)
+      val base = Materialize.cut(idx("cells",
+          "vec_id LONG, embedding ARRAY<FLOAT>, n2 DOUBLE, cell LONG")
+        .select(col("vec_id"), col("embedding"), col("n2")))
       val cents = if (iters > 0) train(base, c, iters)
         else seedCentroids(base, c)
       rebuildIndexAside(base, cents, path)
@@ -509,7 +508,7 @@ object Ivf {
       .withColumn("cell", col("cell").cast(cellType))
     // static mode materializes the probes once: the IN-list collect and
     // the ranking join must not each re-execute the probe subplan
-    val probes = if (staticPrune) probes0.localCheckpoint(true) else probes0
+    val probes = if (staticPrune) Materialize.cut(probes0) else probes0
     val assigned =
       if (!staticPrune) cells
       else {

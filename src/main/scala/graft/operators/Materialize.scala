@@ -2,42 +2,45 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** The ONE cluster-posture decision for the engine's eager trunk
-  * materializations (r19 — r18 verdict task 8).
+/** The ONE owner of every lineage cut in the engine, and the one
+  * cluster-posture decision for all of them, selected by
+  * `spark.graft.materialize`.
   *
-  * Several pipeline trunks are referenced by multiple downstream stages
-  * and Catalyst expands the full subtree per reference (zero exchange
-  * reuse across the references), so the engine materializes them once:
-  * the curate stage-3 survivor frame under the containment stage, the
-  * sourceOverlap/noveltyCurve window-explode frames (engine surfaces),
-  * and the streaming-containment batch shingle frames. Through r18 each
-  * site called `localCheckpoint(true)` with its own per-site caveat and
-  * escape hatch; this object is the single policy those sites now route
-  * through, selected by `spark.graft.materialize`:
+  * Two entry points:
   *
-  *  - `local` (default) — `localCheckpoint(true)`: executor-local
-  *    blocks, no configuration needed, the right choice for local mode
-  *    and stable clusters. Caveat: blocks are NOT reliable storage — on
-  *    a cluster with executor decommissioning/churn a lost block fails
-  *    the query (it cannot be recomputed; lineage was truncated).
-  *  - `reliable` — `checkpoint(true)`: durable blocks under the
-  *    session's checkpoint dir (`SparkContext.setCheckpointDir` must be
-  *    called); survives executor loss at the cost of writing the frame
-  *    to the checkpoint filesystem. The production posture wherever
-  *    executors are preemptible.
-  *  - `lazy` — no materialization: the stateless plan, re-deriving the
-  *    trunk per reference. The A/B arm and the escape for regimes where
-  *    the trunk is cheaper to recompute than to store (it is also what
-  *    the CONTRACT rows pin where a stateless plan is part of the
-  *    contract shape — those pass explicit flags and never reach this
-  *    policy).
+  *  - [[apply]] — an OPTIONAL trunk materialization. Several pipeline
+  *    trunks are referenced by multiple downstream stages and Catalyst
+  *    expands the full subtree per reference (zero exchange reuse across
+  *    the references), so the engine materializes them once: the curate
+  *    stage-3 survivor frame under the containment stage, the
+  *    sourceOverlap/noveltyCurve window-explode frames (engine surfaces),
+  *    and the streaming-containment batch shingle frames.
+  *  - [[cut]] — a MANDATORY cut: iterative loops ([[ConnectedComponents]]
+  *    and [[NnDescent]] rounds, IVF/PQ training), the session memo builds
+  *    (materialization is part of the memo's semantics), and every frame
+  *    that must be computed exactly once before a write or a
+  *    multi-reference plan.
   *
-  * Deliberately NOT routed through here: the session memo builds
-  * (jaccardPairs/labels/graph — materialization is part of the memo's
-  * semantics), [[ConnectedComponents]]/[[NnDescent]] iteration cuts
-  * (they expose their own `reliable` parameter because iterative
-  * lineage MUST be cut — `lazy` would be exponential), and the
-  * PQ/IVF build internals (ditto, documented at each site).
+  * The posture:
+  *
+  *  - `local` (default) — `localCheckpoint`: executor-local blocks, no
+  *    configuration needed, the right choice for local mode and stable
+  *    clusters. Caveat: blocks are NOT reliable storage — on a cluster
+  *    with executor decommissioning/churn a lost block fails the query
+  *    (it cannot be recomputed; lineage was truncated).
+  *  - `reliable` — `checkpoint`: durable blocks under the session's
+  *    checkpoint dir (`SparkContext.setCheckpointDir` must be called, and
+  *    every cut fails loudly up front if it is not); survives executor
+  *    loss at the cost of writing each frame to the checkpoint
+  *    filesystem. The production posture wherever executors are
+  *    preemptible: in a multi-round iteration at 100 TB, executor churn
+  *    is a certainty, not a tail risk.
+  *  - `lazy` — affects trunks only: [[apply]] returns the stateless plan,
+  *    re-deriving the trunk per reference (the A/B arm, and the escape
+  *    for regimes where the trunk is cheaper to recompute than to store;
+  *    the CONTRACT rows that pin a stateless plan pass explicit flags and
+  *    never reach this policy). [[cut]] still cuts with
+  *    `localCheckpoint` — an uncut iterative lineage grows exponentially.
   */
 object Materialize {
   val ConfKey = "spark.graft.materialize"
@@ -49,10 +52,19 @@ object Materialize {
     m
   }
 
-  /** Materialize `df` per the session policy (see object doc). */
-  def apply(df: DataFrame): DataFrame = mode(df) match {
-    case "lazy" => df
-    case "reliable" => df.checkpoint(true)
-    case _ => df.localCheckpoint(true)
-  }
+  /** Materialize the optional trunk `df` per the session policy (see
+    * object doc); `lazy` returns `df` untouched. */
+  def apply(df: DataFrame): DataFrame =
+    if (mode(df) == "lazy") df else cut(df)
+
+  /** Cut `df`'s lineage: durable `checkpoint` under `reliable`,
+    * `localCheckpoint` otherwise. A lazy cut (`eager = false`) writes its
+    * blocks during the first action over the result. */
+  def cut(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (mode(df) == "reliable") {
+      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
+        s"$ConfKey=reliable needs a durable checkpoint dir: call " +
+          "SparkContext.setCheckpointDir(<HDFS/object-store path>) first")
+      df.checkpoint(eager)
+    } else df.localCheckpoint(eager)
 }

@@ -113,26 +113,16 @@ object NnDescent {
     *
     * Per round: two shuffles by node id, one bucket-id shuffle, the
     * scoring joins, one window top-k; lineage is cut per round (eager
-    * checkpoint, the CC-loop discipline). Two checkpoint modes, the
-    * [[ConnectedComponents.run]] contract verbatim: `reliable = false`
-    * (default) cuts with `localCheckpoint` — executor-local blocks,
-    * right for local mode, but on a real cluster ONE lost executor
-    * mid-build kills every later round; `reliable = true` cuts with
-    * durable `checkpoint()` to the session's checkpoint dir — the
-    * 100 TB mode, where a multi-hour build must survive executor churn.
-    * The loop is identical in both modes (spec-pinned bit-identical),
-    * only block durability differs.
+    * checkpoint, the CC-loop discipline) through [[Materialize.cut]]:
+    * executor-local blocks by default, where ONE lost executor mid-build
+    * kills every later round; durable `checkpoint()` files under
+    * `spark.graft.materialize=reliable` — the 100 TB posture, where a
+    * multi-hour build must survive executor churn. The loop is
+    * identical in both (spec-pinned bit-identical), only block
+    * durability differs.
     */
   def buildGraph(base: DataFrame, k: Int, iters: Int, cells: Int = 0,
-      candCap: Int = 0, randPerRound: Int = -1,
-      reliable: Boolean = false): DataFrame = {
-    if (reliable)
-      require(base.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "NnDescent.buildGraph(reliable = true) needs a durable checkpoint " +
-          "dir: call SparkContext.setCheckpointDir(<HDFS/object-store " +
-          "path>) first")
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
+      candCap: Int = 0, randPerRound: Int = -1): DataFrame = {
     val cap = if (candCap > 0) candCap else 9 * k
     val rand = if (randPerRound >= 0) randPerRound else 4 * k
     val b = base.select(col("vec_id"), col("embedding"), col("n2"))
@@ -155,7 +145,7 @@ object NnDescent {
           .as("nexts"))
       .select(col("src"), explode(col("nexts")).as("dst"))
       .filter(col("dst").isNotNull)
-    var edges = cut(topk(score(init0, b), k))
+    var edges = Materialize.cut(topk(score(init0, b), k))
     val n = nTotal
     for (r <- 0 until iters) {
       val undirected = edges.select(col("src"), col("dst"), col("sim"))
@@ -181,7 +171,7 @@ object NnDescent {
           .select(col("x.vec_id").as("src"), col("dst"))
           .filter(col("src") =!= col("dst")))
       }
-      edges = cut(topk(edges.unionByName(score(sampled, b)), k))
+      edges = Materialize.cut(topk(edges.unionByName(score(sampled, b)), k))
     }
     edges
   }
@@ -215,8 +205,8 @@ object NnDescent {
       queries: DataFrame, k: Int, beam: Int, hops: Int,
       entryRows: DataFrame): DataFrame = {
     val b = base.select(col("vec_id"), col("embedding"), col("n2"))
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-      col("n2").as("q_n2")).localCheckpoint(true)
+    val q = Materialize.cut(queries.select(col("vec_id").as("q_id"),
+      col("embedding").as("q_emb"), col("n2").as("q_n2")))
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
     val qSim = dot(col("q_emb"), col("embedding")) /
@@ -239,9 +229,8 @@ object NnDescent {
     // fixture) — but it must not CONSUME a slot, or beam = k returns
     // k−1 rows after the self filter (an ANN contract violation). One
     // spare slot covers exactly the one self row.
-    var best = topBeam(
-      scoreQ(entryRows.select(col("q_id"), col("vec_id"))), beam + 1)
-      .localCheckpoint(true)
+    var best = Materialize.cut(topBeam(
+      scoreQ(entryRows.select(col("q_id"), col("vec_id"))), beam + 1))
     for (_ <- 0 until hops) {
       // no distinct() on the frontier: topBeam's (q_id, vec_id) groupBy
       // dedups anyway, and the duplicate scoring it saves (≤ in-degree
@@ -249,8 +238,8 @@ object NnDescent {
       val frontier = best.select(col("q_id"), col("vec_id").as("src"))
         .join(sym, "src")
         .select(col("q_id"), col("dst").as("vec_id"))
-      best = topBeam(best.unionByName(scoreQ(frontier)), beam + 1)
-        .localCheckpoint(true)
+      best = Materialize.cut(
+        topBeam(best.unionByName(scoreQ(frontier)), beam + 1))
     }
     // one window pass for the final cut: drop self, dedup (re-scored
     // nodes), rank on the ROUNDED sim (the shared ANN contract's
@@ -344,13 +333,13 @@ object NnDescent {
     * pin geometry.
     */
   def writeIndex(base: DataFrame, path: String, k: Int, iters: Int,
-      cells: Int = 0, reliable: Boolean = false): Unit = {
+      cells: Int = 0): Unit = {
     IndexStore.build(base.sparkSession, path,
         Seq("vectors", "edges", "cells")) { init =>
-      val b = base.select(col("vec_id"), col("embedding"), col("n2"))
-        .localCheckpoint(true)
+      val b = Materialize.cut(
+        base.select(col("vec_id"), col("embedding"), col("n2")))
       b.write.mode("overwrite").parquet(init("vectors"))
-      writeDerived(b, path, init, k, iters, cells, reliable)
+      writeDerived(b, path, init, k, iters, cells)
     }
   }
 
@@ -358,15 +347,14 @@ object NnDescent {
     * routing cells and the refined graph — shared by [[writeIndex]] and
     * [[rebuildIndex]]. */
   private def writeDerived(b: DataFrame, path: String,
-      init: String => String, k: Int, iters: Int, cells: Int,
-      reliable: Boolean): Unit = {
+      init: String => String, k: Int, iters: Int, cells: Int): Unit = {
     val c = if (cells > 0) cells else Ivf.defaultCells(b.count())
     val cents = hashSeeds(b, c)
     cents.write.mode("overwrite").parquet(s"$path/centroids")
     Ivf.assign(b, cents).select(col("vec_id"), col("sim"), col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(init("cells"))
-    buildGraph(b, k, iters, c, reliable = reliable)
+    buildGraph(b, k, iters, c)
       .write.mode("overwrite").parquet(init("edges"))
   }
 
@@ -393,12 +381,12 @@ object NnDescent {
     * there would see full-corpus vectors against baseline-only edges.
     */
   def rebuildIndex(spark: SparkSession, path: String, k: Int, iters: Int,
-      cells: Int = 0, reliable: Boolean = false): Unit =
+      cells: Int = 0): Unit =
     IndexStore.compact(spark, path, Seq("vectors"), 0,
       refuseBuilding = false, inFold = folded => {
         val b = readVectors(folded)
         IndexStore.build(spark, path, Seq("edges", "cells")) { init =>
-          writeDerived(b, path, init, k, iters, cells, reliable)
+          writeDerived(b, path, init, k, iters, cells)
         }
       })
 
@@ -418,15 +406,15 @@ object NnDescent {
     * without its hours-long read outage.
     */
   def rebuildIndexAside(spark: SparkSession, path: String, k: Int,
-      iters: Int, cells: Int = 0, reliable: Boolean = false): Unit = {
+      iters: Int, cells: Int = 0): Unit = {
     // the read prelude fails closed on a crashed IN-PLACE rebuild: its
     // vectors may be partial, and re-running THAT rebuild is its
     // documented repair
-    val b = readVectors(IndexStore.open(spark, path,
-        Seq("vectors", "edges", "cells")))
-      .localCheckpoint(true) // the build writes beside the dirs it read
+    // cut: the build writes beside the dirs it read
+    val b = Materialize.cut(readVectors(IndexStore.open(spark, path,
+      Seq("vectors", "edges", "cells"))))
     IndexStore.buildAside(spark, path)(
-      writeIndex(b, _, k, iters, cells, reliable))
+      writeIndex(b, _, k, iters, cells))
   }
 
   /** Grow the index: each new vector's top-k graph neighbors (found by
@@ -448,10 +436,9 @@ object NnDescent {
 
   private def appendIncrement(spark: SparkSession, inc: IndexStore.Increment,
       vecs: DataFrame, path: String, k: Int, beam: Int, hops: Int): Unit = {
-    val fresh = graft.queries.VectorOps
+    val fresh = Materialize.cut(graft.queries.VectorOps
       .dropExistingVecIds(vecs, inc.others("vectors", "vec_id LONG"))
-      .select(col("vec_id"), col("embedding"), col("n2"))
-      .localCheckpoint(true)
+      .select(col("vec_id"), col("embedding"), col("n2")))
     // the graph the increment searches is every OTHER batch: a replay
     // of the tag searches exactly the graph its first run saw
     val base = readVectors(inc.others)
@@ -553,11 +540,10 @@ object NnDescent {
   private def edgeStalenessOf(idx: IndexStore.Snapshot,
       sample: Int): DataFrame = {
     val vecs = idx("vectors", VectorsSchema)
-    val sampled = vecs.filter(col("batch") =!= "init")
+    val sampled = Materialize.cut(vecs.filter(col("batch") =!= "init")
       .orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
       .limit(sample)
-      .select(col("vec_id"), col("embedding"), col("n2"))
-      .localCheckpoint(true)
+      .select(col("vec_id"), col("embedding"), col("n2")))
     val stored = idx("edges", EdgesSchema)
       .join(broadcast(sampled.select(col("vec_id").as("src"))), "src")
       .groupBy(col("src")).agg(max(col("sim")).as("stored_top1"))
@@ -643,14 +629,13 @@ object NnDescent {
     */
   def maybeRebuildAside(spark: SparkSession, path: String, k: Int,
       iters: Int, cells: Int = 0, growthMax: Double = 3.0,
-      residRatioMax: Double = 1.2, stalenessMax: Double = 0.1,
-      reliable: Boolean = false): Boolean = {
+      residRatioMax: Double = 1.2, stalenessMax: Double = 0.1): Boolean = {
     val flagged = driftSummary(spark, path, growthMax, residRatioMax,
       stalenessMax).head.getAs[Boolean]("rebuild_recommended")
     if (flagged) {
       val c = if (cells > 0) cells
         else spark.read.parquet(s"$path/centroids").count().toInt.max(1)
-      rebuildIndexAside(spark, path, k, iters, c, reliable)
+      rebuildIndexAside(spark, path, k, iters, c)
     }
     flagged
   }

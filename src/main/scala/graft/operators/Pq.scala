@@ -297,7 +297,7 @@ object Pq {
       // checkpointed so cell lookup and encode share ONE assign pass.
       val rows =
         if (isResidualIndex(spark, path)) {
-          val res = residuals(vecsFresh, cents).localCheckpoint(true)
+          val res = Materialize.cut(residuals(vecsFresh, cents))
           vecsFresh.select(col("vec_id"), col("embedding"), col("n2"))
             .join(res.select(col("vec_id"), col("cell")), "vec_id")
             .join(encode(res, books, m), "vec_id")
@@ -561,7 +561,7 @@ object Pq {
       clearPermMarker(spark, path)
       val (fs, marker) = residualMarker(spark, path)
       fs.create(marker, true).close()
-      val res = residuals(base, cents).localCheckpoint(true)
+      val res = Materialize.cut(residuals(base, cents))
       val books = train(res, m, ks, iters)
       cents.write.mode("overwrite").parquet(s"$path/centroids")
       books.write.mode("overwrite").parquet(s"$path/books")
@@ -589,11 +589,11 @@ object Pq {
   def writeIndexPermuted(base: DataFrame, path: String, m: Int, ks: Int,
       cells: Int, iters: Int, residual: Boolean = false): Array[Int] = {
     val perm = balancedPermutation(base, m)
-    val pbase = base.select(col("vec_id"),
+    // feeds train + assign + encode once
+    val pbase = Materialize.cut(base.select(col("vec_id"),
       permuted(col("embedding"), perm).cast("array<float>").as("embedding"),
-      col("n2"))
-      .localCheckpoint(true) // feeds train + assign + encode once
-    val cents = Ivf.train(pbase, cells, iters).localCheckpoint(true)
+      col("n2")))
+    val cents = Materialize.cut(Ivf.train(pbase, cells, iters))
     if (residual) writeIndexResidualImpl(pbase, cents, path, m, ks, iters,
       Some(perm))
     else writeIndexImpl(pbase, cents, train(pbase, m, ks, iters), path, m,
@@ -657,7 +657,7 @@ object Pq {
     * driver table for a 10⁶-query offline scoring job; here the batch
     * splits into `chunks` deterministic hash buckets on the query id
     * and each chunk runs as its OWN eagerly-materialized job (the
-    * per-chunk localCheckpoint is what releases chunk i's LUT broadcast
+    * per-chunk cut is what releases chunk i's LUT broadcast
     * before chunk i+1 builds hers — a lazy union would hold every
     * chunk's broadcast live in one job). Queries are independent in
     * every search path (all state is per-q_id), so the unioned result
@@ -676,7 +676,7 @@ object Pq {
     val cells = IndexStore.open(spark, path, Seq("cells"))("cells")
     requireM(spark, path, m)
     val residual = isResidualIndex(spark, path)
-    val q = applyStoredPerm(spark, path, queries).localCheckpoint(true)
+    val q = Materialize.cut(applyStoredPerm(spark, path, queries))
     (0 until chunks).map { i =>
       // null query ids route deterministically too: Spark's hash
       // functions SKIP null inputs (xxhash64(null) = the 42L seed), so
@@ -687,7 +687,7 @@ object Pq {
           searchIndexResidualBody(spark, path, cells, qi, k, nprobe,
             shortlist, m)
         else searchIndexBody(spark, path, cells, qi, k, nprobe, shortlist, m)
-      r.localCheckpoint(true)
+      Materialize.cut(r)
     }.reduce(_.unionByName(_))
       .orderBy(col("q_id"), col("rn"))
   }

@@ -33,16 +33,15 @@ object PrefixSum {
       outCol: String, numParts: Int = 32): DataFrame = {
     require(!df.columns.exists(_.startsWith("__ps_")),
       "__ps_* columns are reserved by PrefixSum")
-    // eager localCheckpoint: BOTH downstream branches (local sums and
+    // eager cut: BOTH downstream branches (local sums and
     // per-partition totals) must see the SAME partition boundaries, and
     // repartitionByRange samples nondeterministically — without the
     // materialization, disabling exchange reuse (or any plan divergence)
     // would execute the range exchange twice with different boundaries
     // and silently mis-assign offsets. The checkpoint also makes the
     // two branches one scan instead of two.
-    val parted = df.repartitionByRange(numParts, col(orderCol))
-      .withColumn("__ps_pid", spark_partition_id())
-      .localCheckpoint(true)
+    val parted = Materialize.cut(df.repartitionByRange(numParts, col(orderCol))
+      .withColumn("__ps_pid", spark_partition_id()))
     val wIn = Window.partitionBy(col("__ps_pid")).orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = parted.withColumn("__ps_local", sum(col(valueCol)).over(wIn))

@@ -31,10 +31,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * Memoized values are deterministic functions of their inputs, so a
   * hit is observationally equal to a rebuild. Values built by
-  * `localCheckpoint` are executor-local blocks: on a cluster with
-  * executor churn route those builds to durable `checkpoint()` (see
-  * [[ConnectedComponents]]), or a lost block fails every later consumer
-  * in the session where an unmemoized build would have recomputed.
+  * [[Materialize.cut]] are executor-local blocks by default: on a
+  * cluster with executor churn set `spark.graft.materialize=reliable`
+  * (durable `checkpoint()` files), or a lost block fails every later
+  * consumer in the session where an unmemoized build would have
+  * recomputed.
   *
   * Modelled on session-scoped reuse with explicit invalidation
   * (Incremental Based Framework for Efficient Top-K Similarity Search in

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.Materialize
 
 /** Text-format corpus interchange — JSONL and CSV as first-class
   * sources/sinks next to the parquet paths.
@@ -186,15 +187,14 @@ object Formats {
     * The oracle reads the original parquet, so a hash match proves the
     * entire JSON encode/decode cycle preserved every value of every row
     * (ids, free text with whatever bytes the generator put there, langs,
-    * counts). Materialized (localCheckpoint) before the scratch shards
+    * counts). Materialized (an eager cut) before the scratch shards
     * are deleted — the read is lazy and must not outlive its files.
     */
   def scanJsonl(spark: SparkSession, dir: String): DataFrame = {
     val tmp = EventOps.scratchDir(spark, "graft_jsonl")
     try {
       writeJsonl(Tables.t(spark, dir, "documents"), tmp)
-      readJsonl(spark, tmp, documentsSchema)
-        .localCheckpoint(true)
+      Materialize.cut(readJsonl(spark, tmp, documentsSchema))
         .orderBy(col("doc_id"))
     } finally EventOps.deleteRecursively(spark, tmp)
   }
@@ -222,8 +222,7 @@ object Formats {
     val tmp = EventOps.scratchDir(spark, prefix)
     try {
       write(Tables.t(spark, dir, "events"), tmp)
-      read(tmp)
-        .localCheckpoint(true)
+      Materialize.cut(read(tmp))
         .select(col("event_id"), Det.tsOut(col("ts")).as("ts_us"),
           col("user_id"), col("event_type"), col("value"), col("props"))
         .orderBy(col("event_id"))
@@ -266,7 +265,7 @@ object Formats {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val r = spark.table(view).localCheckpoint(true)
+      val r = Materialize.cut(spark.table(view))
       spark.catalog.dropTempView(view)
       r.orderBy(col("doc_id"))
     } finally EventOps.deleteRecursively(spark, tmp)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{IndexStore, SessionMemo}
+import graft.operators.{IndexStore, Materialize, SessionMemo}
 
 /** LLM-data-pipeline text operators (SURVEY.md §2.D): exact and near
   * deduplication, TF-IDF, corpus quality gates, language ID, token
@@ -304,7 +304,7 @@ object TextOps {
       val form = if (blowup > DirectJaccardMaxBlowup)
         neardupJaccardPrefixAt(docs, threshold = 0.5)
       else neardupJaccardAt(docs, threshold = 0.5)
-      val p = form.localCheckpoint(true)
+      val p = Materialize.cut(form)
       // two id Longs + inter Long + jaccard double + row overhead
       org.apache.spark.sql.graft.CheckpointStats
         .withMeasuredStats(p, p.count(), 40)
@@ -667,7 +667,7 @@ object TextOps {
     * reachable set.
     */
   /** Memoized (id, rep) cluster labels per (session, dir). The CC loop
-    * materializes eagerly (localCheckpoint + per-round actions) at
+    * materializes eagerly (eager cuts + per-round actions) at
     * DataFrame-build time, so without memoization every query composing
     * over clusters ([[dedupCluster]], [[dedupKeepBest]], [[curate]])
     * would re-run the whole pair-detection + iteration pipeline; labels
@@ -697,16 +697,14 @@ object TextOps {
     * keep rep = self and never enter the rounds, so at 100 TB the label
     * table shrinks from |corpus| to |docs with a near-dup| — typically
     * orders of magnitude smaller — and so does every per-round shuffle.
-    * `reliable = true` routes every lineage cut to durable
-    * `checkpoint()` (see [[graft.operators.ConnectedComponents]]) — the
-    * cluster mode, where executor churn over the iteration is expected.
+    * `spark.graft.materialize=reliable` routes every lineage cut to
+    * durable `checkpoint()` (see [[Materialize]]) — the cluster
+    * posture, where executor churn over the iteration is expected.
     */
-  def clusterLabelsOn(docs: DataFrame, threshold: Double = 0.5,
-      reliable: Boolean = false): DataFrame =
+  def clusterLabelsOn(docs: DataFrame, threshold: Double = 0.5): DataFrame =
     graft.operators.ConnectedComponents.runOnPairs(
       neardupJaccardAt(docs, threshold)
-        .select(col("d1").as("src"), col("d2").as("dst")),
-      reliable = reliable)
+        .select(col("d1").as("src"), col("d2").as("dst")))
 
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
     labelMemo(spark, dir, Seq(Tables.path(dir, "documents"))) {
@@ -1512,11 +1510,11 @@ object TextOps {
     * (source, win)-distinct frame feeds THREE consumers (the per-source
     * counts and both sides of the pair join) and Catalyst shares no
     * subplans, so the stateless plan re-runs the corpus window explode
-    * 3× (PLANS.md's honest-cost note) — one eager localCheckpoint
+    * 3× (PLANS.md's honest-cost note) — one eager [[Materialize]]
     * makes it scan-once, bit-identical. The CONTRACT row passes false:
-    * its stateless plan is the PlanCanary-pinned shape, and checkpoint
-    * blocks are non-reliable storage (the [[clusterLabels]] caveat —
-    * on a cluster with executor churn prefer a durable write of `w`).
+    * its stateless plan is the PlanCanary-pinned shape. The blocks are
+    * executor-local by default; on a cluster with executor churn set
+    * `spark.graft.materialize=reliable` for durable ones.
     */
   def sourceOverlapOn(input: DataFrame, width: Int = 8,
       materialize: Boolean = true): DataFrame = {
@@ -1526,7 +1524,7 @@ object TextOps {
         .ShingleExpressions.ngrams(col("text"), width, distinct = true))
         .as("win"))
       .distinct()
-    val w = if (materialize) graft.operators.Materialize(w0) else w0
+    val w = if (materialize) Materialize(w0) else w0
     val counts = w.groupBy(col("source")).agg(count(lit(1)).as("n_wins"))
     val pairs = w.select(col("win"), col("source").as("source_a"))
       .join(w.select(col("win"), col("source").as("source_b")), Seq("win"))
@@ -1597,7 +1595,7 @@ object TextOps {
     val w0 = input.select(col("doc_id"), explode(org.apache.spark.sql.graft
       .ShingleExpressions.ngrams(col("text"), width, distinct = true))
       .as("win"))
-    val w = if (materialize) graft.operators.Materialize(w0) else w0
+    val w = if (materialize) Materialize(w0) else w0
     val nd = w.select(expr(s"doc_id div $bucketDocs").as("bucket"), col("win"))
       .distinct()
       .groupBy(col("bucket")).agg(count(lit(1)).as("n_distinct"))
@@ -2249,8 +2247,7 @@ object TextOps {
       case IndexStore.View.Excluding(tag) =>
         IndexStore.append(spark, path, tag, Seq("seen"),
             Some(seenPin(params))) { inc =>
-          val kept = against(inc.others("seen", "h STRING"))
-            .localCheckpoint(true)
+          val kept = Materialize.cut(against(inc.others("seen", "h STRING")))
           kept.select(col("h"))
             .write.mode("overwrite").parquet(inc.dir("seen"))
           kept
@@ -2347,7 +2344,7 @@ object TextOps {
     // ONE shingle pass feeds both halves (materialized per the session
     // [[graft.operators.Materialize]] policy — the 3-shingle explode is
     // the batch's dominant per-stage cost)
-    val e = graft.operators.Materialize(hashedShingles(batch))
+    val e = Materialize(hashedShingles(batch))
     val cross = containmentCross(spark, path, e, threshold,
       IndexStore.View.Excluding(tag))
     val within = betterContainerPairs(
@@ -2369,7 +2366,7 @@ object TextOps {
     // frame twice (broadcast key set + probe side) and Catalyst shares
     // no subplans
     containmentCross(spark, path,
-      graft.operators.Materialize(hashedShingles(batch)), threshold,
+      Materialize(hashedShingles(batch)), threshold,
       IndexStore.View.AsOf(asOf))
 
   /** The one cross-probe body of the live and as-of entry points: the
@@ -2681,10 +2678,10 @@ object TextOps {
       def b(i: Int) = docs.filter(col("doc_id") % 2 === i)
       exactDedupDelta(spark, idx, b(0), "t0")
       exactDedupDelta(spark, idx, b(1), "t1")
-      exactDedupDeltaAsOf(spark, idx, b(1), asOf = "t0")
+      // cut: the lazy probe must not outlive scratch
+      Materialize.cut(exactDedupDeltaAsOf(spark, idx, b(1), asOf = "t0")
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"))
-        .localCheckpoint(true) // the lazy probe must not outlive scratch
+          col("n_chars")))
         .orderBy(col("doc_id"))
     } finally EventOps.deleteRecursively(spark, tmp)
   }
@@ -3405,7 +3402,7 @@ object TextOps {
     * incremental curate query share every stage (Gopher gate, exact
     * dedup, decontamination, keep-best), differing only in the final
     * filter/sort — without memoization whichever runs second re-executes
-    * the whole pipeline. Materialized via eager localCheckpoint with
+    * the whole pipeline. Materialized via an eager cut with
     * measured stats (one row per doc, see
     * [[org.apache.spark.sql.graft.CheckpointStats]]).
     */
@@ -3414,8 +3411,8 @@ object TextOps {
 
   private def curateReasons(spark: SparkSession, dir: String): DataFrame =
     reasonsMemo(spark, dir, Seq(Tables.path(dir, "documents"))) {
-      val r = curateReasonsOn(Tables.t(spark, dir, "documents"), CurateConfig(),
-        labels = Some(clusterLabels(spark, dir))).localCheckpoint(true)
+      val r = Materialize.cut(curateReasonsOn(Tables.t(spark, dir, "documents"),
+        CurateConfig(), labels = Some(clusterLabels(spark, dir))))
       // doc_id (8) + kept (1) + short reason string + row overhead
       org.apache.spark.sql.graft.CheckpointStats
         .withMeasuredStats(r, r.count(), 40)
@@ -3492,7 +3489,7 @@ object TextOps {
     // fixture scale (the rewrite is ~0.2 s; the Jaccard pair build
     // dominates this query), load-bearing at corpus scale where
     // 5× re-deriving the rewritten corpus is 5 extra full passes.
-    val rw = rewriteSegmentsCounted(docs, w).localCheckpoint(true)
+    val rw = Materialize.cut(rewriteSegmentsCounted(docs, w))
     val segDropped = rw.filter(col("n_kept") === 0L)
       .select(col("doc_id"), lit(false).as("kept"),
         lit("segment_dup").as("drop_reason"))
@@ -3554,7 +3551,7 @@ object TextOps {
     // `reliable` swaps in durable checkpoint blocks; this replaced the
     // r18 per-site `spark.graft.curate.ckptStage3` hatch).
     val stage3 = if (cfg.containmentThreshold.isDefined)
-      graft.operators.Materialize(stage3lazy)
+      Materialize(stage3lazy)
     else stage3lazy
     val labelDf = labels.getOrElse(clusterLabelsOn(docs, cfg.jaccardThreshold))
     val clusters = docs.select(col("doc_id"))
@@ -3817,12 +3814,8 @@ object TextOps {
   def writeCurateState(docs: DataFrame, path: String,
       cfg: CurateConfig = CurateConfig()): Unit = {
     requireNoSegmentStage(cfg, "writeCurateState")
-    val spark = docs.sparkSession
     VectorOps.writeNeardupIndex(docs, s"$path/index")
-    stateLabels(spark, s"$path/index", cfg)
-      .write.mode("overwrite").parquet(s"$path/labels")
-    curateReasonsOn(docs, cfg, Some(spark.read.parquet(s"$path/labels")))
-      .write.mode("overwrite").parquet(s"$path/reasons")
+    refreshCurateState(docs, path, cfg)
   }
 
   /** Rebuild `labels/` and `reasons/` from the CURRENT `index/` — the
@@ -3874,12 +3867,6 @@ object TextOps {
       Some(docs.sparkSession.read.parquet(s"$path/labels")))
   }
 
-  /** Everything through the `nd_keep` CTE — the four text stages as one
-    * fragment, shared by [[curateReasonsSql]] (which closes it with the
-    * four-stage CASE) and [[curateSemanticSql]] (which appends the
-    * semantic-cluster CTEs and a five-stage CASE), so the stage
-    * semantics cannot drift between the compositions.
-    */
   /** Everything through `stage3`, plus [[ndKeepCteSql]] over a caller-
     * chosen survivor CTE — split so the containment composition can
     * re-scope the near-dup keep-best to ITS survivors without a second
@@ -3910,6 +3897,12 @@ object TextOps {
        |  FROM $from s JOIN clusters c ON s.doc_id = c.doc_id
        |  GROUP BY c.rep)""".stripMargin
 
+  /** Everything through the `nd_keep` CTE — the four text stages as one
+    * fragment, shared by [[curateReasonsSql]] (which closes it with the
+    * four-stage CASE) and [[curateSemanticSql]] (which appends the
+    * semantic-cluster CTEs and a five-stage CASE), so the stage
+    * semantics cannot drift between the compositions.
+    */
   private val curateStagesSql: String =
     s"""$curateThroughStage3Sql,
        |${ndKeepCteSql("stage3")}""".stripMargin

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{IndexStore, SessionMemo}
+import graft.operators.{IndexStore, Materialize, SessionMemo}
 
 /** LLM-data-pipeline vector + sketch operators (SURVEY.md §2.D):
   * brute-force cosine top-k (the correctness baseline), cosine near-dup
@@ -79,10 +79,9 @@ object VectorOps {
   private def contractGraph(spark: SparkSession,
       dir: String): (DataFrame, DataFrame, Long) =
     graphMemo(spark, dir, Seq(Tables.path(dir, "embeddings"))) {
-      val base = Tables.t(spark, dir, "embeddings")
+      val base = Materialize.cut(Tables.t(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
-          norm2(col("embedding")).as("n2"))
-        .localCheckpoint(true)
+          norm2(col("embedding")).as("n2")))
       // buildGraph's returned frame is already round-checkpointed; add
       // measured stats so the searches' joins see honest sizes
       val edges = graft.operators.NnDescent
@@ -131,7 +130,7 @@ object VectorOps {
   private def memoPairs(spark: SparkSession, dir: String, kind: String,
       table: String)(build: => DataFrame): DataFrame =
     pairMemo(spark, (dir, kind), Seq(Tables.path(dir, table))) {
-      val p = build.localCheckpoint(true)
+      val p = Materialize.cut(build)
       // two id Longs + one double + row overhead
       org.apache.spark.sql.graft.CheckpointStats
         .withMeasuredStats(p, p.count(), 32)
@@ -1861,8 +1860,8 @@ object VectorOps {
     val comp = IndexStore.open(spark, path, Seq("bands", "vectors"),
       IndexStore.View.of(asOf))
     requireLshParams(spark, path, numPlanes, bands, seed)
-    val cbase = corpus.select(col("vec_id"), col("embedding"),
-      norm2(col("embedding")).as("n2")).localCheckpoint(true)
+    val cbase = Materialize.cut(corpus.select(col("vec_id"), col("embedding"),
+      norm2(col("embedding")).as("n2")))
     // dedup after the verify (r19 commuted form): n_hits counts
     // DISTINCT verified pairs, so the distinct lands on the (small)
     // contaminated survivors instead of the corpus × eval-bucket

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.LongType
-import graft.operators.IndexStore
+import graft.operators.{IndexStore, Materialize}
 import graft.queries.{CurateConfig, TextOps, VectorOps}
 
 /** The CONTINUOUSLY-RUNNING curation pipeline — [[IngestDedup]]'s
@@ -124,9 +124,9 @@ object CurateIngest {
     // per batch (a parquet scan of stored distinct shingles — the
     // shingling is already paid at index build/append).
     val evalShingles = evalPath.map { ep =>
-      TextOps.shingleRows(docs.sparkSession.read.parquet(ep)
+      Materialize.cut(TextOps.shingleRows(docs.sparkSession.read.parquet(ep)
           .select(col("doc_id"), col("text")))
-        .select(col("s")).distinct().localCheckpoint(true)
+        .select(col("s")).distinct())
     }
     // fail at start, not on batch one: a typo'd index path silently
     // disabling decontamination is the worst failure mode
@@ -173,14 +173,12 @@ object CurateIngest {
     */
   private[graft] def driftProfile(baseline: DataFrame)
       : (DataFrame, Option[DataFrame]) = {
-    val corpusCounts = TextOps
-      .psiSideCounts(TextOps.corpusBins(baseline, "base"))
-      .localCheckpoint(true)
+    val corpusCounts = Materialize.cut(
+      TextOps.psiSideCounts(TextOps.corpusBins(baseline, "base")))
     val vecCounts =
       if (baseline.columns.contains("embedding"))
-        Some(TextOps.psiSideCounts(
-            VectorOps.vecBins(baseline.select(col("embedding")), "base"))
-          .localCheckpoint(true))
+        Some(Materialize.cut(TextOps.psiSideCounts(
+          VectorOps.vecBins(baseline.select(col("embedding")), "base"))))
       else None
     (corpusCounts, vecCounts)
   }
@@ -213,9 +211,9 @@ object CurateIngest {
           !IndexStore.tagExists(spark, s"$statePath/containment",
             "postings", tag))
         TextOps.compactContainmentIndex(spark, s"$statePath/containment")
-      if (minhashExists(spark, statePath))
+      if (componentExists(spark, s"$statePath/minhash/sets"))
         VectorOps.compactNeardupIndex(spark, s"$statePath/minhash")
-      if (cosineExists(spark, statePath))
+      if (componentExists(spark, s"$statePath/cosine/vectors"))
         VectorOps.compactCosineIndex(spark, s"$statePath/cosine")
       // media indexes: same skip-if-in-flight guard as the seen-sets —
       // folding the current tag would close its replay window. One root
@@ -223,7 +221,7 @@ object CurateIngest {
       // stream grows.
       mediaEntries.foreach { case (_, kind, rootLeaf) =>
         val comp = if (kind == "video") "frames" else "hashes"
-        if (mediaExists(spark, statePath, rootLeaf, comp) &&
+        if (componentExists(spark, s"$statePath/$rootLeaf/$comp") &&
             !IndexStore.tagExists(spark, s"$statePath/$rootLeaf", comp,
               tag)) {
           if (kind == "video")
@@ -236,7 +234,7 @@ object CurateIngest {
       }
     }
 
-    val b = batch.localCheckpoint(true)
+    val b = Materialize.cut(batch)
 
     // 1. optional segment rewrite vs the persisted seen-segment set —
     // FIRST, exactly like the batch composed pipeline: emptied docs
@@ -245,8 +243,8 @@ object CurateIngest {
     val (rewritten, segDroppedIds) = cfg.segmentDedupWidth match {
       case None => (b, b.limit(0).select(col("doc_id")))
       case Some(w) =>
-        val rw = TextOps.segmentDedupDelta(spark, s"$statePath/segments",
-          b, w, tag).localCheckpoint(true)
+        val rw = Materialize.cut(TextOps.segmentDedupDelta(spark,
+          s"$statePath/segments", b, w, tag))
         // LEFT join + original-text fallback: a doc producing no segment
         // rows at all (null text) must still flow through with its
         // arrival text and get a verdict — the batch composed pipeline's
@@ -265,13 +263,12 @@ object CurateIngest {
               .otherwise(col("graft_orig_n_chars")))
           .filter(coalesce(col("n_kept"), lit(1L)) > 0)
           .drop("clean_text", "graft_orig_text", "graft_orig_n_chars", "n_kept")
-        (cur.localCheckpoint(true),
+        (Materialize.cut(cur),
           rw.filter(col("n_kept") === 0).select(col("doc_id")))
     }
 
     // 2. gate on the (rewritten) text
-    val current = rewritten.filter(TextOps.gopherAll(cfg))
-      .localCheckpoint(true)
+    val current = Materialize.cut(rewritten.filter(TextOps.gopherAll(cfg)))
 
     // 3. exact dedup vs the persisted digest set (normalizeForHash
     // flows through, so stream and batch verdicts cannot diverge)
@@ -325,7 +322,7 @@ object CurateIngest {
     // schema on first contact, via the SENTINEL-FREE empty bootstrap
     // (a crash mid-bootstrap loses nothing and must not wedge the
     // stream's recovery path — [[VectorOps.bootstrapNeardupIndex]])
-    if (!minhashExists(spark, statePath))
+    if (!componentExists(spark, s"$statePath/minhash/sets"))
       VectorOps.bootstrapNeardupIndex(
         b.select(col("doc_id"), col("text")), s"$statePath/minhash")
     VectorOps.recoverNeardupIndex(spark, s"$statePath/minhash")
@@ -352,7 +349,7 @@ object CurateIngest {
         // Bootstrap is the sentinel-free empty form for the same
         // no-wedge reason as stage 5's.
         VectorOps.recoverCosineIndex(spark, s"$statePath/cosine")
-        if (!cosineExists(spark, statePath))
+        if (!componentExists(spark, s"$statePath/cosine/vectors"))
           VectorOps.bootstrapCosineIndex(
             b.select(col("doc_id").as("vec_id"), col("embedding")),
             s"$statePath/cosine")
@@ -408,7 +405,7 @@ object CurateIngest {
             // rather than silently bootstrapping an empty index beside
             // it (which would forget every admitted clip while the old
             // index rots unprobed).
-            require(!mediaExists(spark, statePath, "media", "frames"),
+            require(!componentExists(spark, s"$statePath/media/frames"),
               s"found a frame-set index under $statePath/media (the " +
                 s"pre-split shared root); move it to " +
                 s"$statePath/media_video before resuming the stream")
@@ -437,7 +434,7 @@ object CurateIngest {
             // the old shared-root index rots unprobed — same fail-loud
             // posture as the video pre-split guard
             if (rootLeaf != "media")
-              require(!mediaExists(spark, statePath, "media", "hashes"),
+              require(!componentExists(spark, s"$statePath/media/hashes"),
                 s"found a legacy hash index under $statePath/media (the " +
                   s"single-kind root); move it to $statePath/$rootLeaf " +
                   "before resuming with the multi-media config")
@@ -446,10 +443,10 @@ object CurateIngest {
               else graft.extract.Multimodal.imageAHash
             // decode paid once: one hash pass feeds the probe and the
             // keepers' deferred append
-            val hashed = surv
+            val hashed = Materialize.cut(surv
               .select(col("doc_id").cast("string").as("med_id"),
                 hashFn(col(mc)).as("ahash"))
-              .filter(col("ahash").isNotNull).localCheckpoint(true)
+              .filter(col("ahash").isNotNull))
             // admit = true: this loop IS the admit path, so a crashed
             // first contact (sidecar present, hashes/ absent)
             // re-records rather than wedging the stream (the TextOps
@@ -578,14 +575,9 @@ object CurateIngest {
     }
   }
 
-
-  private def minhashExists(spark: SparkSession, statePath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$statePath/minhash/sets")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def cosineExists(spark: SparkSession, statePath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$statePath/cosine/vectors")
+  /** Whether the index component dir `dir` exists. */
+  private def componentExists(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -606,11 +598,5 @@ object CurateIngest {
       when(!col("cross"), greatest(col("c1"), col("c2")))
         .otherwise(col("c2")).as("m2"),
       col("cross"))
-  }
-
-  private def mediaExists(spark: SparkSession, statePath: String,
-      root: String, component: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$statePath/$root/$component")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 }

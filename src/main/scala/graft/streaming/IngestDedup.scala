@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.operators.Materialize
 import graft.queries.VectorOps
 
 /** Streaming ingest deduplication — the production loop a continuously-
@@ -86,13 +87,13 @@ object IngestDedup {
     // schema rides through — the probe only needs (doc_id, text), but a
     // production batch carries metadata (source, fetch time, license)
     // that must survive into the output
-    val b = batch.localCheckpoint(true)
+    val b = Materialize.cut(batch)
     val pairs0 = VectorOps.neardupDeltaIndexed(
       batch.sparkSession, indexPath, b.select(col("doc_id"), col("text")),
       threshold)
     // with the log on, the probe plan (the batch's costliest join) feeds
     // two actions — materialize it once instead of executing it twice
-    val pairs = if (pairLog.isDefined) pairs0.localCheckpoint(true) else pairs0
+    val pairs = if (pairLog.isDefined) Materialize.cut(pairs0) else pairs0
     logPairs(pairs, "d1", "d2", pairLog, batchId)
     val survivors = admit(b, pairs, "doc_id", "d1", "d2")
     survivors.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
@@ -104,12 +105,12 @@ object IngestDedup {
       numPlanes: Int, bands: Int, seed: Long,
       pairLog: Option[String] = None): Unit = {
     VectorOps.recoverCosineIndex(batch.sparkSession, indexPath)
-    val b = batch.localCheckpoint(true)
+    val b = Materialize.cut(batch)
     val pairs0 = VectorOps.cosineDeltaIndexed(
       batch.sparkSession, indexPath,
       b.select(col("vec_id"), col("embedding")), threshold, numPlanes,
       bands, seed)
-    val pairs = if (pairLog.isDefined) pairs0.localCheckpoint(true) else pairs0
+    val pairs = if (pairLog.isDefined) Materialize.cut(pairs0) else pairs0
     logPairs(pairs, "v1", "v2", pairLog, batchId)
     val survivors = admit(b, pairs, "vec_id", "v1", "v2")
     survivors.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
@@ -156,11 +157,10 @@ object IngestDedup {
     * batches' pairs to [[graft.operators.ConnectedComponents.mergeLabels]].
     */
   def clusterLabelsFromLog(spark: SparkSession,
-      pairLogDir: String, maxRounds: Int = 50,
-      reliable: Boolean = false): DataFrame =
+      pairLogDir: String, maxRounds: Int = 50): DataFrame =
     graft.operators.ConnectedComponents.runOnPairs(
       spark.read.parquet(pairLogDir).select(col("src"), col("dst")),
-      maxRounds, reliable)
+      maxRounds)
 
   /** Shared drop policy over a delta pair frame carrying the `cross`
     * marker. The marker, not batch membership, classifies the pair: on a
@@ -175,7 +175,7 @@ object IngestDedup {
     val pairs = pairDf.filter(col(c1) =!= col(c2))
     val dropCross = pairs.filter(col("cross")).select(col(c1).as(idCol))
     val dropWithin = pairs.filter(!col("cross")).select(col(c2).as(idCol))
-    b.join(dropCross.union(dropWithin).distinct(), Seq(idCol), "left_anti")
-      .localCheckpoint(true)
+    Materialize.cut(
+      b.join(dropCross.union(dropWithin).distinct(), Seq(idCol), "left_anti"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.tools
 import org.apache.spark.sql.functions._
+import graft.operators.Materialize
 
 /** Measured small-corpus knob grid for the two 0.92 sf0.001 ANN floors
   * (r17 verdict task 2 — the LshGrid discipline applied to q_knn_ivf
@@ -17,11 +18,11 @@ object AnnSmallGrid {
     val spark = graft.Session.getOrCreate(Some(graft.Session.cpus))
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val dir = s"/root/testdata/$sf"
-      val base = graft.queries.Tables.t(spark, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          org.apache.spark.sql.graft.VectorExpressions
-            .dotProduct(col("embedding"), col("embedding")).as("n2"))
-        .localCheckpoint(true)
+      val base = Materialize.cut(
+        graft.queries.Tables.t(spark, dir, "embeddings")
+          .select(col("vec_id"), col("embedding"),
+            org.apache.spark.sql.graft.VectorExpressions
+              .dotProduct(col("embedding"), col("embedding")).as("n2")))
       val n = base.count()
       val q = base.filter(col("vec_id") < 5)
       val truth = graft.queries.VectorOps.knn(base, q, 5)
@@ -57,9 +58,8 @@ object AnnSmallGrid {
         println(f"   pq    ks=$ks%3d shortlist=$sl%5d recall=$r%.2f " +
           f"sec=${(System.nanoTime() - t0) / 1e9}%.2f")
       }
-      val edges = graft.operators.NnDescent
-        .buildGraph(base, k = 10, iters = 2, cells = 16)
-        .localCheckpoint(true)
+      val edges = Materialize.cut(graft.operators.NnDescent
+        .buildGraph(base, k = 10, iters = 2, cells = 16))
       for ((beam, entries) <- Seq((20, 8), (32, 8), (32, 16), (48, 24),
           (64, 32))) {
         val t0 = System.nanoTime()

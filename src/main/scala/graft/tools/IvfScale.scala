@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorExpressions
-import graft.operators.Ivf
+import graft.operators.{Ivf, Materialize}
 import graft.queries.{Tables, VectorOps}
 
 /** IVF derived-geometry recall/cost at 100× fixture scale (r18 — the
@@ -26,16 +26,15 @@ object IvfScale {
       .map(_.split(",").toSeq.map(_.toDouble)).getOrElse(Seq(0.05, 0.3))
     for (noise <- noises) {
       val emb = Tables.t(spark, sfDir, "embeddings")
-      val corpus = VectorOps.expandEmbeddings(emb, factor, noise = noise)
-        .select(col("vec_id"), col("embedding"))
-        .localCheckpoint(true)
+      val corpus = Materialize.cut(
+        VectorOps.expandEmbeddings(emb, factor, noise = noise)
+          .select(col("vec_id"), col("embedding")))
       val n = corpus.count()
-      val base = corpus.select(col("vec_id"), col("embedding"),
+      val base = Materialize.cut(corpus.select(col("vec_id"), col("embedding"),
         VectorExpressions.dotProduct(col("embedding"), col("embedding"))
-          .as("n2"))
-        .localCheckpoint(true)
+          .as("n2")))
       val qPred = col("vec_id") % factor === 0 && col("vec_id") < 100L * factor
-      val queries = base.filter(qPred).localCheckpoint(true)
+      val queries = Materialize.cut(base.filter(qPred))
 
       def pairs(df: DataFrame): Map[Long, Set[Long]] =
         df.select("q_id", "vec_id").collect()
@@ -69,7 +68,7 @@ object IvfScale {
               Ivf.defaultCells(n).toDouble)).toInt)),
           ("fixture-fixed", 64, Seq(4), 0))) {
         val tc0 = System.nanoTime()
-        val cents = Ivf.train(base, k = cells, iters = 2).localCheckpoint(true)
+        val cents = Materialize.cut(Ivf.train(base, k = cells, iters = 2))
         val tTrain = (System.nanoTime() - tc0) / 1e9
         for (nprobe <- nprobes.distinct) {
           val ts0 = System.nanoTime()

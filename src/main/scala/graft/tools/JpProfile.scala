@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.operators.Materialize
 import graft.queries.{Tables, TextOps}
 import org.apache.spark.sql.functions._
 
@@ -38,7 +39,7 @@ object JpProfile {
       pairs.write.format("noop").mode("overwrite").save()
     }
     time("ckpt+count (memo shape)") {
-      TextOps.neardupJaccardAt(docs, 0.5).localCheckpoint(true).count()
+      Materialize.cut(TextOps.neardupJaccardAt(docs, 0.5)).count()
     }
     // commit-able plan evidence for the warm build (the contract row
     // q_neardup_jaccard itself only scans the memoized checkpoint)

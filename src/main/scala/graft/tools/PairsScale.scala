@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.Materialize
 
 /** Direct-vs-prefix ladder for the exact-Jaccard pair build (r19 —
   * verdict task 4: derive the text_jaccard_pairs form from corpus size
@@ -42,13 +43,13 @@ object PairsScale {
     for (xN <- xNs) {
       val d = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
         .select(col("doc_id"), col("text"))
-      val corpus = (if (xN == 1) d else
+      val corpus = Materialize.cut((if (xN == 1) d else
         (0 until xN).map(i => d.select(
             (col("doc_id") * xN + i).as("doc_id"),
             concat(col("text"), lit(s" replicatoken$i")).as("text")))
           .reduce(_ unionByName _))
-        .select(col("doc_id"), concat(col("text"), lit(boilerSuffix)).as("text"))
-        .localCheckpoint(true)
+        .select(col("doc_id"),
+          concat(col("text"), lit(boilerSuffix)).as("text")))
       val n = corpus.count()
       def sig(f: org.apache.spark.sql.DataFrame): (Long, Long, Double) = {
         val t0 = System.nanoTime()

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.Materialize
 
 /** Stage breakdown of the store-then-answer rollup rows (r19 — verdict
   * task 6: q_topk_range / q_distinct_days "commit cost"): times each
@@ -58,8 +59,8 @@ object RollupProfile {
         // commit-protocol A/B arms over the SAME summary rows: static
         // overwrite to a fresh dir (no dynamic staging dance) and
         // FileOutputCommitter algorithm 2 (rename at task commit)
-        val rows = graft.queries.EventOps.dailySummaryRows(events, 64)
-          .localCheckpoint(true)
+        val rows = Materialize.cut(
+          graft.queries.EventOps.dailySummaryRows(events, 64))
         def arm(label: String)(write: String => Unit): Unit = {
           val d = graft.queries.EventOps.scratchDir(spark, s"rollup_$label")
           val (_, s) = t(write(d))

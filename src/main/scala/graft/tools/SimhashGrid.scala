@@ -1,5 +1,6 @@
 package graft.tools
 import org.apache.spark.sql.functions._
+import graft.operators.Materialize
 
 /** Measured banding grid for the SimHash near-dup gate (r17 verdict
   * task 3 — the LshGrid discipline applied to q_dedup_simhash).
@@ -46,8 +47,8 @@ object SimhashGrid {
         val corpus = (0 until xN).map(i => d.select(
             (col("doc_id") * xN + i).as("doc_id"), col("text")))
           .reduce(_ unionByName _)
-        val sigs = graft.queries.VectorOps.simhashSignatures(corpus)
-          .localCheckpoint(true)
+        val sigs = Materialize.cut(
+          graft.queries.VectorOps.simhashSignatures(corpus))
         val n = sigs.count()
         val (bands, probe) =
           graft.operators.BandedHamming.simhashBanding(n)
@@ -97,8 +98,8 @@ object SimhashGrid {
       }))
     if (scale) {
       for ((label, mk) <- corpora) {
-        val sigs = graft.queries.VectorOps.simhashSignatures(mk())
-          .localCheckpoint(true)
+        val sigs = Materialize.cut(
+          graft.queries.VectorOps.simhashSignatures(mk()))
         val n = sigs.count()
         def run(tag: String, bands: Int, probe: Boolean): (Long, Double) = {
           val t0 = System.nanoTime()
@@ -122,8 +123,8 @@ object SimhashGrid {
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val dir = s"/root/testdata/$sf"
       val docs = graft.queries.Tables.t(spark, dir, "documents")
-      val sigs = graft.queries.VectorOps.simhashSignatures(docs)
-        .localCheckpoint(true)
+      val sigs = Materialize.cut(
+        graft.queries.VectorOps.simhashSignatures(docs))
       val exactJ = graft.queries.TextOps.neardupJaccard(spark, dir)
         .select(col("d1"), col("d2")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -331,13 +331,16 @@ class LawsSpec extends AnyFunSuite with SparkSessionFixture {
     import spark.implicits._
     val nodes = (0L until 60L).toDF("id")
     val edges = (0L until 59L).map(i => (i, i + 1)).toDF("src", "dst")
+    val posture = graft.operators.Materialize.ConfKey
     // reliable mode refuses to start without a durable checkpoint dir —
     // Spark's own failure would otherwise surface mid-round-1 as an
     // opaque SparkException from deep inside the first cut()
     if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val err = intercept[IllegalArgumentException] {
-        graft.operators.ConnectedComponents.run(nodes, edges, reliable = true)
-      }
+      spark.conf.set(posture, "reliable")
+      val err =
+        try intercept[IllegalArgumentException] {
+          graft.operators.ConnectedComponents.run(nodes, edges)
+        } finally spark.conf.unset(posture)
       assert(err.getMessage.contains("checkpoint dir"))
     }
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
@@ -348,9 +351,16 @@ class LawsSpec extends AnyFunSuite with SparkSessionFixture {
       // of blocking rounds (the expensive resource the algorithm manages)
       val (local, lr) = graft.operators.ConnectedComponents
         .runCounted(nodes, edges)
-      val (durable, dr) = graft.operators.ConnectedComponents
-        .runCounted(nodes, edges, reliable = true)
+      spark.conf.set(posture, "reliable")
+      val (durable, dr) =
+        try graft.operators.ConnectedComponents.runCounted(nodes, edges)
+        finally spark.conf.unset(posture)
       assert(dr == lr, s"durable mode took $dr rounds vs local $lr")
+      // the session posture really reached the loop: the returned labels
+      // are backed by a durable checkpoint file, not executor blocks
+      assert(org.apache.spark.sql.graft.CheckpointStats
+        .checkpointFile(durable).isDefined,
+        "reliable posture must cut CC rounds with durable checkpoints")
       val lm = local.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val dm = durable.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dm == lm)

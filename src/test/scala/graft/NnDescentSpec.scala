@@ -54,13 +54,16 @@ class NnDescentSpec extends AnyFunSuite with SparkSessionFixture {
     def canon(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
     val sc = spark.sparkContext
+    val posture = graft.operators.Materialize.ConfKey
     // fail fast without a durable dir — the one thing reliable mode
     // cannot silently degrade on (a localCheckpoint fallback would
     // defeat the whole executor-churn story)
-    if (sc.getCheckpointDir.isEmpty)
-      intercept[IllegalArgumentException] {
-        NnDescent.buildGraph(b, k = 10, iters = 1, reliable = true)
-      }
+    if (sc.getCheckpointDir.isEmpty) {
+      spark.conf.set(posture, "reliable")
+      try intercept[IllegalArgumentException] {
+        NnDescent.buildGraph(b, k = 10, iters = 1)
+      } finally spark.conf.unset(posture)
+    }
     // the checkpoint dir is deliberately NOT deleted afterwards:
     // setCheckpointDir mutates the suite-shared SparkContext with no
     // unset API, and deleting the dir would leave later reliable
@@ -68,8 +71,11 @@ class NnDescentSpec extends AnyFunSuite with SparkSessionFixture {
     val dir = java.nio.file.Files.createTempDirectory("nnd_ckpt").toString
     sc.setCheckpointDir(dir)
     // identical loop, only block durability differs (the CC contract)
-    assert(canon(NnDescent.buildGraph(b, k = 10, iters = 1, reliable = true))
-      == canon(NnDescent.buildGraph(b, k = 10, iters = 1)))
+    spark.conf.set(posture, "reliable")
+    val durable =
+      try canon(NnDescent.buildGraph(b, k = 10, iters = 1))
+      finally spark.conf.unset(posture)
+    assert(durable == canon(NnDescent.buildGraph(b, k = 10, iters = 1)))
   }
 
   test("open beam degenerates to the exact answer bit-for-bit") {

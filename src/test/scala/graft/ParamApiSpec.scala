@@ -304,7 +304,35 @@ class ParamApiSpec extends AnyFunSuite with SparkSessionFixture {
       spark.conf.set(graft.operators.Materialize.ConfKey, "lazy")
       assert(graft.operators.Materialize(df) eq df,
         "lazy posture must return the input frame untouched")
+      // lazy skips optional trunks only: a mandatory cut still cuts
+      assert(graft.operators.Materialize.cut(df).queryExecution.logical
+        .collectLeaves().exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
+        "lazy posture must still cut lineage in Materialize.cut")
     } finally spark.conf.unset(graft.operators.Materialize.ConfKey)
+  }
+
+  test("source lint: every lineage cut goes through Materialize") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val main = Paths.get("src/main/scala")
+    assert(main.toFile.isDirectory, s"run from the repo root: $main missing")
+    // lines of code only: scaladoc and comments may name the calls
+    val banned = "\\.(localCheckpoint|checkpoint)\\b|reliable:\\s*Boolean".r
+    val offenders = Files.walk(main).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith("graft/operators/Materialize.scala"))
+      .flatMap { p =>
+        new String(Files.readAllBytes(p), "UTF-8").split("\n").iterator
+          .zipWithIndex
+          .filterNot { case (l, _) => l.trim.startsWith("*") ||
+            l.trim.startsWith("//") || l.trim.startsWith("/*") }
+          .filter { case (l, _) => banned.findFirstIn(l).isDefined }
+          .map { case (_, i) => s"${main.relativize(p)}:${i + 1}" }
+      }.toList
+    assert(offenders.isEmpty,
+      s"direct checkpoint calls or per-call reliable flags: $offenders — " +
+        "cut through Materialize.cut, whose posture is the session conf")
   }
 
   test("curateOn semanticThreshold: composed == doc-level curate then " +
