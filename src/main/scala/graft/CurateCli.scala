@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Materialize
 import graft.queries.{CurateConfig, TextOps}
 
 /** `graft.Main curate` — the composed curation pipeline (quality gate →
@@ -141,6 +142,12 @@ object CurateCli {
   /** Drive a curation run on an existing session — the testable core.
     * Returns the number of verdicts written THIS run (0 when the output
     * was already complete).
+    *
+    * The run evaluates its pipeline once: the verdict frame (the full
+    * run, or the resume delta) goes through one [[Materialize.cut]], and
+    * both the returned count and the parquet write read that cut. On
+    * resume the delta is therefore fully computed before the append
+    * starts — the write plan never reads the directory it appends to.
     */
   def run(spark: SparkSession, cfg: Config): Long = {
     // config validation (CurateConfig's requires — e.g. duplicate media
@@ -163,11 +170,6 @@ object CurateCli {
       s
     }
 
-    def fullRun: DataFrame = stateLabels match {
-      case Some(s) => TextOps.curateFromState(docs, s, curateCfg)
-      case None => TextOps.curateOn(docs, curateCfg)
-    }
-
     val existing: Option[DataFrame] = {
       val dir = new java.io.File(cfg.out)
       if (cfg.resume && dir.exists() &&
@@ -176,20 +178,23 @@ object CurateCli {
       else None
     }
 
-    existing match {
-      case Some(done) =>
-        val delta = stateLabels match {
-          case Some(s) => TextOps.resumeCurateFromState(docs, s, done, curateCfg)
-          case None => TextOps.curateDeltaOn(docs, done, curateCfg)
-        }
-        val n = delta.count()
-        if (n > 0) delta.write.mode("append").parquet(cfg.out)
-        n
-      case None =>
-        val full = fullRun
-        full.write.mode("overwrite").parquet(cfg.out)
-        full.count()
+    // the full pipeline into a fresh output, or the delta a resume
+    // appends — cut once (see the doc above)
+    val (verdicts, mode) = (existing, stateLabels) match {
+      case (Some(done), Some(s)) =>
+        (TextOps.resumeCurateFromState(docs, s, done, curateCfg), "append")
+      case (Some(done), None) =>
+        (TextOps.curateDeltaOn(docs, done, curateCfg), "append")
+      case (None, Some(s)) =>
+        (TextOps.curateFromState(docs, s, curateCfg), "overwrite")
+      case (None, None) => (TextOps.curateOn(docs, curateCfg), "overwrite")
     }
+    val cut = Materialize.cut(verdicts)
+    val n = cut.count()
+    // a fresh run always writes (an empty corpus still gets its output
+    // dir); a resume with nothing missing leaves the output untouched
+    if (mode == "overwrite" || n > 0) cut.write.mode(mode).parquet(cfg.out)
+    n
   }
 
   def main(args: Array[String]): Unit = {

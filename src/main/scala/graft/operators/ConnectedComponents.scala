@@ -300,19 +300,12 @@ object ConnectedComponents {
       if (debug) println(f"[cc] round $round: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       // durable posture: the outgoing round's checkpoint file is now
       // superseded — `next` is fully materialized to its OWN checkpoint
-      // (lineage cut, nothing re-reads the old files) — so delete it.
-      // Spark never cleans reliable checkpoints itself (the reference-
-      // tracking cleaner is off by default and GC-driven at best), and
-      // one full label-table copy per round is exactly the storage blowup
-      // the 100 TB mode cannot afford; this keeps live copies at O(1)
-      // (edges + current labels). The FINAL round's files are never
-      // deleted here — they back the returned DataFrame. Local blocks
-      // have no file, so this is a no-op outside the durable posture.
-      CheckpointStats.checkpointFile(labels).foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(
-          nodes.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
-      }
+      // (lineage cut, nothing re-reads the old files) — so release it.
+      // One full label-table copy per round is exactly the storage
+      // blowup the 100 TB mode cannot afford; this keeps live copies at
+      // O(1) (edges + current labels). The FINAL round's files are never
+      // released here — they back the returned DataFrame.
+      Materialize.release(labels)
       labels = next
       converged = prevSum.exists(_.compareTo(s) == 0)
       prevSum = Some(s)

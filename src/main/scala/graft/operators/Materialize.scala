@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.CheckpointStats
 
 /** The ONE owner of every lineage cut in the engine, and the one
   * cluster-posture decision for all of them, selected by
@@ -12,14 +14,18 @@ import org.apache.spark.sql.DataFrame
   *    trunks are referenced by multiple downstream stages and Catalyst
   *    expands the full subtree per reference (zero exchange reuse across
   *    the references), so the engine materializes them once: the curate
-  *    stage-3 survivor frame under the containment stage, the
+  *    stage-1–3 marker frame under the containment stage (one row per
+  *    doc with its gate/exact-dup/contamination markers — the stage-3
+  *    survivors are its filter, the verdict join starts from it), the
   *    sourceOverlap/noveltyCurve window-explode frames (engine surfaces),
   *    and the streaming-containment batch shingle frames.
   *  - [[cut]] — a MANDATORY cut: iterative loops ([[ConnectedComponents]]
   *    and [[NnDescent]] rounds, IVF/PQ training), the session memo builds
   *    (materialization is part of the memo's semantics), and every frame
   *    that must be computed exactly once before a write or a
-  *    multi-reference plan.
+  *    multi-reference plan — among them the curate CLI's verdict frame,
+  *    whose row count and parquet write both read the one cut.
+  *    [[release]] deletes a superseded cut's durable file.
   *
   * The posture:
   *
@@ -67,4 +73,17 @@ object Materialize {
           "SparkContext.setCheckpointDir(<HDFS/object-store path>) first")
       df.checkpoint(eager)
     } else df.localCheckpoint(eager)
+
+  /** Delete the durable checkpoint file backing `df`, a [[cut]] that a
+    * later, already computed cut superseded — nothing may read `df`
+    * afterwards. Spark never cleans reliable checkpoints itself (the
+    * reference-tracking cleaner is off by default), so an iterative loop
+    * that does not release its outgoing round keeps one full copy per
+    * round. Local blocks have no file: a no-op outside `reliable`. */
+  def release(df: DataFrame): Unit =
+    CheckpointStats.checkpointFile(df).foreach { f =>
+      val p = new Path(f)
+      p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+        .delete(p, true)
+    }
 }

@@ -171,7 +171,10 @@ object NnDescent {
           .select(col("x.vec_id").as("src"), col("dst"))
           .filter(col("src") =!= col("dst")))
       }
-      edges = Materialize.cut(topk(edges.unionByName(score(sampled, b)), k))
+      val next = Materialize.cut(topk(edges.unionByName(score(sampled, b)), k))
+      // the outgoing round's durable copy is superseded (no-op locally)
+      Materialize.release(edges)
+      edges = next
     }
     edges
   }
@@ -238,8 +241,10 @@ object NnDescent {
       val frontier = best.select(col("q_id"), col("vec_id").as("src"))
         .join(sym, "src")
         .select(col("q_id"), col("dst").as("vec_id"))
-      best = Materialize.cut(
+      val next = Materialize.cut(
         topBeam(best.unionByName(scoreQ(frontier)), beam + 1))
+      Materialize.release(best)
+      best = next
     }
     // one window pass for the final cut: drop self, dedup (re-scored
     // nodes), rank on the ROUNDED sim (the shared ANN contract's

@@ -3525,8 +3525,13 @@ object TextOps {
       .select(col("doc_id"), lit(true).as("ex_keep"))
     val contam = decontaminateOn(docs, cfg).filter(col("contaminated"))
       .select(col("doc_id"), lit(true).as("contam"))
-    val stage3lazy = qOk.join(exKeep.select(col("doc_id")), Seq("doc_id"))
-      .join(contam.select(col("doc_id")), Seq("doc_id"), "left_anti")
+    // stages 1–3 as per-doc markers: the gate verdict, the exact-dup
+    // keeper flag and the contamination flag, one row per doc — what
+    // the verdict join reads, and (filtered) the stage-3 survivors
+    def markers(cols: Column*): DataFrame =
+      docs.select(col("doc_id") +: cols :+ g.all.as("q_ok"): _*)
+        .join(exKeep, Seq("doc_id"), "left")
+        .join(contam, Seq("doc_id"), "left")
     // With the containment stage on, stage3 is referenced by every
     // later stage AND the verdict join — four references through the
     // containment subtree alone — and Catalyst expands the full
@@ -3536,8 +3541,12 @@ object TextOps {
     // (plans/r18/q_curate_containment_before_ckpt.txt). Materialize it
     // once: later stages re-derive from a local checkpoint instead of
     // replaying the pipeline per reference (the segment path's `rw`
-    // discipline applied to the doc-level trunk). MEASURED A/B
-    // (alternated in-process, sf0.1; BASELINE.md "Round-18
+    // discipline applied to the doc-level trunk). The trunk is the
+    // MARKER frame (doc_id, text, n_chars, q_ok, ex_keep, contam), not
+    // the survivors alone: stage3 is its filter, and the verdict join
+    // starts from it too rather than re-deriving decontamination and
+    // the exact hash.
+    // MEASURED A/B (alternated in-process, sf0.1; BASELINE.md "Round-18
     // optimization-session addendum", tool at `git show
     // 1378a37:src/main/scala/graft/tools/CurateCkptAb.scala`): containment
     // 4.55 → 3.58 s steady-state (−21%); but the SEMANTIC variant reads
@@ -3545,14 +3554,21 @@ object TextOps {
     // eager materialization job costs more than the duplicate subtrees
     // it removes), so only the containment path checkpoints —
     // OPTIMIZATION_r18.md §7 has both grids. Default-config runs keep
-    // the lazy frame (small fan-out, memoized by the warm row).
+    // the lazy survivor frame and lazy markers (small fan-out, memoized
+    // by the warm row; a marker-shaped lazy plan measured ~10% slower on
+    // that memo build, likely because column pruning splits the shared
+    // subtree and its exchanges stop being reused).
     // Cluster posture rides the session-wide [[Materialize]] policy
     // (r19 — `spark.graft.materialize=lazy` restores the lazy plan,
     // `reliable` swaps in durable checkpoint blocks; this replaced the
     // r18 per-site `spark.graft.curate.ckptStage3` hatch).
-    val stage3 = if (cfg.containmentThreshold.isDefined)
-      Materialize(stage3lazy)
-    else stage3lazy
+    val trunk = cfg.containmentThreshold.map(_ =>
+      Materialize(markers(col("text"), col("n_chars"))))
+    val stage3 = trunk.fold(
+      qOk.join(exKeep.select(col("doc_id")), Seq("doc_id"))
+        .join(contam.select(col("doc_id")), Seq("doc_id"), "left_anti"))(
+      _.filter(col("q_ok") && col("ex_keep").isNotNull && col("contam").isNull)
+        .select(col("doc_id"), col("text"), col("n_chars")))
     val labelDf = labels.getOrElse(clusterLabelsOn(docs, cfg.jaccardThreshold))
     val clusters = docs.select(col("doc_id"))
       .join(labelDf, col("doc_id") === col("id"), "left")
@@ -3690,9 +3706,7 @@ object TextOps {
     }
     val mdKeep = mdStage.map(_._1)
     val mdDropKinds = mdStage.flatMap(_._2)
-    val marked = docs.select(col("doc_id"), g.all.as("q_ok"))
-      .join(exKeep, Seq("doc_id"), "left")
-      .join(contam, Seq("doc_id"), "left")
+    val marked = trunk.getOrElse(markers())
       .join(ndKeep, Seq("doc_id"), "left")
       // the containment stage sits BEFORE near_dup in the CASE; with it
       // off, a true literal silences its branch (aliasing a LATER
@@ -3750,7 +3764,7 @@ object TextOps {
   def curateDeltaOn(docs: DataFrame, done: DataFrame,
       cfg: CurateConfig = CurateConfig(),
       labels: Option[DataFrame] = None): DataFrame =
-    curateOn(docs, cfg, labels)
+    curateReasonsOn(docs, cfg, labels)
       .join(done.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .orderBy(col("doc_id"))
 

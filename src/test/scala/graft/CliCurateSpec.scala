@@ -42,19 +42,66 @@ class CliCurateSpec extends AnyFunSuite with SparkSessionFixture {
       intercept[IllegalArgumentException](CurateCli.parse(bad))
   }
 
-  test("end-to-end run == curateOn; rerun on complete output writes nothing") {
-    val docs = Tables.t(spark, Sf0001, "documents")
-    val in = tmp("cli_in")
-    val out = s"${tmp("cli_out")}/verdicts"
-    docs.write.mode("overwrite").parquet(in)
-    val n = CurateCli.run(spark, CurateCli.Config(in, out))
-    assert(n == docs.count())
-    val got = spark.read.parquet(out)
-    assert(got.count() == n)
-    assert(got.filter(col("kept")).count() ==
-      TextOps.curateOn(docs).filter(col("kept")).count())
-    // complete output + resume on: nothing to do
+  /** (name, size) of every file in `dir` — a no-op rerun must leave it
+    * byte-for-byte alone, not rewrite the same rows. */
+  private def listing(dir: String): Seq[(String, Long)] =
+    new java.io.File(dir).listFiles.map(f => f.getName -> f.length).toSeq.sorted
+
+  // the plain pipeline and the containment one (whose stage-1–3 trunk
+  // is materialized) share the CLI's one-cut tail
+  for (cn <- Seq(None, Some(0.8))) {
+    val flag = cn.fold("")(t => s" (--containment $t)")
+    val curateCfg = graft.queries.CurateConfig(containmentThreshold = cn)
+
+    test("end-to-end run == curateOn; rerun on complete output writes nothing" + flag) {
+      val docs = Tables.t(spark, Sf0001, "documents")
+      val in = tmp("cli_in")
+      val out = s"${tmp("cli_out")}/verdicts"
+      docs.write.mode("overwrite").parquet(in)
+      val n = CurateCli.run(spark, CurateCli.Config(in, out, containment = cn))
+      assert(n == docs.count())
+      val got = spark.read.parquet(out)
+      assert(got.count() == n)
+      assert(got.orderBy(col("doc_id")).collect().toSeq ==
+        TextOps.curateOn(docs, curateCfg).collect().toSeq)
+      // complete output + resume on: nothing to do, and nothing touched
+      val before = listing(out)
+      assert(CurateCli.run(spark, CurateCli.Config(in, out, containment = cn)) == 0L)
+      assert(listing(out) == before, "a no-op resume must not write")
+    }
+
+    test("resume: an interrupted run's rerun emits ONLY the missing verdicts" + flag) {
+      val docs = Tables.t(spark, Sf0001, "documents")
+      val in = tmp("cli_rin")
+      val out = s"${tmp("cli_rout")}/verdicts"
+      docs.write.mode("overwrite").parquet(in)
+      // the interruption: half the verdicts made it out
+      TextOps.curateOn(docs, curateCfg).filter(col("doc_id") % 2 === 0)
+        .write.mode("overwrite").parquet(out)
+      val before = spark.read.parquet(out).count()
+      val n = CurateCli.run(spark, CurateCli.Config(in, out, containment = cn))
+      assert(n == docs.filter(col("doc_id") % 2 === 1).count(),
+        "resume must emit exactly the missing half")
+      // the union equals the full pipeline, no duplicates, and the
+      // returned count is exactly what the append added
+      val got = spark.read.parquet(out)
+      assert(got.count() - before == n)
+      assert(got.count() == docs.count())
+      assert(got.select(col("doc_id")).distinct().count() == docs.count())
+      assert(got.orderBy(col("doc_id")).collect().toSeq ==
+        TextOps.curateOn(docs, curateCfg).collect().toSeq)
+    }
+  }
+
+  test("a fresh run over an empty corpus still writes its (empty) output") {
+    val in = tmp("cli_ein")
+    val out = s"${tmp("cli_eout")}/verdicts"
+    Tables.t(spark, Sf0001, "documents").limit(0)
+      .write.mode("overwrite").parquet(in)
     assert(CurateCli.run(spark, CurateCli.Config(in, out)) == 0L)
+    assert(new java.io.File(s"$out/_SUCCESS").exists(),
+      "a fresh run writes even when it has no verdicts")
+    assert(spark.read.parquet(out).count() == 0L)
   }
 
   test("--containment parses, validates its range, and runs the stage") {
@@ -149,23 +196,6 @@ class CliCurateSpec extends AnyFunSuite with SparkSessionFixture {
       graft.queries.CurateConfig(segmentDedupWidth = Some(8)))
     assert(got.orderBy(col("doc_id")).collect().toSeq.map(_.toString) ==
       want.collect().toSeq.map(_.toString))
-  }
-
-  test("resume: an interrupted run's rerun emits ONLY the missing verdicts") {
-    val docs = Tables.t(spark, Sf0001, "documents")
-    val in = tmp("cli_rin")
-    val out = s"${tmp("cli_rout")}/verdicts"
-    docs.write.mode("overwrite").parquet(in)
-    // the interruption: half the verdicts made it out
-    TextOps.curateOn(docs).filter(col("doc_id") % 2 === 0)
-      .write.mode("overwrite").parquet(out)
-    val n = CurateCli.run(spark, CurateCli.Config(in, out))
-    assert(n == docs.filter(col("doc_id") % 2 === 1).count(),
-      "resume must emit exactly the missing half")
-    // the union equals the full pipeline, no duplicates
-    val got = spark.read.parquet(out)
-    assert(got.count() == docs.count())
-    assert(got.select(col("doc_id")).distinct().count() == docs.count())
   }
 
   test("resume composes with --segment-width: delta-only, union == composed run") {

@@ -836,6 +836,41 @@ class LawsSpec extends AnyFunSuite with SparkSessionFixture {
       s"replayed tranche must be zero-novelty: $replayBucket")
   }
 
+  test("curate marker trunk: containment verdicts are identical whether " +
+      "the stage-1–3 marker frame is cut or left lazy") {
+    import spark.implicits._
+    // planted: an original, its exact copy, a case variant (folded by
+    // normalizeForHash), a near copy (every 12th token edited: J ≈ 0.64,
+    // containment ≈ 0.78 < 0.8), an excerpt (its first 50 tokens), a
+    // fresh doc and a gate failure. Ids sit in train buckets, so the
+    // decontamination markers stay empty and every dup reason fires.
+    def toks(r: Seq[Int]) = r.map(i => f"word$i%04d").mkString(" ")
+    val orig = toks(1 to 70)
+    val near = toks((1 to 70).map(i => if (i % 12 == 0) 9000 + i else i))
+    val planted = Seq(2L -> orig, 3L -> orig, 4L -> orig.toUpperCase,
+        6L -> near, 7L -> toks(1 to 50), 8L -> toks(200 to 280),
+        9L -> "too short to pass")
+      .map { case (id, t) => (id, t, t.length.toLong) }
+      .toDF("doc_id", "text", "n_chars")
+    val cfg = CurateConfig(containmentThreshold = Some(0.8),
+      normalizeForHash = true)
+    val posture = graft.operators.Materialize.ConfKey
+    def verdicts(docs: org.apache.spark.sql.DataFrame, mode: String) = {
+      spark.conf.set(posture, mode)
+      try TextOps.curateOn(docs, cfg).collect().toSeq
+      finally spark.conf.unset(posture)
+    }
+    for (docs <- Seq(Tables.t(spark, Sf0001, "documents"), planted))
+      assert(verdicts(docs, "local") == verdicts(docs, "lazy"),
+        "the marker-frame cut must be plan-only")
+    val reasons = verdicts(planted, "local")
+      .map(r => r.getLong(0) -> Option(r.getString(2))).toMap
+    assert(reasons == Map(2L -> None, 3L -> Some("exact_dup"),
+      4L -> Some("exact_dup"), 6L -> Some("near_dup"),
+      7L -> Some("contained_dup"), 8L -> None, 9L -> Some("quality")),
+      s"planted corpus must fire every dup marker: $reasons")
+  }
+
   test("curate containment stage: a true excerpt drops as contained_dup " +
       "where the plain pipeline keeps it; upstream-dropped containers " +
       "shield nothing away; fixture kept-set parity") {

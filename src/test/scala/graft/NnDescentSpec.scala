@@ -75,6 +75,11 @@ class NnDescentSpec extends AnyFunSuite with SparkSessionFixture {
     val durable =
       try canon(NnDescent.buildGraph(b, k = 10, iters = 1))
       finally spark.conf.unset(posture)
+    // each round releases the edges it superseded: only the returned
+    // graph's durable copy is left, not one copy per round
+    val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
+    assert(rddDirs == 1, s"expected the final edges' checkpoint only, found $rddDirs")
     assert(durable == canon(NnDescent.buildGraph(b, k = 10, iters = 1)))
   }
 
